@@ -39,13 +39,20 @@ object SparkEntry {
     * are finite (generous — a hung executor surfaces as a loud timeout
     * with a cancel, not a forever-blocked driver thread). Overlap
     * only — leg rows and union order are whatever the caller wrote, so
-    * results are bit-equal to the sequential spelling. */
-  private final class LegRunner(s: SparkSession, label: String,
-      threads: Int) {
+    * results are bit-equal to the sequential spelling. Built only
+    * through [[LegRunner.using]], which releases the pool on every
+    * exit; its threads are daemons, so even a leg that ignores the
+    * interrupt cannot hold the JVM open. */
+  private[graft] final class LegRunner private (s: SparkSession,
+      label: String, threads: Int) {
     private val groupId =
-      s"graft-legs-$label-${LegRunnerSeq.incrementAndGet()}"
-    private val pool =
-      java.util.concurrent.Executors.newFixedThreadPool(threads)
+      s"${LegRunner.ThreadPrefix}$label-${LegRunner.seq.incrementAndGet()}"
+    private val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      threads, { (r: Runnable) =>
+        val t = new Thread(r, groupId)
+        t.setDaemon(true)
+        t
+      })
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
     def leg[T](body: => T): scala.concurrent.Future[T] =
@@ -65,10 +72,29 @@ object SparkEntry {
           finally pool.shutdownNow()
           throw e
       }
-    /** release the pool (running legs finish; call after all awaits) */
-    def close(): Unit = pool.shutdown()
   }
-  private val LegRunnerSeq = new java.util.concurrent.atomic.AtomicLong()
+  private[graft] object LegRunner {
+    private[SparkEntry] val seq = new java.util.concurrent.atomic.AtomicLong()
+    /** prefix of every runner's job group and leg-thread name */
+    val ThreadPrefix = "graft-legs-"
+
+    /** run `body` with a fresh runner and shut its pool down however
+      * `body` exits — on failure the job group is cancelled and running
+      * legs interrupted first */
+    def using[T](s: SparkSession, label: String, threads: Int)(
+        body: LegRunner => T): T = {
+      val runner = new LegRunner(s, label, threads)
+      var ok = false
+      try { val out = body(runner); ok = true; out }
+      finally {
+        if (ok) runner.pool.shutdown()
+        else {
+          try s.sparkContext.cancelJobGroup(runner.groupId)
+          finally runner.pool.shutdownNow()
+        }
+      }
+    }
+  }
 
   private val queryVecCache =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[Float]]()
@@ -735,6 +761,16 @@ object SparkEntry {
         books.write(s, s"$p/books")
       })
 
+  /** A hand-laid PQ root (`path/data`, books from `booksRoot`) as the
+    * [[Pq.PqRoot]] its searches take: `ivf` when its rows carry that
+    * index's cluster layout, `residual` when they were residual-coded. */
+  private def pqRootAt(s: SparkSession, path: String,
+      booksRoot: String = "", ivf: Option[IvfIndex] = None,
+      residual: Boolean = false): Pq.PqRoot =
+    Pq.PqRoot(path,
+      Pq.load(s, s"${if (booksRoot.isEmpty) path else booksRoot}/books"),
+      residual, ivf.map(i => (i.centroids, i.clusterIds)))
+
   /** The OPQ root for `dir` (q182): the same corpus at the SAME code
     * budget (m, ksub) as [[pqRootFor]], but the coordinates are
     * variance-balance PERMUTED ([[Pq.opqPermutation]] — the
@@ -831,8 +867,7 @@ object SparkEntry {
     * advice: Spark's ASC window sorts NULLS FIRST, DuckDB's last — a
     * null vector would corrupt the exact panel asymmetrically). */
   private def pqRecallLegs(emb: DataFrame, qPred: Column, nq: Int,
-      refine: Int, legs: Seq[(String, DataFrame, Pq.Codebooks,
-        Option[Array[Int]])]): DataFrame = {
+      refine: Int, legs: Seq[(String, Pq.PqRoot)]): DataFrame = {
     val qDf = emb.filter(qPred && col("embedding").isNotNull)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
       .localCheckpoint()
@@ -847,10 +882,10 @@ object SparkEntry {
       .filter(col("rn") <= pqK)
       .select(col("qid").as("qid_e"), col("vec_id").as("id_e"))
       .localCheckpoint()
-    legs.map { case (method, data, books, perm) =>
-      Pq.topKBatch(data, "vec_id", "embedding", qDf, "qid", "qv",
-          k = pqK, books, refine = refine, tieBreak = "vec_id",
-          rankRoundDp = Some(4), perm = perm)
+    legs.map { case (method, root) =>
+      Pq.topKBatch(root.data(emb.sparkSession), "vec_id", "embedding",
+          qDf, "qid", "qv", k = pqK, root, refine = refine,
+          tieBreak = "vec_id", rankRoundDp = Some(4))
         .select(col("query_id"), col("vec_id").as("id_a"))
         .join(exact, col("query_id") === col("qid_e") &&
           col("id_a") === col("id_e"))
@@ -1099,11 +1134,11 @@ object SparkEntry {
     })
 
   /** the per-query ADC lookup-table CTE shared by the q73/q74/q75
-    * oracles — Pq.adcTable's replay: one row per (sub, code) (per
-    * (qid, sub, code) when `perQuery`), `partial` = the fixed-order
-    * per-subspace L2² fold between the query slice and that code's
-    * exported centroid (`len(centroid)` IS dsub, so the 1-based global
-    * dim is `sub·dsub + j`) */
+    * oracles — QuantizedSearch.adcTable's replay: one row per
+    * (sub, code) (per (qid, sub, code) when `perQuery`), `partial` =
+    * the fixed-order per-subspace L2² fold between the query slice and
+    * that code's exported centroid (`len(centroid)` IS dsub, so the
+    * 1-based global dim is `sub·dsub + j`) */
   private def pqTabCteSql(perQuery: Boolean): String = {
     val qid = if (perQuery) "q.qid, " else ""
     s"""tab AS (
@@ -1118,7 +1153,7 @@ object SparkEntry {
   }
 
   /** the per-row ADC sum shared by the q73/q74/q75 oracles —
-    * Pq.adcScore's replay: pqM scalar-subquery lookups into `tab` (code
+    * the PQ codec's replay: pqM scalar-subquery lookups into `tab` (code
     * bytes via the q62 hex-substr pattern), summed LEFT-TO-RIGHT — the
     * literal `p0 + p1 + … + p7` chain is the same IEEE sequence as the
     * Scala fold (0.0 + p0 ≡ p0). `corr` correlates the lookup to the
@@ -1547,7 +1582,7 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
 
   /** q76's oracle: q74's probe structure over the RESIDUAL root — the
     * query's residual per probed cluster (double subtract, FLOAT cast,
-    * back to double: Pq.topKProbedResidual's exact arithmetic), one
+    * back to double: the residual ADC codec's exact arithmetic), one
     * ADC table per (cluster, sub, code), each row's sum chain keyed to
     * its OWN cluster's table, then the floor-rounded exact L2 re-rank
     * over the raw vectors. */
@@ -4780,18 +4815,16 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       // The oracle rebuilds the same table from the exported books and
       // replays both passes.
       VectorExpressions.ensureRegistered(s)
-      val root = pqRootFor(s, dir)
-      val books = Pq.load(s, s"$root/books")
-      val enc = s.read.parquet(s"$root/data")
-      Pq.topK(enc, "vec_id", "embedding", queryVec(s, dir), k = pqK,
-          books, refine = pqRefine, tieBreak = Some("vec_id"),
+      val root = pqRootAt(s, pqRootFor(s, dir))
+      Pq.topK(root.data(s), "vec_id", "embedding", queryVec(s, dir),
+          k = pqK, root, refine = pqRefine, tieBreak = Some("vec_id"),
           rankRoundDp = Some(4))
         .select(col("vec_id"), col("dist"))
         .orderBy(col("dist"), col("vec_id"))
     }),
 
     "q74_ivf_pq" -> ((s, dir) => {
-      // IVF-PQ (the FAISS flagship IVFx,PQm shape, Pq.topKProbed):
+      // IVF-PQ (the FAISS flagship IVFx,PQm shape, Pq.topK probed):
       // probe the 6 L2-nearest clusters exactly like q36 (directory
       // pruning on the preserved IVF layout), then q73's two ADC
       // passes over ONLY the probed partitions — the candidate scan
@@ -4799,20 +4832,17 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       // fit serves q73 and this query; the oracle composes q36's probe
       // replay with q73's decode replay over the probed subset.
       VectorExpressions.ensureRegistered(s)
-      val idx = ivfIndexFor(s, dir)
-      val root = pqIvfRootFor(s, dir)
-      val books = Pq.load(s, s"${pqRootFor(s, dir)}/books")
-      val enc = s.read.parquet(s"$root/data")
-      Pq.topKProbed(enc, "vec_id", "embedding", queryVec(s, dir),
-          k = pqK, books, idx.centroids, idx.clusterIds, nprobe = 6,
-          refine = pqRefine, tieBreak = Some("vec_id"),
-          rankRoundDp = Some(4))
+      val root = pqRootAt(s, pqIvfRootFor(s, dir), pqRootFor(s, dir),
+        Some(ivfIndexFor(s, dir)))
+      Pq.topK(root.data(s), "vec_id", "embedding", queryVec(s, dir),
+          k = pqK, root, nprobe = 6, refine = pqRefine,
+          tieBreak = Some("vec_id"), rankRoundDp = Some(4))
         .select(col("vec_id"), col("dist"))
         .orderBy(col("dist"), col("vec_id"))
     }),
 
     "q75_ivf_pq_batch" -> ((s, dir) => {
-      // Batch IVF-PQ (Pq.topKBatchProbed): q74's two ADC passes
+      // Batch IVF-PQ (Pq.topKBatch probed): q74's two ADC passes
       // composed with q68's per-query probe gate — many queries, ONE
       // narrow m-byte code scan, each row scored only for queries
       // whose own probe set holds its cluster, by m lookups into that
@@ -4822,24 +4852,21 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       // oracle composes q68's probe/gate replay with q73's ADC-table
       // replay keyed per query.
       VectorExpressions.ensureRegistered(s)
-      val idx = ivfIndexFor(s, dir)
-      val root = pqIvfRootFor(s, dir)
-      val books = Pq.load(s, s"${pqRootFor(s, dir)}/books")
-      val enc = s.read.parquet(s"$root/data")
+      val root = pqRootAt(s, pqIvfRootFor(s, dir), pqRootFor(s, dir),
+        Some(ivfIndexFor(s, dir)))
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id").isin(0, 1, 2))
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      Pq.topKBatchProbed(enc, "vec_id", "embedding", queries, "qid",
-          "qv", k = pqBatchK, books, idx.centroids, idx.clusterIds,
-          nprobe = pqBatchNprobe, refine = pqRefine,
-          tieBreak = "vec_id", rankRoundDp = Some(4))
+      Pq.topKBatch(root.data(s), "vec_id", "embedding", queries, "qid",
+          "qv", k = pqBatchK, root, nprobe = pqBatchNprobe,
+          refine = pqRefine, tieBreak = "vec_id", rankRoundDp = Some(4))
         .select(col("query_id"), col("vec_id"), col("dist"))
         .orderBy(col("query_id"), col("dist"), col("vec_id"))
     }),
 
     "q76_ivf_pq_residual" -> ((s, dir) => {
       // Residual IVF-PQ (FAISS IVFPQ's default form,
-      // Pq.topKProbedResidual): codes represent v - centroid(v), so
+      // Pq.topK over a residual root): codes represent v - centroid(v), so
       // all codebook resolution is spent on the within-cluster delta;
       // the search builds one ADC table per probed cluster against
       // query - centroid(c) (v - q = (v-cent) - (q-cent), distances
@@ -4849,13 +4876,10 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       // exact rounded re-rank — the lossy-but-deterministic residual
       // arithmetic verified end to end, not just recall-graded.
       VectorExpressions.ensureRegistered(s)
-      val idx = ivfIndexFor(s, dir)
-      val root = pqResidRootFor(s, dir)
-      val books = Pq.load(s, s"$root/books")
-      val enc = s.read.parquet(s"$root/data")
-      Pq.topKProbedResidual(enc, "vec_id", "embedding",
-          queryVec(s, dir), k = pqK, books, idx.centroids,
-          idx.clusterIds, nprobe = 6, refine = pqRefine,
+      val root = pqRootAt(s, pqResidRootFor(s, dir),
+        ivf = Some(ivfIndexFor(s, dir)), residual = true)
+      Pq.topK(root.data(s), "vec_id", "embedding", queryVec(s, dir),
+          k = pqK, root, nprobe = 6, refine = pqRefine,
           tieBreak = Some("vec_id"), rankRoundDp = Some(4))
         .select(col("vec_id"), col("dist"))
         .orderBy(col("dist"), col("vec_id"))
@@ -4870,11 +4894,9 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       // re-rank over the raw vectors. The metric<->books contract is
       // enforced both ways like SQ8's metric<->grid.
       VectorExpressions.ensureRegistered(s)
-      val root = pqCosRootFor(s, dir)
-      val books = Pq.load(s, s"$root/books")
-      val enc = s.read.parquet(s"$root/data")
-      Pq.topK(enc, "vec_id", "embedding", queryVec(s, dir), k = pqK,
-          books, refine = pqRefine, tieBreak = Some("vec_id"),
+      val root = pqRootAt(s, pqCosRootFor(s, dir))
+      Pq.topK(root.data(s), "vec_id", "embedding", queryVec(s, dir),
+          k = pqK, root, refine = pqRefine, tieBreak = Some("vec_id"),
           rankRoundDp = Some(4), metric = KnnSearch.Cosine)
         .select(col("vec_id"), col("dist"))
         .orderBy(col("dist"), col("vec_id"))
@@ -4886,14 +4908,12 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       // (probeOrderCosine's quantized key — the whole cosine IVF
       // family's ranking), directory-pruned ADC, true-cosine re-rank.
       VectorExpressions.ensureRegistered(s)
-      val idx = ivfIndexFor(s, dir)
-      val root = pqIvfCosRootFor(s, dir)
-      val books = Pq.load(s, s"${pqCosRootFor(s, dir)}/books")
-      val enc = s.read.parquet(s"$root/data")
-      Pq.topKProbed(enc, "vec_id", "embedding", queryVec(s, dir),
-          k = pqK, books, idx.centroids, idx.clusterIds, nprobe = 6,
-          refine = pqRefine, tieBreak = Some("vec_id"),
-          rankRoundDp = Some(4), metric = KnnSearch.Cosine)
+      val root = pqRootAt(s, pqIvfCosRootFor(s, dir), pqCosRootFor(s, dir),
+        Some(ivfIndexFor(s, dir)))
+      Pq.topK(root.data(s), "vec_id", "embedding", queryVec(s, dir),
+          k = pqK, root, nprobe = 6, refine = pqRefine,
+          tieBreak = Some("vec_id"), rankRoundDp = Some(4),
+          metric = KnnSearch.Cosine)
         .select(col("vec_id"), col("dist"))
         .orderBy(col("dist"), col("vec_id"))
     }),
@@ -4906,17 +4926,14 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       // root, true-cosine floor-rounded exact re-rank. Completes the
       // quantization matrix: {SQ8, PQ} x {single, batch} x {L2, cos}.
       VectorExpressions.ensureRegistered(s)
-      val idx = ivfIndexFor(s, dir)
-      val root = pqIvfCosRootFor(s, dir)
-      val books = Pq.load(s, s"${pqCosRootFor(s, dir)}/books")
-      val enc = s.read.parquet(s"$root/data")
+      val root = pqRootAt(s, pqIvfCosRootFor(s, dir), pqCosRootFor(s, dir),
+        Some(ivfIndexFor(s, dir)))
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id").isin(0, 1, 2))
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      Pq.topKBatchProbed(enc, "vec_id", "embedding", queries, "qid",
-          "qv", k = pqBatchK, books, idx.centroids, idx.clusterIds,
-          nprobe = pqBatchNprobe, refine = pqRefine,
-          tieBreak = "vec_id", rankRoundDp = Some(4),
+      Pq.topKBatch(root.data(s), "vec_id", "embedding", queries, "qid",
+          "qv", k = pqBatchK, root, nprobe = pqBatchNprobe,
+          refine = pqRefine, tieBreak = "vec_id", rankRoundDp = Some(4),
           metric = KnnSearch.Cosine)
         .select(col("query_id"), col("vec_id"), col("dist"))
         .orderBy(col("query_id"), col("dist"), col("vec_id"))
@@ -6344,17 +6361,14 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       // tables, each row's query-and-cluster-correlated sum chain, and
       // the per-query exact rounded re-rank.
       VectorExpressions.ensureRegistered(s)
-      val idx = ivfIndexFor(s, dir)
-      val root = pqResidRootFor(s, dir)
-      val books = Pq.load(s, s"$root/books")
-      val enc = s.read.parquet(s"$root/data")
+      val root = pqRootAt(s, pqResidRootFor(s, dir),
+        ivf = Some(ivfIndexFor(s, dir)), residual = true)
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id").isin(0, 1, 2))
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      Pq.topKBatchProbedResidual(enc, "vec_id", "embedding", queries,
-          "qid", "qv", k = pqBatchK, books, idx.centroids,
-          idx.clusterIds, nprobe = pqBatchNprobe, refine = pqRefine,
-          tieBreak = "vec_id", rankRoundDp = Some(4))
+      Pq.topKBatch(root.data(s), "vec_id", "embedding", queries,
+          "qid", "qv", k = pqBatchK, root, nprobe = pqBatchNprobe,
+          refine = pqRefine, tieBreak = "vec_id", rankRoundDp = Some(4))
         .select(col("query_id"), col("vec_id"), col("dist"))
         .orderBy(col("query_id"), col("dist"), col("vec_id"))
     }),
@@ -7072,29 +7086,24 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       // two calls on the scheduler (guide §2.6, r21; per-panel rows
       // and the union order are untouched, so the result is bit-equal
       // to the sequential spelling)
-      val runner = new LegRunner(s, "q182", 2)
-      try {
+      LegRunner.using(s, "q182", 2) { runner =>
         val realF = runner.leg {
           pqRecallLegs(t(s, dir, "embeddings"), col("vec_id") < opqNq,
             opqNq, pqRefine, Seq(
-            ("1_pq", s.read.parquet(s"$plainRoot/data"),
-              Pq.load(s, s"$plainRoot/books"), None),
-            ("2_opq", opqRoot.data(s), opqRoot.books, opqRoot.perm)))
+            ("1_pq", pqRootAt(s, plainRoot)), ("2_opq", opqRoot)))
         }
         val anisoF = runner.leg {
           pqRecallLegs(anisoEmb(s, dir),
             col("vec_id") < opqNq, opqNq, 1, Seq(
-            ("3_pq_aniso", s.read.parquet(s"$anisoPq/data"),
-              Pq.load(s, s"$anisoPq/books"), None),
-            ("4_opq_aniso", anisoOpq.data(s), anisoOpq.books,
-              anisoOpq.perm)))
+            ("3_pq_aniso", pqRootAt(s, anisoPq)),
+            ("4_opq_aniso", anisoOpq)))
         }
         runner.await(realF)
           .unionByName(runner.await(anisoF))
           .unionByName(permRow("5_perm", opqRoot.perm.get))
           .unionByName(permRow("6_perm_aniso", anisoOpq.perm.get))
           .orderBy(col("method"))
-      } finally runner.close()
+      }
     }),
 
     "q183_pq_cdc_search" -> ((s, dir) => {
@@ -7107,11 +7116,9 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       // hash equality proves maintained codes == fresh build at every
       // candidate, not merely that the search is self-consistent.
       VectorExpressions.ensureRegistered(s)
-      val idx = ivfIndexFor(s, dir)
       val root = Pq.loadRoot(s, pqCdcRootFor(s, dir))
-      Pq.topKProbed(root.data(s), "vec_id", "embedding",
-          queryVec(s, dir), k = pqK, root.books, idx.centroids,
-          idx.clusterIds, nprobe = 6, refine = pqRefine,
+      Pq.topK(root.data(s), "vec_id", "embedding", queryVec(s, dir),
+          k = pqK, root, nprobe = 6, refine = pqRefine,
           tieBreak = Some("vec_id"), rankRoundDp = Some(4))
         .select(col("vec_id"), col("dist"))
         .orderBy(col("dist"), col("vec_id"))
@@ -7146,13 +7153,10 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       // the permutation applied to the query before table
       // construction.
       VectorExpressions.ensureRegistered(s)
-      val idx = ivfIndexFor(s, dir)
       val root = Pq.loadRoot(s, opqIvfRootFor(s, dir))
-      Pq.topKProbed(root.data(s), "vec_id", "embedding",
-          queryVec(s, dir), k = pqK, root.books, idx.centroids,
-          idx.clusterIds, nprobe = 6, refine = pqRefine,
-          tieBreak = Some("vec_id"), rankRoundDp = Some(4),
-          perm = root.perm)
+      Pq.topK(root.data(s), "vec_id", "embedding", queryVec(s, dir),
+          k = pqK, root, nprobe = 6, refine = pqRefine,
+          tieBreak = Some("vec_id"), rankRoundDp = Some(4))
         .select(col("vec_id"), col("dist"))
         .orderBy(col("dist"), col("vec_id"))
     }),
@@ -7211,8 +7215,8 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
         ("2_refit", "4_refit_ctl", r))
       legs.map { case (nmShift, nmCtl, root) =>
         val ov = Pq.topKBatch(root.data(s), "vec_id", "embedding",
-            qDf, "qid", "qv", k = pqK, root.books, refine = 1,
-            tieBreak = "vec_id", rankRoundDp = Some(4), perm = None)
+            qDf, "qid", "qv", k = pqK, root, refine = 1,
+            tieBreak = "vec_id", rankRoundDp = Some(4))
           .select(col("query_id"), col("vec_id").as("id_a"))
           .join(exact, col("query_id") === col("qid_e") &&
             col("id_a") === col("id_e"))
@@ -7288,9 +7292,8 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       VectorExpressions.ensureRegistered(s)
       val root = Pq.loadRoot(s, opqCdcRootFor(s, dir))
       Pq.topK(root.data(s), "vec_id", "embedding", queryVec(s, dir),
-          k = pqK, root.books, refine = pqRefine,
-          tieBreak = Some("vec_id"), rankRoundDp = Some(4),
-          perm = root.perm)
+          k = pqK, root, refine = pqRefine,
+          tieBreak = Some("vec_id"), rankRoundDp = Some(4))
         .select(col("vec_id"), col("dist"))
         .orderBy(col("dist"), col("vec_id"))
     }),
@@ -8179,27 +8182,27 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       // (guide §2.6, r21: 12 serial count jobs -> overlapped with the
       // next round's build; the counts are over pinned frames, so the
       // values are identical)
-      val runner = new LegRunner(s, "q212", 4)
-      var e = edges0
-      var statsF = Vector.empty[(Long, scala.concurrent.Future[Long],
-        scala.concurrent.Future[Long])]
-      statsF :+= ((0L,
-        { val d = degrees(e); runner.leg(d.count()) },
-        { val e0 = e; runner.leg(e0.count()) }))
-      for (t <- 1 to 5) {
-        val alive = degrees(e).filter(col("c") >= 4)
-          .select(col("id")).localCheckpoint()
-        e = e.join(alive.select(col("id").as("u")), Seq("u"))
-          .join(alive.select(col("id").as("v")), Seq("v"))
-          .select(col("u"), col("v")).localCheckpoint()
-        val eT = e
-        statsF :+= ((t.toLong, runner.leg(alive.count()),
-          runner.leg(eT.count())))
-      }
-      val stats =
-        try statsF.map { case (t, nF, mF) =>
+      val stats = LegRunner.using(s, "q212", 4) { runner =>
+        var e = edges0
+        var statsF = Vector.empty[(Long, scala.concurrent.Future[Long],
+          scala.concurrent.Future[Long])]
+        statsF :+= ((0L,
+          { val d = degrees(e); runner.leg(d.count()) },
+          { val e0 = e; runner.leg(e0.count()) }))
+        for (t <- 1 to 5) {
+          val alive = degrees(e).filter(col("c") >= 4)
+            .select(col("id")).localCheckpoint()
+          e = e.join(alive.select(col("id").as("u")), Seq("u"))
+            .join(alive.select(col("id").as("v")), Seq("v"))
+            .select(col("u"), col("v")).localCheckpoint()
+          val eT = e
+          statsF :+= ((t.toLong, runner.leg(alive.count()),
+            runner.leg(eT.count())))
+        }
+        statsF.map { case (t, nF, mF) =>
           (t, runner.await(nF), runner.await(mF))
-        } finally runner.close()
+        }
+      }
       val stable =
         if (stats(5)._2 == stats(4)._2 && stats(5)._3 == stats(4)._3)
           1L
@@ -8545,7 +8548,7 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       val qv = driftCorpus(s, dir).filter(col("vec_id") === 3L)
         .select("embedding").head().getSeq[Float](0)
       Pq.topK(root.data(s), "vec_id", "embedding", qv, k = pqK,
-          root.books, refine = pqRefine, tieBreak = Some("vec_id"),
+          root, refine = pqRefine, tieBreak = Some("vec_id"),
           rankRoundDp = Some(4))
         .select(col("vec_id"), col("dist"))
         .orderBy(col("dist"), col("vec_id"))
@@ -8600,7 +8603,7 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       // Filtered ANN on the PQ rung — the third face of the filtered
       // contract (raw q220, SQ8 q224, PQ here), so the WHOLE
       // quantization ladder serves the reference's metadata-WHERE +
-      // similarity flagship: Pq.topKProbed pushes the predicate onto
+      // similarity flagship: Pq.topK pushes the predicate onto
       // the probed scan (ADC candidate pass AND exact re-rank see
       // only eligible rows) and widens the probe budget by
       // 1/selectivity (2 → 6 of 8). Oracle: q74's probe + hex-decoded
@@ -8608,14 +8611,11 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       // passes. Scale shape: one pruned m-bytes/row candidate scan +
       // one 40-row exact pass.
       VectorExpressions.ensureRegistered(s)
-      val idx = ivfIndexFor(s, dir)
-      val root = pqIvfRootFor(s, dir)
-      val books = Pq.load(s, s"${pqRootFor(s, dir)}/books")
-      Pq.topKProbed(s.read.parquet(s"$root/data"), "vec_id",
-          "embedding", queryVec(s, dir), k = pqK, books,
-          idx.centroids, idx.clusterIds, nprobe = 2,
-          refine = pqRefine, tieBreak = Some("vec_id"),
-          rankRoundDp = Some(4),
+      val root = pqRootAt(s, pqIvfRootFor(s, dir), pqRootFor(s, dir),
+        Some(ivfIndexFor(s, dir)))
+      Pq.topK(root.data(s), "vec_id", "embedding", queryVec(s, dir),
+          k = pqK, root, nprobe = 2, refine = pqRefine,
+          tieBreak = Some("vec_id"), rankRoundDp = Some(4),
           filter = Some(pmod(col("vec_id"), lit(3L)) === 1L),
           filterSelectivity = Some(1.0 / 3))
         .select(col("vec_id"), col("dist"))
@@ -8728,11 +8728,10 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       val sq8 = idx.searchQuantized(q, 10, nprobe = 2, refine = 4,
         tieBreak = Some("vec_id"), rankRoundDp = Some(4),
         filter = Some(m))
-      val pq = Pq.topKProbed(
-        s.read.parquet(s"${pqIvfRootFor(s, dir)}/data"), "vec_id",
-        "embedding", q, k = pqK,
-        Pq.load(s, s"${pqRootFor(s, dir)}/books"),
-        idx.centroids, idx.clusterIds, nprobe = 2, refine = pqRefine,
+      val pqRoot = pqRootAt(s, pqIvfRootFor(s, dir), pqRootFor(s, dir),
+        Some(idx))
+      val pq = Pq.topK(pqRoot.data(s), "vec_id", "embedding", q,
+        k = pqK, pqRoot, nprobe = 2, refine = pqRefine,
         tieBreak = Some("vec_id"), rankRoundDp = Some(4),
         filter = Some(m))
       // the binary leg re-ranks by exact NEGATED rounded L2 (desc on
@@ -8850,27 +8849,26 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       // ~1.2 s at sf0.1). Each leg's rows are untouched — same walk,
       // same cuts — and the union keeps the Seq order, so the result
       // is bit-equal to the sequential spelling.
-      val runner = new LegRunner(s, "q231", 3)
-      val legs = Seq(1.0, 2.0, 4.0).map { w =>
-        runner.leg {
-          // ONE walk per widen: k covers every eligible visited row, so
-          // the same ranked frame yields the pool size and its top-5
-          // (beamSearch(k=5) ≡ this frame's first 5 — same order)
-          val walked = idx.beamSearch(graph, q, entry, k = 1000000,
-            beam = 4, hops = 5, filter = Some(m), beamWiden = w)
-          val nEligible = walked.count()
-          walked.limit(5).select(col("vec_id").as("id_a"))
-            .join(exact, col("id_a") === col("id_e"), "left_outer")
-            .agg(count(col("id_a")).as("n_found"),
-              coalesce(sum(when(col("id_e").isNotNull, 1L).otherwise(0L)),
-                lit(0L)).as("n_overlap"))
-            .select(lit((w * 10).toLong).as("widen_x10"),
-              lit(nEligible).as("n_eligible"), col("n_found"),
-              col("n_overlap"))
-        }
-      }
-      (try legs.map(runner.await) finally runner.close())
-        .reduce(_.unionByName(_))
+      LegRunner.using(s, "q231", 3) { runner =>
+        Seq(1.0, 2.0, 4.0).map { w =>
+          runner.leg {
+            // ONE walk per widen: k covers every eligible visited row, so
+            // the same ranked frame yields the pool size and its top-5
+            // (beamSearch(k=5) ≡ this frame's first 5 — same order)
+            val walked = idx.beamSearch(graph, q, entry, k = 1000000,
+              beam = 4, hops = 5, filter = Some(m), beamWiden = w)
+            val nEligible = walked.count()
+            walked.limit(5).select(col("vec_id").as("id_a"))
+              .join(exact, col("id_a") === col("id_e"), "left_outer")
+              .agg(count(col("id_a")).as("n_found"),
+                coalesce(sum(when(col("id_e").isNotNull, 1L).otherwise(0L)),
+                  lit(0L)).as("n_overlap"))
+              .select(lit((w * 10).toLong).as("widen_x10"),
+                lit(nEligible).as("n_eligible"), col("n_found"),
+                col("n_overlap"))
+          }
+        }.map(runner.await)
+      }.reduce(_.unionByName(_))
         .withColumn("recall_ppm", expr("n_overlap * 1000000 div 5"))
         .orderBy(col("widen_x10"))
     }),

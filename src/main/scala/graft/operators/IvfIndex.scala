@@ -67,46 +67,11 @@ final case class IvfIndex(
   def probeOrder(query: Seq[Float]): Seq[Int] =
     IvfIndex.probeOrder(centroids, clusterIds, query)
 
-  /** probe ranking matched to the SEARCH metric, mirroring the
-    * [[graft.plans.IvfAutoProbe]] rule's dispatch: a cosine search over
-    * a non-normalized corpus must rank probes by centroid ANGLE — the
-    * L2-nearest centroid can be an angularly-wrong small-norm cluster,
-    * and probing it burns the nprobe budget on rows the final ranking
-    * will discard (recall loss invisible to any error). MIPS likewise
-    * ranks by dot product. */
-  private def probesFor(metric: KnnSearch.Metric,
-      query: Seq[Float]): Seq[Int] = metric match {
-    case KnnSearch.Cosine | KnnSearch.NativeCosine =>
-      IvfIndex.probeOrderCosine(centroids, clusterIds, query)
-    case KnnSearch.InnerProduct | KnnSearch.NativeInnerProduct =>
-      IvfIndex.probeOrderDot(centroids, clusterIds, query)
-    case _ => probeOrder(query)
-  }
-
-  /** The probe budget a FILTERED search should spend: a predicate
-    * keeping a `selectivity` fraction of the corpus thins each probed
-    * cluster to ~selectivity of its rows, so the filtered true top-k
-    * spreads over ~1/selectivity as many clusters as the unfiltered
-    * one — widening nprobe by that factor restores the candidate
-    * budget the caller sized for the unfiltered case (q209's measured
-    * curve: the ~33% predicate at nprobe=2 reads 30% recall; tripling
-    * the budget recovers it). Capped at nlist — a very selective
-    * predicate degrades to the exact filtered scan, which is correct
-    * (and what a planner should do there anyway). */
-  def widenedNprobe(nprobe: Int, selectivity: Double): Int = {
-    require(selectivity > 0.0 && selectivity <= 1.0,
-      s"selectivity must be in (0, 1], got $selectivity")
-    math.min(nlist,
-      math.ceil(math.max(1, nprobe) / selectivity).toInt)
-  }
-
-  private def effectiveNprobe(nprobe: Int, filter: Option[Column],
-      filterSelectivity: Option[Double]): Int = {
-    require(filterSelectivity.isEmpty || filter.isDefined,
-      "filterSelectivity without a filter has nothing to compensate")
-    filterSelectivity.fold(math.max(1, nprobe))(
-      widenedNprobe(nprobe, _))
-  }
+  /** [[QuantizedSearch.widenedNprobe]] over this index's `nlist`: the
+    * probe budget a filter keeping a `selectivity` fraction of the
+    * corpus should spend. */
+  def widenedNprobe(nprobe: Int, selectivity: Double): Int =
+    QuantizedSearch.widenedNprobe(nprobe, selectivity, nlist)
 
   /** The probe-pruned (optionally component- and predicate-scoped)
     * scan under [[search]] — exposed so diagnostics (candidate
@@ -123,8 +88,8 @@ final case class IvfIndex(
       components: Seq[Int] = Nil,
       filter: Option[Column] = None,
       filterSelectivity: Option[Double] = None): DataFrame = {
-    val np = effectiveNprobe(nprobe, filter, filterSelectivity)
-    val probes = probesFor(metric, query).take(np)
+    val probes = QuantizedSearch.probePlan(Some((centroids, clusterIds)),
+      metric, nprobe, filter, filterSelectivity, Seq(query)).get.head
     val scan = componentScope(components)
       .filter(col(IvfIndex.ClusterCol).isin(probes: _*))
     filter.foldLeft(scan)(_.filter(_))
@@ -205,14 +170,14 @@ final case class IvfIndex(
       metric: KnnSearch.Metric = KnnSearch.L2,
       filter: Option[Column] = None,
       filterSelectivity: Option[Double] = None): DataFrame = {
-    val np = effectiveNprobe(nprobe, filter, filterSelectivity)
     // ONE driver-side collect serves both probe planning and the
     // broadcast heap pass (the query table is small by contract, but
     // re-collecting it would still re-run its plan — e.g. a model
     // embedder seam — twice)
     val qSet = KnnSearch.collectQueries(queries, queryIdCol, queryVecCol)
-    val perQueryProbes: Array[Array[Int]] =
-      qSet.map(q => probesFor(metric, q._2.toSeq).take(np).toArray)
+    val perQueryProbes = QuantizedSearch.probePlan(
+      Some((centroids, clusterIds)), metric, nprobe, filter,
+      filterSelectivity, qSet.map(_._2.toSeq).toSeq).get
     val union = perQueryProbes.flatten.distinct.toSeq
     // the FILTER sits on the shared scan, before the per-query gated
     // heaps: one predicate evaluation per scanned row, all queries —
@@ -932,75 +897,19 @@ final case class IvfIndex(
       rankRoundDp: Option[Int] = None,
       metric: KnnSearch.Metric = KnnSearch.L2,
       filter: Option[Column] = None,
-      filterSelectivity: Option[Double] = None): DataFrame = {
-    val (mins, scales) = sq8Params.getOrElse(throw new IllegalStateException(
-      "searchQuantized needs a quantized index: write(path, " +
-        "quantize = true), then load(...) — this one has no " +
-        s"${IvfIndex.Sq8Sidecar} params"))
-    require(assigned.columns.contains(IvfIndex.Sq8CodeCol),
-      s"quantized params present but no ${IvfIndex.Sq8CodeCol} column — " +
-        "corrupted index root?")
-    require(refine >= 1, s"refine must be >= 1, got $refine")
-    val cosine = requireMetricMatchesGrid(metric, "searchQuantized")
-    graft.plans.VectorExpressions.ensureRegistered(assigned.sparkSession)
-    // cosine: probes rank ANGULARLY on the raw query; the code distance
-    // ranks against the unit-normalized query (the codes encode
-    // normalized vectors — unit-sphere L2² = 2 − 2·cos is monotone in
-    // cosine distance, the grid argument in [[write]])
-    val probes = probesFor(metric, query)
-      .take(effectiveNprobe(nprobe, filter, filterSelectivity))
-    val codeQuery = if (cosine) IvfIndex.unitNormalize(query) else query
-    // the FILTER sits on the shared scan, so the k·refine candidate
-    // budget is spent only on eligible rows (prefilter semantics —
-    // the q209/q220 argument on the quantized rung) and the exact
-    // pass inherits it; widening compensates a selective predicate
-    // exactly like [[search]]
-    val scan = filter.foldLeft(
-      componentScope(components)
-        .filter(col(IvfIndex.ClusterCol).isin(probes: _*)))(_.filter(_))
-    // approximate pass: ReadSchema is (id, code) + partition columns —
-    // the float vectors are never read here (spec-asserted; a filter
-    // referencing other data columns widens the read by exactly those)
-    val cand = scan
-      .select(col(idCol), call_function("graft_sq8_l2sq",
-        col(IvfIndex.Sq8CodeCol), KnnSearch.litVec(codeQuery),
-        typedLit(mins ++ scales)).as("__sq8_d"))
-      .orderBy(col("__sq8_d"), col(idCol))
-      .limit(k * refine)
-      .select(idCol).collect().map(_.get(0))
-    // exact pass over ONLY the candidates: same doubly-pruned scan plus
-    // an id filter; k·refine rows cross it — true metric over the RAW
-    // vectors
-    val exactMetric =
-      if (cosine) KnnSearch.NativeCosine else KnnSearch.NativeL2
-    KnnSearch.topK(
-      scan.filter(col(idCol).isin(cand.toSeq: _*))
-        .drop(IvfIndex.Sq8CodeCol),
-      vecCol, query, k, exactMetric, tieBreak,
-      rankRoundDp = rankRoundDp)
-  }
+      filterSelectivity: Option[Double] = None): DataFrame =
+    QuantizedSearch.searchOne(componentScope(components), idCol, vecCol,
+      sq8Codec, Some((centroids, clusterIds)), query, k, nprobe, refine,
+      metric, filter, filterSelectivity, tieBreak, rankRoundDp)
 
-  /** the SQ8 grid's metric contract: a raw (L2) grid serves only L2
-    * searches, a normalized grid only cosine — anything else silently
-    * ranks candidates in the wrong geometry. Returns whether the
-    * dispatch is cosine. */
-  private def requireMetricMatchesGrid(metric: KnnSearch.Metric,
-      op: String): Boolean = metric match {
-    case KnnSearch.L2 | KnnSearch.NativeL2 =>
-      require(!sq8Normalized,
-        s"$op: this index's SQ8 grid was built over UNIT-NORMALIZED " +
-          "vectors (write(quantizeNormalized = true)) — it serves " +
-          "cosine searches; L2 needs a raw grid (write(quantize = true))")
-      false
-    case KnnSearch.Cosine | KnnSearch.NativeCosine =>
-      require(sq8Normalized,
-        s"$op: cosine needs an SQ8 grid built over UNIT-NORMALIZED " +
-          "vectors — write(quantizeNormalized = true); this index's " +
-          "grid is raw (L2). The affine grid preserves L2 geometry, " +
-          "not angles.")
-      true
-    case other => throw new IllegalArgumentException(
-      s"$op supports L2 and Cosine, got $other")
+  /** the SQ8 codec this index was written with */
+  private def sq8Codec: QuantizedSearch.Sq8 = sq8Params match {
+    case Some((mins, scales)) =>
+      QuantizedSearch.Sq8(mins, scales, sq8Normalized)
+    case None => throw new IllegalStateException(
+      "quantized search needs a quantized index: write(path, " +
+        "quantize = true), then load(...) — this one has no " +
+        s"${IvfIndex.Sq8Sidecar} params")
   }
 
   /** Batch IVF-SQ8: [[searchQuantized]]'s two-pass shape composed with
@@ -1036,76 +945,11 @@ final case class IvfIndex(
       components: Seq[Int] = Nil,
       metric: KnnSearch.Metric = KnnSearch.L2,
       filter: Option[Column] = None,
-      filterSelectivity: Option[Double] = None): DataFrame = {
-    val (mins, scales) = sq8Params.getOrElse(throw new IllegalStateException(
-      "searchQuantizedBatch needs a quantized index: write(path, " +
-        "quantize = true), then load(...) — this one has no " +
-        s"${IvfIndex.Sq8Sidecar} params"))
-    require(assigned.columns.contains(IvfIndex.Sq8CodeCol),
-      s"quantized params present but no ${IvfIndex.Sq8CodeCol} column — " +
-        "corrupted index root?")
-    require(refine >= 1, s"refine must be >= 1, got $refine")
-    // same collision contract as topK/searchBatch: the exact pass adds
-    // these columns to the corpus rows, and a silent overwrite (or an
-    // ambiguous-join AnalysisException halfway through) would corrupt
-    // or confuse downstream plans
-    for (c <- Seq("dist", "query_id", "__qv"))
-      require(!assigned.columns.contains(c),
-        s"corpus already has a '$c' column — searchQuantizedBatch " +
-          "adds it to the output")
-    val cosine = requireMetricMatchesGrid(metric, "searchQuantizedBatch")
-    val spark = assigned.sparkSession
-    graft.plans.VectorExpressions.ensureRegistered(spark)
-    val np = effectiveNprobe(nprobe, filter, filterSelectivity)
-    val qSet = KnnSearch.collectQueries(queries, queryIdCol, queryVecCol)
-    val perQueryProbes: Array[Array[Int]] =
-      qSet.map(q => probesFor(metric, q._2.toSeq).take(np).toArray)
-    // cosine ranks codes against the UNIT-NORMALIZED query (the grid
-    // argument — see [[searchQuantized]]); probes and the exact re-rank
-    // use the raw query
-    val qSetCode =
-      if (cosine)
-        qSet.map { case (qid, qv) =>
-          (qid, IvfIndex.unitNormalize(qv.toSeq).toArray)
-        }
-      else qSet
-    val union = perQueryProbes.flatten.distinct.toSeq
-    // filter on the shared scan — both the gated code pass and the
-    // exact re-rank see only eligible rows (see [[searchQuantized]])
-    val scan = filter.foldLeft(
-      componentScope(components)
-        .filter(col(IvfIndex.ClusterCol).isin(union: _*)))(_.filter(_))
-    val minsArr = mins.toArray
-    val scalesArr = scales.toArray
-    val scorer = KnnSearch.RawScorer { (row, codeIdx, _, qv) =>
-      val codes = row.getAs[Array[Byte]](codeIdx)
-      if (codes.length != qv.length)
-        throw new IllegalArgumentException(
-          s"dimension mismatch in searchQuantizedBatch: code has " +
-            s"${codes.length} dims, query has ${qv.length}")
-      // mirrors Sq8L2SquaredExpr.nullSafeEval term for term
-      var s = 0.0
-      var i = 0
-      while (i < codes.length) {
-        val xhat = minsArr(i) + (codes(i) & 0xFF).toDouble * scalesArr(i)
-        val d = xhat - qv(i).toDouble
-        s += d * d
-        i += 1
-      }
-      s
-    }
-    val qidType = queries.schema(queryIdCol).dataType
-    val cand = KnnSearch.topKBatchCollected(
-      scan.select(col(idCol), col(IvfIndex.Sq8CodeCol),
-        col(IvfIndex.ClusterCol)),
-      IvfIndex.Sq8CodeCol, qSetCode, qidType, k * refine, tieBreak = idCol,
-      distCol = "__sq8_d", rankRoundDp = None,
-      gate = Some(KnnSearch.BatchGate(IvfIndex.ClusterCol, perQueryProbes)),
-      rawScorer = Some(scorer))
-      .select(col("query_id"), col(idCol))
-    KnnSearch.batchExactRerank(scan.drop(IvfIndex.Sq8CodeCol), idCol,
-      vecCol, cand, qSet, qidType, k, tieBreak, rankRoundDp, cosine)
-  }
+      filterSelectivity: Option[Double] = None): DataFrame =
+    QuantizedSearch.searchBatch(componentScope(components), idCol, vecCol,
+      sq8Codec, Some((centroids, clusterIds)), queries, queryIdCol,
+      queryVecCol, k, nprobe, refine, metric, filter, filterSelectivity,
+      tieBreak, rankRoundDp)
 
   /** the corpus restricted to `components` (the reference's
     * `partition_names`) — a partition-column filter on the two-level
@@ -2412,8 +2256,8 @@ object IvfIndex {
       (if (sideStamp != "absent") sideStamp
        else "data:" + fsStamp(spark, path)) +
         "|" + fsStamp(spark, s"$path/$Sq8Sidecar")
-    val meta = loadMetaCache.computeIfAbsent(
-      s"$path|$gen|$idCol|$vecCol|$stamp", _ => {
+    val meta = stampCached(loadMetaCache, s"$path|$idCol|$vecCol",
+        s"$gen|$stamp") {
       val byId: Array[(Int, Array[Float])] = {
         val loaded =
           try {
@@ -2451,25 +2295,50 @@ object IvfIndex {
         r.schema.fieldNames.contains("normalized") &&
           r.getBoolean(r.fieldIndex("normalized")))
       LoadedMeta(byId.map(_._2), byId.map(_._1), sq8, normalized)
-    })
+    }
     IvfIndex(meta.centroids, assigned, idCol, vecCol, meta.clusterIds,
       component, meta.sq8, meta.normalized)
   }
 
   /** parsed per-generation sidecar metadata — see [[load]] */
-  private final case class LoadedMeta(centroids: Array[Array[Float]],
+  private[operators] final case class LoadedMeta(centroids: Array[Array[Float]],
       clusterIds: Array[Int], sq8: Option[(Seq[Double], Seq[Double])],
       normalized: Boolean)
-  private val loadMetaCache =
+  private[operators] val loadMetaCache =
     new java.util.concurrent.ConcurrentHashMap[String, LoadedMeta]()
 
-  /** Cheap content fingerprint of one directory level: name:length:mtime
+  /** `cache(owner|stamp)`, loaded on a miss. Inserting a new stamp drops
+    * every entry the same owner holds under another stamp: a stamp
+    * change means the files were rewritten, so the old parse can never
+    * be served again — a path rewritten N times holds one entry, not
+    * N. */
+  private[operators] def stampCached[V](
+      cache: java.util.concurrent.ConcurrentHashMap[String, V],
+      owner: String, stamp: String)(load: => V): V = {
+    val key = s"$owner|$stamp"
+    val hit = cache.get(key)
+    if (hit != null) hit
+    else {
+      val v = cache.computeIfAbsent(key, _ => load)
+      cache.keySet.removeIf(k => k != key && k.startsWith(s"$owner|"))
+      v
+    }
+  }
+
+  /** Cheap content fingerprint of ONE directory level: name:length:mtime
     * of every entry from a single non-recursive `listStatus` — no Spark
     * job, no file reads. Used to stamp metadata-cache keys so a sidecar
     * rewritten IN PLACE by another process (which no in-JVM eviction
     * hook can observe) resolves to a fresh key instead of serving stale
     * parsed geometry. A missing path stamps as "absent" (the legacy
-    * no-sidecar layouts are a real, supported state). */
+    * no-sidecar layouts are a real, supported state).
+    *
+    * Granularity: only the listed level is stamped (nested directories
+    * contribute their own name:length:mtime, not their contents), and a
+    * rewrite that keeps every file's name and length and lands within
+    * the file system's mtime tick of the previous write yields the SAME
+    * stamp — such a rewrite goes undetected until an in-JVM eviction
+    * hook fires. */
   private[operators] def fsStamp(spark: SparkSession, path: String)
       : String = {
     val p = new org.apache.hadoop.fs.Path(path)

@@ -223,10 +223,11 @@ object KnnSearch {
   /** Pluggable per-(row, query) scoring for [[topKBatchCollected]]:
     * replaces the default float-vector extract + metric closure for
     * corpora whose ranked representation is not a float array —
-    * [[IvfIndex.searchQuantizedBatch]] scores 1-byte/dim SQ8 codes
-    * here, [[Pq.topKBatchProbed]] m-byte PQ codes against per-query ADC
-    * tables. `vecCol` still names the scored column (its null-ness
-    * skips the row, and it anchors column pruning); the scorer receives
+    * [[QuantizedSearch.searchBatch]] scores SQ8 and PQ codes here
+    * through per-query [[QuantizedSearch.Codec]] scorers, and
+    * [[Rerank]] its own representation. `vecCol` still names the
+    * scored column (its null-ness skips the row, and it anchors column
+    * pruning); the scorer receives
     * `(row, that column's row index, query index into the collected
     * query set, query vector)` and is responsible for its own dimension
     * validation — the query INDEX is what lets a scorer key per-query
@@ -361,7 +362,7 @@ object KnnSearch {
   }
 
   /** The batch EXACT re-rank pass shared by the quantized batch
-    * searches ([[IvfIndex.searchQuantizedBatch]], [[Pq.topKBatchProbed]]):
+    * searches ([[QuantizedSearch.searchBatch]]):
     * materialize the per-query candidate pairs ONCE (re-planning `cand`
     * would re-run the whole approximate scan), re-read only the
     * candidate rows from the already-pruned `scan` (its code column

@@ -78,9 +78,8 @@ object Pq {
     // another process must resolve to a fresh key, not be served the
     // old parsed books (in-JVM eviction hooks cannot see foreign
     // writers). The stamp is one listStatus — no Spark job.
-    booksCache.computeIfAbsent(
-      s"$path|${IvfIndex.fsStamp(spark, path)}",
-      _ => loadUncached(spark, path))
+    IvfIndex.stampCached(booksCache, path, IvfIndex.fsStamp(spark, path))(
+      loadUncached(spark, path))
 
   private def loadUncached(spark: SparkSession, path: String): Codebooks = {
     val df = spark.read.parquet(path)
@@ -115,9 +114,9 @@ object Pq {
     * explicit drops in [[writeRoot]]/[[refitRoot]]; a mutated root's
     * whole subtree (books/centroids/perm sidecars live under it) is
     * removed. */
-  private val booksCache =
+  private[operators] val booksCache =
     new java.util.concurrent.ConcurrentHashMap[String, Codebooks]()
-  private val rootMetaCache =
+  private[operators] val rootMetaCache =
     new java.util.concurrent.ConcurrentHashMap[String, PqRoot]()
   private[operators] def evictMeta(root: String): Unit = {
     // keys are "path|stamp" since the stamp-keying (r21 verdict #7):
@@ -288,218 +287,94 @@ object Pq {
     }(org.apache.spark.sql.Encoders.row(outSchema))
   }
 
-  /** The per-query ADC lookup table (canonical FAISS ADC): `tab(sub)
-    * (code)` is the partial L2² between the query's `sub`-th slice and
-    * that code's centroid — each partial the same fixed-order double
-    * fold an oracle replays from the exported books. Scoring a row is
-    * then `m` table lookups + adds instead of `dim` multiply-adds
-    * (~dim/m× less row arithmetic); the row total is the left-assoc
-    * sum of partials in subspace order, which an oracle replays as a
-    * literal `p0 + p1 + … + p_{m-1}` chain. O(m·ksub·dsub) = one
-    * decoded-corpus-row's work to build, KBs to hold. */
-  private[operators] def adcTable(b: Codebooks,
-      q: Array[Float]): Array[Array[Double]] = {
-    require(q.length == b.dim,
-      s"query has dim ${q.length}, codebooks ${b.dim}")
-    Array.tabulate(b.m) { sub =>
-      Array.tabulate(b.ksub) { c =>
-        val cent = b.cb(sub)(c)
-        var acc = 0.0
-        var j = 0
-        while (j < b.dsub) {
-          val diff = cent(j).toDouble - q(sub * b.dsub + j).toDouble
-          acc += diff * diff
-          j += 1
-        }
-        acc
-      }
-    }
-  }
-
-  /** ADC row score against a prebuilt table, with the loud per-row
-    * code validation ([[IvfIndex.searchQuantized]]'s guard discipline):
-    * a null or mis-sized or out-of-range code means the corpus and the
-    * passed codebooks don't match — silently scoring the first bytes
-    * against the wrong books would return wrong neighbors with no
-    * error. */
-  private[operators] def adcScore(tab: Array[Array[Double]],
-      code: Array[Byte], m: Int, ksub: Int): Double = {
-    if (code == null)
-      throw new IllegalArgumentException(
-        "Pq: null __pq_code — row not encoded with Pq.encode, or the " +
-          "code column was overwritten")
-    if (code.length != m)
-      throw new IllegalArgumentException(
-        s"Pq: code has ${code.length} bytes, codebooks have m=$m " +
-          "subspaces — corpus encoded with different codebooks?")
-    var s = 0.0
-    var sub = 0
-    while (sub < m) {
-      val ci = code(sub) & 0xFF
-      if (ci >= ksub)
-        throw new IllegalArgumentException(
-          s"Pq: code byte $ci >= ksub=$ksub — corpus encoded with " +
-            "different codebooks?")
-      s += tab(sub)(ci)
-      sub += 1
-    }
-    s
-  }
-
-  /** ADC top-k over a PQ-encoded corpus: the approximate pass scans
-    * ONLY `(idCol, __pq_code)` — m bytes per row instead of 4·dim —
-    * scoring each row from the per-query [[adcTable]] (`m` lookups +
-    * adds; partials and their subspace-order sum are fixed-order double
-    * arithmetic, bit-replayable from the exported artifacts), keeps the
-    * best `k·refine` candidate ids (unrounded distance, id ties — the
-    * [[IvfIndex.searchQuantized]] candidate contract), and exactly
-    * re-ranks only those rows' full vectors with the cross-engine floor
-    * rounding. At 100 TB the approximate pass is the 32×-lighter scan
-    * doing ~dim/m× less row arithmetic, and the exact pass touches
-    * k·refine rows. */
-  /** IVF-PQ (the FAISS flagship `IVFx,PQm` shape): probe the `nprobe`
-    * nearest clusters — the corpus must carry the IVF layout's
-    * `__ivf_cluster` partition column, so the filter is directory-level
-    * pruning — then run [[topK]]'s two ADC passes over ONLY the probed
-    * partitions: the candidate scan reads (id, code) of ~nprobe/nlist
-    * of the corpus (m bytes/row of that), and the exact re-rank
-    * touches k·refine rows. Probe selection is
-    * [[IvfIndex.probeOrder]]'s L2 ranking — identical to the
-    * unquantized IVF path, so an oracle replays probes + decode +
-    * re-rank entirely from the exported artifacts (q74). */
-  def topKProbed(
-      encoded: DataFrame,
-      idCol: String,
-      vecCol: String,
-      query: Seq[Float],
-      k: Int,
-      books: Codebooks,
-      centroids: Array[Array[Float]],
-      clusterIds: Array[Int],
-      nprobe: Int,
-      refine: Int = 4,
-      tieBreak: Option[String] = None,
-      rankRoundDp: Option[Int] = None,
-      metric: KnnSearch.Metric = KnnSearch.NativeL2,
-      perm: Option[Array[Int]] = None,
-      filter: Option[Column] = None,
-      filterSelectivity: Option[Double] = None): DataFrame = {
-    require(encoded.columns.contains(IvfIndex.ClusterCol),
-      s"corpus has no '${IvfIndex.ClusterCol}' column — IVF-PQ needs " +
-        "the IVF cluster layout (assign + partition first, then encode)")
-    require(filterSelectivity.isEmpty || filter.isDefined,
-      "filterSelectivity without a filter has nothing to compensate")
-    filterSelectivity.foreach(sel => require(sel > 0.0 && sel <= 1.0,
-      s"selectivity must be in (0, 1], got $sel"))
-    // cosine probes rank ANGULARLY on the raw query (the quantized-key
-    // ranking the whole cosine IVF family uses) — the books contract
-    // itself is enforced inside topK. Probes rank on the RAW query:
-    // assignment is in the original coordinates (encodeFor), the OPQ
-    // permutation only reorders what the CODES see.
-    val cosine =
-      requireMetricMatchesBooks(metric, books, "Pq.topKProbed")
-    // FILTERED search on the PQ rung (the IvfIndex.search contract):
-    // the predicate sits on the probed scan, so both the ADC candidate
-    // pass and the exact re-rank see only eligible rows — the k·refine
-    // candidate budget is never crowded by ineligible ones — and a
-    // known selectivity widens the probe budget by 1/selectivity,
-    // capped at the cluster count.
-    val np = filterSelectivity.fold(math.max(1, nprobe))(sel =>
-      math.min(clusterIds.length,
-        math.ceil(math.max(1, nprobe) / sel).toInt))
-    val probes =
-      (if (cosine) IvfIndex.probeOrderCosine(centroids, clusterIds, query)
-       else IvfIndex.probeOrder(centroids, clusterIds, query))
-        .take(np)
-    val scan = encoded.filter(col(IvfIndex.ClusterCol).isin(probes: _*))
-    topK(filter.foldLeft(scan)((d, f) => d.filter(f)),
-      idCol, vecCol, query, k, books, refine, tieBreak, rankRoundDp,
-      metric, perm)
-  }
-
-  /** the PQ metric↔books contract (the SQ8 family's metric↔grid
-    * discipline): raw books preserve L2 geometry, not angles — they
-    * serve only L2; normalized books serve only cosine. Returns whether
-    * the dispatch is cosine. */
-  private def requireMetricMatchesBooks(metric: KnnSearch.Metric,
-      books: Codebooks, op: String): Boolean = metric match {
-    case KnnSearch.L2 | KnnSearch.NativeL2 =>
-      require(!books.normalized,
-        s"$op: these codebooks were trained on UNIT-NORMALIZED vectors " +
-          "(fit(normalized = true)) — they serve cosine searches; L2 " +
-          "needs raw books")
-      false
-    case KnnSearch.Cosine | KnnSearch.NativeCosine =>
-      require(books.normalized,
-        s"$op: cosine needs codebooks trained on UNIT-NORMALIZED " +
-          "vectors — fit(normalized = true); these books are raw (L2). " +
-          "PQ codebooks over raw vectors preserve L2 geometry, not " +
-          "angles.")
-      true
-    case other => throw new IllegalArgumentException(
-      s"$op supports L2 and Cosine, got $other")
-  }
-
+  /** ADC top-k over a PQ-encoded corpus — the one single-query PQ
+    * search, on [[QuantizedSearch.searchOne]]. The approximate pass
+    * scans ONLY `(id, __pq_code[, cluster])` — m bytes per row instead
+    * of 4·dim — scoring each row from a per-query ADC table
+    * ([[QuantizedSearch.adcTable]]: `m` lookups + adds, fixed-order
+    * double arithmetic, bit-replayable from the exported artifacts),
+    * keeps the best `k·refine` candidate ids (unrounded distance, id
+    * ties), and exactly re-ranks only those rows' full vectors with the
+    * cross-engine floor rounding.
+    *
+    * Everything codec-specific comes from `index`, the description of
+    * how `encoded` was built (a loaded [[PqRoot]], or one naming the
+    * books an in-memory [[encode]] used):
+    *   - `ivf` absent: FLAT — the whole corpus is scored;
+    *   - `ivf` present (the FAISS flagship `IVFx,PQm` shape): the
+    *     corpus carries `__ivf_cluster`, and only the `nprobe` clusters
+    *     ranked best for `metric` are scanned — directory-level pruning
+    *     (default: every cluster);
+    *   - `perm` (OPQ): ADC tables are built on the permuted query;
+    *     probes and the exact re-rank stay on the raw one;
+    *   - `residual`: codes are `v − centroid(cluster(v))`, scored
+    *     against the query's residual for each row's own cluster;
+    *   - `books.normalized`: cosine books — the search `metric` must be
+    *     cosine, and raw books must be L2 (the quantizer contract).
+    * `filter` sits on the scanned rows, so both passes see only
+    * eligible rows; a known `filterSelectivity` widens the probe budget
+    * by 1/selectivity ([[QuantizedSearch.widenedNprobe]]). An oracle
+    * replays probes + decode + re-rank entirely from the exported
+    * artifacts (q73–q78). */
   def topK(
       encoded: DataFrame,
       idCol: String,
       vecCol: String,
       query: Seq[Float],
       k: Int,
-      books: Codebooks,
+      index: PqRoot,
+      nprobe: Int = Int.MaxValue,
       refine: Int = 4,
       tieBreak: Option[String] = None,
       rankRoundDp: Option[Int] = None,
       metric: KnnSearch.Metric = KnnSearch.NativeL2,
-      perm: Option[Array[Int]] = None): DataFrame = {
-    require(encoded.columns.contains(CodeCol),
-      s"corpus has no '$CodeCol' column — Pq.encode it first")
-    require(k > 0, s"k must be > 0, got $k")
-    require(refine >= 1, s"refine must be >= 1, got $refine")
-    require(query.length == books.dim,
-      s"query has dim ${query.length}, codebooks ${books.dim}")
-    perm.foreach(p => require(p.length == books.dim,
-      s"perm has length ${p.length}, codebooks dim ${books.dim}"))
-    val cosine = requireMetricMatchesBooks(metric, books, "Pq.topK")
-    val spark = encoded.sparkSession
-    graft.plans.VectorExpressions.ensureRegistered(spark)
-    val bc = spark.sparkContext.broadcast(books)
-    // OPQ roots: the codes live in the PERMUTED coordinate order, so
-    // the ADC table is built against the permuted query (permute FIRST
-    // — encode normalizes the permuted vector, so the cosine path must
-    // too); the exact re-rank below stays on the raw query and raw
-    // vectors, untouched by the rotation
-    val qRot = perm.map(p => p.map(i => query(i))).getOrElse(query.toArray)
-    // cosine: the codes represent unit-normalized vectors, so the ADC
-    // table is built against the unit-normalized query (on the unit
-    // sphere L2² is monotone in cosine distance); the exact re-rank
-    // below scores TRUE cosine over the raw vectors and raw query
-    val q =
-      if (cosine) IvfIndex.unitNormalize(qRot.toSeq).toArray else qRot
-    val narrow = encoded.select(col(idCol), col(CodeCol))
-    val idIdx = 0
-    val codeIdx = 1
-    val adSchema = StructType(Seq(narrow.schema.head,
-      StructField("__pq_d", org.apache.spark.sql.types.DoubleType)))
-    val scored = narrow.mapPartitions { rows =>
-      val b = bc.value
-      // the per-query ADC table, built ONCE per partition (one decoded
-      // row's worth of arithmetic), then m lookups + adds per row
-      val tab = adcTable(b, q)
-      rows.map { row =>
-        val code = row.getAs[Array[Byte]](codeIdx)
-        Row(row.get(idIdx), adcScore(tab, code, b.m, b.ksub))
-      }
-    }(org.apache.spark.sql.Encoders.row(adSchema))
-    val cand = scored.orderBy(col("__pq_d"), col(idCol))
-      .limit(k * refine)
-      .select(idCol).collect().map(_.get(0))
-    KnnSearch.topK(
-      encoded.filter(col(idCol).isin(cand.toSeq: _*)).drop(CodeCol),
-      vecCol, query, k,
-      if (cosine) KnnSearch.NativeCosine else KnnSearch.NativeL2,
-      tieBreak, rankRoundDp = rankRoundDp)
-  }
+      filter: Option[Column] = None,
+      filterSelectivity: Option[Double] = None): DataFrame =
+    QuantizedSearch.searchOne(encoded, idCol, vecCol, index.codec,
+      index.ivf, query, k, nprobe, refine, metric, filter,
+      filterSelectivity, tieBreak, rankRoundDp)
+
+  /** IVF-PQ over raw-vector codes at a given centroid set: [[topK]]
+    * with `index` naming `books` and the IVF layout. */
+  def topKProbed(encoded: DataFrame, idCol: String, vecCol: String,
+      query: Seq[Float], k: Int, books: Codebooks,
+      centroids: Array[Array[Float]], clusterIds: Array[Int], nprobe: Int,
+      tieBreak: Option[String] = None,
+      rankRoundDp: Option[Int] = None): DataFrame =
+    topK(encoded, idCol, vecCol, query, k,
+      PqRoot("", books, residual = false, Some((centroids, clusterIds))),
+      nprobe, tieBreak = tieBreak, rankRoundDp = rankRoundDp)
+
+  /** The batch face of [[topK]], on [[QuantizedSearch.searchBatch]]:
+    * many queries, ONE narrow code scan (of the probe union when
+    * `index` has an IVF layout), per-query ADC tables built once
+    * driver-side, each row scored for query `i` only when its cluster
+    * is in query i's own probe set (the bit-packed gate), per-query
+    * `k·refine` candidate heaps, then the shared exact re-rank
+    * ([[KnnSearch.batchExactRerank]]). Every codec [[topK]] serves,
+    * with the same filter contract; per query the rows are bit-equal to
+    * [[topK]] at the same arguments (spec-asserted per codec). At
+    * scale: Σ_q nprobe/nlist row-scores over one union scan instead of
+    * |queries| separate scans. */
+  def topKBatch(
+      encoded: DataFrame,
+      idCol: String,
+      vecCol: String,
+      queries: DataFrame,
+      queryIdCol: String,
+      queryVecCol: String,
+      k: Int,
+      index: PqRoot,
+      nprobe: Int = Int.MaxValue,
+      refine: Int = 4,
+      tieBreak: String = "",
+      rankRoundDp: Option[Int] = None,
+      metric: KnnSearch.Metric = KnnSearch.NativeL2,
+      filter: Option[Column] = None,
+      filterSelectivity: Option[Double] = None): DataFrame =
+    QuantizedSearch.searchBatch(encoded, idCol, vecCol, index.codec,
+      index.ivf, queries, queryIdCol, queryVecCol, k, nprobe, refine,
+      metric, filter, filterSelectivity, tieBreak, rankRoundDp)
 
   /** temp column carrying the per-row residual during [[encodeResidual]]
     * / [[fitResidual]] */
@@ -570,303 +445,6 @@ object Pq {
       centroids: Array[Array[Float]], clusterIds: Array[Int]): DataFrame =
     encode(withResidual(df, vecCol, centroids, clusterIds, ResidCol),
       ResidCol, books).drop(ResidCol)
-
-  /** Residual IVF-PQ search: `v − q = (v − cent) − (q − cent)`, so the
-    * approximate distance is the ADC between the row's RESIDUAL code
-    * and the query's residual against that row's OWN cluster — one
-    * [[adcTable]] per probed cluster (nprobe tables, KBs), still m
-    * lookups + adds per row, distances comparable across clusters
-    * (all approximate ‖v − q‖²). Candidate cut and exact re-rank as
-    * [[topKProbed]]. */
-  def topKProbedResidual(
-      encoded: DataFrame,
-      idCol: String,
-      vecCol: String,
-      query: Seq[Float],
-      k: Int,
-      books: Codebooks,
-      centroids: Array[Array[Float]],
-      clusterIds: Array[Int],
-      nprobe: Int,
-      refine: Int = 4,
-      tieBreak: Option[String] = None,
-      rankRoundDp: Option[Int] = None): DataFrame = {
-    require(encoded.columns.contains(IvfIndex.ClusterCol),
-      s"corpus has no '${IvfIndex.ClusterCol}' column — residual " +
-        "IVF-PQ needs the IVF cluster layout")
-    require(encoded.columns.contains(CodeCol),
-      s"corpus has no '$CodeCol' column — Pq.encodeResidual it first")
-    require(k > 0, s"k must be > 0, got $k")
-    require(refine >= 1, s"refine must be >= 1, got $refine")
-    require(query.length == books.dim,
-      s"query has dim ${query.length}, codebooks ${books.dim}")
-    require(!books.normalized,
-      "Pq.topKProbedResidual: residual coding composes with L2 books " +
-        "only — residuals of unit-normalized vectors are not what " +
-        "fitResidual trains on")
-    val spark = encoded.sparkSession
-    graft.plans.VectorExpressions.ensureRegistered(spark)
-    val q = query.toArray
-    val probes = IvfIndex.probeOrder(centroids, clusterIds, query)
-      .take(math.max(1, nprobe))
-    val cmap = clusterIds.zip(centroids).toMap
-    // the query's residual against each probed cluster — the same
-    // double-subtract/float-cast arithmetic the encoder used
-    val residQ: Map[Int, Array[Float]] = probes.map { c =>
-      val cent = cmap(c)
-      c -> Array.tabulate(q.length)(j =>
-        (q(j).toDouble - cent(j).toDouble).toFloat)
-    }.toMap
-    val bc = spark.sparkContext.broadcast((books, residQ))
-    val scan = encoded.filter(col(IvfIndex.ClusterCol).isin(probes: _*))
-    val narrow = scan.select(col(idCol), col(CodeCol),
-      col(IvfIndex.ClusterCol))
-    val adSchema = StructType(Seq(narrow.schema.head,
-      StructField("__pq_d", org.apache.spark.sql.types.DoubleType)))
-    val scored = narrow.mapPartitions { rows =>
-      val (b, rq) = bc.value
-      val tabs = rq.map { case (c, qr) => c -> adcTable(b, qr) }
-      rows.map { row =>
-        val tab = tabs(row.getAs[Number](2).intValue())
-        Row(row.get(0),
-          adcScore(tab, row.getAs[Array[Byte]](1), b.m, b.ksub))
-      }
-    }(org.apache.spark.sql.Encoders.row(adSchema))
-    val cand = scored.orderBy(col("__pq_d"), col(idCol))
-      .limit(k * refine)
-      .select(idCol).collect().map(_.get(0))
-    KnnSearch.topK(
-      scan.filter(col(idCol).isin(cand.toSeq: _*)).drop(CodeCol),
-      vecCol, query, k, KnnSearch.NativeL2, tieBreak,
-      rankRoundDp = rankRoundDp)
-  }
-
-  /** Batch IVF-PQ: [[topKProbed]]'s two ADC passes composed with the
-    * per-query probe gate — many queries, ONE narrow m-byte code scan,
-    * exactly the [[IvfIndex.searchQuantizedBatch]] shape with the SQ8
-    * decode swapped for per-query [[adcTable]]s. The approximate pass
-    * scans the probe UNION reading only `(id, code, cluster)`, scores a
-    * row for query `i` only when its cluster is in query i's own probe
-    * set (the bit-packed gate), by `m` lookups into query i's table —
-    * the identical partial-sum chain as [[topK]], so per-query results
-    * are bit-equal to [[topKProbed]] at the same (nprobe, refine,
-    * rankRoundDp, metric) (spec-asserted). Candidates are per-query `k·refine`
-    * bounded heaps (unrounded distance, id ties); the exact pass is the
-    * shared [[KnnSearch.batchExactRerank]] — broadcast candidate pairs,
-    * true L2 over raw vectors, floor-form rounding, per-query rank. At
-    * scale: Σ_q nprobe/nlist row-scores over one union scan instead of
-    * |queries| separate scans. */
-  /** Batch face of the FLAT [[topK]] (the {flat, IVF} × {single,
-    * batch} matrix's last open cell, opened for q182's multi-query
-    * recall eval): per-query ADC tables built once driver-side
-    * (m·ksub doubles per query), ONE narrow (id, code) corpus scan
-    * scores every row for every query via the shared per-partition
-    * heap pass, then the shared exact re-rank — per query bit-equal
-    * to [[topK]] at the same (refine, rankRoundDp) (spec-asserted).
-    * `perm` is the OPQ contract of [[topK]]: ADC tables on the
-    * permuted queries, exact re-rank untouched. */
-  def topKBatch(
-      encoded: DataFrame,
-      idCol: String,
-      vecCol: String,
-      queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      k: Int,
-      books: Codebooks,
-      refine: Int = 4,
-      tieBreak: String = "",
-      rankRoundDp: Option[Int] = None,
-      metric: KnnSearch.Metric = KnnSearch.NativeL2,
-      perm: Option[Array[Int]] = None): DataFrame = {
-    require(encoded.columns.contains(CodeCol),
-      s"corpus has no '$CodeCol' column — Pq.encode it first")
-    require(k > 0, s"k must be > 0, got $k")
-    require(refine >= 1, s"refine must be >= 1, got $refine")
-    for (c <- Seq("dist", "query_id", "__qv", "__pq_d"))
-      require(!encoded.columns.contains(c),
-        s"corpus already has a '$c' column — topKBatch adds it")
-    val cosine = requireMetricMatchesBooks(metric, books, "Pq.topKBatch")
-    val spark = encoded.sparkSession
-    graft.plans.VectorExpressions.ensureRegistered(spark)
-    val qSet = KnnSearch.collectQueries(queries, queryIdCol, queryVecCol)
-    val tables = qSet.map { q =>
-      val qRot = perm.map(p => p.map(i => q._2(i))).getOrElse(q._2)
-      adcTable(books,
-        if (cosine) IvfIndex.unitNormalize(qRot.toSeq).toArray else qRot)
-    }
-    val m = books.m
-    val ksub = books.ksub
-    val scorer = KnnSearch.RawScorer { (row, codeIdx, qi, _) =>
-      adcScore(tables(qi), row.getAs[Array[Byte]](codeIdx), m, ksub)
-    }
-    val qidType = queries.schema(queryIdCol).dataType
-    val cand = KnnSearch.topKBatchCollected(
-      encoded.select(col(idCol), col(CodeCol)),
-      CodeCol, qSet, qidType, k * refine, tieBreak = idCol,
-      distCol = "__pq_d", rankRoundDp = None,
-      rawScorer = Some(scorer))
-      .select(col("query_id"), col(idCol))
-    KnnSearch.batchExactRerank(encoded.drop(CodeCol), idCol, vecCol,
-      cand, qSet, qidType, k, tieBreak, rankRoundDp, cosine = cosine)
-  }
-
-  def topKBatchProbed(
-      encoded: DataFrame,
-      idCol: String,
-      vecCol: String,
-      queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      k: Int,
-      books: Codebooks,
-      centroids: Array[Array[Float]],
-      clusterIds: Array[Int],
-      nprobe: Int,
-      refine: Int = 4,
-      tieBreak: String = "",
-      rankRoundDp: Option[Int] = None,
-      metric: KnnSearch.Metric = KnnSearch.NativeL2): DataFrame = {
-    require(encoded.columns.contains(IvfIndex.ClusterCol),
-      s"corpus has no '${IvfIndex.ClusterCol}' column — IVF-PQ needs " +
-        "the IVF cluster layout (assign + partition first, then encode)")
-    require(encoded.columns.contains(CodeCol),
-      s"corpus has no '$CodeCol' column — Pq.encode it first")
-    require(k > 0, s"k must be > 0, got $k")
-    require(refine >= 1, s"refine must be >= 1, got $refine")
-    // same collision contract as searchQuantizedBatch: the exact pass
-    // adds these columns, and a silent overwrite (or an ambiguous-join
-    // AnalysisException mid-plan) would corrupt downstream plans
-    for (c <- Seq("dist", "query_id", "__qv", "__pq_d"))
-      require(!encoded.columns.contains(c),
-        s"corpus already has a '$c' column — topKBatchProbed adds it")
-    val cosine =
-      requireMetricMatchesBooks(metric, books, "Pq.topKBatchProbed")
-    val spark = encoded.sparkSession
-    graft.plans.VectorExpressions.ensureRegistered(spark)
-    val np = math.max(1, nprobe)
-    val qSet = KnnSearch.collectQueries(queries, queryIdCol, queryVecCol)
-    // cosine: probes rank angularly on the RAW query; the ADC tables
-    // build against the unit-normalized one (the single-query
-    // dispatch); the exact pass scores true cosine on raw vectors
-    val perQueryProbes: Array[Array[Int]] = qSet.map(q =>
-      (if (cosine)
-         IvfIndex.probeOrderCosine(centroids, clusterIds, q._2.toSeq)
-       else IvfIndex.probeOrder(centroids, clusterIds, q._2.toSeq))
-        .take(np).toArray)
-    val union = perQueryProbes.flatten.distinct.toSeq
-    val scan = encoded.filter(col(IvfIndex.ClusterCol).isin(union: _*))
-    // per-query ADC tables, built once driver-side (m·ksub doubles per
-    // query — KBs) and shipped in the scorer closure; the query INDEX
-    // from the heap pass selects the right table without any per-row
-    // map lookup
-    val tables = qSet.map(q => adcTable(books,
-      if (cosine) IvfIndex.unitNormalize(q._2.toSeq).toArray else q._2))
-    val m = books.m
-    val ksub = books.ksub
-    val scorer = KnnSearch.RawScorer { (row, codeIdx, qi, _) =>
-      adcScore(tables(qi), row.getAs[Array[Byte]](codeIdx), m, ksub)
-    }
-    val qidType = queries.schema(queryIdCol).dataType
-    val cand = KnnSearch.topKBatchCollected(
-      scan.select(col(idCol), col(CodeCol), col(IvfIndex.ClusterCol)),
-      CodeCol, qSet, qidType, k * refine, tieBreak = idCol,
-      distCol = "__pq_d", rankRoundDp = None,
-      gate = Some(KnnSearch.BatchGate(IvfIndex.ClusterCol, perQueryProbes)),
-      rawScorer = Some(scorer))
-      .select(col("query_id"), col(idCol))
-    KnnSearch.batchExactRerank(scan.drop(CodeCol), idCol, vecCol, cand,
-      qSet, qidType, k, tieBreak, rankRoundDp, cosine = cosine)
-  }
-
-  /** Batch RESIDUAL IVF-PQ — the last cell of the {raw,residual} ×
-    * {single,batch} PQ matrix: [[topKProbedResidual]]'s per-(query,
-    * probed-cluster) residual ADC tables composed with
-    * [[topKBatchProbed]]'s probe-gated shared scan. The tables are
-    * keyed (query, cluster) — a row's score for query `i` is m lookups
-    * into query i's table FOR THE ROW'S OWN CLUSTER (`v − q =
-    * (v − cent) − (q − cent)`, so distances stay comparable across a
-    * query's probes) — and the gate guarantees a scored row's cluster
-    * is in query i's probe set, so the table lookup is total. Same
-    * float-cast residual arithmetic, unrounded (dist, id) candidate
-    * heaps, and shared exact re-rank as the single-query path — per
-    * query the rows are bit-equal to [[topKProbedResidual]] at the
-    * same (nprobe, refine, rankRoundDp) (spec-asserted). L2 books
-    * only, the single-query residual contract. */
-  def topKBatchProbedResidual(
-      encoded: DataFrame,
-      idCol: String,
-      vecCol: String,
-      queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      k: Int,
-      books: Codebooks,
-      centroids: Array[Array[Float]],
-      clusterIds: Array[Int],
-      nprobe: Int,
-      refine: Int = 4,
-      tieBreak: String = "",
-      rankRoundDp: Option[Int] = None): DataFrame = {
-    require(encoded.columns.contains(IvfIndex.ClusterCol),
-      s"corpus has no '${IvfIndex.ClusterCol}' column — residual " +
-        "IVF-PQ needs the IVF cluster layout")
-    require(encoded.columns.contains(CodeCol),
-      s"corpus has no '$CodeCol' column — Pq.encodeResidual it first")
-    require(k > 0, s"k must be > 0, got $k")
-    require(refine >= 1, s"refine must be >= 1, got $refine")
-    require(!books.normalized,
-      "Pq.topKBatchProbedResidual: residual coding composes with L2 " +
-        "books only — the single-query topKProbedResidual contract")
-    for (c <- Seq("dist", "query_id", "__qv", "__pq_d"))
-      require(!encoded.columns.contains(c),
-        s"corpus already has a '$c' column — topKBatchProbedResidual " +
-          "adds it")
-    val spark = encoded.sparkSession
-    graft.plans.VectorExpressions.ensureRegistered(spark)
-    val np = math.max(1, nprobe)
-    val qSet = KnnSearch.collectQueries(queries, queryIdCol, queryVecCol)
-    qSet.foreach { case (_, qv) =>
-      require(qv.length == books.dim,
-        s"query has dim ${qv.length}, codebooks ${books.dim}") }
-    val perQueryProbes: Array[Array[Int]] = qSet.map(q =>
-      IvfIndex.probeOrder(centroids, clusterIds, q._2.toSeq)
-        .take(np).toArray)
-    val union = perQueryProbes.flatten.distinct.toSeq
-    val scan = encoded.filter(col(IvfIndex.ClusterCol).isin(union: _*))
-    val cmap = clusterIds.zip(centroids).toMap
-    // (query, probe) → residual ADC table: the query's residual against
-    // each of ITS OWN probed clusters, with the encoder's exact
-    // double-subtract/float-cast arithmetic — nq·nprobe tables of
-    // m·ksub doubles (KBs), shipped once in the scorer closure
-    val tables: Array[Map[Int, Array[Array[Double]]]] =
-      qSet.zip(perQueryProbes).map { case ((_, qv), ps) =>
-        ps.map { c =>
-          val cent = cmap(c)
-          val qr = Array.tabulate(qv.length)(j =>
-            (qv(j).toDouble - cent(j).toDouble).toFloat)
-          c -> adcTable(books, qr)
-        }.toMap
-      }
-    val m = books.m
-    val ksub = books.ksub
-    val scorer = KnnSearch.RawScorer { (row, codeIdx, qi, _) =>
-      // row layout below: (id, code, cluster) — cluster at 2, as in
-      // topKProbedResidual's narrow scan
-      adcScore(tables(qi)(row.getAs[Number](2).intValue()),
-        row.getAs[Array[Byte]](codeIdx), m, ksub)
-    }
-    val qidType = queries.schema(queryIdCol).dataType
-    val cand = KnnSearch.topKBatchCollected(
-      scan.select(col(idCol), col(CodeCol), col(IvfIndex.ClusterCol)),
-      CodeCol, qSet, qidType, k * refine, tieBreak = idCol,
-      distCol = "__pq_d", rankRoundDp = None,
-      gate = Some(KnnSearch.BatchGate(IvfIndex.ClusterCol, perQueryProbes)),
-      rawScorer = Some(scorer))
-      .select(col("query_id"), col(idCol))
-    KnnSearch.batchExactRerank(scan.drop(CodeCol), idCol, vecCol, cand,
-      qSet, qidType, k, tieBreak, rankRoundDp, cosine = false)
-  }
 
   // ---- OPQ: variance-balanced dimension permutation --------------------
 
@@ -945,11 +523,13 @@ object Pq {
   private[graft] val MetaSubdir = "_pq_meta"
   private[graft] val PermSubdir = "opq_perm"
 
-  /** A loaded persisted PQ root: the encoded corpus plus everything a
-    * CDC batch needs to keep it consistent — the FIXED codebooks, the
-    * residual-coding flag, (for the IVF layout) the fixed centroids
-    * the rows were assigned against, and (for an OPQ root) the fixed
-    * dimension permutation the codes were trained under. */
+  /** A PQ root: the encoded corpus plus everything a CDC batch needs
+    * to keep it consistent and a search needs to score it — the FIXED
+    * codebooks, the residual-coding flag, (for the IVF layout) the
+    * fixed centroids the rows were assigned against, and (for an OPQ
+    * root) the fixed dimension permutation the codes were trained
+    * under. `path` only locates [[data]]; searches score the frame
+    * they are given. */
   final case class PqRoot(path: String, books: Codebooks,
       residual: Boolean,
       ivf: Option[(Array[Array[Float]], Array[Int])],
@@ -957,6 +537,17 @@ object Pq {
     def dataPath: String = s"$path/$DataSubdir"
     def data(spark: SparkSession): DataFrame =
       spark.read.parquet(dataPath)
+
+    /** the search codec these codes need — refuses the combinations no
+      * encode produces */
+    private[graft] def codec: QuantizedSearch.Codec =
+      if (residual) {
+        require(perm.isEmpty, "OPQ permutation composes with raw or " +
+          "IVF coding, not residual (the residual geometry is per-cluster)")
+        QuantizedSearch.ResidualAdc(books, ivf.getOrElse(
+          throw new IllegalArgumentException(
+            "residual coding needs the IVF layout — pass ivf")))
+      } else QuantizedSearch.Adc(books, perm)
   }
 
   /** Build a persisted PQ root from a RAW corpus: assign (IVF layout,
@@ -982,16 +573,8 @@ object Pq {
       ivf: Option[(Array[Array[Float]], Array[Int])] = None,
       perm: Option[Array[Int]] = None): Unit = {
     import spark.implicits._
-    require(!residual || ivf.nonEmpty,
-      "writeRoot: residual coding needs the IVF layout — pass ivf")
-    require(!(residual && books.normalized),
-      "writeRoot: residual coding composes with L2 books only")
-    require(!(residual && perm.nonEmpty),
-      "writeRoot: OPQ permutation composes with raw or IVF coding, " +
-        "not residual (the residual geometry is per-cluster)")
-    perm.foreach(p => require(p.length == books.dim &&
-      p.sorted.sameElements(0 until books.dim),
-      s"writeRoot: perm must be a permutation of 0 until ${books.dim}"))
+    // only roots a search can score are written
+    PqRoot(path, books, residual, ivf, perm).codec
     val encoded = encodeFor(corpus, vecCol, books, residual, ivf, perm)
     val w = encoded.write.mode(SaveMode.Overwrite)
     ivf match {
@@ -1112,11 +695,10 @@ object Pq {
     // centroids, perm — same rationale as [[load]]): a cross-process
     // rewrite of any of them is a new key, never a stale serve. Four
     // listStatus calls, no Spark job.
-    rootMetaCache.computeIfAbsent(
-      s"$path|${Seq(BooksSubdir, MetaSubdir, CentroidsSubdir, PermSubdir)
-          .map(sub => IvfIndex.fsStamp(spark, s"$path/$sub"))
-          .mkString("|")}",
-      _ => loadRootUncached(spark, path))
+    IvfIndex.stampCached(rootMetaCache, path,
+      Seq(BooksSubdir, MetaSubdir, CentroidsSubdir, PermSubdir)
+        .map(sub => IvfIndex.fsStamp(spark, s"$path/$sub"))
+        .mkString("|"))(loadRootUncached(spark, path))
 
   private def loadRootUncached(spark: SparkSession,
       path: String): PqRoot = {

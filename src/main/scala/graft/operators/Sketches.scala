@@ -436,10 +436,8 @@ object Sketches {
     * equivalence in SketchesSpec). The corpus-side cost drops from k
     * BroadcastHashJoins per row to k array lookups — the right
     * 100 TB shape for a fixed-size filter (guide §3.2: the filter
-    * ships once; §2.4: no per-probe exchanges). One seam: a NULL item
-    * evaluates to NULL here where the probe-join form's failed
-    * equi-join yields false — callers probing nullable columns must
-    * coalesce (the shingle/gram producers here never emit nulls). */
+    * ships once; §2.4: no per-probe exchanges). A NULL item is a miss
+    * (false), exactly as the probe-join form's failed equi-join. */
   def bloomMightContain(item: Column, words: Seq[Long],
       mBits: Int, k: Int): Column = {
     bloomCheck(mBits, k)
@@ -449,14 +447,15 @@ object Sketches {
     denseProbeHit(item, typedLit(words), mBits, k)
   }
 
-  /** all k probes of `it` hit in the dense word array `lut` */
+  /** all k probes of `it` hit in the dense word array `lut`; a NULL
+    * item probes NULL positions and is coalesced to a miss */
   private def denseProbeHit(it: Column, lut: Column, mBits: Int,
       k: Int): Column =
-    bloomProbes(it, mBits, k).map { p =>
+    coalesce(bloomProbes(it, mBits, k).map { p =>
       call_function("shiftright",
         element_at(lut,
           floor(p / lit(BloomWordBits)).cast("int") + 1),
         (p % lit(BloomWordBits)).cast("int"))
         .bitwiseAND(lit(1L)) === 1L
-    }.reduce(_ && _)
+    }.reduce(_ && _), lit(false))
 }

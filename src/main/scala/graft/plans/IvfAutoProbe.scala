@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, LongType}
 
-import graft.operators.IvfIndex
+import graft.operators.{IvfIndex, KnnSearch, QuantizedSearch}
 
 /** OPT-IN optimizer rule: rewrite an exact vector top-k over an
   * IVF-partitioned table into a probe-pruned scan — the engine-level
@@ -157,24 +157,24 @@ case class IvfAutoProbe(spark: SparkSession) extends Rule[LogicalPlan] {
     //    rank probes identically to their negated-ASC twins. A stripped
     //    monotone NON-DECREASING wrapper preserves descending order
     //    equivalence exactly as it preserves ascending.
-    val matched: Option[(Array[Float], ProbeRanker)] =
+    val matched: Option[(Array[Float], KnnSearch.Metric)] =
       s.order.headOption match {
         case Some(SortOrder(key, Ascending, _, _)) =>
           val (inner, sqrtStripped) = unwrapMonotonic(resolve(key, aliases))
           inner match {
             case L2SquaredDistance(a: AttributeReference, l)
                 if rel.outputSet.contains(a) =>
-              constVector(l).map((_, IvfIndex.probeOrder _))
+              constVector(l).map((_, KnnSearch.NativeL2))
             case Subtract(Literal(one, DoubleType),
                 CosineSimilarityExpr(a: AttributeReference, l), _)
                 if one == 1.0 && rel.outputSet.contains(a) =>
-              constVector(l).map((_, IvfIndex.probeOrderCosine _))
+              constVector(l).map((_, KnnSearch.NativeCosine))
             // -dot can be NEGATIVE: sqrt of it is NaN (sorts last in
             // Spark), so sqrt(-graft_dot) is NOT order-equivalent to the
             // dot ranking — refuse the match when a Sqrt was stripped.
             case UnaryMinus(DotProduct(a: AttributeReference, l), _)
                 if !sqrtStripped && rel.outputSet.contains(a) =>
-              constVector(l).map((_, IvfIndex.probeOrderDot _))
+              constVector(l).map((_, KnnSearch.NativeInnerProduct))
             case _ => None
           }
         case Some(SortOrder(key, Descending, _, _)) =>
@@ -186,15 +186,15 @@ case class IvfAutoProbe(spark: SparkSession) extends Rule[LogicalPlan] {
           inner match {
             case CosineSimilarityExpr(a: AttributeReference, l)
                 if !sqrtStripped && rel.outputSet.contains(a) =>
-              constVector(l).map((_, IvfIndex.probeOrderCosine _))
+              constVector(l).map((_, KnnSearch.NativeCosine))
             case DotProduct(a: AttributeReference, l)
                 if !sqrtStripped && rel.outputSet.contains(a) =>
-              constVector(l).map((_, IvfIndex.probeOrderDot _))
+              constVector(l).map((_, KnnSearch.NativeInnerProduct))
             case _ => None
           }
         case _ => None
       }
-    val (qVec, ranker) = matched.getOrElse(return None)
+    val (qVec, metric) = matched.getOrElse(return None)
 
     // 3. centroids from the sidecar (driver-side, fingerprint-cached)
     val root = fs.location.rootPaths.headOption.getOrElse(return None)
@@ -203,15 +203,11 @@ case class IvfAutoProbe(spark: SparkSession) extends Rule[LogicalPlan] {
     // the budget by the session's declared selectivity (the API
     // face's widenedNprobe contract); a budget reaching nlist means
     // the honest plan is the exact filtered scan: decline the rewrite
-    val npEff =
-      if (!userFiltered) np
-      else filterSelectivity match {
-        case Some(sel) => math.ceil(np / sel).toInt
-        case None => np
-      }
+    val npEff = filterSelectivity.filter(_ => userFiltered)
+      .fold(np)(QuantizedSearch.widenedNprobe(np, _, cents.length))
     if (npEff >= cents.length) return None // full scan anyway
-    val probes = ranker(cents.map(_._2), cents.map(_._1), qVec.toSeq)
-      .take(npEff)
+    val probes = QuantizedSearch.rankProbes(cents.map(_._2),
+      cents.map(_._1), metric, qVec.toSeq).take(npEff)
 
     // 4. inject the probe filter directly above the relation; the
     //    planner's PhysicalOperation collapse makes it a PartitionFilter
@@ -338,11 +334,6 @@ object IvfAutoProbe {
     * [[invalidate]] drops the caches directly.) */
   val ListingTtlConf = "spark.graft.ivf.listingTtlMs"
   private val DefaultListingTtlMs = 3000L
-
-  /** centroid-ranking strategy: (centroids, clusterIds, query) → cluster
-    * ids best-first, one per supported distance ordering */
-  private[plans] type ProbeRanker =
-    (Array[Array[Float]], Array[Int], Seq[Float]) => Seq[Int]
 
   private val centroidCache =
     new java.util.concurrent.ConcurrentHashMap[String,

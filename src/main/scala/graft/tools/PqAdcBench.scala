@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.operators.Pq
+import graft.operators.{Pq, QuantizedSearch}
 
 /** Micro-benchmark for the PQ approximate pass: per-row decoded-fold
   * scoring (dim multiply-adds — round 12's shape) vs ADC lookup-table
@@ -62,9 +62,9 @@ object PqAdcBench {
 
     // round 13's table scoring: m lookups + adds per row
     val tabBuild0 = System.nanoTime()
-    pqTable(books, q)
+    QuantizedSearch.adcTable(books, q)
     def tableScore(): Double = {
-      val t = pqTable(books, q)
+      val t = QuantizedSearch.adcTable(books, q)
       var acc = 0.0
       var r = 0
       while (r < n) {
@@ -80,7 +80,7 @@ object PqAdcBench {
       }
       acc
     }
-    println(f"table build ${(System.nanoTime() - tabBuild0) / 1e6}%.2f ms overhead (amortized once per partition)")
+    println(f"table build ${(System.nanoTime() - tabBuild0) / 1e6}%.2f ms overhead (paid once per query)")
 
     def time(name: String, f: () => Double): Double = {
       f() // warm
@@ -101,21 +101,4 @@ object PqAdcBench {
     println(f"speedup ${a / b}%.2fx; |flat - table| on checksum-row sums: $d%.3g")
     spark.stop()
   }
-
-  /** the same table Pq.adcTable builds (private there) */
-  private def pqTable(b: Pq.Codebooks,
-      q: Array[Float]): Array[Array[Double]] =
-    Array.tabulate(b.m) { sub =>
-      Array.tabulate(b.ksub) { c =>
-        val cent = b.cb(sub)(c)
-        var acc = 0.0
-        var j = 0
-        while (j < b.dsub) {
-          val diff = cent(j).toDouble - q(sub * b.dsub + j).toDouble
-          acc += diff * diff
-          j += 1
-        }
-        acc
-      }
-    }
 }

@@ -24,6 +24,43 @@ class EntrySpec extends SparkSpec {
     assert((SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet).isEmpty)
   }
 
+  test("LegRunner.using releases its pool when a leg throws or the body fails before awaiting") {
+    import scala.jdk.CollectionConverters._
+    def legThreads(): Int = Thread.getAllStackTraces.keySet.asScala
+      .count(_.getName.startsWith(SparkEntry.LegRunner.ThreadPrefix))
+    def settled(baseline: Int): Int = {
+      // pool workers exit asynchronously after the shutdown
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (legThreads() > baseline && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      legThreads()
+    }
+    val baseline = legThreads()
+    // a thrown leg: the await rethrows it, the siblings are cancelled
+    val e1 = intercept[IllegalStateException] {
+      SparkEntry.LegRunner.using(spark, "spec", 2) { runner =>
+        val ok = runner.leg {
+          assert(Thread.currentThread.isDaemon, "leg threads are daemons")
+          spark.range(10).count()
+        }
+        val bad = runner.leg[Long](throw new IllegalStateException("leg"))
+        runner.await(ok) + runner.await(bad)
+      }
+    }
+    assert(e1.getMessage == "leg")
+    assert(settled(baseline) == baseline)
+    // the body fails between submitting a leg and awaiting it (q212's
+    // shape: eager checkpoints interleave with submitted legs)
+    val e2 = intercept[IllegalStateException] {
+      SparkEntry.LegRunner.using(spark, "spec", 2) { runner =>
+        runner.leg(Thread.sleep(60000L))
+        throw new IllegalStateException("body")
+      }
+    }
+    assert(e2.getMessage == "body")
+    assert(settled(baseline) == baseline)
+  }
+
   test("q207 CUSUM localizes a constructed rate shift at the last pre-shift bucket") {
     // type "up": 5 hourly buckets at 1 event/h then 5 at 5/h — T=10,
     // N=30, per-bucket terms n·T−N = −20 (low) / +20 (high), so the

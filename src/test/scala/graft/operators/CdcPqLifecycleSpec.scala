@@ -51,6 +51,18 @@ class CdcPqLifecycleSpec extends SparkSpec {
         r.getAs[Array[Byte]](ri(Pq.CodeCol)).toSeq))
     }.toMap
 
+  /** (id, dist) of the top-5 PQ search over the persisted root at `p`,
+    * scored with the codec the root records */
+  private def search(p: String, q: Seq[Float],
+      nprobe: Int = Int.MaxValue): Seq[(Long, Double)] = {
+    val root = Pq.loadRoot(spark, p)
+    Pq.topK(root.data(spark), "vec_id", "embedding", q, k = 5, root,
+        nprobe = nprobe, refine = 4, tieBreak = Some("vec_id"),
+        rankRoundDp = Some(4))
+      .select("vec_id", "dist")
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+  }
+
   test("residual IVF-PQ root: maintained == fresh in contents and search") {
     val idx = IvfIndex.build(df(snapA), "vec_id", "embedding", nlist = 4)
     val books = Pq.fitResidual(
@@ -81,13 +93,8 @@ class CdcPqLifecycleSpec extends SparkSpec {
 
     for (qi <- Seq(1L, 50L, 125L)) {
       val q = snapB.toMap.apply(qi)
-      def run(p: String) = Pq.topKProbedResidual(
-          Pq.loadRoot(spark, p).data(spark), "vec_id", "embedding", q,
-          k = 5, books, idx.centroids, idx.clusterIds, nprobe = 2,
-          refine = 4, tieBreak = Some("vec_id"), rankRoundDp = Some(4))
-        .select("vec_id", "dist")
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(run(maintained) == run(fresh),
+      assert(search(maintained, q, nprobe = 2) ==
+        search(fresh, q, nprobe = 2),
         s"residual search parity broke for query $qi")
     }
   }
@@ -119,13 +126,7 @@ class CdcPqLifecycleSpec extends SparkSpec {
     Pq.writeRoot(spark, fresh, df(survivors), "embedding", books,
       ivf = Some((idx.centroids, idx.clusterIds)))
     val q = vec(3L, 0)
-    def run(p: String) = Pq.topKProbed(
-        Pq.loadRoot(spark, p).data(spark), "vec_id", "embedding", q,
-        k = 5, books, idx.centroids, idx.clusterIds, nprobe = 4,
-        refine = 4, tieBreak = Some("vec_id"), rankRoundDp = Some(4))
-      .select("vec_id", "dist")
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(run(path) == run(fresh))
+    assert(search(path, q, nprobe = 4) == search(fresh, q, nprobe = 4))
   }
 
   test("flat PQ root: maintained == fresh; appended rows encode with the FIXED books") {
@@ -149,13 +150,7 @@ class CdcPqLifecycleSpec extends SparkSpec {
       }.toMap
     assert(contents(maintained) == contents(fresh))
     val q = snapB.toMap.apply(125L)
-    def run(p: String) = Pq.topK(
-        Pq.loadRoot(spark, p).data(spark), "vec_id", "embedding", q,
-        k = 5, books, refine = 4, tieBreak = Some("vec_id"),
-        rankRoundDp = Some(4))
-      .select("vec_id", "dist")
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(run(maintained) == run(fresh))
+    assert(search(maintained, q) == search(fresh, q))
   }
 
   test("compacted PQ root loads and answers identically") {
@@ -176,13 +171,7 @@ class CdcPqLifecycleSpec extends SparkSpec {
     assert(contentsOf(Pq.loadRoot(spark, dest).data(spark)) ==
       contentsOf(Pq.loadRoot(spark, src).data(spark)))
     val q = vec(3L, 0)
-    def run(p: String) = Pq.topKProbed(
-        Pq.loadRoot(spark, p).data(spark), "vec_id", "embedding", q,
-        k = 5, books, idx.centroids, idx.clusterIds, nprobe = 4,
-        refine = 4, tieBreak = Some("vec_id"), rankRoundDp = Some(4))
-      .select("vec_id", "dist")
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(run(dest) == run(src))
+    assert(search(dest, q, nprobe = 4) == search(src, q, nprobe = 4))
   }
 
   test("binary root: maintained == fresh pack; stored-code search == inline-pack search") {

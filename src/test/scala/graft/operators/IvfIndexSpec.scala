@@ -210,17 +210,23 @@ class IvfIndexSpec extends SparkSpec {
       df.select(col("query_id"), col("vec_id"), col("dist")).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     // batch == the union of per-query single searches (the probe gate
-    // makes each query's rows independent of its batchmates)
-    val batch = rows(loaded.searchQuantizedBatch(queries, "qid", "qv",
-      k = 5, nprobe = 4, refine = 4, tieBreak = "vec_id",
-      rankRoundDp = Some(4)))
-    val singles = qVecs.flatMap { case (qid, qv) =>
-      loaded.searchQuantized(qv, 5, nprobe = 4, refine = 4,
-          tieBreak = Some("vec_id"), rankRoundDp = Some(4))
-        .select("vec_id", "dist").collect()
-        .map(r => (qid, r.getLong(0), r.getDouble(1)))
-    }.toSet
-    assert(batch == singles, "batch must be bit-equal to single-query")
+    // makes each query's rows independent of its batchmates), with and
+    // without a filter on the shared scan
+    val m = pmod(col("vec_id"), lit(3L)) === 1L
+    for ((filter, sel) <- Seq((None, None), (Some(m), Some(1.0 / 3)))) {
+      val batch = rows(loaded.searchQuantizedBatch(queries, "qid", "qv",
+        k = 5, nprobe = 4, refine = 4, tieBreak = "vec_id",
+        rankRoundDp = Some(4), filter = filter, filterSelectivity = sel))
+      val singles = qVecs.flatMap { case (qid, qv) =>
+        loaded.searchQuantized(qv, 5, nprobe = 4, refine = 4,
+            tieBreak = Some("vec_id"), rankRoundDp = Some(4),
+            filter = filter, filterSelectivity = sel)
+          .select("vec_id", "dist").collect()
+          .map(r => (qid, r.getLong(0), r.getDouble(1)))
+      }.toSet
+      assert(batch == singles,
+        s"batch must be bit-equal to single-query (filter = $filter)")
+    }
     // refine covering the probed scan ⇒ the exact re-rank sees every
     // probed row ⇒ bit-equal to the UNQUANTIZED batch search
     val full = rows(loaded.searchQuantizedBatch(queries, "qid", "qv",
@@ -263,18 +269,23 @@ class IvfIndexSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select(col("query_id"), col("vec_id"), col("dist")).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val batch = rows(loaded.searchQuantizedBatch(queries, "qid", "qv",
-      k = 5, nprobe = 4, refine = 4, tieBreak = "vec_id",
-      rankRoundDp = Some(4), metric = KnnSearch.Cosine))
-    val singles = qVecs.flatMap { case (qid, qv) =>
-      loaded.searchQuantized(qv, 5, nprobe = 4, refine = 4,
-          tieBreak = Some("vec_id"), rankRoundDp = Some(4),
-          metric = KnnSearch.Cosine)
-        .select("vec_id", "dist").collect()
-        .map(r => (qid, r.getLong(0), r.getDouble(1)))
-    }.toSet
-    assert(batch == singles,
-      "cosine batch must be bit-equal to single-query")
+    val m = pmod(col("vec_id"), lit(3L)) === 1L
+    for ((filter, sel) <- Seq((None, None), (Some(m), Some(1.0 / 3)))) {
+      val batch = rows(loaded.searchQuantizedBatch(queries, "qid", "qv",
+        k = 5, nprobe = 4, refine = 4, tieBreak = "vec_id",
+        rankRoundDp = Some(4), metric = KnnSearch.Cosine, filter = filter,
+        filterSelectivity = sel))
+      val singles = qVecs.flatMap { case (qid, qv) =>
+        loaded.searchQuantized(qv, 5, nprobe = 4, refine = 4,
+            tieBreak = Some("vec_id"), rankRoundDp = Some(4),
+            metric = KnnSearch.Cosine, filter = filter,
+            filterSelectivity = sel)
+          .select("vec_id", "dist").collect()
+          .map(r => (qid, r.getLong(0), r.getDouble(1)))
+      }.toSet
+      assert(batch == singles,
+        s"cosine batch must be bit-equal to single-query (filter = $filter)")
+    }
     // refine covering the probed scan ⇒ bit-equal to the UNQUANTIZED
     // cosine batch (same angular probes, same exact scoring)
     val full = rows(loaded.searchQuantizedBatch(queries, "qid", "qv",
@@ -857,6 +868,21 @@ class IvfIndexSpec extends SparkSpec {
     assert(second.centroids.map(_.toSeq).toSeq ==
       before.map(_.map(_ + 1.0f)),
       "load served the stale cached centroids after a foreign rewrite")
+    // N more foreign rewrites, each observed: superseded stamps are
+    // dropped, so the root holds ONE parsed-metadata entry, not N + 2
+    for (i <- 2 to 4) {
+      first.clusterIds.zip(first.centroids).toSeq
+        .map { case (c, v) => (c, v.map(_ + i.toFloat).toSeq) }
+        .toDF("cluster_id", "centroid")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$tmp/ivf/${IvfIndex.CentroidSidecar}")
+      assert(IvfIndex.load(spark, s"$tmp/ivf", "vec_id", "embedding")
+        .centroids.map(_.toSeq).toSeq == before.map(_.map(_ + i.toFloat)))
+    }
+    var entries = 0
+    IvfIndex.loadMetaCache.keySet.forEach(k =>
+      if (k.startsWith(s"$tmp/ivf|")) entries += 1)
+    assert(entries == 1, s"$entries cached entries for one root")
   }
 
   test("load falls back to per-(cluster,dim) means without a sidecar") {

@@ -13,9 +13,40 @@ class PqSpec extends SparkSpec {
   private lazy val encoded =
     Pq.encode(embeddings, "embedding", books).cache()
 
+  /** the index description of an in-memory encode: flat unless an IVF
+    * layout is named */
+  private def pqIndex(b: Pq.Codebooks, ivf: Option[IvfIndex] = None,
+      residual: Boolean = false,
+      perm: Option[Array[Int]] = None): Pq.PqRoot =
+    Pq.PqRoot("", b, residual, ivf.map(i => (i.centroids, i.clusterIds)),
+      perm)
+
   private def queryVecs(n: Int): Seq[Seq[Float]] =
     embeddings.orderBy("vec_id").limit(n)
       .select("embedding").collect().map(_.getSeq[Float](0)).toSeq
+
+  /** the filtered parity input: a ~1/3 predicate and its selectivity */
+  private val thirdFilter = pmod(col("vec_id"), lit(3L)) === 1L
+  private val third = Some(1.0 / 3)
+
+  /** batch rows per query, each query's (id, dist) sorted */
+  private def batchRows(df: org.apache.spark.sql.DataFrame)
+      : Map[Long, Seq[(Long, Double)]] =
+    df.select("query_id", "vec_id", "dist").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .groupBy(_._1)
+      .map { case (q, rs) => q -> rs.map(t => (t._2, t._3))
+        .sortBy(identity).toSeq }
+
+  /** the single-query rows of queries 0, 1, 2 in [[batchRows]]' shape */
+  private def singleRows(search: Seq[Float] => org.apache.spark.sql.DataFrame)
+      : Map[Long, Seq[(Long, Double)]] =
+    Seq(0L, 1L, 2L).map { qid =>
+      val qv = embeddings.filter(col("vec_id") === qid)
+        .select("embedding").head().getSeq[Float](0)
+      qid -> search(qv).select("vec_id", "dist").collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).sortBy(identity).toSeq
+    }.toMap
 
   test("a books sidecar rewritten by another process is re-read, not served stale") {
     // booksCache keys on a content stamp of the sidecar files (r21
@@ -35,6 +66,34 @@ class PqSpec extends SparkSpec {
     val second = Pq.load(spark, s"$tmp/books")
     assert(second.cb(0)(0).toSeq == first.cb(0)(0).map(_ + 1.0f).toSeq,
       "Pq.load served stale cached books after a foreign rewrite")
+    // N more foreign rewrites, each observed: the superseded stamps are
+    // dropped, so the path holds ONE cache entry, not N + 2
+    for (i <- 2 to 4) {
+      (for (s <- 0 until first.m; c <- 0 until first.ksub)
+        yield (s, c, first.cb(s)(c).map(_ + i.toFloat).toSeq, false))
+        .toDF("sub", "code", "centroid", "normalized")
+        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/books")
+      assert(Pq.load(spark, s"$tmp/books").cb(0)(0).toSeq ==
+        first.cb(0)(0).map(_ + i.toFloat).toSeq)
+    }
+    def entries(cache: java.util.concurrent.ConcurrentHashMap[String, _],
+        path: String): Int = {
+      var n = 0
+      cache.keySet.forEach(k => if (k.startsWith(s"$path|")) n += 1)
+      n
+    }
+    assert(entries(Pq.booksCache, s"$tmp/books") == 1)
+    // the root-metadata cache evicts the same way: a flat root whose
+    // meta sidecar is rewritten in place N times
+    val root = s"$tmp/root"
+    Pq.writeRoot(spark, root, embeddings.limit(64), "embedding", books)
+    assert(!Pq.loadRoot(spark, root).residual)
+    for (_ <- 1 to 3) {
+      Seq(false).toDF("residual").coalesce(1).write.mode("overwrite")
+        .parquet(s"$root/${Pq.MetaSubdir}")
+      Pq.loadRoot(spark, root)
+    }
+    assert(entries(Pq.rootMetaCache, root) == 1)
   }
 
   test("fit and encode are deterministic; round-trip through parquet") {
@@ -70,7 +129,7 @@ class PqSpec extends SparkSpec {
     // refine covering the corpus: the exact re-rank sees every row, so
     // the lossy candidate cut cannot drop a true neighbor
     val full = rows(Pq.topK(encoded, "vec_id", "embedding", q, 10,
-      books, refine = 100000, tieBreak = Some("vec_id"),
+      pqIndex(books), refine = 100000, tieBreak = Some("vec_id"),
       rankRoundDp = Some(4)))
     val exact = rows(KnnSearch.topK(
       embeddings, "embedding", q, 10, KnnSearch.NativeL2,
@@ -84,8 +143,8 @@ class PqSpec extends SparkSpec {
       val ex = KnnSearch.topK(embeddings, "embedding", qv, 10,
           KnnSearch.L2, tieBreak = Some("vec_id"))
         .select("vec_id").collect().map(_.getLong(0)).toSet
-      val ap = Pq.topK(encoded, "vec_id", "embedding", qv, 10, books,
-          refine = 4, tieBreak = Some("vec_id"))
+      val ap = Pq.topK(encoded, "vec_id", "embedding", qv, 10,
+          pqIndex(books), refine = 4, tieBreak = Some("vec_id"))
         .select("vec_id").collect().map(_.getLong(0)).toSet
       ex.intersect(ap).size.toDouble / 10
     }
@@ -96,8 +155,8 @@ class PqSpec extends SparkSpec {
       val ex = KnnSearch.topK(embeddings, "embedding", qv, 10,
           KnnSearch.L2, tieBreak = Some("vec_id"))
         .select("vec_id").collect().map(_.getLong(0)).toSet
-      val ap = Pq.topK(encoded, "vec_id", "embedding", qv, 10, books,
-          refine = 16, tieBreak = Some("vec_id"))
+      val ap = Pq.topK(encoded, "vec_id", "embedding", qv, 10,
+          pqIndex(books), refine = 16, tieBreak = Some("vec_id"))
         .select("vec_id").collect().map(_.getLong(0)).toSet
       ex.intersect(ap).size.toDouble / 10
     }
@@ -121,10 +180,11 @@ class PqSpec extends SparkSpec {
     }
     intercept[IllegalArgumentException] {
       Pq.topK(embeddings, "vec_id", "embedding", queryVecs(1).head,
-        10, books)
+        10, pqIndex(books))
     }
     intercept[IllegalArgumentException] {
-      Pq.topK(encoded, "vec_id", "embedding", Seq(1f, 2f), 10, books)
+      Pq.topK(encoded, "vec_id", "embedding", Seq(1f, 2f), 10,
+        pqIndex(books))
     }
     intercept[IllegalArgumentException] {
       Pq.Codebooks(64, 7, books.cb) // m must divide dim
@@ -144,11 +204,11 @@ class PqSpec extends SparkSpec {
       df.select("vec_id", "dist").collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     // nprobe = nlist: every cluster probed — identical to flat ADC
-    val full = rows(Pq.topKProbed(enc, "vec_id", "embedding", q, 10,
-      books, idx.centroids, idx.clusterIds, nprobe = idx.nlist,
-      refine = 4, tieBreak = Some("vec_id"), rankRoundDp = Some(4)))
+    val full = rows(Pq.topK(enc, "vec_id", "embedding", q, 10,
+      pqIndex(books, Some(idx)), nprobe = idx.nlist, refine = 4,
+      tieBreak = Some("vec_id"), rankRoundDp = Some(4)))
     val flat = rows(Pq.topK(encoded, "vec_id", "embedding", q, 10,
-      books, refine = 4, tieBreak = Some("vec_id"),
+      pqIndex(books), refine = 4, tieBreak = Some("vec_id"),
       rankRoundDp = Some(4)))
     assert(full == flat, "full-probe IVF-PQ must equal flat ADC")
     // the probed narrow scan is directory-pruned
@@ -163,8 +223,8 @@ class PqSpec extends SparkSpec {
       s"expected a partition-pruned code scan:\n$plan")
     // a corpus without the cluster layout is refused loudly
     intercept[IllegalArgumentException] {
-      Pq.topKProbed(encoded, "vec_id", "embedding", q, 10, books,
-        idx.centroids, idx.clusterIds, nprobe = 2)
+      Pq.topK(encoded, "vec_id", "embedding", q, 10, pqIndex(books, Some(idx)),
+        nprobe = 2)
     }
   }
 
@@ -179,33 +239,26 @@ class PqSpec extends SparkSpec {
     val enc = spark.read.parquet(s"$tmp/data")
     val queries = embeddings.filter(col("vec_id").isin(0L, 1L, 2L))
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val batch = Pq.topKBatchProbed(enc, "vec_id", "embedding", queries,
-        "qid", "qv", k = 3, books, idx.centroids, idx.clusterIds,
-        nprobe = 4, refine = 4, tieBreak = "vec_id",
-        rankRoundDp = Some(4))
-      .select("query_id", "vec_id", "dist").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .groupBy(_._1)
-      .map { case (q, rs) => q -> rs.map(t => (t._2, t._3))
-        .sortBy(identity).toSeq }
-    val single = Seq(0L, 1L, 2L).map { qid =>
-      val qv = embeddings.filter(col("vec_id") === qid)
-        .select("embedding").head().getSeq[Float](0)
-      qid -> Pq.topKProbed(enc, "vec_id", "embedding", qv, 3, books,
-          idx.centroids, idx.clusterIds, nprobe = 4, refine = 4,
-          tieBreak = Some("vec_id"), rankRoundDp = Some(4))
-        .select("vec_id", "dist").collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).sortBy(identity).toSeq
-    }.toMap
-    assert(batch == single,
-      "batch IVF-PQ must equal the single-query path per query")
+    // unfiltered, and filtered with a widened probe budget
+    for ((filter, sel) <- Seq((None, None), (Some(thirdFilter), third))) {
+      val batch = batchRows(Pq.topKBatch(enc, "vec_id", "embedding",
+        queries, "qid", "qv", k = 3, pqIndex(books, Some(idx)), nprobe = 4,
+        refine = 4, tieBreak = "vec_id", rankRoundDp = Some(4),
+        filter = filter, filterSelectivity = sel))
+      val single = singleRows(qv => Pq.topK(enc, "vec_id", "embedding",
+        qv, 3, pqIndex(books, Some(idx)), nprobe = 4, refine = 4,
+        tieBreak = Some("vec_id"), rankRoundDp = Some(4), filter = filter,
+        filterSelectivity = sel))
+      assert(batch == single, "batch IVF-PQ must equal the single-query " +
+        s"path per query (filter = $filter)")
+    }
     // corpus/books mismatch fails LOUDLY, not with wrong neighbors:
     // wrong m (code length) and wrong ksub (code byte out of range)
     val books4 = Pq.fit(embeddings, "vec_id", "embedding", m = 4,
       ksub = 16)
     val e1 = intercept[Exception] {
       Pq.topK(encoded, "vec_id", "embedding", queryVecs(1).head, 3,
-        books4).collect()
+        pqIndex(books4)).collect()
     }
     assert(e1.getMessage != null && e1.getMessage.contains("codebooks"),
       s"wrong-m error should name the codebooks: ${e1.getMessage}")
@@ -213,19 +266,19 @@ class PqSpec extends SparkSpec {
       ksub = 8)
     val e2 = intercept[Exception] {
       Pq.topK(encoded, "vec_id", "embedding", queryVecs(1).head, 3,
-        books8).collect()
+        pqIndex(books8)).collect()
     }
     assert(e2.getMessage != null && e2.getMessage.contains("codebooks"),
       s"wrong-ksub error should name the codebooks: ${e2.getMessage}")
     // batch collision + missing-layout guards
     intercept[IllegalArgumentException] {
-      Pq.topKBatchProbed(encoded, "vec_id", "embedding", queries, "qid",
-        "qv", 3, books, idx.centroids, idx.clusterIds, nprobe = 2)
+      Pq.topKBatch(encoded, "vec_id", "embedding", queries, "qid",
+        "qv", 3, pqIndex(books, Some(idx)), nprobe = 2)
     }
     intercept[IllegalArgumentException] {
-      Pq.topKBatchProbed(enc.withColumn("dist", lit(0.0)), "vec_id",
-        "embedding", queries, "qid", "qv", 3, books, idx.centroids,
-        idx.clusterIds, nprobe = 2)
+      Pq.topKBatch(enc.withColumn("dist", lit(0.0)), "vec_id",
+        "embedding", queries, "qid", "qv", 3, pqIndex(books, Some(idx)),
+        nprobe = 2)
     }
   }
 
@@ -256,7 +309,7 @@ class PqSpec extends SparkSpec {
       .map(_.getAs[Array[Byte]](0))
     assert(codes.forall(_(0) == 0), "degenerate subspace codes all 0")
     val top = Pq.topK(enc2, "vec_id", "embedding",
-        rows(5)._2, 3, b, refine = 8, tieBreak = Some("vec_id"))
+        rows(5)._2, 3, pqIndex(b), refine = 8, tieBreak = Some("vec_id"))
       .select("vec_id").collect().map(_.getLong(0))
     assert(top.head == 5L,
       s"self should be its own nearest neighbor, got ${top.toSeq}")
@@ -296,12 +349,12 @@ class PqSpec extends SparkSpec {
     val pairs = queryVecs(nq).map { qv =>
       val ex = ids(KnnSearch.topK(embeddings, "embedding", qv, 10,
         KnnSearch.L2, tieBreak = Some("vec_id")))
-      val raw = ids(Pq.topKProbed(rawEnc, "vec_id", "embedding", qv,
-        10, books, idx.centroids, idx.clusterIds, nprobe, refine = 4,
+      val raw = ids(Pq.topK(rawEnc, "vec_id", "embedding", qv,
+        10, pqIndex(books, Some(idx)), nprobe, refine = 4,
         tieBreak = Some("vec_id")))
-      val res = ids(Pq.topKProbedResidual(renc, "vec_id", "embedding",
-        qv, 10, rbooks, idx.centroids, idx.clusterIds, nprobe,
-        refine = 4, tieBreak = Some("vec_id")))
+      val res = ids(Pq.topK(renc, "vec_id", "embedding", qv, 10,
+        pqIndex(rbooks, Some(idx), residual = true), nprobe, refine = 4,
+        tieBreak = Some("vec_id")))
       (ex.intersect(raw).size, ex.intersect(res).size)
     }
     val rawRecall = pairs.map(_._1).sum.toDouble / (10 * nq)
@@ -340,44 +393,33 @@ class PqSpec extends SparkSpec {
       idx.centroids, idx.clusterIds).cache()
     val queries = embeddings.filter(col("vec_id").isin(0L, 1L, 2L))
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val batch = Pq.topKBatchProbedResidual(renc, "vec_id", "embedding",
-        queries, "qid", "qv", k = 3, rbooks, idx.centroids,
-        idx.clusterIds, nprobe = 4, refine = 4, tieBreak = "vec_id",
-        rankRoundDp = Some(4))
-      .select("query_id", "vec_id", "dist").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .groupBy(_._1)
-      .map { case (q, rs) => q -> rs.map(t => (t._2, t._3))
-        .sortBy(identity).toSeq }
-    val single = Seq(0L, 1L, 2L).map { qid =>
-      val qv = embeddings.filter(col("vec_id") === qid)
-        .select("embedding").head().getSeq[Float](0)
-      qid -> Pq.topKProbedResidual(renc, "vec_id", "embedding", qv, 3,
-          rbooks, idx.centroids, idx.clusterIds, nprobe = 4,
-          refine = 4, tieBreak = Some("vec_id"), rankRoundDp = Some(4))
-        .select("vec_id", "dist").collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).sortBy(identity).toSeq
-    }.toMap
-    assert(batch == single,
-      "batch residual IVF-PQ must equal the single-query path per query")
+    val resid = pqIndex(rbooks, Some(idx), residual = true)
+    for ((filter, sel) <- Seq((None, None), (Some(thirdFilter), third))) {
+      val batch = batchRows(Pq.topKBatch(renc, "vec_id", "embedding",
+        queries, "qid", "qv", k = 3, resid, nprobe = 4, refine = 4,
+        tieBreak = "vec_id", rankRoundDp = Some(4), filter = filter,
+        filterSelectivity = sel))
+      val single = singleRows(qv => Pq.topK(renc, "vec_id", "embedding",
+        qv, 3, resid, nprobe = 4, refine = 4, tieBreak = Some("vec_id"),
+        rankRoundDp = Some(4), filter = filter, filterSelectivity = sel))
+      assert(batch == single, "batch residual IVF-PQ must equal the " +
+        s"single-query path per query (filter = $filter)")
+    }
     // normalized books are refused (the single-query residual contract)
     val cosBooks = Pq.fit(embeddings, "vec_id", "embedding", m = 8,
       ksub = 16, normalized = true)
     intercept[IllegalArgumentException] {
-      Pq.topKBatchProbedResidual(renc, "vec_id", "embedding", queries,
-        "qid", "qv", 3, cosBooks, idx.centroids, idx.clusterIds,
-        nprobe = 2)
+      Pq.topKBatch(renc, "vec_id", "embedding", queries, "qid", "qv", 3,
+        pqIndex(cosBooks, Some(idx), residual = true), nprobe = 2)
     }
     // collision + missing-layout guards
     intercept[IllegalArgumentException] {
-      Pq.topKBatchProbedResidual(renc.withColumn("dist", lit(0.0)),
-        "vec_id", "embedding", queries, "qid", "qv", 3, rbooks,
-        idx.centroids, idx.clusterIds, nprobe = 2)
+      Pq.topKBatch(renc.withColumn("dist", lit(0.0)), "vec_id",
+        "embedding", queries, "qid", "qv", 3, resid, nprobe = 2)
     }
     intercept[IllegalArgumentException] {
-      Pq.topKBatchProbedResidual(embeddings, "vec_id", "embedding",
-        queries, "qid", "qv", 3, rbooks, idx.centroids, idx.clusterIds,
-        nprobe = 2)
+      Pq.topKBatch(embeddings, "vec_id", "embedding", queries, "qid",
+        "qv", 3, resid, nprobe = 2)
     }
   }
 
@@ -390,11 +432,11 @@ class PqSpec extends SparkSpec {
     val q = queryVecs(1).head
     // contract: raw books refuse cosine, normalized books refuse L2
     intercept[IllegalArgumentException] {
-      Pq.topK(encoded, "vec_id", "embedding", q, 5, books,
+      Pq.topK(encoded, "vec_id", "embedding", q, 5, pqIndex(books),
         metric = KnnSearch.Cosine)
     }
     intercept[IllegalArgumentException] {
-      Pq.topK(cosEnc, "vec_id", "embedding", q, 5, cosBooks)
+      Pq.topK(cosEnc, "vec_id", "embedding", q, 5, pqIndex(cosBooks))
     }
     // the sidecar carries the geometry; a legacy sidecar (no column)
     // loads as raw books
@@ -411,7 +453,7 @@ class PqSpec extends SparkSpec {
       df.select("vec_id", "dist").collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val full = rows(Pq.topK(cosEnc, "vec_id", "embedding", q, 10,
-      cosBooks, refine = 100000, tieBreak = Some("vec_id"),
+      pqIndex(cosBooks), refine = 100000, tieBreak = Some("vec_id"),
       rankRoundDp = Some(4), metric = KnnSearch.Cosine))
     val exact = rows(KnnSearch.topK(embeddings, "embedding", q, 10,
       KnnSearch.NativeCosine, tieBreak = Some("vec_id"),
@@ -421,8 +463,8 @@ class PqSpec extends SparkSpec {
     // the residual form refuses normalized books loudly
     val idx = IvfIndex.build(embeddings, "vec_id", "embedding", nlist = 8)
     intercept[IllegalArgumentException] {
-      Pq.topKProbedResidual(cosEnc, "vec_id", "embedding", q, 5,
-        cosBooks, idx.centroids, idx.clusterIds, nprobe = 2)
+      Pq.topK(cosEnc, "vec_id", "embedding", q, 5,
+        pqIndex(cosBooks, Some(idx), residual = true), nprobe = 2)
     }
     // batch cosine is bit-equal per query to single probed cosine
     import spark.implicits._
@@ -430,27 +472,20 @@ class PqSpec extends SparkSpec {
       .cache()
     val queries = embeddings.filter(col("vec_id").isin(0L, 1L, 2L))
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val batch = Pq.topKBatchProbed(clusterEnc, "vec_id", "embedding",
-        queries, "qid", "qv", k = 3, cosBooks, idx.centroids,
-        idx.clusterIds, nprobe = 4, refine = 4, tieBreak = "vec_id",
-        rankRoundDp = Some(4), metric = KnnSearch.Cosine)
-      .select("query_id", "vec_id", "dist").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .groupBy(_._1)
-      .map { case (qi, rs) => qi -> rs.map(t => (t._2, t._3))
-        .sortBy(identity).toSeq }
-    val single = Seq(0L, 1L, 2L).map { qid =>
-      val qv = embeddings.filter(col("vec_id") === qid)
-        .select("embedding").head().getSeq[Float](0)
-      qid -> Pq.topKProbed(clusterEnc, "vec_id", "embedding", qv, 3,
-          cosBooks, idx.centroids, idx.clusterIds, nprobe = 4,
-          refine = 4, tieBreak = Some("vec_id"), rankRoundDp = Some(4),
-          metric = KnnSearch.Cosine)
-        .select("vec_id", "dist").collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).sortBy(identity).toSeq
-    }.toMap
-    assert(batch == single,
-      "batch cosine IVF-PQ must equal the single-query path per query")
+    for ((filter, sel) <- Seq((None, None), (Some(thirdFilter), third))) {
+      val batch = batchRows(Pq.topKBatch(clusterEnc, "vec_id",
+        "embedding", queries, "qid", "qv", k = 3, pqIndex(cosBooks, Some(idx)),
+        nprobe = 4, refine = 4, tieBreak = "vec_id", rankRoundDp = Some(4),
+        metric = KnnSearch.Cosine, filter = filter,
+        filterSelectivity = sel))
+      val single = singleRows(qv => Pq.topK(clusterEnc, "vec_id",
+        "embedding", qv, 3, pqIndex(cosBooks, Some(idx)), nprobe = 4,
+        refine = 4, tieBreak = Some("vec_id"), rankRoundDp = Some(4),
+        metric = KnnSearch.Cosine, filter = filter,
+        filterSelectivity = sel))
+      assert(batch == single, "batch cosine IVF-PQ must equal the " +
+        s"single-query path per query (filter = $filter)")
+    }
   }
 
   // ---- OPQ: variance-balanced dimension permutation --------------------
@@ -503,22 +538,26 @@ class PqSpec extends SparkSpec {
     val qDf = qs.toDF("qid", "qv")
     for ((enc, books, perm0) <- Seq(
         (encP, booksP, None),
-        (encO, booksO, Some(perm)))) {
+        (encO, booksO, Some(perm)));
+        filter <- Seq(None, Some(thirdFilter))) {
+      val index = pqIndex(books, perm = perm0)
       val batch = Pq.topKBatch(enc, "vec_id", "embedding", qDf,
-          "qid", "qv", k = 5, books, refine = 4, tieBreak = "vec_id",
-          rankRoundDp = Some(4), perm = perm0)
+          "qid", "qv", k = 5, index, refine = 4, tieBreak = "vec_id",
+          rankRoundDp = Some(4), filter = filter)
         .select(col("query_id"), col("vec_id"), col("dist"))
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .groupBy(_._1)
       for ((qid, q) <- qs) {
         val single = Pq.topK(enc, "vec_id", "embedding", q, k = 5,
-            books, refine = 4, tieBreak = Some("vec_id"),
-            rankRoundDp = Some(4), perm = perm0)
+            index, refine = 4, tieBreak = Some("vec_id"),
+            rankRoundDp = Some(4), filter = filter)
           .select(col("vec_id"), col("dist")).collect()
           .map(r => (qid, r.getLong(0), r.getDouble(1))).toSeq
-        assert(batch(qid).toSeq == single,
-          s"batch != single for query $qid (perm=${perm0.nonEmpty})")
+        assert(batch(qid).toSeq == single, s"batch != single for " +
+          s"query $qid (perm=${perm0.nonEmpty}, filter=$filter)")
+        if (filter.nonEmpty)
+          assert(single.forall(_._2 % 3 == 1), "filtered rows leaked")
       }
     }
   }
@@ -540,9 +579,9 @@ class PqSpec extends SparkSpec {
     // answer, so the codes' own resolution is what's measured
     def hits(enc: org.apache.spark.sql.DataFrame, books: Pq.Codebooks,
         p: Option[Array[Int]]): Int = queries.map { q =>
-      val approx = Pq.topK(enc, "vec_id", "embedding", q, 10, books,
-          refine = 1, tieBreak = Some("vec_id"), rankRoundDp = Some(4),
-          perm = p)
+      val approx = Pq.topK(enc, "vec_id", "embedding", q, 10,
+          pqIndex(books, perm = p), refine = 1, tieBreak = Some("vec_id"),
+          rankRoundDp = Some(4))
         .select("vec_id").collect().map(_.getLong(0)).toSet
       val exact = KnnSearch.topK(aniso, "embedding", q, 10,
           KnnSearch.NativeL2, tieBreak = Some("vec_id"),
@@ -577,26 +616,25 @@ class PqSpec extends SparkSpec {
       ivf = Some((idx.centroids, idx.clusterIds)), perm = Some(perm))
     val data = spark.read.parquet(s"$tmp/${Pq.DataSubdir}")
     val q = anisoVec(5, 16).map(_ * 1.01f)
-    val probed = Pq.topKProbed(data, "vec_id", "embedding", q, 5,
-      booksO, idx.centroids, idx.clusterIds, nprobe = 2, refine = 2,
-      tieBreak = Some("vec_id"), rankRoundDp = Some(4),
-      perm = Some(perm))
+    val root = Pq.loadRoot(spark, tmp)
+    val probed = Pq.topK(data, "vec_id", "embedding", q, 5, root,
+      nprobe = 2, refine = 2, tieBreak = Some("vec_id"),
+      rankRoundDp = Some(4))
     val plan = probed.queryExecution.executedPlan.toString
     val pf = "PartitionFilters: \\[[^\\]]*\\]".r.findFirstIn(plan)
     assert(pf.exists(_.contains(IvfIndex.ClusterCol)),
       s"expected a cluster-pruned scan on the OPQ root, got $pf in:\n$plan")
-    val all = Pq.topKProbed(data, "vec_id", "embedding", q, 5,
-        booksO, idx.centroids, idx.clusterIds, nprobe = 4, refine = 2,
-        tieBreak = Some("vec_id"), rankRoundDp = Some(4),
-        perm = Some(perm))
+    val all = Pq.topK(data, "vec_id", "embedding", q, 5, root,
+        nprobe = 4, refine = 2, tieBreak = Some("vec_id"),
+        rankRoundDp = Some(4))
       .select("vec_id", "dist").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val flatEnc = Pq.encode(
       aniso.withColumn("__r", Pq.permuteCol("embedding", perm)),
       "__r", booksO).drop("__r")
-    val flat = Pq.topK(flatEnc, "vec_id", "embedding", q, 5, booksO,
-        refine = 2, tieBreak = Some("vec_id"), rankRoundDp = Some(4),
-        perm = Some(perm))
+    val flat = Pq.topK(flatEnc, "vec_id", "embedding", q, 5,
+        pqIndex(booksO, perm = Some(perm)), refine = 2,
+        tieBreak = Some("vec_id"), rankRoundDp = Some(4))
       .select("vec_id", "dist").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(all == flat,
@@ -608,7 +646,7 @@ class PqSpec extends SparkSpec {
       .toString
     encoded.write.mode("overwrite").parquet(s"$tmp/data")
     val onDisk = spark.read.parquet(s"$tmp/data")
-    // the narrow projection Pq.topK scans internally
+    // the narrow projection the PQ search scans internally
     val plan = onDisk.select(col("vec_id"), col(Pq.CodeCol))
       .queryExecution.executedPlan.toString
     assert(plan.contains(Pq.CodeCol) && !plan.contains("embedding"),

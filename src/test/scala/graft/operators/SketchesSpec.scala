@@ -211,8 +211,9 @@ class SketchesSpec extends SparkSpec {
     val mBits = 1 << 10 // small → real false positives in the probe set
     val bloom = Sketches.bloomBuild(keys, col("k"), mBits, 3)
     val words = Sketches.bloomDense(bloom, mBits)
-    val probes = ((0 until 300).map(i => s"key-$i") ++
-      (0 until 300).map(i => s"absent-$i")).toDF("k")
+    // and a NULL item: a miss (false) in both forms
+    val probes = ((0 until 300).map(i => Option(s"key-$i")) ++
+      (0 until 300).map(i => Option(s"absent-$i")) :+ None).toDF("k")
     val joined = Sketches.withBloomHit(probes, col("k"), bloom,
         mBits, 3, "hit")
       .select(col("k"), col("hit"))
@@ -221,6 +222,8 @@ class SketchesSpec extends SparkSpec {
     assert(joined.except(dense).count() == 0L &&
       dense.except(joined).count() == 0L,
       "dense scalar probe diverged from the probe-join form")
+    assert(dense.filter(col("k").isNull).select("hit").head().get(0) == false,
+      "a NULL item must probe false, not NULL")
     // sanity: the comparison exercised both outcomes
     val n = dense.filter(col("hit")).count()
     assert(n >= 300L && n < 600L, s"degenerate probe set: $n hits")
