@@ -294,7 +294,9 @@ object SparkEntry {
   // _centroids_ptr pointer) — values unchanged, layout changed; the
   // bump makes every gate rebuild through (and so exercise) the
   // pointer publish instead of serving pre-pointer cached roots
-  private val RootCacheFormatVersion = 3
+  // v4: every PQ root is written through Pq.writeRoot (own books,
+  // centroids and _pq_meta sidecars) — pre-_pq_meta roots cannot load
+  private val RootCacheFormatVersion = 4
   private[graft] lazy val rootCacheBase: String = {
     val tmp = sys.props.getOrElse("java.io.tmpdir", "/tmp")
       .stripSuffix("/")
@@ -756,20 +758,8 @@ object SparkEntry {
         val emb = t(s, dir, "embeddings")
         val books = Pq.fit(emb, "vec_id", "embedding", m = pqM,
           ksub = pqKsub)
-        Pq.encode(emb, "embedding", books).write.mode("overwrite")
-          .parquet(s"$p/data")
-        books.write(s, s"$p/books")
+        Pq.writeRoot(s, p, emb, "embedding", books)
       })
-
-  /** A hand-laid PQ root (`path/data`, books from `booksRoot`) as the
-    * [[Pq.PqRoot]] its searches take: `ivf` when its rows carry that
-    * index's cluster layout, `residual` when they were residual-coded. */
-  private def pqRootAt(s: SparkSession, path: String,
-      booksRoot: String = "", ivf: Option[IvfIndex] = None,
-      residual: Boolean = false): Pq.PqRoot =
-    Pq.PqRoot(path,
-      Pq.load(s, s"${if (booksRoot.isEmpty) path else booksRoot}/books"),
-      residual, ivf.map(i => (i.centroids, i.clusterIds)))
 
   /** The OPQ root for `dir` (q182): the same corpus at the SAME code
     * budget (m, ksub) as [[pqRootFor]], but the coordinates are
@@ -819,9 +809,7 @@ object SparkEntry {
         val emb = anisoEmb(s, dir)
         val books = Pq.fit(emb, "vec_id", "embedding", m = pqM,
           ksub = pqKsub)
-        Pq.encode(emb, "embedding", books).write.mode("overwrite")
-          .parquet(s"$p/data")
-        books.write(s, s"$p/books")
+        Pq.writeRoot(s, p, emb, "embedding", books)
       })
 
   private val anisoOpqPathCache =
@@ -946,13 +934,11 @@ object SparkEntry {
   private def pqIvfRootFor(s: SparkSession, dir: String): String =
     pqIvfPathCache.computeIfAbsent(dir, _ =>
       cachedRoot(dir, "pq_ivf") { p =>
-        val ivfRoot = { ivfIndexFor(s, dir); ivfPathCache.get(dir) }
-        val books = Pq.load(s, s"${pqRootFor(s, dir)}/books")
-        Pq.encode(
-            s.read.parquet(ivfRoot).drop(IvfIndex.Sq8CodeCol),
-            "embedding", books)
-          .write.mode("overwrite")
-          .partitionBy(IvfIndex.ClusterCol).parquet(s"$p/data")
+        val idx = ivfIndexFor(s, dir)
+        Pq.writeRoot(s, p,
+          s.read.parquet(ivfPathCache.get(dir)).drop(IvfIndex.Sq8CodeCol),
+          "embedding", Pq.loadRoot(s, pqRootFor(s, dir)).books,
+          ivf = Some((idx.centroids, idx.clusterIds)))
       })
 
   /** The RESIDUAL IVF-PQ root for `dir` (q76): FAISS IVFPQ's default
@@ -971,11 +957,8 @@ object SparkEntry {
         val assigned = s.read.parquet(ivfRoot).drop(IvfIndex.Sq8CodeCol)
         val books = Pq.fitResidual(assigned, "vec_id", "embedding",
           idx.centroids, idx.clusterIds, m = pqM, ksub = pqKsub)
-        Pq.encodeResidual(assigned, "embedding", books, idx.centroids,
-            idx.clusterIds)
-          .write.mode("overwrite")
-          .partitionBy(IvfIndex.ClusterCol).parquet(s"$p/data")
-        books.write(s, s"$p/books")
+        Pq.writeRoot(s, p, assigned, "embedding", books, residual = true,
+          ivf = Some((idx.centroids, idx.clusterIds)))
       })
 
   /** The COSINE-PQ roots for `dir` (q77 flat, q78 probed): one fit of
@@ -992,9 +975,7 @@ object SparkEntry {
         val emb = t(s, dir, "embeddings")
         val books = Pq.fit(emb, "vec_id", "embedding", m = pqM,
           ksub = pqKsub, normalized = true)
-        Pq.encode(emb, "embedding", books).write.mode("overwrite")
-          .parquet(s"$p/data")
-        books.write(s, s"$p/books")
+        Pq.writeRoot(s, p, emb, "embedding", books)
       })
 
   private val pqIvfCosPathCache =
@@ -1002,13 +983,11 @@ object SparkEntry {
   private def pqIvfCosRootFor(s: SparkSession, dir: String): String =
     pqIvfCosPathCache.computeIfAbsent(dir, _ =>
       cachedRoot(dir, "pq_ivf_cos") { p =>
-        val ivfRoot = { ivfIndexFor(s, dir); ivfPathCache.get(dir) }
-        val books = Pq.load(s, s"${pqCosRootFor(s, dir)}/books")
-        Pq.encode(
-            s.read.parquet(ivfRoot).drop(IvfIndex.Sq8CodeCol),
-            "embedding", books)
-          .write.mode("overwrite")
-          .partitionBy(IvfIndex.ClusterCol).parquet(s"$p/data")
+        val idx = ivfIndexFor(s, dir)
+        Pq.writeRoot(s, p,
+          s.read.parquet(ivfPathCache.get(dir)).drop(IvfIndex.Sq8CodeCol),
+          "embedding", Pq.loadRoot(s, pqCosRootFor(s, dir)).books,
+          ivf = Some((idx.centroids, idx.clusterIds)))
       })
 
   /** The MAINTAINED IVF-PQ root for `dir` (q183): built over a
@@ -4815,7 +4794,7 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       // The oracle rebuilds the same table from the exported books and
       // replays both passes.
       VectorExpressions.ensureRegistered(s)
-      val root = pqRootAt(s, pqRootFor(s, dir))
+      val root = Pq.loadRoot(s, pqRootFor(s, dir))
       Pq.topK(root.data(s), "vec_id", "embedding", queryVec(s, dir),
           k = pqK, root, refine = pqRefine, tieBreak = Some("vec_id"),
           rankRoundDp = Some(4))
@@ -4832,8 +4811,7 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       // fit serves q73 and this query; the oracle composes q36's probe
       // replay with q73's decode replay over the probed subset.
       VectorExpressions.ensureRegistered(s)
-      val root = pqRootAt(s, pqIvfRootFor(s, dir), pqRootFor(s, dir),
-        Some(ivfIndexFor(s, dir)))
+      val root = Pq.loadRoot(s, pqIvfRootFor(s, dir))
       Pq.topK(root.data(s), "vec_id", "embedding", queryVec(s, dir),
           k = pqK, root, nprobe = 6, refine = pqRefine,
           tieBreak = Some("vec_id"), rankRoundDp = Some(4))
@@ -4852,8 +4830,7 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       // oracle composes q68's probe/gate replay with q73's ADC-table
       // replay keyed per query.
       VectorExpressions.ensureRegistered(s)
-      val root = pqRootAt(s, pqIvfRootFor(s, dir), pqRootFor(s, dir),
-        Some(ivfIndexFor(s, dir)))
+      val root = Pq.loadRoot(s, pqIvfRootFor(s, dir))
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id").isin(0, 1, 2))
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
@@ -4876,8 +4853,7 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       // exact rounded re-rank — the lossy-but-deterministic residual
       // arithmetic verified end to end, not just recall-graded.
       VectorExpressions.ensureRegistered(s)
-      val root = pqRootAt(s, pqResidRootFor(s, dir),
-        ivf = Some(ivfIndexFor(s, dir)), residual = true)
+      val root = Pq.loadRoot(s, pqResidRootFor(s, dir))
       Pq.topK(root.data(s), "vec_id", "embedding", queryVec(s, dir),
           k = pqK, root, nprobe = 6, refine = pqRefine,
           tieBreak = Some("vec_id"), rankRoundDp = Some(4))
@@ -4894,7 +4870,7 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       // re-rank over the raw vectors. The metric<->books contract is
       // enforced both ways like SQ8's metric<->grid.
       VectorExpressions.ensureRegistered(s)
-      val root = pqRootAt(s, pqCosRootFor(s, dir))
+      val root = Pq.loadRoot(s, pqCosRootFor(s, dir))
       Pq.topK(root.data(s), "vec_id", "embedding", queryVec(s, dir),
           k = pqK, root, refine = pqRefine, tieBreak = Some("vec_id"),
           rankRoundDp = Some(4), metric = KnnSearch.Cosine)
@@ -4908,8 +4884,7 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       // (probeOrderCosine's quantized key — the whole cosine IVF
       // family's ranking), directory-pruned ADC, true-cosine re-rank.
       VectorExpressions.ensureRegistered(s)
-      val root = pqRootAt(s, pqIvfCosRootFor(s, dir), pqCosRootFor(s, dir),
-        Some(ivfIndexFor(s, dir)))
+      val root = Pq.loadRoot(s, pqIvfCosRootFor(s, dir))
       Pq.topK(root.data(s), "vec_id", "embedding", queryVec(s, dir),
           k = pqK, root, nprobe = 6, refine = pqRefine,
           tieBreak = Some("vec_id"), rankRoundDp = Some(4),
@@ -4926,8 +4901,7 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       // root, true-cosine floor-rounded exact re-rank. Completes the
       // quantization matrix: {SQ8, PQ} x {single, batch} x {L2, cos}.
       VectorExpressions.ensureRegistered(s)
-      val root = pqRootAt(s, pqIvfCosRootFor(s, dir), pqCosRootFor(s, dir),
-        Some(ivfIndexFor(s, dir)))
+      val root = Pq.loadRoot(s, pqIvfCosRootFor(s, dir))
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id").isin(0, 1, 2))
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
@@ -6361,8 +6335,7 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       // tables, each row's query-and-cluster-correlated sum chain, and
       // the per-query exact rounded re-rank.
       VectorExpressions.ensureRegistered(s)
-      val root = pqRootAt(s, pqResidRootFor(s, dir),
-        ivf = Some(ivfIndexFor(s, dir)), residual = true)
+      val root = Pq.loadRoot(s, pqResidRootFor(s, dir))
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id").isin(0, 1, 2))
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
@@ -7090,12 +7063,12 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
         val realF = runner.leg {
           pqRecallLegs(t(s, dir, "embeddings"), col("vec_id") < opqNq,
             opqNq, pqRefine, Seq(
-            ("1_pq", pqRootAt(s, plainRoot)), ("2_opq", opqRoot)))
+            ("1_pq", Pq.loadRoot(s, plainRoot)), ("2_opq", opqRoot)))
         }
         val anisoF = runner.leg {
           pqRecallLegs(anisoEmb(s, dir),
             col("vec_id") < opqNq, opqNq, 1, Seq(
-            ("3_pq_aniso", pqRootAt(s, anisoPq)),
+            ("3_pq_aniso", Pq.loadRoot(s, anisoPq)),
             ("4_opq_aniso", anisoOpq)))
         }
         runner.await(realF)
@@ -8611,8 +8584,7 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       // passes. Scale shape: one pruned m-bytes/row candidate scan +
       // one 40-row exact pass.
       VectorExpressions.ensureRegistered(s)
-      val root = pqRootAt(s, pqIvfRootFor(s, dir), pqRootFor(s, dir),
-        Some(ivfIndexFor(s, dir)))
+      val root = Pq.loadRoot(s, pqIvfRootFor(s, dir))
       Pq.topK(root.data(s), "vec_id", "embedding", queryVec(s, dir),
           k = pqK, root, nprobe = 2, refine = pqRefine,
           tieBreak = Some("vec_id"), rankRoundDp = Some(4),
@@ -8728,8 +8700,7 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       val sq8 = idx.searchQuantized(q, 10, nprobe = 2, refine = 4,
         tieBreak = Some("vec_id"), rankRoundDp = Some(4),
         filter = Some(m))
-      val pqRoot = pqRootAt(s, pqIvfRootFor(s, dir), pqRootFor(s, dir),
-        Some(idx))
+      val pqRoot = Pq.loadRoot(s, pqIvfRootFor(s, dir))
       val pq = Pq.topK(pqRoot.data(s), "vec_id", "embedding", q,
         k = pqK, pqRoot, nprobe = 2, refine = pqRefine,
         tieBreak = Some("vec_id"), rankRoundDp = Some(4),

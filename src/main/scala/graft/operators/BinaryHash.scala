@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.sources.PersistedRoot
+
 /** Binary (sign-bit) vector hashing: each embedding dimension
   * contributes one bit (`v(i) > 0`), packed into 32-bit words stored
   * as longs, and similarity search runs on Hamming distance =
@@ -143,6 +145,13 @@ object BinaryHash {
         .otherwise(packCol(col(vecCol), dim)))
   }
 
+  /** a binary root as the lifecycle core sees it: flat `data/` (the
+    * sign-code scan is the cheap full-pass family, so there is no
+    * directory prune to preserve) plus the dim sidecar */
+  private def persisted(path: String): PersistedRoot =
+    PersistedRoot(path, DataSubdir, Nil,
+      Seq(PersistedRoot.Sidecar.optional(MetaSubdir)))
+
   /** Build a persisted binary root: `data/` carries the corpus with
     * its packed sign codes, `_bin_meta/` records the dim so a CDC
     * batch packs in the SAME bit space. Unlike PQ there is no fitted
@@ -151,12 +160,10 @@ object BinaryHash {
   def writeRoot(spark: org.apache.spark.sql.SparkSession, path: String,
       corpus: DataFrame, vecCol: String, dim: Int): Unit = {
     import spark.implicits._
-    withCodes(corpus, vecCol, dim)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/$DataSubdir")
-    Seq(dim).toDF("dim")
-      .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/$MetaSubdir")
+    val r = persisted(path)
+    PersistedRoot.rewrite(spark, r, withCodes(corpus, vecCol, dim)) {
+      PersistedRoot.writeSidecar(r, MetaSubdir, Seq(dim).toDF("dim"))
+    }
   }
 
   private[graft] def loadDim(spark: org.apache.spark.sql.SparkSession,
@@ -165,31 +172,23 @@ object BinaryHash {
 
   /** Append RAW rows to a persisted binary root: pack against the
     * root's recorded dim (a different-dim batch fails loudly in the
-    * pack guard), land, refresh the listing, fire the invalidation
-    * hooks — the [[Pq.appendEncoded]] contract for the sign-code
-    * rung. */
+    * pack guard), then [[PersistedRoot.append]] — the
+    * [[Pq.appendEncoded]] contract for the sign-code rung. */
   def appendTo(spark: org.apache.spark.sql.SparkSession, path: String,
       newRows: DataFrame, vecCol: String): Unit = {
     require(!newRows.columns.contains(CodeCol),
       s"appendTo takes RAW rows — input already has '$CodeCol'")
-    val dim = loadDim(spark, path)
-    withCodes(newRows, vecCol, dim)
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(s"$path/$DataSubdir")
-    spark.catalog.refreshByPath(s"$path/$DataSubdir")
-    IvfIndex.fireInvalidated(path)
+    PersistedRoot.append(spark, persisted(path),
+      withCodes(newRows, vecCol, loadDim(spark, path)))
   }
 
-  /** Targeted deletion from a persisted binary root (flat layout —
-    * the sign-code scan is the cheap full-pass family, so there is no
-    * directory prune to preserve). Idempotent; returns 1 if anything
-    * was deleted. */
+  /** Targeted deletion from a persisted binary root
+    * ([[PersistedRoot.delete]] on the flat layout). Idempotent; returns
+    * 1 if anything was deleted. */
   def deleteByIds(spark: org.apache.spark.sql.SparkSession,
-      path: String, ids: DataFrame, idCol: String): Int = {
-    val n = IvfIndex.flatDelete(spark, s"$path/$DataSubdir", idCol, ids)
-    if (n > 0) IvfIndex.fireInvalidated(path)
-    n
-  }
+      path: String, ids: DataFrame, idCol: String): Int =
+    PersistedRoot.delete(spark, persisted(path),
+      spark.read.parquet(s"$path/$DataSubdir"), idCol, ids).size
 
   /** Batch face of [[topKStored]] — the [[IvfIndex#searchBatch]]
     * discipline on the binary rung, closing the last single-only rung

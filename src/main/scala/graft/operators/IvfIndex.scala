@@ -5,6 +5,8 @@ import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.PersistedRoot
+
 /** IVF (inverted-file) approximate nearest-neighbor index — the scale
   * path for the reference's HNSW index (`VECTOR KEY ... TYPE=HNSW`,
   * /root/reference/src/tools/load.py:26). SURVEY.md §2.8 V4/V5.
@@ -964,43 +966,6 @@ final case class IvfIndex(
           "two-level partitioned layout")
     }
 
-  /** Incremental maintenance (the reference's continuous inserts into
-    * the indexed table — doc_embedder.py:90-114 insert into the HNSW
-    * table, load.py:26): assign new vectors to the EXISTING centroids —
-    * NO refit, centroids and cluster ids unchanged — and return the
-    * extended index. Assignment is a narrow per-row map (nlist native
-    * distance expressions, no shuffle, no k-means job in the plan), so
-    * appends are cheap at any corpus size; recall for existing vectors
-    * is untouched, and each new vector lands exactly where a fresh
-    * assignment against these centroids would put it. Centroid drift
-    * after MANY appends is the standard IVF trade-off — rebuild (and
-    * write to a new root) to refresh. */
-  def append(newVecs: DataFrame): IvfIndex = {
-    require(!newVecs.columns.contains(IvfIndex.ClusterCol),
-      s"input already has a '${IvfIndex.ClusterCol}' column")
-    require(!newVecs.columns.contains(IvfIndex.Sq8CodeCol),
-      s"input already has a '${IvfIndex.Sq8CodeCol}' column")
-    val assignedNew =
-      IvfIndex.assignToCentroids(newVecs, vecCol, centroids, clusterIds)
-    // a QUANTIZED index's appended rows need codes too, or the
-    // unionByName would fail on the column mismatch — and even a lenient
-    // union would leave null codes invisible to searchQuantized's first
-    // pass. Same fixed-grid encode as [[IvfIndex.appendTo]].
-    val withCodes = sq8Params match {
-      case Some((mins, scales)) =>
-        graft.plans.VectorExpressions
-          .ensureRegistered(assigned.sparkSession)
-        // a normalized (cosine) grid encodes the UNIT-normalized vector
-        val enc = if (sq8Normalized) IvfIndex.unitNormalizeCol(col(vecCol))
-          else col(vecCol)
-        assignedNew.withColumn(IvfIndex.Sq8CodeCol,
-          call_function("graft_sq8_encode", enc,
-            typedLit(mins ++ scales)))
-      case None => assignedNew
-    }
-    copy(assigned = assigned.unionByName(withCodes))
-  }
-
   /** Persist as a cluster-partitioned table: search then prunes whole
     * directories, the same mechanism as the component corpus. A
     * component-scoped index nests the cluster directories INSIDE the
@@ -1074,15 +1039,8 @@ final case class IvfIndex(
     val normalized = if (alreadyCoded) sq8Normalized else quantizeNormalized
     val data =
       if (alreadyCoded || sq8.isEmpty) assigned
-      else {
-        graft.plans.VectorExpressions.ensureRegistered(spark)
-        val (mins, scales) = sq8.get
-        val enc = if (normalized) IvfIndex.unitNormalizeCol(col(vecCol))
-          else col(vecCol)
-        assigned.withColumn(IvfIndex.Sq8CodeCol,
-          call_function("graft_sq8_encode", enc,
-            typedLit(mins ++ scales)))
-      }
+      else assigned.withColumn(IvfIndex.Sq8CodeCol,
+        IvfIndex.sq8Encode(spark, vecCol, sq8.get, normalized))
     // a wholesale rebuild makes the DEFAULT sidecar authoritative
     // again: drop any generation pointer (and its generations) a prior
     // in-place rebalance left — under a dynamic-partition-overwrite
@@ -1094,22 +1052,15 @@ final case class IvfIndex(
     // instead of a stale generation silently serving old centroids
     // against the rebuilt data until the write is re-run
     IvfIndex.dropSidecarPointer(spark, path)
-    data.write.mode(SaveMode.Overwrite)
-      .partitionBy(componentCol.toSeq :+ IvfIndex.ClusterCol: _*)
-      .parquet(path)
-    clusterIds.zip(centroids).toSeq.toDF("cluster_id", "centroid")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$path/${IvfIndex.CentroidSidecar}")
-    sq8.foreach { case (mins, scales) =>
-      Seq((mins, scales, normalized)).toDF("mins", "scales", "normalized")
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$path/${IvfIndex.Sq8Sidecar}")
+    val root = IvfIndex.persisted(path, componentCol)
+    PersistedRoot.rewrite(spark, root, data) {
+      PersistedRoot.writeSidecar(root, IvfIndex.CentroidSidecar,
+        clusterIds.zip(centroids).toSeq.toDF("cluster_id", "centroid"))
+      sq8.foreach { case (mins, scales) =>
+        PersistedRoot.writeSidecar(root, IvfIndex.Sq8Sidecar,
+          Seq((mins, scales, normalized)).toDF("mins", "scales", "normalized"))
+      }
     }
-    // same-JVM in-place rebuild: the auto-probe rule's driver caches
-    // (listing TTL + centroids) and the load-metadata cache must not
-    // serve the old index
-    graft.plans.IvfAutoProbe.invalidate(spark, path)
-    IvfIndex.evictLoadMeta(path)
   }
 }
 
@@ -1467,22 +1418,53 @@ object IvfIndex {
     }: _*)
     vecs.withColumn(ClusterCol,
       when(col(vecCol).isNull || size(col(vecCol)) =!= dim,
-        raise_error(concat(lit(s"IvfIndex.append: vector must be " +
+        raise_error(concat(lit(s"IvfIndex.appendTo: vector must be " +
           s"non-null with dim $dim, got dim "),
           coalesce(size(col(vecCol)).cast("string"), lit("null")))))
         .otherwise(array_min(pairs).getField("c")))
   }
 
-  /** [[IvfIndex#append]] against a PERSISTED index root: assign to the
-    * existing centroids (sidecar read only — no corpus scan, no refit)
-    * and append the new rows into the cluster-partitioned layout.
-    * The `_centroids` sidecar is untouched, so concurrent readers and
-    * the [[graft.plans.IvfAutoProbe]] centroid cache stay valid. Many
-    * small appends accumulate small files per partition — compact with
-    * [[graft.sources.CorpusStore.compact]]-style repartition-on-the-
-    * partition-column to a fresh root when file counts grow. */
+  /** The SQ8 row encode shared by [[IvfIndex#write]] and [[appendTo]]:
+    * one byte per dimension on the fixed `grid` (mins, scales); a
+    * normalized (cosine) grid encodes the UNIT-normalized vector. */
+  private def sq8Encode(spark: SparkSession, vecCol: String,
+      grid: (Seq[Double], Seq[Double]), normalized: Boolean): Column = {
+    graft.plans.VectorExpressions.ensureRegistered(spark)
+    call_function("graft_sq8_encode",
+      if (normalized) unitNormalizeCol(col(vecCol)) else col(vecCol),
+      typedLit(grid._1 ++ grid._2))
+  }
+
+  /** an IVF root as the lifecycle core sees it: rows in the root itself,
+    * partitioned by component (scoped layout) then cluster. Compact
+    * requires the live centroid generation `centroids` (copied back
+    * under the default name — copy-based lifecycles need no generation
+    * history) and carries the SQ8 grid when present. */
+  private def persisted(path: String, componentCol: Option[String],
+      centroids: String = CentroidSidecar): PersistedRoot =
+    PersistedRoot(path, "", componentCol.toSeq :+ ClusterCol, Seq(
+      PersistedRoot.Sidecar(CentroidSidecar, centroids, required = true),
+      PersistedRoot.Sidecar.optional(Sq8Sidecar)))
+
+  /** Incremental maintenance of a PERSISTED index root (the reference's
+    * continuous inserts into the indexed table — doc_embedder.py:90-114
+    * insert into the HNSW table, load.py:26): assign new vectors to the
+    * EXISTING centroids (sidecar read only — no corpus scan, NO refit)
+    * and append them into the cluster-partitioned layout. Assignment is
+    * a narrow per-row map (nlist native distance expressions, no
+    * shuffle, no k-means job), so appends are cheap at any corpus size;
+    * recall for existing vectors is untouched, and each new vector lands
+    * exactly where a fresh assignment against these centroids would put
+    * it. Centroid drift after MANY appends is the standard IVF
+    * trade-off — [[rebalance]] or rebuild to refresh. The `_centroids`
+    * sidecar is untouched, so concurrent readers and the
+    * [[graft.plans.IvfAutoProbe]] centroid cache stay valid. Many small
+    * appends accumulate small files per partition — [[compact]] them. */
   def appendTo(spark: SparkSession, path: String, newVecs: DataFrame,
       idCol: String, vecCol: String): Unit = {
+    for (c <- Seq(ClusterCol, Sq8CodeCol))
+      require(!newVecs.columns.contains(c),
+        s"appendTo takes RAW rows — input already has a '$c' column")
     val idx = load(spark, path, idCol, vecCol)
     val assignedNew =
       assignToCentroids(newVecs, vecCol, idx.centroids, idx.clusterIds)
@@ -1492,27 +1474,11 @@ object IvfIndex {
     // grid is FIXED at build time (like the centroids): out-of-range
     // appended values clamp to the grid edge, the standard SQ8 drift
     // trade-off — rebuild to refresh the grid along with the centroids.
-    val withCodes = idx.sq8Params match {
-      case Some((mins, scales)) =>
-        graft.plans.VectorExpressions.ensureRegistered(spark)
-        val enc = if (idx.sq8Normalized) unitNormalizeCol(col(vecCol))
-          else col(vecCol)
-        assignedNew.withColumn(Sq8CodeCol,
-          call_function("graft_sq8_encode", enc,
-            typedLit(mins ++ scales)))
-      case None => assignedNew
-    }
-    // append INTO the existing directory layout — flattening a two-level
-    // component/cluster index down to cluster-only partitions would
-    // silently break the component prune for every later scoped search
-    withCodes.write.mode(SaveMode.Append)
-      .partitionBy(idx.componentCol.toSeq :+ ClusterCol: _*).parquet(path)
-    // drop the session's cached file listing for the root: a reader
-    // whose listing predates the append would silently miss the new
-    // rows (and a post-delete reader would plan against removed files)
-    spark.catalog.refreshByPath(path)
-    graft.plans.IvfAutoProbe.invalidate(spark, path)
-    fireInvalidated(path)
+    val withCodes = idx.sq8Params.fold(assignedNew)(grid =>
+      assignedNew.withColumn(Sq8CodeCol,
+        sq8Encode(spark, vecCol, grid, idx.sq8Normalized)))
+    PersistedRoot.append(spark, persisted(path, idx.componentCol),
+      withCodes)
   }
 
   /** Compact a fragmented index root into `destPath`: incremental
@@ -1524,8 +1490,8 @@ object IvfIndex {
     * directory layout out; the `_centroids` sidecar is copied
     * byte-for-byte so the compacted root is bit-compatible for
     * [[load]]/search and the [[graft.plans.IvfAutoProbe]] rule.
-    * Copy-compact, never in-place (shared core with
-    * [[graft.sources.CorpusStore]]: Spark refuses to overwrite a path
+    * Copy-compact, never in-place (shared core
+    * [[graft.sources.PersistedRoot.compact]]: Spark refuses to overwrite a path
     * it reads, and delete-then-rewrite would lose the live index on a
     * mid-job failure; the guard compares Hadoop-qualified roots and
     * refuses nesting too) — swap readers to the fresh root afterwards.
@@ -1587,31 +1553,13 @@ object IvfIndex {
           df.dropDuplicates(id)
         case None => df
       }
-      graft.sources.CorpusStore.copyCompactInto(data, parts, srcPath,
-        destPath, targetRowsPerFile)
-      // resolve the src's live sidecar generation (a rebalanced root
-      // carries a pointer); the fresh dest gets the DEFAULT name —
-      // copy-based lifecycles need no generation history
-      val src = centroidSidecarDir(srcFs, srcRoot)
-      val dst = new org.apache.hadoop.fs.Path(s"$destPath/$CentroidSidecar")
-      val copied = org.apache.hadoop.fs.FileUtil.copy(
-        src.getFileSystem(conf), src, dst.getFileSystem(conf), dst,
-        false, conf)
-      require(copied && dst.getFileSystem(conf).exists(dst),
-        s"compact: centroid sidecar copy to $dst failed — destPath is " +
-          "incomplete (it would load via the lossy means fallback); " +
-          "re-run compact")
-      // a quantized root's SQ8 params ride along the same way — losing
-      // them would turn every searchQuantized on the compacted root
-      // into a (loud) failure
-      val sq8Src = new org.apache.hadoop.fs.Path(s"$srcPath/$Sq8Sidecar")
-      if (sq8Src.getFileSystem(conf).exists(sq8Src)) {
-        val sq8Dst = new org.apache.hadoop.fs.Path(s"$destPath/$Sq8Sidecar")
-        require(org.apache.hadoop.fs.FileUtil.copy(
-          sq8Src.getFileSystem(conf), sq8Src,
-          sq8Dst.getFileSystem(conf), sq8Dst, false, conf),
-          s"compact: SQ8 params sidecar copy to $sq8Dst failed — re-run")
-      }
+      // the src's LIVE sidecar generation (a rebalanced root carries a
+      // pointer) is required — without it destPath would load through
+      // the lossy per-(cluster,dim)-means fallback
+      PersistedRoot.compact(spark,
+        persisted(srcPath, parts.filterNot(_ == ClusterCol).headOption,
+          centroidSidecarDir(srcFs, srcRoot).getName),
+        data, destPath, targetRowsPerFile)
       // GAINED markers only: a marker that disappeared (crash-recovery
       // cleanup, manual deletion) means no data the copy could have
       // missed — aborting on it would discard a complete destPath
@@ -1641,7 +1589,6 @@ object IvfIndex {
             s"$destNote Quiesce the ingest query (stop it, or wait " +
             "for its markers to settle) and re-run compact.")
       }
-      graft.plans.IvfAutoProbe.invalidate(spark, destPath)
     } finally releaseCompactLock(spark, srcPath)
   }
 
@@ -1709,33 +1656,18 @@ object IvfIndex {
     * CDC-driven incremental maintenance cycle
     * ([[graft.operators.SnapshotDiff]] → delete old rows → [[appendTo]]
     * new rows; centroids stay fixed like every other index mutation,
-    * the documented drift trade-off). Mirrors
-    * [[graft.sources.CorpusStore.deleteByIds]]: only the partition
-    * directories that actually hold a doomed id are rewritten
-    * (dynamic partition overwrite over the index's own layout —
-    * component level included when present); untouched partitions
-    * keep their exact files, the sidecar is never touched, and
-    * re-running the same delete is a no-op.
-    *
-    * Dynamic overwrite has one silent gap this method CLOSES: a
-    * partition whose EVERY row is doomed produces no survivor rows,
-    * so the overwrite never visits it and the stale files would
-    * survive the delete. Fully-emptied partitions are detected from
-    * the survivor counts and their directories removed explicitly.
-    * Returns the number of affected partition directories. Same
-    * non-atomicity note as the corpus-store delete: a crash
-    * mid-rewrite is healed by re-running. */
+    * the documented drift trade-off), through
+    * [[graft.sources.PersistedRoot.delete]]: only the partition
+    * directories that actually hold a doomed id are rewritten (the
+    * index's own layout — component level included when present);
+    * untouched partitions keep their exact files, the sidecar is never
+    * touched, and re-running the same delete is a no-op. Returns the
+    * number of affected partition directories. */
   def deleteByIds(spark: SparkSession, path: String, ids: DataFrame,
       idCol: String, vecCol: String): Int = {
     val idx = load(spark, path, idCol, vecCol)
-    val parts = idx.componentCol.toSeq :+ ClusterCol
-    val nAffected =
-      partitionScopedDelete(spark, path, idx.assigned, parts, idCol, ids)
-    if (nAffected > 0) {
-      graft.plans.IvfAutoProbe.invalidate(spark, path)
-      fireInvalidated(path)
-    }
-    nAffected
+    PersistedRoot.delete(spark, persisted(path, idx.componentCol),
+      idx.assigned, idCol, ids).size
   }
 
   /** Rebalance a persisted root IN PLACE: split every cluster holding
@@ -1816,10 +1748,9 @@ object IvfIndex {
       val knownIds = spark.read
         .parquet(centroidSidecarDir(fs, root).toString)
         .select("cluster_id").collect().map(_.getInt(0)).toSet
-      clusterDirs(fs, root).foreach { case (cid, p) =>
-        if (!knownIds.contains(cid)) fs.delete(p, true)
-      }
-      spark.catalog.refreshByPath(path)
+      val orphans = clusterDirs(fs, root).filterNot(d => knownIds(d._1))
+      orphans.foreach(d => fs.delete(d._2, true))
+      if (orphans.nonEmpty) PersistedRoot.invalidate(spark, path)
 
       var totalSplits = 0
       var frozen = Set.empty[Int]
@@ -1903,14 +1834,10 @@ object IvfIndex {
           clusterDirs(fs, root).foreach { case (cid, p) =>
             if (splitIds.contains(cid)) fs.delete(p, true)
           }
-          spark.catalog.refreshByPath(path)
+          PersistedRoot.invalidate(spark, path)
           totalSplits += oversized.length
           lastChildren = children.result()
         }
-      }
-      if (totalSplits > 0) {
-        graft.plans.IvfAutoProbe.invalidate(spark, path)
-        fireInvalidated(path)
       }
       totalSplits
     } finally releaseCompactLock(spark, path)
@@ -1938,115 +1865,10 @@ object IvfIndex {
     walk(root, 0)
   }
 
-  /** The partition-scoped delete CORE shared by [[deleteByIds]] and
-    * the encoded-sidecar lifecycles ([[Pq.deleteEncoded]]): rewrite
-    * only the partition directories that hold a doomed id (dynamic
-    * partition overwrite as a PER-WRITER option), remove
-    * fully-emptied directories explicitly (dynamic overwrite never
-    * visits a zero-survivor partition — its stale files would
-    * silently outlive the delete), and refresh the session's file
-    * listing. Returns the affected partition-directory count;
-    * re-running the same delete is a no-op. Cache/probe invalidation
-    * stays with the CALLER — this core knows nothing about what is
-    * derived from the root. */
-  private[operators] def partitionScopedDelete(spark: SparkSession,
-      path: String, data: DataFrame, parts: Seq[String], idCol: String,
-      ids: DataFrame): Int = {
-    require(ids.schema.fields.length == 1,
-      s"ids must be a 1-column frame, got ${ids.schema.simpleString}")
-    val doomed = ids.distinct()
-      .withColumnRenamed(ids.columns.head, "__doomed_id")
-    // the affected PARTITION TUPLES, via a semi-join (bounded by the
-    // partition count, not the corpus)
-    val affected = data
-      .join(doomed, data(idCol) === col("__doomed_id"), "left_semi")
-      .select(parts.map(col): _*).distinct()
-      .localCheckpoint()
-    val nAffected = affected.count().toInt
-    if (nAffected > 0) {
-      // survivors of ONLY the affected partitions; materialized before
-      // the overwrite (read-while-overwrite refusal, same as the
-      // corpus-store delete)
-      val survivors = data
-        .join(affected, parts, "left_semi")
-        .join(doomed, data(idCol) === col("__doomed_id"), "left_anti")
-        .localCheckpoint()
-      // per-writer option, NOT session conf: flipping the session
-      // global for the rewrite window would silently hand dynamic-
-      // overwrite semantics to any concurrent write on this session
-      survivors.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(parts: _*).parquet(path)
-      // close the dynamic-overwrite gap: affected partitions with ZERO
-      // survivors were never visited by the write — remove their
-      // directories explicitly or the doomed rows silently survive
-      val emptied = affected
-        .join(survivors.select(parts.map(col): _*).distinct(),
-          parts, "left_anti")
-        .collect()
-      if (emptied.nonEmpty) {
-        val conf = spark.sessionState.newHadoopConf()
-        val root = new org.apache.hadoop.fs.Path(path)
-        val fs = root.getFileSystem(conf)
-        emptied.foreach { row =>
-          val rel = parts.zipWithIndex
-            .map { case (p, i) => s"$p=${row.get(i)}" }.mkString("/")
-          fs.delete(new org.apache.hadoop.fs.Path(root, rel), true)
-        }
-      }
-      // the session caches parquet file listings per path — without a
-      // refresh, a reader in this session can plan against files the
-      // overwrite just replaced (FAILED_READ_FILE on the next action)
-      spark.catalog.refreshByPath(path)
-    }
-    nAffected
-  }
-
-  /** Targeted delete from an UNPARTITIONED data directory — the flat
-    * encoded-root twin of [[partitionScopedDelete]]. With no layout to
-    * scope to, any hit rewrites the whole directory (survivors
-    * materialized first — read-while-overwrite refusal); the flat form
-    * is the encode-once artifact shape, the partitioned form is the
-    * scale path. Returns 1 if anything was deleted, else 0 (no-op,
-    * idempotent). */
-  private[operators] def flatDelete(spark: SparkSession, path: String,
-      idCol: String, ids: DataFrame): Int = {
-    require(ids.schema.fields.length == 1,
-      s"ids must be a 1-column frame, got ${ids.schema.simpleString}")
-    val doomed = ids.distinct()
-      .withColumnRenamed(ids.columns.head, "__doomed_id")
-    val data = spark.read.parquet(path)
-    val nDoomed = data
-      .join(doomed, data(idCol) === col("__doomed_id"), "left_semi")
-      .count()
-    if (nDoomed > 0) {
-      val survivors = data
-        .join(doomed, data(idCol) === col("__doomed_id"), "left_anti")
-        .localCheckpoint()
-      survivors.write.mode(SaveMode.Overwrite).parquet(path)
-      spark.catalog.refreshByPath(path)
-      1
-    } else 0
-  }
-
-  /** Invalidation hooks for DERIVED artifacts keyed on an index root —
-    * materialized kNN graphs, exported replicas, downstream caches.
-    * [[deleteByIds]]/[[appendTo]] fire every registered hook with the
-    * mutated root (alongside [[graft.plans.IvfAutoProbe.invalidate]]),
-    * so a cache owner that cannot be reached from here (e.g.
-    * [[graft.SparkEntry]]'s per-corpus graph-path cache) can drop its
-    * entry instead of silently serving a stale artifact. Hooks must be
-    * idempotent and cheap; exceptions propagate (a failed invalidation
-    * is corruption-in-waiting, not a warning). */
-  private val invalidationHooks =
-    new java.util.concurrent.CopyOnWriteArrayList[String => Unit]()
+  /** Register a hook fired with every mutated root — see
+    * [[graft.sources.PersistedRoot.onInvalidated]]. */
   def onInvalidated(hook: String => Unit): Unit =
-    invalidationHooks.add(hook)
-  private[operators] def fireInvalidated(root: String): Unit = {
-    evictLoadMeta(root)
-    val it = invalidationHooks.iterator()
-    while (it.hasNext) it.next().apply(root)
-  }
+    PersistedRoot.onInvalidated(hook)
 
   /** Lock file [[compact]] holds on the SOURCE root while it copies —
     * underscore-prefixed, so hidden from Spark's data listing like the
@@ -2171,11 +1993,7 @@ object IvfIndex {
     added.foreach { rel =>
       fs.delete(new org.apache.hadoop.fs.Path(root, rel), false)
     }
-    if (added.nonEmpty) {
-      spark.catalog.refreshByPath(path)
-      graft.plans.IvfAutoProbe.invalidate(spark, path)
-      fireInvalidated(path)
-    }
+    if (added.nonEmpty) PersistedRoot.invalidate(spark, path)
     added.size
   }
 
@@ -2232,7 +2050,7 @@ object IvfIndex {
     // centroids are written once per generation, the SQ8 grid once per
     // write() — so it caches in-JVM keyed on (root, generation): a
     // fresh publish changes the key, in-JVM data mutators evict via
-    // [[fireInvalidated]], and a cache hit makes load() ZERO Spark
+    // [[PersistedRoot.invalidate]], and a cache hit makes load() ZERO Spark
     // jobs where it paid 2 collect jobs per query invocation before
     // (r21, guide §1.2 — across ~80 IVF-family queries × reps this was
     // the suite's single largest fixed overhead). Entries are plain
@@ -2350,7 +2168,7 @@ object IvfIndex {
         .mkString(";")
     } catch { case _: java.io.FileNotFoundException => "absent" }
   }
-  private[operators] def evictLoadMeta(root: String): Unit =
+  private[graft] def evictLoadMeta(root: String): Unit =
     loadMetaCache.keySet.removeIf(k =>
       k == root || k.startsWith(root + "|") || k.startsWith(root + "/"))
 }

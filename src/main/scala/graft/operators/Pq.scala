@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
+
+import graft.sources.PersistedRoot
 
 /** Product quantization (PQ) — the FAISS `PQm` shape, completing the
   * engine's quantization family next to IVF-SQ8 (SURVEY §8.2): the
@@ -64,11 +66,6 @@ object Pq {
         yield (s, c, cb(s)(c).toSeq, normalized))
         .toDF("sub", "code", "centroid", "normalized")
         .coalesce(1).write.mode("overwrite").parquet(path)
-      // a rewrite at a previously-loaded path must not leave the old
-      // parsed books behind (r21 advice): the stamp key already stops
-      // STALE serving, this keeps dead entries from accumulating and
-      // covers the fixture builders that write books sidecars directly
-      evictMeta(path)
     }
   }
 
@@ -109,11 +106,9 @@ object Pq {
     * still compute from parquet on every invocation. Entries are
     * plain arrays (no session references), so they are safe across
     * sessions in one JVM. Eviction rides the SAME invalidation bus
-    * every derived artifact uses ([[IvfIndex.onInvalidated]] — fired
-    * by appendEncoded/deleteEncoded and the IvfIndex mutators) plus
-    * explicit drops in [[writeRoot]]/[[refitRoot]]; a mutated root's
-    * whole subtree (books/centroids/perm sidecars live under it) is
-    * removed. */
+    * every derived artifact uses ([[PersistedRoot.invalidate]], which
+    * ends every root mutation); a mutated root's whole subtree
+    * (books/centroids/perm sidecars live under it) is removed. */
   private[operators] val booksCache =
     new java.util.concurrent.ConcurrentHashMap[String, Codebooks]()
   private[operators] val rootMetaCache =
@@ -126,7 +121,7 @@ object Pq {
     booksCache.keySet.removeIf(k =>
       k == root || k.startsWith(root + "/") || k.startsWith(root + "|"))
   }
-  IvfIndex.onInvalidated(evictMeta)
+  PersistedRoot.onInvalidated(evictMeta)
 
   /** Train per-subspace codebooks on the `sampleN` LOWEST-ID vectors —
     * a deterministic sample (content-independent of partitioning and
@@ -538,6 +533,14 @@ object Pq {
     def data(spark: SparkSession): DataFrame =
       spark.read.parquet(dataPath)
 
+    /** the root as the lifecycle core sees it: `data/` partitioned by
+      * cluster for the IVF layout, flat otherwise */
+    private[operators] def persisted: PersistedRoot =
+      PersistedRoot(path, DataSubdir,
+        if (ivf.isDefined) Seq(IvfIndex.ClusterCol) else Nil,
+        Seq(BooksSubdir, CentroidsSubdir, MetaSubdir, PermSubdir)
+          .map(PersistedRoot.Sidecar.optional))
+
     /** the search codec these codes need — refuses the combinations no
       * encode produces */
     private[graft] def codec: QuantizedSearch.Codec =
@@ -573,35 +576,24 @@ object Pq {
       ivf: Option[(Array[Array[Float]], Array[Int])] = None,
       perm: Option[Array[Int]] = None): Unit = {
     import spark.implicits._
+    val root = PqRoot(path, books, residual, ivf, perm)
     // only roots a search can score are written
-    PqRoot(path, books, residual, ivf, perm).codec
-    val encoded = encodeFor(corpus, vecCol, books, residual, ivf, perm)
-    val w = encoded.write.mode(SaveMode.Overwrite)
-    ivf match {
-      case Some(_) =>
-        w.partitionBy(IvfIndex.ClusterCol).parquet(s"$path/$DataSubdir")
-      case None => w.parquet(s"$path/$DataSubdir")
+    root.codec
+    val r = root.persisted
+    PersistedRoot.rewrite(spark, r,
+        encodeFor(corpus, vecCol, books, residual, ivf, perm)) {
+      books.write(spark, s"$path/$BooksSubdir")
+      ivf.foreach { case (cents, cids) =>
+        PersistedRoot.writeSidecar(r, CentroidsSubdir, cids.zip(cents).toSeq
+          .map { case (c, v) => (c, v.toSeq) }.toDF("cluster_id", "centroid"))
+      }
+      PersistedRoot.writeSidecar(r, MetaSubdir,
+        Seq(residual).toDF("residual"))
+      perm.foreach { p =>
+        PersistedRoot.writeSidecar(r, PermSubdir, p.zipWithIndex
+          .map { case (src, pos) => (pos, src) }.toSeq.toDF("pos", "src_dim"))
+      }
     }
-    books.write(spark, s"$path/$BooksSubdir")
-    ivf.foreach { case (cents, cids) =>
-      cids.zip(cents).toSeq
-        .map { case (c, v) => (c, v.toSeq) }
-        .toDF("cluster_id", "centroid")
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$path/$CentroidsSubdir")
-    }
-    Seq(residual).toDF("residual")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$path/$MetaSubdir")
-    perm.foreach { p =>
-      p.zipWithIndex.map { case (src, pos) => (pos, src) }.toSeq
-        .toDF("pos", "src_dim")
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$path/$PermSubdir")
-    }
-    // a wholesale (re)build replaces every sidecar — drop any cached
-    // parse of the old ones
-    evictMeta(path)
   }
 
   /** the one encode dispatch shared by build and append — a CDC batch
@@ -729,8 +721,8 @@ object Pq {
     * persisted codebooks (no refit — mirroring
     * [[IvfIndex.appendTo]]'s fixed-centroid contract), assign against
     * the fixed centroids when the root carries the IVF layout, land
-    * into the same directory layout, refresh the session listing, and
-    * fire the derived-artifact invalidation hooks. Rows must arrive
+    * into the same directory layout and invalidate
+    * ([[PersistedRoot.append]]). Rows must arrive
     * UN-encoded and un-assigned — a pre-assigned row could carry an
     * assignment from different centroids, which would silently break
     * every later probe prune. */
@@ -743,87 +735,36 @@ object Pq {
       s"appendEncoded takes RAW rows — input already has " +
         s"'${IvfIndex.ClusterCol}' (assignment happens here, against " +
         "the root's own centroids)")
-    val encoded = encodeFor(newRows, vecCol, root.books, root.residual,
-      root.ivf, root.perm)
-    val w = encoded.write.mode(SaveMode.Append)
-    root.ivf match {
-      case Some(_) =>
-        w.partitionBy(IvfIndex.ClusterCol).parquet(root.dataPath)
-      case None => w.parquet(root.dataPath)
-    }
-    spark.catalog.refreshByPath(root.dataPath)
-    IvfIndex.fireInvalidated(path)
+    PersistedRoot.append(spark, root.persisted, encodeFor(newRows, vecCol,
+      root.books, root.residual, root.ivf, root.perm))
   }
 
   /** Targeted deletion from a persisted PQ root — the
     * removed/changed leg of the CDC cycle ([[graft.operators
-    * .SnapshotDiff]] → deleteEncoded → [[appendEncoded]]). IVF-layout
-    * roots rewrite only the affected cluster directories
-    * ([[IvfIndex.partitionScopedDelete]] — per-writer dynamic
-    * overwrite, zero-survivor directories removed); flat roots
-    * rewrite the data directory. Idempotent; returns the affected
-    * partition count (flat: 1 if anything was deleted). */
+    * .SnapshotDiff]] → deleteEncoded → [[appendEncoded]]), through
+    * [[PersistedRoot.delete]]: IVF-layout roots rewrite only the
+    * affected cluster directories, flat roots rewrite the data
+    * directory. Idempotent; returns the affected partition count
+    * (flat: 1 if anything was deleted). */
   def deleteEncoded(spark: SparkSession, path: String, ids: DataFrame,
       idCol: String): Int = {
     val root = loadRoot(spark, path)
-    val n = root.ivf match {
-      case Some(_) =>
-        IvfIndex.partitionScopedDelete(spark, root.dataPath,
-          root.data(spark), Seq(IvfIndex.ClusterCol), idCol, ids)
-      case None =>
-        IvfIndex.flatDelete(spark, root.dataPath, idCol, ids)
-    }
-    if (n > 0) IvfIndex.fireInvalidated(path)
-    n
+    PersistedRoot.delete(spark, root.persisted, root.data(spark), idCol,
+      ids).size
   }
 
   /** Compact a fragmented PQ root into `destPath` (incremental
     * [[appendEncoded]] leaves one file per batch per directory; at
     * scale the small-file COUNT dominates listing + task overhead):
-    * one shuffle keyed on the cluster column (IVF layout) with
-    * `maxRecordsPerFile` bounding sizes, sidecars copied so the
-    * fresh root is [[loadRoot]]-compatible. Copy-compact, never
-    * in-place (the [[graft.sources.CorpusStore.copyCompactInto]]
-    * non-overlap guard) — swap readers to the fresh root after. */
+    * [[PersistedRoot.compact]] — one shuffle keyed on the cluster
+    * column (IVF layout) or into ⌈rows / targetRowsPerFile⌉ files
+    * (flat), sidecars copied so the fresh root is
+    * [[loadRoot]]-compatible. Copy-compact, never in-place — swap
+    * readers to the fresh root after. */
   def compactRoot(spark: SparkSession, srcPath: String,
       destPath: String, targetRowsPerFile: Long = 500000L): Unit = {
     val root = loadRoot(spark, srcPath)
-    root.ivf match {
-      case Some(_) =>
-        graft.sources.CorpusStore.copyCompactInto(root.data(spark),
-          Seq(IvfIndex.ClusterCol), root.dataPath,
-          s"$destPath/$DataSubdir", targetRowsPerFile)
-      case None =>
-        // flat root: no partition key to shuffle on — repartition to
-        // ceil(rows / targetRowsPerFile) so the small-file COUNT
-        // actually shrinks (r15 verdict: maxRecordsPerFile alone
-        // bounds sizes but keeps one output file per input task, so N
-        // tiny appends came out as N tiny files); the Hadoop-qualified
-        // non-overlap guard is shared with the IVF branch (r15 advice:
-        // a raw string comparison let aliased spellings of the same
-        // directory through, and the lazy read + Overwrite would then
-        // delete the source mid-job)
-        graft.sources.CorpusStore.requireDisjointRoots(spark,
-          root.dataPath, s"$destPath/$DataSubdir")
-        val data = root.data(spark)
-        val nFiles = math.max(1L,
-          (data.count() + targetRowsPerFile - 1L) / targetRowsPerFile)
-        data.repartition(nFiles.toInt)
-          .write.mode(SaveMode.Overwrite)
-          .option("maxRecordsPerFile", targetRowsPerFile)
-          .parquet(s"$destPath/$DataSubdir")
-    }
-    val conf = spark.sessionState.newHadoopConf()
-    for (sub <- Seq(BooksSubdir, CentroidsSubdir, MetaSubdir, PermSubdir)) {
-      val src = new org.apache.hadoop.fs.Path(s"$srcPath/$sub")
-      if (src.getFileSystem(conf).exists(src)) {
-        val dst = new org.apache.hadoop.fs.Path(s"$destPath/$sub")
-        require(org.apache.hadoop.fs.FileUtil.copy(
-          src.getFileSystem(conf), src, dst.getFileSystem(conf), dst,
-          false, conf),
-          s"compactRoot: sidecar copy to $dst failed — destPath is " +
-            "incomplete; re-run")
-      }
-    }
+    PersistedRoot.compact(spark, root.persisted, root.data(spark),
+      destPath, targetRowsPerFile)
   }
 }

@@ -110,74 +110,23 @@ object CorpusStore {
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(schema).parquet(path)
 
-  /** Targeted deletion (the right-to-be-forgotten pass) as a
-    * PARTITION-SCOPED rewrite: only the partitions that actually
-    * contain a doomed id are rewritten (survivors re-written minus the
-    * ids, under `partitionOverwriteMode=dynamic`); every other
-    * partition's files are untouched. At 100 TB a delete request
-    * usually names a handful of documents — rewriting the whole corpus
-    * for it is the naive shape this method exists to avoid, and the
-    * file-level blast radius is exactly the affected partition set.
-    *
-    * `ids` is a 1-column frame of doomed id values. The affected
-    * partition codes come from a partition-pruned semi-join collect
-    * (bounded by the PARTITION count, not the corpus); the rewrite
-    * scans only `component_code IN affected` (directory-pruned).
-    * Deletes of ids that don't exist are no-ops. Returns the affected
-    * partition codes (empty = nothing touched). NOT atomic across
-    * partitions — a crash mid-write leaves some partitions rewritten
-    * and others not, which re-running the same delete heals
-    * (idempotent); pair with a transactional table format when
-    * multi-partition atomicity matters. */
+  /** Targeted deletion (the right-to-be-forgotten pass) through
+    * [[PersistedRoot.delete]]: only the partitions that actually contain
+    * a doomed id are rewritten; every other partition's files are
+    * untouched. At 100 TB a delete request usually names a handful of
+    * documents — rewriting the whole corpus for it is the naive shape
+    * this method exists to avoid. `ids` is a 1-column frame of doomed
+    * id values. Returns the affected partition codes (empty = nothing
+    * touched); re-running the same delete heals a crash mid-write. */
   def deleteByIds(spark: SparkSession, path: String,
-      ids: DataFrame): Seq[Int] = {
-    require(ids.schema.fields.length == 1,
-      s"ids must be a 1-column frame, got ${ids.schema.simpleString}")
-    val idCol = ids.columns.head
-    val corpus = read(spark, path)
-    val affected = corpus
-      .join(ids.distinct(), corpus("id") === ids(idCol), "left_semi")
-      .select(col("component_code")).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    if (affected.nonEmpty) {
-      // materialized BEFORE the write: the rewrite reads the same
-      // path it overwrites, and Spark (rightly) refuses a lazy
-      // read-while-overwrite; the checkpoint is affected-partitions-
-      // sized, the blast radius this method bounds. AQE picks the
-      // anti-join strategy (delete requests are usually tiny, but an
-      // unbounded forced broadcast is this repo's standing OOM smell).
-      val survivors = corpus
-        .filter(col("component_code").isin(affected.map(Integer.valueOf): _*))
-        .join(ids.distinct(), corpus("id") === ids(idCol), "left_anti")
-        .localCheckpoint()
-      // per-writer option, NOT session conf: flipping the session global
-      // for the rewrite window would silently hand dynamic-overwrite
-      // semantics to any concurrent write on this session (the
-      // IvfIndex.deleteByIds discipline)
-      survivors.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("component_code").parquet(path)
-      // dynamic overwrite never visits a partition with ZERO survivors —
-      // its stale files would silently outlive the delete. Remove those
-      // directories explicitly (the IvfIndex.deleteByIds gap-closure).
-      val surviving = survivors.select(col("component_code"))
-        .distinct().collect().map(_.getInt(0)).toSet
-      val emptied = affected.filterNot(surviving)
-      if (emptied.nonEmpty) {
-        val conf = spark.sessionState.newHadoopConf()
-        val root = new org.apache.hadoop.fs.Path(path)
-        val fs = root.getFileSystem(conf)
-        emptied.foreach { c =>
-          fs.delete(
-            new org.apache.hadoop.fs.Path(root, s"component_code=$c"), true)
-        }
-      }
-      // drop the session's cached file listing: a reader whose listing
-      // predates the rewrite would plan against replaced files
-      spark.catalog.refreshByPath(path)
-    }
-    affected
-  }
+      ids: DataFrame): Seq[Int] =
+    PersistedRoot.delete(spark, persisted(path), read(spark, path), "id",
+      ids).map(_.getInt(0)).sorted
+
+  /** the corpus table as the lifecycle core sees it: rows in the root,
+    * one partition level, no sidecars */
+  private def persisted(path: String): PersistedRoot =
+    PersistedRoot(path, "", Seq("component_code"))
 
   /** Z-ordered rewrite: range-partition and sort by the MORTON
     * interleave of two layout coordinates (graft_morton — low-32-bit
@@ -220,69 +169,8 @@ object CorpusStore {
     * swap a metadata operation. */
   def compact(spark: SparkSession, srcPath: String, destPath: String,
       targetRowsPerFile: Long = 500000L): Unit =
-    copyCompactInto(read(spark, srcPath), Seq("component_code"),
-      srcPath, destPath, targetRowsPerFile)
-
-  /** Copy-compact core shared with [[graft.operators.IvfIndex.compact]]:
-    * refuse non-disjoint roots, then one shuffle keyed on the partition
-    * columns with `maxRecordsPerFile` bounding output sizes, written in
-    * the same `partitionBy` layout. The guard compares HADOOP-qualified
-    * paths (a `java.io.File` canonicalization would neither resolve
-    * `hdfs://` URIs nor catch nesting): equal or ancestor/descendant
-    * roots would let the lazy read list srcPath and the Overwrite write
-    * delete it mid-job — the live data would be lost. */
-  private[graft] def copyCompactInto(df: DataFrame,
-      partitionCols: Seq[String], srcPath: String, destPath: String,
-      targetRowsPerFile: Long): Unit = {
-    requireDisjointRoots(df.sparkSession, srcPath, destPath)
-    df.repartition(partitionCols.map(col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", targetRowsPerFile)
-      .partitionBy(partitionCols: _*)
-      .parquet(destPath)
-  }
-
-  /** The copy-compact disjointness guard, shared with every copy-based
-    * rewrite (flat [[graft.operators.Pq.compactRoot]] included — r15
-    * advice: a raw string comparison lets aliased spellings of the
-    * same directory through, e.g. `file:/root/x` vs `/root/x`, and
-    * the lazy read + Overwrite would then delete the source mid-job).
-    * Compares HADOOP-qualified paths: qualification resolves scheme,
-    * authority, and relative paths against the filesystem's working
-    * directory, so equal or ancestor/descendant roots are caught in
-    * any spelling. Qualification alone leaves `..` segments and
-    * symlinks unresolved (r16 advice: `/root/x/../x` or a symlinked
-    * alias of srcPath would pass a qualified-only compare), so the
-    * qualified URI is normalized and, on the local filesystem,
-    * canonicalized via `java.io.File` — which resolves symlinks on
-    * the existing prefix even when the leaf (a not-yet-written
-    * destPath) does not exist. Remote schemes get best-effort
-    * `FileSystem.resolvePath`. */
-  private[graft] def requireDisjointRoots(spark: SparkSession,
-      srcPath: String, destPath: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    def qualified(p: String) = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val fs = hp.getFileSystem(conf)
-      // qualify first (now absolute), then URI-normalize the '..'/'.'
-      // segments Hadoop Path preserves
-      val norm = new org.apache.hadoop.fs.Path(
-        fs.makeQualified(hp).toUri.normalize())
-      if (norm.toUri.getScheme == "file")
-        fs.makeQualified(new org.apache.hadoop.fs.Path(
-          new java.io.File(norm.toUri.getPath).getCanonicalPath))
-      else
-        try fs.resolvePath(norm)
-        catch { case _: java.io.IOException => norm }
-    }
-    val (s, d) = (qualified(srcPath), qualified(destPath))
-    def covers(a: org.apache.hadoop.fs.Path,
-        b: org.apache.hadoop.fs.Path) =
-      (b.toString + "/").startsWith(a.toString + "/")
-    require(!covers(s, d) && !covers(d, s),
-      s"compact is copy-based: destPath must be disjoint from srcPath " +
-        s"(got $s vs $d)")
-  }
+    PersistedRoot.compact(spark, persisted(srcPath), read(spark, srcPath),
+      destPath, targetRowsPerFile)
 
   // ---- JSON round-trip (S8/S9) ----------------------------------------
 

@@ -87,6 +87,28 @@ class EntrySpec extends SparkSpec {
     assert(r("down") == ((4L * 3600L, 100L, 1, 10L, 30L)))
   }
 
+  test("q219 profiles an all-null column as the oracle does: one row, n_distinct 0, NULL mode") {
+    // the DuckDB oracle's scalar subqueries define the result: every
+    // row counted as null, no distinct values, and a NULL mode value
+    // and count (no non-null group exists to be the mode)
+    import spark.implicits._
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-q219-").toString
+    Seq(("a", "x"), ("b", "x"), ("c", "y"))
+      .map { case (text, source) => (text, source, null: String) }
+      .toDF("text", "source", "lang")
+      .write.parquet(s"$dir/documents.parquet")
+    val r = SparkEntry.queries("q219_column_profile")(spark, dir)
+      .filter($"col_name" === "lang").collect()
+    assert(r.length == 1, r.mkString("; "))
+    val row = r.head
+    assert(row.getAs[Long]("n_rows") == 3L &&
+      row.getAs[Long]("n_nulls") == 3L &&
+      row.getAs[Long]("n_distinct") == 0L &&
+      row.isNullAt(row.fieldIndex("mode_value")) &&
+      row.isNullAt(row.fieldIndex("mode_n")), row.toString)
+  }
+
   test("q53/q54 plans: no cartesian, no unbounded per-group collect") {
     for (q <- Seq("q53_jaccard_pairs", "q54_curation_pipeline")) {
       val plan = SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")

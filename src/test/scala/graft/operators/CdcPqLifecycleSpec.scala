@@ -212,6 +212,29 @@ class CdcPqLifecycleSpec extends SparkSpec {
       "stored-code search diverged from the inline-pack search")
   }
 
+  test("in-place rebuilds of IVF, PQ and binary roots fire the invalidation hooks") {
+    // derived-artifact caches (SparkEntry's graph paths, Pq's parsed
+    // sidecars) evict only through the hooks, so a rebuild must fire them
+    // like every other mutation
+    import scala.jdk.CollectionConverters._
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    IvfIndex.onInvalidated(r => { seen.add(r); () })
+    val tmp = Files.createTempDirectory("graft-cdc-rebuild-").toString
+    val (ivf, pq, bin) = (s"$tmp/ivf", s"$tmp/pq", s"$tmp/bin")
+    val idx = IvfIndex.build(df(snapA), "vec_id", "embedding", nlist = 4)
+    val books = Pq.fit(df(snapA), "vec_id", "embedding", m = 4, ksub = 8)
+    def build(): Unit = {
+      idx.write(ivf)
+      Pq.writeRoot(spark, pq, df(snapA), "embedding", books)
+      BinaryHash.writeRoot(spark, bin, df(snapA), "embedding", 8)
+    }
+    build()
+    seen.clear()
+    build()
+    assert(Set(ivf, pq, bin).subsetOf(seen.asScala),
+      s"rebuild hooks saw only ${seen.asScala}")
+  }
+
   test("all-doomed flat delete leaves a READABLE empty root, and append refills it") {
     // r15 advice raised this as a schema-inference hazard; on this
     // Spark the empty-survivors Overwrite writes one schema-bearing

@@ -176,17 +176,6 @@ class IvfIndexSpec extends SparkSpec {
     assert(comp.sq8Params == loaded.sq8Params,
       "compact must preserve the SQ8 grid")
     assert(quantized(comp, refine = 4) == quantized(loaded, refine = 4))
-    // the IN-MEMORY append also encodes codes (a code-less union would
-    // fail on the column mismatch — or worse, null-merge invisibly)
-    import spark.implicits._
-    val qv2 = q.map(x => x * 1.01f)
-    val memAppended = loaded.append(
-      Seq((99999L, qv2, 0)).toDF("vec_id", "embedding", "label"))
-    val memHit = memAppended.searchQuantized(qv2, 1, nprobe = 2,
-        refine = 4, tieBreak = Some("vec_id"))
-      .select("vec_id").head().getLong(0)
-    assert(memHit == 99999L,
-      "in-memory-appended rows must be visible to the SQ8 pass")
     // and a LOADED quantized index round-trips through write(): codes
     // and grid both survive, no quantize flag needed
     loaded.write(s"$tmp/ivf-rt")
@@ -194,6 +183,19 @@ class IvfIndexSpec extends SparkSpec {
     assert(rt.sq8Params == loaded.sq8Params,
       "write() of a quantized index must persist its grid")
     assert(quantized(rt, refine = 4) == quantized(loaded, refine = 4))
+    // the round-tripped root takes appends, encoded on the SAME grid (a
+    // code-less append would null-merge invisibly to the first pass)
+    import spark.implicits._
+    val qv2 = q.map(x => x * 1.01f)
+    IvfIndex.appendTo(spark, s"$tmp/ivf-rt",
+      Seq((99999L, qv2, 0)).toDF("vec_id", "embedding", "label"),
+      "vec_id", "embedding")
+    val rtHit = IvfIndex.load(spark, s"$tmp/ivf-rt", "vec_id", "embedding")
+      .searchQuantized(qv2, 1, nprobe = 2, refine = 4,
+        tieBreak = Some("vec_id"))
+      .select("vec_id").head().getLong(0)
+    assert(rtHit == 99999L,
+      "rows appended to a round-tripped root must be visible to the SQ8 pass")
   }
 
   test("SQ8 batch: per-query bit-equal to single-query searchQuantized; " +
@@ -313,11 +315,12 @@ class IvfIndexSpec extends SparkSpec {
     // appended rows encode through the SAME normalized grid — visible
     // to the code pass at their true angular position
     val qv2 = q.map(x => x * 1.01f)
-    val memAppended = loaded.append(
-      Seq((99999L, qv2, 0)).toDF("vec_id", "embedding", "label"))
-    val memHit = memAppended.searchQuantized(qv2, 1, nprobe = 2,
-        refine = 4, tieBreak = Some("vec_id"),
-        metric = KnnSearch.Cosine)
+    IvfIndex.appendTo(spark, s"$tmp/ivf",
+      Seq((99999L, qv2, 0)).toDF("vec_id", "embedding", "label"),
+      "vec_id", "embedding")
+    val memHit = IvfIndex.load(spark, s"$tmp/ivf", "vec_id", "embedding")
+      .searchQuantized(qv2, 1, nprobe = 2, refine = 4,
+        tieBreak = Some("vec_id"), metric = KnnSearch.Cosine)
       .select("vec_id").head().getLong(0)
     // qv2 is a pure scaling of q: identical direction, so the nearest
     // cosine neighbor must be either the appended row or an exactly
@@ -514,14 +517,19 @@ class IvfIndexSpec extends SparkSpec {
     val base = embeddings.filter(col("vec_id") % 2 === 0)
     val extra = embeddings.filter(col("vec_id") % 2 === 1)
     val idx = IvfIndex.build(base, "vec_id", "embedding", nlist = 8)
-    val appended = idx.append(extra)
+    val path = Files.createTempDirectory("graft-ivf-app-").toString + "/ivf"
+    idx.write(path)
+    // the append job's plan: assignment is one narrow map, no shuffle
+    val aPlan = executedPlans(_.contains("graft_l2sq"))(
+      IvfIndex.appendTo(spark, path, extra, "vec_id", "embedding"))
+      .filter(_.contains("graft_l2sq")).mkString("\n")
+    assert(aPlan.nonEmpty && !aPlan.contains("Exchange"),
+      s"append must be narrow:\n$aPlan")
+    val appended = IvfIndex.load(spark, path, "vec_id", "embedding")
     // no refit: centroids and cluster ids are bit-identical
     assert(appended.centroids.map(_.toSeq).toSeq ==
       idx.centroids.map(_.toSeq).toSeq)
     assert(appended.clusterIds.toSeq == idx.clusterIds.toSeq)
-    // assignment is narrow: union of two shuffle-free branches
-    val aPlan = appended.assigned.queryExecution.executedPlan.toString
-    assert(!aPlan.contains("Exchange"), s"append must be narrow:\n$aPlan")
     // full-probe search over the appended index == exact over everything
     val q = queryVecs(1).head
     val res = appended.search(q, 10, nprobe = appended.nlist,
@@ -540,13 +548,18 @@ class IvfIndexSpec extends SparkSpec {
   test("append surfaces null / dimension-mismatched vectors instead of mis-assigning") {
     import spark.implicits._
     val bad = Seq((9999L, Seq(1f, 2f), 0)).toDF("vec_id", "embedding", "label")
+    val path = Files.createTempDirectory("graft-ivf-bad-").toString + "/ivf"
+    index.write(path)
     val ex = intercept[Exception] {
-      index.append(bad).assigned.collect()
+      IvfIndex.appendTo(spark, path, bad, "vec_id", "embedding")
     }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(e =>
         Option(e.getMessage).toSeq ++ messages(e.getCause))
-    assert(messages(ex).exists(_.contains("IvfIndex.append")), ex.toString)
+    assert(messages(ex).exists(_.contains("IvfIndex.appendTo")), ex.toString)
+    // ...and the failed append landed nothing
+    assert(IvfIndex.load(spark, path, "vec_id", "embedding").assigned
+      .count() == embeddings.count())
   }
 
   test("appendTo extends a persisted index without touching the sidecar") {

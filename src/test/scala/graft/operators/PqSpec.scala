@@ -58,7 +58,7 @@ class PqSpec extends SparkSpec {
     books.write(spark, s"$tmp/books")
     val first = Pq.load(spark, s"$tmp/books")
     // foreign rewrite: same schema, shifted centroid values, written
-    // directly with spark (NOT Codebooks.write — that evicts)
+    // directly with spark (no in-JVM invalidation fires)
     (for (s <- 0 until first.m; c <- 0 until first.ksub)
       yield (s, c, first.cb(s)(c).map(_ + 1.0f).toSeq, first.normalized))
       .toDF("sub", "code", "centroid", "normalized")

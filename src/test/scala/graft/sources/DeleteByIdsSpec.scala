@@ -36,13 +36,27 @@ class DeleteByIdsSpec extends SparkSpec {
       .filter(p => p.toString.endsWith(".parquet"))
       .map(p => (p.getFileName.toString, Files.size(p))).toSet
 
+  /** the survivor scan (the delete's one checkpoint) lists only the
+    * affected partition's directory */
+  private def assertPrunedTo(plans: Seq[String], partCol: String,
+      value: Any): Unit = {
+    val scan = plans.filter(_.startsWith("localCheckpoint")).mkString("\n")
+    assert(s"PartitionFilters: \\[[^\\]]*$partCol[^\\]]*\\[$value\\]".r
+      .findFirstIn(scan).nonEmpty,
+      s"survivor scan is not pruned to $partCol=$value:\n$scan")
+  }
+
   test("deletes rewrite only the affected partition; others keep their exact files") {
     val dir = seed()
     val before2 = filesOf(dir, 2)
     val before3 = filesOf(dir, 3)
-    val affected = CorpusStore.deleteByIds(spark, dir,
-      Seq("doc-1-2", "doc-1-4").toDF("id"))
+    var affected = Seq.empty[Int]
+    val plans = executedPlans(_.startsWith("localCheckpoint")) {
+      affected = CorpusStore.deleteByIds(spark, dir,
+        Seq("doc-1-2", "doc-1-4").toDF("id"))
+    }
     assert(affected == Seq(1), s"expected partition 1 only, got $affected")
+    assertPrunedTo(plans, "component_code", 1)
     assert(filesOf(dir, 2) == before2 && filesOf(dir, 3) == before3,
       "untouched partitions' files changed")
     val ids = CorpusStore.read(spark, dir)
@@ -51,6 +65,22 @@ class DeleteByIdsSpec extends SparkSpec {
     assert(ids("doc-1-1") && ids("doc-1-3"),
       "sibling rows in the rewritten partition were lost")
     assert(ids.size == 10)
+    // the same scoped rewrite on an IVF root: only the doomed id's
+    // cluster directory is listed, rewritten, and loses the row
+    val ivf = Files.createTempDirectory("graft-del-ivf").toString + "/ivf"
+    graft.operators.IvfIndex.build(
+        (0L until 40L).map(i => (i, Seq((i % 4).toFloat, (i / 4).toFloat)))
+          .toDF("vec_id", "embedding"),
+        "vec_id", "embedding", nlist = 4)
+      .write(ivf)
+    val cluster = spark.read.parquet(ivf).filter(col("vec_id") === 5L)
+      .select(graft.operators.IvfIndex.ClusterCol).head().getInt(0)
+    val ivfPlans = executedPlans(_.startsWith("localCheckpoint")) {
+      assert(graft.operators.IvfIndex.deleteByIds(spark, ivf,
+        Seq(5L).toDF("vec_id"), "vec_id", "embedding") == 1)
+    }
+    assertPrunedTo(ivfPlans, graft.operators.IvfIndex.ClusterCol, cluster)
+    assert(spark.read.parquet(ivf).count() == 39)
   }
 
   test("re-running the same delete, and deleting unknown ids, are no-ops") {
