@@ -23,8 +23,8 @@ import graft.sources.PersistedRoot
   *
   * Scale shape (why this exists at 100 TB): the packed code is
   * `ceil(dim/32)` longs — 16 bytes for dim 64 vs 256 bytes of float —
-  * a 16× scan-width cut, and the distance is two codegen'd builtin
-  * ops (`^`, `bit_count`) per word with NO array access, so the
+  * a 16× scan-width cut, and the distance is one fused native loop
+  * of xor + popcount per word ([[graft.plans.HammingExpr]]), so the
   * approximate pass is the cheapest in the whole family. The
   * production shape is pack-once at index-build (the pack's
   * `aggregate` HOF runs once per corpus write, off the query path),
@@ -79,12 +79,15 @@ object BinaryHash {
   }
 
   /** Hamming distance between a packed-code column (array<long>) and a
-    * driver-packed query: `Σ_w bit_count(word ^ q_w)` — a fixed fan of
-    * codegen'd builtins, no lambda on the query path. */
-  def hammingCol(packed: Column, q: Seq[Long]): Column =
-    q.zipWithIndex.map { case (qw, w) =>
-      bit_count(element_at(packed, w + 1).bitwiseXOR(lit(qw)))
-    }.reduce(_ + _).cast("long")
+    * driver-packed query: `Σ_w bit_count(word ^ q_w)`, one native
+    * `graft_hamming` expression ([[graft.plans.HammingExpr]]) with the
+    * query as one array literal — the generated code does not depend on
+    * the query, so a new query compiles nothing. Needs
+    * [[graft.plans.VectorExpressions.ensureRegistered]] on the session. */
+  def hammingCol(packed: Column, q: Seq[Long]): Column = {
+    require(q.nonEmpty, "hammingCol needs at least one query word")
+    call_function("graft_hamming", packed, typedLit(q))
+  }
 
   /** The production two-pass search: binary-Hamming prefilter to
     * `candidates` rows (TakeOrderedAndProject — bounded state per
@@ -106,6 +109,7 @@ object BinaryHash {
       k: Int, candidates: Int, rerank: Column => Column,
       filter: Option[Column] = None): DataFrame = {
     require(candidates >= k, s"candidates ($candidates) must be >= k ($k)")
+    graft.plans.VectorExpressions.ensureRegistered(df.sparkSession)
     val qBits = packVec(qVec)
     // a null vector hashes to a null hamming distance, and ascending
     // sort is NULLS FIRST — unfiltered, null rows would silently
@@ -194,8 +198,8 @@ object BinaryHash {
     * discipline on the binary rung, closing the last single-only rung
     * (raw/SQ8/PQ all batch): ONE narrow `(id, code)` scan serves the
     * whole query set. Per scanned row, each query's Hamming distance
-    * is a fixed codegen'd xor/popcount fan (queries are driver-packed
-    * literals — the query set is bounded by contract, like
+    * is one native xor/popcount loop ([[hammingCol]]; queries are
+    * driver-packed literals — the query set is bounded by contract, like
     * searchBatch's collected probes), stacked with `inline` into
     * (query_id, hamming) rows — the row expansion is |queries|× AFTER
     * column pruning to ~16 bytes/row, which still beats |queries|
@@ -294,6 +298,7 @@ object BinaryHash {
       rerank: Column => Column,
       filter: Option[Column] = None): DataFrame = {
     require(candidates >= k, s"candidates ($candidates) must be >= k ($k)")
+    graft.plans.VectorExpressions.ensureRegistered(df.sparkSession)
     val qBits = packVec(qVec)
     val nWords = qBits.length
     val guarded = when(col(codeCol).isNull ||

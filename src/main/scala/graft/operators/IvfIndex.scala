@@ -867,14 +867,15 @@ final case class IvfIndex(
   }
 
   /** Quantized V5 (IVF-SQ8, the FAISS `IVF...,SQ8` shape): the
-    * approximate ranking pass scans the 1-byte/dim `__sq8_code` column
-    * instead of the 4-byte/dim float vectors — parquet column pruning
-    * makes the probed scan read ~4× less data — ranking by the fused
-    * decode-and-distance expression ([[graft.plans.Sq8L2SquaredExpr]]);
-    * the top `k·refine` candidate ids then get an EXACT re-rank reading
-    * the full vectors of only those rows (same partition-pruned scan
-    * plus an id filter). Output contract matches [[search]] (corpus
-    * columns + rounded-rank `dist`). Metric follows the GRID: a raw
+    * approximate ranking scores the 1-byte/dim `__sq8_code` column with
+    * the fused decode-and-distance expression
+    * ([[graft.plans.Sq8L2SquaredExpr]]), and only the top `k·refine`
+    * candidates get an EXACT re-rank over their full vectors. Both cuts
+    * are ONE lazy plan over one partition-pruned scan and run as one
+    * Spark job ([[QuantizedSearch.searchOne]]): the candidate rows ride
+    * the code cut whole, so nothing is collected at call time. Output
+    * contract matches [[search]] (corpus columns + rounded-rank
+    * `dist`). Metric follows the GRID: a raw
     * affine grid (write(`quantize = true`)) preserves L2 geometry but
     * not angles, so it serves L2; a grid over unit-normalized vectors
     * (write(`quantizeNormalized = true`)) serves COSINE — on the unit
@@ -924,8 +925,8 @@ final case class IvfIndex(
     * cluster (the bit-packed gate), by the identical decode-and-distance
     * double math as [[graft.plans.Sq8L2SquaredExpr]]. Exact pass: the
     * union of all candidate ids (k·refine·|queries| — answer-contract
-    * sized, like the single-query candidate collect) is re-read from the
-    * doubly-pruned scan, joined broadcast-style to the per-query
+    * sized) is re-read from the doubly-pruned scan, joined
+    * broadcast-style to the per-query
     * candidate pairs and the query vectors, scored exactly
     * (`sqrt(graft_l2sq)` / `1 − graft_cos`, the single-query exact
     * formulas, rounded by the cross-engine floor form), and ranked per

@@ -113,14 +113,18 @@ object Pq {
     new java.util.concurrent.ConcurrentHashMap[String, Codebooks]()
   private[operators] val rootMetaCache =
     new java.util.concurrent.ConcurrentHashMap[String, PqRoot]()
-  private[operators] def evictMeta(root: String): Unit = {
+  /** the inferred schema of each root's `data/` ([[PqRoot.data]]),
+    * keyed on the directory's [[IvfIndex.fsStamp]]: an append or a
+    * rewrite by any process changes the listing, so a new schema is
+    * never served stale */
+  private[operators] val dataSchemaCache = new java.util.concurrent
+    .ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  private[operators] def evictMeta(root: String): Unit =
     // keys are "path|stamp" since the stamp-keying (r21 verdict #7):
     // match the bare path, any subpath, and any stamped variant
-    rootMetaCache.keySet.removeIf(k =>
-      k == root || k.startsWith(root + "/") || k.startsWith(root + "|"))
-    booksCache.keySet.removeIf(k =>
-      k == root || k.startsWith(root + "/") || k.startsWith(root + "|"))
-  }
+    Seq(rootMetaCache, booksCache, dataSchemaCache).foreach(
+      _.keySet.removeIf(k =>
+        k == root || k.startsWith(root + "/") || k.startsWith(root + "|")))
   PersistedRoot.onInvalidated(evictMeta)
 
   /** Train per-subspace codebooks on the `sampleN` LOWEST-ID vectors —
@@ -283,14 +287,15 @@ object Pq {
   }
 
   /** ADC top-k over a PQ-encoded corpus — the one single-query PQ
-    * search, on [[QuantizedSearch.searchOne]]. The approximate pass
-    * scans ONLY `(id, __pq_code[, cluster])` — m bytes per row instead
-    * of 4·dim — scoring each row from a per-query ADC table
-    * ([[QuantizedSearch.adcTable]]: `m` lookups + adds, fixed-order
-    * double arithmetic, bit-replayable from the exported artifacts),
-    * keeps the best `k·refine` candidate ids (unrounded distance, id
-    * ties), and exactly re-ranks only those rows' full vectors with the
-    * cross-engine floor rounding.
+    * search, on [[QuantizedSearch.searchOne]]. Each row's candidate
+    * distance is scored from its `(__pq_code[, cluster])` against a
+    * per-query ADC table ([[QuantizedSearch.adcTable]]: `m` lookups +
+    * adds, fixed-order double arithmetic, bit-replayable from the
+    * exported artifacts); the best `k·refine` rows (unrounded distance,
+    * id ties) are then exactly re-ranked over their full vectors with
+    * the cross-engine floor rounding. Both cuts are one lazy plan over
+    * one scan and run as ONE Spark job — nothing is collected at call
+    * time.
     *
     * Everything codec-specific comes from `index`, the description of
     * how `encoded` was built (a loaded [[PqRoot]], or one naming the
@@ -530,8 +535,16 @@ object Pq {
       ivf: Option[(Array[Array[Float]], Array[Int])],
       perm: Option[Array[Int]] = None) {
     def dataPath: String = s"$path/$DataSubdir"
+
+    /** the encoded rows, read with the schema cached for the data
+      * directory's current stamp ([[dataSchemaCache]]) — parquet schema
+      * inference is a Spark job per read, and a serving loop reads the
+      * root once per query */
     def data(spark: SparkSession): DataFrame =
-      spark.read.parquet(dataPath)
+      spark.read.schema(IvfIndex.stampCached(dataSchemaCache, dataPath,
+          IvfIndex.fsStamp(spark, dataPath))(
+          spark.read.parquet(dataPath).schema))
+        .parquet(dataPath)
 
     /** the root as the lifecycle core sees it: `data/` partitioned by
       * cluster for the IVF layout, flat otherwise */

@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 /** The one quantized-search core under IVF-SQ8
   * ([[IvfIndex.searchQuantized]] / [[IvfIndex.searchQuantizedBatch]])
@@ -21,11 +20,15 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   *   4. a DRIVER keeps the best `k·refine` candidates per query
   *      (unrounded distance, id ties) and re-ranks only their full
   *      vectors exactly with the cross-engine floor rounding —
-  *      [[searchOne]] for one query (`orderBy(d, id).limit`, the
-  *      TakeOrderedAndProject cut), [[searchBatch]] for a query set
+  *      [[searchOne]] for one query, [[searchBatch]] for a query set
   *      (one gated scan through [[KnnSearch.topKBatchCollected]], then
-  *      [[KnnSearch.batchExactRerank]]). Per query the batch rows are
-  *      bit-equal to the single driver's (spec-asserted per codec).
+  *      [[KnnSearch.batchExactRerank]]). The single driver is ONE lazy
+  *      plan and one Spark job: the codec's distance Column over the
+  *      probed, filtered scan, `orderBy(d, id).limit(k·refine)` (a
+  *      TakeOrderedAndProject cut carrying each candidate's whole row),
+  *      then the [[KnnSearch.topK]] exact cut — no driver action at call
+  *      time. Per query the batch rows are bit-equal to the single
+  *      driver's (spec-asserted per codec).
   *
   * The codec variant is never a caller option: it is derived from what
   * the encoding itself recorded — [[IvfIndex]]'s `sq8Params` /
@@ -111,28 +114,31 @@ private[graft] object QuantizedSearch {
 
   // ---- 3. the codec --------------------------------------------------
 
-  /** column holding each narrow row's candidate distance */
+  /** column holding each row's candidate distance */
   private val DistCol = "__code_d"
 
   /** How one query scores one coded row. [[prepare]] runs driver-side
-    * once per query and returns the per-row scorer shipped to the scan;
-    * rows arrive in the drivers' narrow layout `(id, code[, cluster])`.
-    * `probes` is the query's probe set (null for a flat corpus). */
+    * once per query and returns the per-row scorer shipped to the scan,
+    * over the row's `(code, cluster)` — the cluster is read only by the
+    * residual codec, and is `-1` on a flat corpus. `probes` is the
+    * query's probe set (null for a flat corpus). */
   sealed trait Codec {
     def codeCol: String
     def normalized: Boolean
     /** what the codes were built with, for contract errors */
     def quantizer: String
-    def prepare(query: Array[Float], probes: Array[Int]): Row => Double
+    def prepare(query: Array[Float], probes: Array[Int])
+        : (Array[Byte], Int) => Double
 
-    /** one query's `(id, DistCol)` over the narrow scan */
-    def score(narrow: DataFrame, query: Array[Float],
-        probes: Array[Int]): DataFrame = {
+    /** one query's candidate distance as a Column over the scan's
+      * `(code[, cluster])` — the prepared scorer wrapped once per query;
+      * the scorer is held by reference, so the generated code is the
+      * same for every query */
+    def distance(query: Array[Float], probes: Array[Int]): Column = {
       val f = prepare(query, probes)
-      val schema = StructType(Seq(narrow.schema.head,
-        StructField(DistCol, DoubleType)))
-      narrow.mapPartitions(_.map(row => Row(row.get(0), f(row))))(
-        org.apache.spark.sql.Encoders.row(schema))
+      val scored = udf((code: Array[Byte], cluster: Int) => f(code, cluster))
+      scored(col(codeCol),
+        if (probes == null) lit(-1) else col(IvfIndex.ClusterCol))
     }
   }
 
@@ -146,12 +152,12 @@ private[graft] object QuantizedSearch {
     private def codeQuery(q: Array[Float]): Seq[Float] =
       if (normalized) IvfIndex.unitNormalize(q.toSeq) else q.toSeq
 
-    def prepare(query: Array[Float], probes: Array[Int]): Row => Double = {
+    def prepare(query: Array[Float], probes: Array[Int])
+        : (Array[Byte], Int) => Double = {
       val q = codeQuery(query).toArray
       val minsArr = mins.toArray
       val scalesArr = scales.toArray
-      row => {
-        val codes = row.getAs[Array[Byte]](1)
+      (codes, _) => {
         if (codes.length != q.length)
           throw new IllegalArgumentException(
             s"dimension mismatch in quantized search: code has " +
@@ -170,14 +176,10 @@ private[graft] object QuantizedSearch {
     }
 
     /** the single query keeps the codegen'd decode-and-distance
-      * expression ([[graft.plans.Sq8L2SquaredExpr]]): ReadSchema stays
-      * (id, code) + partition columns — the floats are never read */
-    override def score(narrow: DataFrame, query: Array[Float],
-        probes: Array[Int]): DataFrame =
-      narrow.select(col(narrow.columns.head),
-        call_function("graft_sq8_l2sq", col(codeCol),
-          KnnSearch.litVec(codeQuery(query)),
-          typedLit(mins ++ scales)).as(DistCol))
+      * expression ([[graft.plans.Sq8L2SquaredExpr]]) */
+    override def distance(query: Array[Float], probes: Array[Int]): Column =
+      call_function("graft_sq8_l2sq", col(codeCol),
+        KnnSearch.litVec(codeQuery(query)), typedLit(mins ++ scales))
   }
 
   /** PQ ADC: the query (permuted first on an OPQ root, then normalized
@@ -191,14 +193,15 @@ private[graft] object QuantizedSearch {
     def normalized: Boolean = books.normalized
     def quantizer: String = "PQ codebooks"
 
-    def prepare(query: Array[Float], probes: Array[Int]): Row => Double = {
+    def prepare(query: Array[Float], probes: Array[Int])
+        : (Array[Byte], Int) => Double = {
       require(query.length == books.dim,
         s"query has dim ${query.length}, codebooks ${books.dim}")
       val rot = perm.fold(query)(_.map(query(_)))
       val tab = adcTable(books,
         if (normalized) IvfIndex.unitNormalize(rot.toSeq).toArray else rot)
       val (m, ksub) = (books.m, books.ksub)
-      row => adcScore(tab, row.getAs[Array[Byte]](1), m, ksub)
+      (code, _) => adcScore(tab, code, m, ksub)
     }
   }
 
@@ -216,7 +219,8 @@ private[graft] object QuantizedSearch {
     def normalized: Boolean = false
     def quantizer: String = "residual PQ codebooks"
 
-    def prepare(query: Array[Float], probes: Array[Int]): Row => Double = {
+    def prepare(query: Array[Float], probes: Array[Int])
+        : (Array[Byte], Int) => Double = {
       require(query.length == books.dim,
         s"query has dim ${query.length}, codebooks ${books.dim}")
       val cents = ivf._2.zip(ivf._1).toMap
@@ -228,8 +232,7 @@ private[graft] object QuantizedSearch {
           (query(j).toDouble - cent(j).toDouble).toFloat))
       }.toMap
       val (m, ksub) = (books.m, books.ksub)
-      row => adcScore(tabs(row.getAs[Number](2).intValue()),
-        row.getAs[Array[Byte]](1), m, ksub)
+      (code, cluster) => adcScore(tabs(cluster), code, m, ksub)
     }
   }
 
@@ -292,11 +295,9 @@ private[graft] object QuantizedSearch {
 
   // ---- 4. the drivers ------------------------------------------------
 
-  /** what both drivers share: the probe-pruned, filtered scan (the
-    * exact pass re-reads its candidates from it), its narrow
-    * `(id, code[, cluster])` projection, the probe plan, and the
-    * contract's metric verdict */
-  private final case class Setup(scan: DataFrame, narrow: DataFrame,
+  /** what both drivers share: the probe-pruned, filtered scan, the
+    * probe plan, and the contract's metric verdict */
+  private final case class Setup(scan: DataFrame,
       probes: Option[Array[Array[Int]]], cosine: Boolean)
 
   private def setup(corpus: DataFrame, idCol: String, codec: Codec,
@@ -323,20 +324,18 @@ private[graft] object QuantizedSearch {
     // the exact pass inherits it
     val probed = probes.fold(corpus)(ps =>
       corpus.filter(col(IvfIndex.ClusterCol).isin(ps.flatten.distinct: _*)))
-    val scan = filter.foldLeft(probed)(_.filter(_))
-    // the approximate pass reads (id, code) + partition columns — the
-    // float vectors never (a filter on other data columns widens the
-    // read by exactly those)
-    val narrow = scan.select(Seq(col(idCol), col(codec.codeCol)) ++
-      probes.map(_ => col(IvfIndex.ClusterCol)): _*)
-    Setup(scan, narrow, probes, cosine)
+    Setup(filter.foldLeft(probed)(_.filter(_)), probes, cosine)
   }
 
-  /** One query: the codec-scored narrow scan cut to its best `k·refine`
-    * ids (`orderBy(d, id).limit` — TakeOrderedAndProject, k·refine rows
-    * per task reach the driver), then the exact top-k over only those
-    * rows' raw vectors. Output: corpus columns + rounded-rank `dist`,
-    * the [[KnnSearch.topK]] contract. */
+  /** One query as ONE lazy plan: the codec's distance over the probed,
+    * filtered scan, cut to the best `k·refine` rows (`orderBy(d,
+    * id).limit` — TakeOrderedAndProject, k·refine whole rows per task
+    * reach the final merge), then the exact top-k over only those rows'
+    * raw vectors. Parquet has no index on id, so re-reading the
+    * candidates by id would scan the same probed row groups again: one
+    * scan reading (id, code, vector) reads exactly what the two passes
+    * read together. Output: corpus columns + rounded-rank `dist`, the
+    * [[KnnSearch.topK]] contract. */
   def searchOne(corpus: DataFrame, idCol: String, vecCol: String,
       codec: Codec, ivf: Option[(Array[Array[Float]], Array[Int])],
       query: Seq[Float], k: Int, nprobe: Int, refine: Int,
@@ -345,14 +344,13 @@ private[graft] object QuantizedSearch {
       rankRoundDp: Option[Int]): DataFrame = {
     val s = setup(corpus, idCol, codec, ivf, k, nprobe, refine, metric,
       filter, filterSelectivity, Seq(query))
-    val cand = codec
-      .score(s.narrow, query.toArray, s.probes.map(_.head).orNull)
+    val cand = s.scan
+      .withColumn(DistCol,
+        codec.distance(query.toArray, s.probes.map(_.head).orNull))
       .orderBy(col(DistCol), col(idCol))
       .limit(k * refine)
-      .select(idCol).collect().map(_.get(0))
-    KnnSearch.topK(
-      s.scan.filter(col(idCol).isin(cand.toSeq: _*)).drop(codec.codeCol),
-      vecCol, query, k,
+      .drop(DistCol, codec.codeCol)
+    KnnSearch.topK(cand, vecCol, query, k,
       if (s.cosine) KnnSearch.NativeCosine else KnnSearch.NativeL2,
       tieBreak, rankRoundDp = rankRoundDp)
   }
@@ -385,11 +383,18 @@ private[graft] object QuantizedSearch {
     val scorers = qSet.indices.map(i =>
       codec.prepare(qSet(i)._2, s.probes.map(_(i)).orNull)).toArray
     val qidType = queries.schema(queryIdCol).dataType
-    val cand = KnnSearch.topKBatchCollected(s.narrow, codec.codeCol, qSet,
+    // the approximate pass reads (id, code) + partition columns — the
+    // float vectors never (a filter on other data columns widens the
+    // read by exactly those)
+    val narrow = s.scan.select(Seq(col(idCol), col(codec.codeCol)) ++
+      s.probes.map(_ => col(IvfIndex.ClusterCol)): _*)
+    val probed = s.probes.isDefined
+    val cand = KnnSearch.topKBatchCollected(narrow, codec.codeCol, qSet,
         qidType, k * refine, tieBreak = idCol, distCol = DistCol,
         gate = s.probes.map(KnnSearch.BatchGate(IvfIndex.ClusterCol, _)),
         rawScorer = Some(KnnSearch.RawScorer((row, _, qi, _) =>
-          scorers(qi)(row))))
+          scorers(qi)(row.getAs[Array[Byte]](1),
+            if (probed) row.getAs[Number](2).intValue() else -1))))
       .select(col("query_id"), col(idCol))
     KnnSearch.batchExactRerank(s.scan.drop(codec.codeCol), idCol, vecCol,
       cand, qSet, qidType, k, tieBreak, rankRoundDp, s.cosine)

@@ -514,6 +514,81 @@ case class JlProjectDistExpr(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** Hamming distance between a packed sign code (`left`, array<long> —
+  * see [[graft.operators.BinaryHash.packCol]]) and a packed query
+  * (`right`, array<long>): `Σ_w bit_count(code_w XOR q_w)` over the
+  * query's words, as a long. It replaces a fan of
+  * `bit_count(element_at(code, w) ^ q_w)` terms whose inlined long
+  * constants made every query compile new classes; the query array is
+  * now a literal held by reference, so the generated code is the same
+  * for every query. Null and range semantics are the fan's, term by
+  * term in word order: a null code or word is null, a code shorter than
+  * the query is `element_at` past the end (null, or an
+  * ArrayIndexOutOfBoundsException under ANSI — captured at
+  * construction, like `element_at`'s), and extra code words are
+  * ignored. SQL name: `graft_hamming`. */
+case class HammingExpr(left: Expression, right: Expression,
+    failOnError: Boolean = org.apache.spark.sql.internal.SQLConf.get.ansiEnabled)
+    extends BinaryExpression with ExpectsInputTypes {
+  override def prettyName: String = "graft_hamming"
+  override def inputTypes = Seq(ArrayType(org.apache.spark.sql.types.LongType),
+    ArrayType(org.apache.spark.sql.types.LongType))
+  override def dataType: DataType = org.apache.spark.sql.types.LongType
+  override def nullable: Boolean = true
+
+  protected override def nullSafeEval(a: Any, b: Any): Any = {
+    val code = a.asInstanceOf[ArrayData]
+    val q = b.asInstanceOf[ArrayData]
+    var s = 0L
+    var w = 0
+    while (w < q.numElements()) {
+      if (w >= code.numElements()) {
+        if (failOnError) throw HammingExpr.outOfRange(w, code.numElements())
+        return null
+      }
+      if (code.isNullAt(w) || q.isNullAt(w)) return null
+      s += java.lang.Long.bitCount(code.getLong(w) ^ q.getLong(w))
+      w += 1
+    }
+    s
+  }
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => {
+      val s = ctx.freshName("s")
+      val w = ctx.freshName("w")
+      val anyNull = ctx.freshName("anyNull")
+      val outOfRange =
+        if (failOnError)
+          s"throw graft.plans.HammingExpr.outOfRange($w, $a.numElements());"
+        else s"$anyNull = true; break;"
+      s"""
+         |long $s = 0L;
+         |boolean $anyNull = false;
+         |for (int $w = 0; $w < $b.numElements(); $w++) {
+         |  if ($w >= $a.numElements()) { $outOfRange }
+         |  if ($a.isNullAt($w) || $b.isNullAt($w)) { $anyNull = true; break; }
+         |  $s += Long.bitCount($a.getLong($w) ^ $b.getLong($w));
+         |}
+         |if ($anyNull) { ${ev.isNull} = true; }
+         |else { ${ev.value} = $s; }
+       """.stripMargin
+    })
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object HammingExpr {
+  /** the ANSI error for a code with fewer words than the query */
+  def outOfRange(word: Int, codeWords: Int): ArrayIndexOutOfBoundsException =
+    new ArrayIndexOutOfBoundsException(
+      s"graft_hamming: the query has a word ${word + 1} the code lacks " +
+        s"(code has $codeWords words)")
+}
+
 object VectorExpressions {
   /** the engine's full native-expression registry (vector + text) — both
     * registration routes (imperative + extensions) consume this list */
@@ -525,6 +600,7 @@ object VectorExpressions {
     ("graft_hyperplane_bucket", es => HyperplaneBucketExpr(es(0), es(1))),
     ("graft_sq8_encode", es => Sq8EncodeExpr(es(0), es(1))),
     ("graft_sq8_l2sq", es => Sq8L2SquaredExpr(es(0), es(1), es(2))),
+    ("graft_hamming", es => HammingExpr(es(0), es(1))),
     ("graft_char_jac", es => CharNgramJaccard(es(0), es(1), es(2))),
     ("graft_simhash", es => SimHashExpr(es(0), es(1))),
     ("graft_rollhash", es => RollingHashExpr(es(0))),

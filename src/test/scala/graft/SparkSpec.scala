@@ -33,6 +33,53 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  /** The number of Spark jobs `body` launches. Jobs are tagged through
+    * a local property of this thread (inherited by the SQL execution
+    * threads), so jobs of other threads never count. Listener events
+    * arrive asynchronously but in order: once a tagged marker job run
+    * after `body` has been seen, every job of `body` has been too. */
+  def jobsRun(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.spec.jobs"
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val marked = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)).foreach { t =>
+          if (t == tag) jobs.incrementAndGet()
+          else if (t == s"$tag/marker") marked.countDown()
+        }
+    }
+    sc.addSparkListener(listener)
+    val prev = sc.getLocalProperty(key)
+    try {
+      sc.setLocalProperty(key, tag)
+      body
+      sc.setLocalProperty(key, s"$tag/marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marked.await(10, java.util.concurrent.TimeUnit.SECONDS),
+        "the marker job's start never reached the listener")
+      jobs.get
+    } finally {
+      sc.setLocalProperty(key, prev)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** The number of classes Spark's code generator compiles while `body`
+    * runs — a cache hit compiles none. JVM-wide, so it assumes no other
+    * suite runs at the same time (the forked test JVM runs suites one by
+    * one). */
+  def classesCompiled(body: => Unit): Long = {
+    val compiles =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    body
+    compiles.getCount - before
+  }
+
   override def afterAll(): Unit = {
     // keep the session alive across suites; sbt forks one JVM for all tests
     super.afterAll()

@@ -33,6 +33,7 @@ class BinaryHashSpec extends SparkSpec {
   }
 
   test("hamming equals the naive differing-sign count, and is 0 on self") {
+    VectorExpressions.ensureRegistered(spark)
     val a = (0 until 64).map(i => if (i % 5 == 0) 1f else -1f)
     val b = (0 until 64).map(i => if (i % 7 == 0) 1f else -1f)
     val naive = (0 until 64).count(i => (a(i) > 0f) != (b(i) > 0f))
@@ -44,6 +45,63 @@ class BinaryHashSpec extends SparkSpec {
       .orderBy("vec_id").collect()
     assert(df(0).getLong(1) == 0L)
     assert(df(1).getLong(1) == naive.toLong)
+    // the native expression keeps the per-word fan's semantics it
+    // replaced: a NULL code or word is null, a short code is element_at
+    // past the end (null; an error under ANSI), extra words are ignored
+    def fan(packed: org.apache.spark.sql.Column, q: Seq[Long]) =
+      q.zipWithIndex.map { case (qw, w) =>
+        bit_count(element_at(packed, w + 1).bitwiseXOR(lit(qw)))
+      }.reduce(_ + _).cast("long")
+    val q = BinaryHash.packVec(a)
+    val codes = {
+      import spark.implicits._
+      Seq[(Long, Option[Seq[Option[Long]]])](
+        (0L, Some(BinaryHash.packVec(b).map(Some(_)))),
+        (1L, None),
+        (2L, Some(Seq(None, Some(5L)))),
+        (3L, Some(Seq(Some(7L), Some(9L), Some(-1L)))),
+        (4L, Some(Seq(Some(7L))))).toDF("vec_id", "code")
+    }
+    def both(rows: org.apache.spark.sql.DataFrame) =
+      rows.select(col("vec_id"),
+          BinaryHash.hammingCol(col("code"), q).as("h"),
+          fan(col("code"), q).as("fan"))
+        .orderBy("vec_id").collect()
+        .map(r => (r.getLong(0), Option(r.get(1)), Option(r.get(2))))
+    def rootCause(t: Throwable): Throwable =
+      if (t.getCause == null) t else rootCause(t.getCause)
+    val prevAnsi = spark.conf.get("spark.sql.ansi.enabled")
+    try for (ansi <- Seq("false", "true")) {
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      val whole = both(codes.filter(col("vec_id") < 4L))
+      whole.foreach { case (id, h, f) =>
+        assert(h == f, s"graft_hamming $h != fan $f on row $id (ansi $ansi)")
+      }
+      assert(whole.map(_._2.isEmpty).toSeq ==
+        Seq(false, true, true, false), "only the NULL code and word are null")
+      val short = codes.filter(col("vec_id") === 4L)
+      if (ansi == "true")
+        for (c <- Seq(BinaryHash.hammingCol(col("code"), q),
+            fan(col("code"), q)))
+          assert(rootCause(intercept[Exception](
+            short.select(c).collect()))
+            .isInstanceOf[ArrayIndexOutOfBoundsException])
+      else assert(both(short).toSeq == Seq((4L, None, None)))
+    } finally spark.conf.set("spark.sql.ansi.enabled", prevAnsi)
+    // topKStored's size guard still raises on a NULL or short stored
+    // code — a row that bypassed withCodes is never ranked
+    for (bad <- Seq(lit(null).cast("array<bigint>"), array(lit(7L)))) {
+      val stored = BinaryHash.withCodes(toRows(Seq(a, b)), "embedding", 64)
+        .withColumn(BinaryHash.CodeCol, when(col("vec_id") === 1L, bad)
+          .otherwise(col(BinaryHash.CodeCol)))
+      val e = intercept[Exception](BinaryHash.topKStored(stored,
+        BinaryHash.CodeCol, "embedding", "vec_id", a, k = 1,
+        candidates = 2, rerank = v => size(v).cast("double")).collect())
+      def chain(t: Throwable): List[Throwable] =
+        if (t == null) Nil else t :: chain(t.getCause)
+      assert(chain(e).exists(t => Option(t.getMessage)
+        .exists(_.contains("stored code must have 2 words"))), e)
+    }
   }
 
   test("two-pass topK with candidates = n equals the exact cosine ranking") {

@@ -96,6 +96,51 @@ class PqSpec extends SparkSpec {
     assert(entries(Pq.rootMetaCache, root) == 1)
   }
 
+  test("PqRoot.data serves a cached schema: writeRoot, appendEncoded and " +
+      "a foreign rewrite are each seen; one entry per root") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-pq-schema")
+      .toString
+    val root = s"$tmp/root"
+    val dataPath = s"$root/${Pq.DataSubdir}"
+    val raw = embeddings.select("vec_id", "embedding")
+    def data() = Pq.loadRoot(spark, root).data(spark)
+    def entries(): Int = {
+      var n = 0
+      Pq.dataSchemaCache.keySet.forEach(k =>
+        if (k.startsWith(s"$dataPath|")) n += 1)
+      n
+    }
+    Pq.writeRoot(spark, root, raw.filter(col("vec_id") < 64L), "embedding",
+      books)
+    assert(data().count() == 64)
+    // a cache hit reads the root without a schema-inference job
+    val loaded = Pq.loadRoot(spark, root)
+    assert(jobsRun(loaded.data(spark)) == 0,
+      "a cached-schema read must launch no Spark job")
+    // appendEncoded: the appended rows are read
+    Pq.appendEncoded(spark, root,
+      raw.filter(col("vec_id") >= 64L && col("vec_id") < 72L), "embedding")
+    assert(data().count() == 72)
+    // writeRoot with a new column: the new schema is served
+    Pq.writeRoot(spark, root,
+      raw.filter(col("vec_id") < 64L).withColumn("tag", lit("a")),
+      "embedding", books)
+    assert(data().columns.contains("tag") && data().count() == 64)
+    // foreign rewrites (no in-JVM invalidation fires): each new schema
+    // is seen, and the superseded stamps are dropped
+    for (i <- 1 to 3) {
+      val next = spark.read.parquet(dataPath)
+        .withColumn(s"foreign_$i", lit(i)).localCheckpoint()
+      next.write.mode("overwrite").parquet(dataPath)
+      assert(data().columns.contains(s"foreign_$i"),
+        s"PqRoot.data served a stale schema after foreign rewrite $i")
+    }
+    assert(entries() == 1, s"${entries()} schema entries for one root")
+    // and the in-JVM invalidation evicts the root's entry
+    graft.sources.PersistedRoot.invalidate(spark, root)
+    assert(entries() == 0)
+  }
+
   test("fit and encode are deterministic; round-trip through parquet") {
     val again = Pq.fit(embeddings, "vec_id", "embedding", m = 8,
       ksub = 16)
