@@ -31,7 +31,16 @@ object PostRetrieval {
 
   /** A5: URL dedup with stable first-seen numbering
     * (rag_graph.py:492-503): keep one row per URL, numbered 1..n by the
-    * order each URL first appeared in the retrieval ranking. */
+    * order each URL first appeared in the retrieval ranking.
+    *
+    * This is the corpus-scale form (q12, q14): the `groupBy` spreads
+    * the urls over the cluster before the one numbering window sees a
+    * row per url. A global window over the whole table would put every
+    * row in one partition. [[RagPipeline]] numbers its reranked top-10
+    * with the k-scale window form instead
+    * (`dense_rank() over (order by min(rank) over (partition by url))`),
+    * which needs no join back: those rows already sit in one
+    * partition. */
   def refNumbering(docs: DataFrame, urlCol: String, orderCol: String)
       : DataFrame = {
     val firstSeen = docs

@@ -26,6 +26,13 @@ import graft.sources.CorpusStore
   * with rank / rerank score / rewritten URL / reference number);
   * [[answer]] materializes it into the reference's answer payload
   * (context string + numbered reference list).
+  *
+  * Each form runs as ONE Spark job: the per-component legs, the rerank
+  * and the reference numbering are one plan. The numbering is two
+  * windows over the reranked top-10, which already sits in one
+  * partition, so no join, no broadcast and no Exchange is planned
+  * after the rerank; [[answer]] collects that plan once and folds the
+  * ≤ 10 rows on the driver.
   */
 object RagPipeline {
 
@@ -35,9 +42,24 @@ object RagPipeline {
       nCandidates: Long)
 
   /** Everything after candidate retrieval: rerank (T3), stable rank,
-    * URL rewrite (X1), first-seen reference numbering (A5), numbered
-    * refs joined back per candidate. All ops run on ≤ k·components
-    * rows. */
+    * URL rewrite (X1) and first-seen reference numbering (A5), as
+    * three Dataset calls on top of the rerank's TakeOrderedAndProject
+    * (each call re-analyses the plan, so there are no more than the
+    * window dependencies need).
+    *
+    * The numbering is two windows over the ≤ 10 reranked rows:
+    * `min(final_rank) over (partition by url)` is each row's url's
+    * first-seen rank, and `dense_rank() over (order by` that `)` numbers
+    * the urls 1..n in first-seen order. `final_rank` is unique, so each
+    * url has its own first-seen rank and `dense_rank` counts urls — the
+    * same `ref_id` as [[PostRetrieval.refNumbering]] joined back on the
+    * url. A window partition groups NULLs together, so candidates with
+    * a NULL url (missing metadata) share one number, like the
+    * `groupBy`'s null group, and every row is kept exactly once. The
+    * rerank's output is one partition, which satisfies both windows
+    * and the closing sort: no Exchange and no broadcast is planned
+    * above it, and the whole post-process runs inside the job that
+    * produces the candidates. Rows come out in `final_rank` order. */
   private def postProcess(
       candidates: DataFrame,
       queryText: String,
@@ -45,21 +67,17 @@ object RagPipeline {
       idCol: String,
       docCol: String,
       urlExpr: Column): DataFrame = {
-    val reranked = Rerank.rerank(candidates, docCol,
+    val ranked = Rerank.rerank(candidates, docCol,
         Rerank.LexicalScorer(queryText), tieBreak = idCol)
-      .withColumn("final_rank",
-        row_number().over(
-          Window.orderBy(col("rerank_score").desc, col(idCol))))
-    val withUrl = reranked.withColumn("url",
-      PostRetrieval.rewriteUrls(urlExpr, urlRules))
-    // null-safe equality: a candidate with a NULL url (missing
-    // metadata) still gets numbered and kept — refNumbering's groupBy
-    // emits a null-url group, and <=> matches it back, so the join
-    // neither drops nor duplicates rows
-    val refs = PostRetrieval.refNumbering(withUrl, "url", "final_rank")
-      .select(col("ref_id"), col("url").as("__ref_url"))
-    withUrl.join(broadcast(refs), col("url") <=> col("__ref_url"))
-      .drop("__ref_url")
+      .withColumns(Map(
+        "final_rank" -> row_number().over(
+          Window.orderBy(col("rerank_score").desc, col(idCol))),
+        "url" -> PostRetrieval.rewriteUrls(urlExpr, urlRules)))
+    ranked.select(col("*"),
+      dense_rank().over(Window.orderBy(
+        min(col("final_rank")).over(Window.partitionBy(col("url")))))
+        .as("ref_id"))
+      .orderBy(col("final_rank"))
   }
 
   /** The §3.1 data path as one lazy DataFrame: pruned per-component
@@ -184,6 +202,19 @@ object RagPipeline {
       urlRules, idCol, docCol, urlExpr.getOrElse(col("metadata.doc_url")))
   }
 
+  /** Job description of the one Spark action [[answer]] runs. */
+  val AnswerJobDescription = "graft:rag/answer"
+
+  /** The §3.1 chat-query payload in ONE Spark job: the processed
+    * candidates (the [[retrieve]] plan, plus the pre-rerank candidate
+    * count as `count(1) over ()` on the candidate union) are collected
+    * once, under the job description [[AnswerJobDescription]], and
+    * folded on the driver — ≤ 10 rows. The context concatenates the
+    * documents in `final_rank` order with [[PostRetrieval.ContextSep]]
+    * (NULL documents skipped, like `array_join`), and the references
+    * are the distinct `(ref_id, url)` pairs in `ref_id` order; a NULL
+    * url is one reference like any other. Nothing is cached, so no
+    * block outlives the call, whether it returns or throws. */
   def answer(
       spark: SparkSession,
       corpus: DataFrame,
@@ -207,31 +238,37 @@ object RagPipeline {
     // V2: embed the query once
     val qVec = embedder.embedQuery(spark, queryText)
 
-    // F3/J1/T1/T2/A4: pruned per-component top-k, bag union. Cache the
-    // candidate set (k·components rows): three downstream actions (count,
-    // context, refs) would otherwise re-run the corpus KNN scan three
-    // times.
+    // F3/J1/T1/T2/A4: pruned per-component top-k, bag union; the
+    // candidate count rides along on every row
     val candidates = KnnSearch.searchComponents(
-      corpus, "embedding", "component_code", qVec, codes,
-      rerank = rerank, tieBreak = Some("id")).cache()
-    try {
-      val nCandidates = candidates.count() // also materializes the cache
+        corpus, "embedding", "component_code", qVec, codes,
+        rerank = rerank, tieBreak = Some("id"))
+      .withColumn("__n_candidates", count(lit(1)).over())
+    val rows = withJobDescription(spark, AnswerJobDescription) {
+      postProcess(candidates, queryText, urlRules, "id", "document",
+          col("metadata.doc_url"))
+        .select("document", "ref_id", "url", "__n_candidates")
+        .collect()
+    }
 
-      val processed = postProcess(candidates, queryText, urlRules,
-        "id", "document", col("metadata.doc_url"))
+    // A3: context concat (rows arrive in final_rank order); A5: the
+    // numbered reference list
+    Answer(
+      rows.flatMap(r => Option(r.getString(0)))
+        .mkString(PostRetrieval.ContextSep),
+      rows.map(r => (r.getInt(1), r.getString(2))).distinct
+        .sortBy(_._1).toSeq,
+      rows.headOption.fold(0L)(_.getLong(3)))
+  }
 
-      // A3: ordered context concat (refs join neither drops nor
-      // duplicates rows — one ref per distinct url, every url present)
-      val context = processed
-        .agg(PostRetrieval.contextConcat(col("final_rank"), col("document")))
-        .head.getString(0)
-
-      Answer(
-        context,
-        processed.select(col("ref_id"), col("url")).distinct()
-          .orderBy("ref_id").collect()
-          .map(r => (r.getInt(0), r.getString(1))).toSeq,
-        nCandidates)
-    } finally candidates.unpersist()
+  /** Runs `body` with the Spark job description `desc`, restoring the
+    * caller's description (or its absence) however `body` exits. */
+  private def withJobDescription[T](spark: SparkSession, desc: String)(
+      body: => T): T = {
+    val sc = spark.sparkContext
+    val key = "spark.job.description"
+    val prev = sc.getLocalProperty(key)
+    sc.setJobDescription(desc)
+    try body finally sc.setLocalProperty(key, prev)
   }
 }

@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.functions.{HashEmbedder, VectorFunctions}
+import graft.functions.{Embedder, HashEmbedder, VectorFunctions}
 import graft.plans.VectorExpressions
 import graft.sources.{CorpusStore, MarkdownIngest}
 
@@ -53,6 +53,18 @@ class ServingPathSpec extends SparkSpec {
       n -> Pq.loadRoot(spark, s"$tmp/pq_$n"))
   }
 
+  /** the RagPipeline corpus: chunks embedded into two components, with
+    * its own 16-dim vectors */
+  private lazy val ragEmbedder = HashEmbedder(dim = 16)
+  private lazy val ragCorpus = {
+    val chunks = MarkdownIngest.ingest(spark,
+      getClass.getResource("/corpus").getPath, Seq("oracle"))
+    CorpusStore.fromChunks(chunks, "observer", ragEmbedder)
+      .union(CorpusStore.fromChunks(chunks, "ocp", ragEmbedder)).cache()
+  }
+  private lazy val ragComponents = ragCorpus.select("component_code")
+    .distinct().collect().map(_.getInt(0)).toSeq
+
   private def queryVec(id: Long): Seq[Float] =
     embeddings.filter(col("vec_id") === id).head().getSeq[Float](1)
 
@@ -81,6 +93,31 @@ class ServingPathSpec extends SparkSpec {
     }
   }
 
+  test("RagPipeline.retrieve is ONE Spark job: the reference numbering " +
+      "plans no join, no broadcast and no Exchange after the rerank") {
+    val q = ragEmbedder.embedQuery(spark, "vector search index")
+    def retrieve() = RagPipeline.retrieve(ragCorpus, q,
+      "vector search index", ragComponents)
+    val first = retrieve().collect()
+    assert(first.length == 10)
+    val df = retrieve()
+    var again: Array[org.apache.spark.sql.Row] = null
+    val jobs = jobsRun { again = df.collect() }
+    assert(jobs == 1, s"RagPipeline.retrieve ran $jobs Spark jobs")
+    assert(again.toSeq == first.toSeq)
+    val plan = df.queryExecution.executedPlan.toString
+    for (op <- Seq("BroadcastExchange", "SortMergeJoin", "BroadcastHashJoin"))
+      assert(!plan.contains(op), s"$op in the plan:\n$plan")
+    // the rerank is the first TakeOrderedAndProject from the top; the
+    // numbering windows and the closing sort above it need no Exchange
+    val aboveRerank = plan.linesIterator
+      .takeWhile(!_.contains("TakeOrderedAndProject")).toSeq
+    assert(aboveRerank.size < plan.linesIterator.size,
+      s"no rerank in the plan:\n$plan")
+    assert(!aboveRerank.exists(_.contains("Exchange")),
+      s"an Exchange above the rerank:\n$plan")
+  }
+
   test("a second query vector compiles no new class on any top-k path") {
     VectorExpressions.ensureRegistered(spark)
     val (qa, qb) = (queryVec(3L), queryVec(11L))
@@ -94,16 +131,20 @@ class ServingPathSpec extends SparkSpec {
       val r = pqRoots.toMap.apply("ivf")
       (r, r.data(spark))
     }
-    // the RagPipeline corpus: chunks embedded into two components
-    val embedder = HashEmbedder(dim = 16)
-    val chunks = MarkdownIngest.ingest(spark,
-      getClass.getResource("/corpus").getPath, Seq("oracle"))
-    val ragCorpus = CorpusStore.fromChunks(chunks, "observer", embedder)
-      .union(CorpusStore.fromChunks(chunks, "ocp", embedder)).cache()
     val ragVecs = ragCorpus.select("embedding").distinct().take(2)
       .map(_.getSeq[Float](0))
-    val ragComponents = ragCorpus.select("component_code").distinct()
-      .collect().map(_.getInt(0)).toSeq
+    // the thin-table form over the same rows: vectors alone, documents
+    // hydrated by id
+    val ragVectors = ragCorpus.select("id", "embedding", "component_code")
+    val ragDocs = ragCorpus.select(col("id").as("doc_id"), col("document"),
+      col("metadata"))
+    // answer embeds its query text; this embedder hands back the vector
+    // under test, so the same text runs with a second query vector
+    def embedding(q: Seq[Float]) = new Embedder {
+      val dim = q.size
+      def embedCol(text: Column) = ragEmbedder.embedCol(text)
+      override def embedQuery(s: SparkSession, text: String) = q
+    }
 
     val paths: Seq[(String, Seq[Float] => DataFrame)] = Seq(
       ("IvfIndex.search", q => ivf.search(q, 10, nprobe = 3,
@@ -121,14 +162,25 @@ class ServingPathSpec extends SparkSpec {
         KnnSearch.NativeL2, tieBreak = Some("vec_id"),
         rankRoundDp = Some(4))))
     // the RagPipeline corpus has its own 16-dim vectors
-    val cases = paths.map { case (name, search) => (name, search, qa, qb) } :+
-      (("RagPipeline.retrieve", (q: Seq[Float]) =>
-        RagPipeline.retrieve(ragCorpus, q, "vector search index",
-          ragComponents, metric = KnnSearch.NativeL2, rankRoundDp = Some(4)),
-        ragVecs(0), ragVecs(1)))
-    for ((name, search, a, b) <- cases) {
-      search(a).collect()
-      val compiled = classesCompiled { search(b).collect() }
+    val ragPaths: Seq[(String, Seq[Float] => Any)] = Seq(
+      ("RagPipeline.retrieve", q => RagPipeline.retrieve(ragCorpus, q,
+        "vector search index", ragComponents, metric = KnnSearch.NativeL2,
+        rankRoundDp = Some(4)).collect()),
+      ("RagPipeline.retrieveThin", q => RagPipeline.retrieveThin(
+        ragVectors, ragDocs, "doc_id", q, "vector search index",
+        ragComponents, metric = KnnSearch.NativeL2,
+        rankRoundDp = Some(4)).collect()),
+      ("RagPipeline.answer", q => RagPipeline.answer(spark, ragCorpus,
+        embedding(q), "vector search index", Seq("ocp"))))
+    val cases =
+      paths.map { case (name, search) =>
+        (name, (q: Seq[Float]) => search(q).collect(), qa, qb)
+      } ++ ragPaths.map { case (name, run) =>
+        (name, run, ragVecs(0), ragVecs(1))
+      }
+    for ((name, run, a, b) <- cases) {
+      run(a)
+      val compiled = classesCompiled { run(b) }
       assert(compiled == 0,
         s"$name compiled $compiled new classes for a second query vector")
     }
