@@ -1,6 +1,7 @@
 #!/bin/bash
-# Run a graft main class directly with java (fast iteration; skips sbt JVM
-# startup). Usage: scripts/run_main.sh graft.Verify <args...>
+# Run one of graft's two mains, graft.Verify or graft.Bench, directly with
+# java (fast iteration; skips sbt JVM startup).
+# Usage: scripts/run_main.sh graft.Verify|graft.Bench <args...>
 set -e
 cd "$(dirname "$0")/.."
 CP="target/scala-2.13/classes:/opt/spark/jars/*"

@@ -8860,7 +8860,7 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       // 16-bytes/row filtered scan + 150 vectors, regardless of
       // |queries| scans the per-query spelling would pay — measured
       // 4.8x over singles at 64 queries, per-query cost 127->19 ms
-      // (tools/BinaryBatchBench, PLANS.md round 20).
+      // (PLANS.md round 20, binary batch-face amortization).
       VectorExpressions.ensureRegistered(s)
       val data = s.read.parquet(
         s"${binCdcRootFor(s, dir)}/${BinaryHash.DataSubdir}")

@@ -153,8 +153,8 @@ final case class IvfIndex(
     * single searches — while the bytes stay ONE union scan instead of
     * |queries| scans (measured 100-query diverse batch at nlist=64:
     * 87.5 → 12.5 ×corpus row-scores, one 0.88×corpus scan vs 12.5
-    * ×corpus for per-group scans — graft.tools.ProbeUnionBench,
-    * PLANS.md round 11; an earlier cap-the-union grouping design hit
+    * ×corpus for per-group scans — PLANS.md round 11, the diverse-
+    * batch probe-gate note; an earlier cap-the-union grouping design hit
     * the same row-score floor but paid those re-reads, so gating
     * replaced it). Per-query results are bit-equal to [[search]] at the
     * same (metric, nprobe, rankRoundDp) — spec-asserted per metric —
@@ -1792,7 +1792,7 @@ object IvfIndex {
             // cell pays exactly ONE narrow assignment pass. The
             // previous MLlib sub-fit ran multi-job k-means over the
             // whole cell per iteration — measured in
-            // tools/RebalanceScaleBench as the dominant cost, and the
+            // PLANS.md round 19 as the dominant cost, and the
             // shape that would re-scan a mega-cell iterations× at
             // 100 TB.
             val sample = rows
@@ -1816,10 +1816,10 @@ object IvfIndex {
           }
           // ONE append job lands every split cell of this pass (the
           // per-split spelling paid a full write barrier per cell —
-          // measured 15 jobs for an 8-cell root in
-          // tools/RebalanceScaleBench; job count is the toy-scale
-          // cost, write VOLUME the at-scale one, and batching fixes
-          // the first without touching the second)
+          // measured 15 jobs for an 8-cell root, PLANS.md round 19;
+          // job count is the toy-scale cost, write VOLUME the at-scale
+          // one, and batching fixes the first without touching the
+          // second)
           reassigned.result().reduce(_.unionByName(_))
             .write.mode(SaveMode.Append)
             .partitionBy(parts: _*).parquet(path)

@@ -40,7 +40,7 @@ object KnnSearch {
   // values, one fused loop per row instead of zip_with allocation — and
   // the projection stays inside WholeStageCodegen (a HOF lambda is a
   // CodegenFallback that ejects it). ~1.6× (l2) to 3.5× (cosine) faster
-  // on a full-corpus scan (graft.tools.DistanceBench, sf0.1). The session
+  // on a full-corpus scan (PLANS.md "Vector hot path", sf0.1). The session
   // must have run VectorExpressions.ensureRegistered (or carry
   // GraftExtensions).
   case object NativeL2 extends Metric {

@@ -245,7 +245,7 @@ private[graft] object QuantizedSearch {
     * sum of partials in subspace order, which an oracle replays as a
     * literal `p0 + p1 + … + p_{m-1}` chain. O(m·ksub·dsub) = one
     * decoded-corpus-row's work to build, KBs to hold. */
-  private[graft] def adcTable(b: Pq.Codebooks,
+  private def adcTable(b: Pq.Codebooks,
       q: Array[Float]): Array[Array[Double]] = {
     require(q.length == b.dim,
       s"query has dim ${q.length}, codebooks ${b.dim}")

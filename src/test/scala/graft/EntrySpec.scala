@@ -10,6 +10,56 @@ class EntrySpec extends SparkSpec {
     assert(rows.forall(r => !r.isNullAt(0) && r.getDouble(2) >= 0.0))
   }
 
+  test("the only mains in main code are graft.Bench and graft.Verify") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root),
+      s"no $root under ${sys.props("user.dir")}")
+    val packageDef = """(?m)^package\s+([\w.]+)""".r
+    val objectDef = """\bobject\s+(\w+)""".r
+    val mainDef = """\bdef\s+main\s*\(""".r
+    val walk = Files.walk(root)
+    val mains = try walk.iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { f =>
+        val src = Files.readString(f)
+        val pkg = packageDef.findFirstMatchIn(src).map(_.group(1) + ".")
+        mainDef.findAllMatchIn(src).map { m =>
+          // the object a main belongs to is the last one opened above it
+          pkg.getOrElse("") + objectDef.findAllMatchIn(src.take(m.start))
+            .map(_.group(1)).toSeq.lastOption.getOrElse(s"<no object in $f>")
+        }
+      }.toSet
+    finally walk.close()
+    assert(mains == Set("graft.Bench", "graft.Verify"))
+  }
+
+  test("tempDir directories are deleted, symlinks unfollowed, by the suite's afterAll") {
+    import java.nio.file.Files
+    val outside = Files.createTempDirectory("graft-tempdir-target-")
+    Files.write(outside.resolve("kept.txt"), "k".getBytes)
+    var made = Seq.empty[java.nio.file.Path]
+    val suite = new SparkSpec {
+      test("makes two roots") {
+        val a = tempDir("graft-tempdir-spec-")
+        Files.createDirectories(a.resolve("nested/dir"))
+        Files.write(a.resolve("nested/dir/f.txt"), "x".getBytes)
+        Files.createSymbolicLink(a.resolve("link"), outside)
+        made = Seq(a, tempDir("graft-tempdir-spec-"))
+      }
+    }
+    try {
+      val silent = new org.scalatest.Reporter {
+        def apply(e: org.scalatest.events.Event): Unit = ()
+      }
+      assert(suite.run(None, org.scalatest.Args(silent)).succeeds())
+      assert(made.size == 2 && made.forall(d => !Files.exists(d)))
+      assert(Files.exists(outside.resolve("kept.txt")),
+        "a symlink's target must survive the delete")
+    } finally SparkSpec.deleteTree(outside)
+  }
+
   test("every query name has either an oracle or a documented omission") {
     val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     // EMPTY as of round 10: every query is oracle-checked. The last two
@@ -76,8 +126,7 @@ class EntrySpec extends SparkSpec {
       (c, h) <- counts.zipWithIndex
       i <- 0 until c
     } yield (new java.sql.Timestamp((h * 3600L + 60L * i) * 1000L), tp)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-q207-").toString
+    val dir = tempDir("graft-q207-").toString
     rows.toDF("ts", "event_type").write.parquet(s"$dir/events.parquet")
     val r = SparkEntry.queries("q207_cusum_changepoint")(spark, dir)
       .collect().map(x => x.getString(0) ->
@@ -92,8 +141,7 @@ class EntrySpec extends SparkSpec {
     // row counted as null, no distinct values, and a NULL mode value
     // and count (no non-null group exists to be the mode)
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-q219-").toString
+    val dir = tempDir("graft-q219-").toString
     Seq(("a", "x"), ("b", "x"), ("c", "y"))
       .map { case (text, source) => (text, source, null: String) }
       .toDF("text", "source", "lang")
@@ -204,7 +252,7 @@ class EntrySpec extends SparkSpec {
     // cachedRoot directly again IS exactly what a fresh session does —
     // the build fn must not run a second time.
     import java.nio.file.{Files => JF, Paths}
-    val corpus = JF.createTempDirectory("graft-cache-corpus-").toString
+    val corpus = tempDir("graft-cache-corpus-").toString
     JF.write(Paths.get(corpus, "embeddings.parquet"),
       "fake-bytes".getBytes)
     var builds = 0
@@ -266,7 +314,7 @@ class EntrySpec extends SparkSpec {
     val unmarked = plant("deadbeef-spec-unmarked", None)
     try {
       // a MISS triggers the reap pass
-      val corpus = JF.createTempDirectory("graft-reap-corpus-").toString
+      val corpus = tempDir("graft-reap-corpus-").toString
       JF.write(Paths.get(corpus, "embeddings.parquet"), "x".getBytes)
       def build(p: String): Unit = {
         JF.createDirectories(Paths.get(p))

@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -80,9 +81,21 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     compiles.getCount - before
   }
 
+  private val tempDirs =
+    new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+
+  /** A fresh temp directory that this suite's `afterAll` deletes, with
+    * everything under it. */
+  def tempDir(prefix: String): Path = {
+    val dir = Files.createTempDirectory(prefix)
+    tempDirs.add(dir)
+    dir
+  }
+
   override def afterAll(): Unit = {
     // keep the session alive across suites; sbt forks one JVM for all tests
-    super.afterAll()
+    try tempDirs.forEach(SparkSpec.deleteTree)
+    finally super.afterAll()
   }
 }
 
@@ -98,4 +111,14 @@ object SparkSpec {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Deletes `root` and everything under it; symlinks are removed, not
+    * followed. */
+  def deleteTree(root: Path): Unit =
+    if (Files.exists(root)) {
+      val paths = Files.walk(root)
+      try paths.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.deleteIfExists(p))
+      finally paths.close()
+    }
 }

@@ -1,6 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -27,7 +26,7 @@ class CdcIndexLifecycleSpec extends SparkSpec {
     rows.toDF("vec_id", "embedding")
 
   test("diff -> deleteByIds -> appendTo maintains the index to exactly the new snapshot") {
-    val path = Files.createTempDirectory("graft-cdc-idx-").toString + "/ivf"
+    val path = tempDir("graft-cdc-idx-").toString + "/ivf"
     IvfIndex.build(df(snapA), "vec_id", "embedding", nlist = 4).write(path)
 
     val d = SnapshotDiff.diff(df(snapA), df(snapB), Seq("vec_id"),
@@ -76,7 +75,7 @@ class CdcIndexLifecycleSpec extends SparkSpec {
   }
 
   test("deleting every row of a cluster removes its directory (the dynamic-overwrite gap)") {
-    val path = Files.createTempDirectory("graft-cdc-wipe-").toString + "/ivf"
+    val path = tempDir("graft-cdc-wipe-").toString + "/ivf"
     IvfIndex.build(df(snapA), "vec_id", "embedding", nlist = 4).write(path)
     val loaded = IvfIndex.load(spark, path, "vec_id", "embedding")
     val cluster = loaded.assigned

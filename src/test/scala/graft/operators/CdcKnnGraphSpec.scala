@@ -1,6 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -24,7 +23,7 @@ class CdcKnnGraphSpec extends SparkSpec {
         r.getDouble(3))).toSet
 
   test("knnGraphMaintained equals a fresh knnGraph after delete + append") {
-    val path = Files.createTempDirectory("graft-cdc-knng-")
+    val path = tempDir("graft-cdc-knng-")
       .toString + "/ivf"
     val snapA = (0L until 150L).map(i => (i, vec(i, 0)))
     IvfIndex.build(df(snapA), "vec_id", "embedding", nlist = 4)
@@ -66,7 +65,7 @@ class CdcKnnGraphSpec extends SparkSpec {
   test("index mutations fire the derived-artifact invalidation hooks") {
     val fired = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     IvfIndex.onInvalidated(r => { fired.add(r); () })
-    val path = Files.createTempDirectory("graft-cdc-hook-")
+    val path = tempDir("graft-cdc-hook-")
       .toString + "/ivf"
     val snap = (0L until 60L).map(i => (i, vec(i, 0)))
     IvfIndex.build(df(snap), "vec_id", "embedding", nlist = 4)

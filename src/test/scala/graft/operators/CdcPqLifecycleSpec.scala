@@ -72,16 +72,14 @@ class CdcPqLifecycleSpec extends SparkSpec {
       m = 4, ksub = 8)
     val ivf = Some((idx.centroids, idx.clusterIds))
 
-    val maintained =
-      Files.createTempDirectory("graft-cdc-pqres-m-").toString + "/pq"
+    val maintained = tempDir("graft-cdc-pqres-m-").toString + "/pq"
     Pq.writeRoot(spark, maintained, df(snapA), "embedding", books,
       residual = true, ivf = ivf)
     applyCdc(
       ids => Pq.deleteEncoded(spark, maintained, ids, "vec_id"),
       rows => Pq.appendEncoded(spark, maintained, rows, "embedding"))
 
-    val fresh =
-      Files.createTempDirectory("graft-cdc-pqres-f-").toString + "/pq"
+    val fresh = tempDir("graft-cdc-pqres-f-").toString + "/pq"
     Pq.writeRoot(spark, fresh, df(snapB), "embedding", books,
       residual = true, ivf = ivf)
 
@@ -102,8 +100,7 @@ class CdcPqLifecycleSpec extends SparkSpec {
   test("raw IVF-PQ root: cluster wipe removes the directory; search stays exact") {
     val idx = IvfIndex.build(df(snapA), "vec_id", "embedding", nlist = 4)
     val books = Pq.fit(df(snapA), "vec_id", "embedding", m = 4, ksub = 8)
-    val path =
-      Files.createTempDirectory("graft-cdc-pqwipe-").toString + "/pq"
+    val path = tempDir("graft-cdc-pqwipe-").toString + "/pq"
     Pq.writeRoot(spark, path, df(snapA), "embedding", books,
       ivf = Some((idx.centroids, idx.clusterIds)))
     val root = Pq.loadRoot(spark, path)
@@ -121,8 +118,7 @@ class CdcPqLifecycleSpec extends SparkSpec {
     assert(root.data(spark).count() == 120L - doomedIds.size)
     // full-probe PQ search over the survivors == PQ over a fresh root
     val survivors = snapA.filterNot { case (i, _) => doomedIds.contains(i) }
-    val fresh =
-      Files.createTempDirectory("graft-cdc-pqwipe-f-").toString + "/pq"
+    val fresh = tempDir("graft-cdc-pqwipe-f-").toString + "/pq"
     Pq.writeRoot(spark, fresh, df(survivors), "embedding", books,
       ivf = Some((idx.centroids, idx.clusterIds)))
     val q = vec(3L, 0)
@@ -131,14 +127,12 @@ class CdcPqLifecycleSpec extends SparkSpec {
 
   test("flat PQ root: maintained == fresh; appended rows encode with the FIXED books") {
     val books = Pq.fit(df(snapA), "vec_id", "embedding", m = 4, ksub = 8)
-    val maintained =
-      Files.createTempDirectory("graft-cdc-pqflat-m-").toString + "/pq"
+    val maintained = tempDir("graft-cdc-pqflat-m-").toString + "/pq"
     Pq.writeRoot(spark, maintained, df(snapA), "embedding", books)
     applyCdc(
       ids => Pq.deleteEncoded(spark, maintained, ids, "vec_id"),
       rows => Pq.appendEncoded(spark, maintained, rows, "embedding"))
-    val fresh =
-      Files.createTempDirectory("graft-cdc-pqflat-f-").toString + "/pq"
+    val fresh = tempDir("graft-cdc-pqflat-f-").toString + "/pq"
     // fresh root with the SAME books (the fixed-books contract: a
     // fresh fit over snapB would differ — that is the documented drift
     // trade, not the maintained-equality contract)
@@ -156,8 +150,7 @@ class CdcPqLifecycleSpec extends SparkSpec {
   test("compacted PQ root loads and answers identically") {
     val idx = IvfIndex.build(df(snapA), "vec_id", "embedding", nlist = 4)
     val books = Pq.fit(df(snapA), "vec_id", "embedding", m = 4, ksub = 8)
-    val src =
-      Files.createTempDirectory("graft-cdc-pqcomp-").toString + "/pq"
+    val src = tempDir("graft-cdc-pqcomp-").toString + "/pq"
     Pq.writeRoot(spark, src, df(snapA), "embedding", books,
       ivf = Some((idx.centroids, idx.clusterIds)))
     // fragment it: three tiny appends
@@ -165,8 +158,7 @@ class CdcPqLifecycleSpec extends SparkSpec {
       Pq.appendEncoded(spark, src,
         df((140L + b * 5 until 145L + b * 5).map(i => (i, vec(i, 2)))),
         "embedding")
-    val dest =
-      Files.createTempDirectory("graft-cdc-pqcomp-d-").toString + "/pq"
+    val dest = tempDir("graft-cdc-pqcomp-d-").toString + "/pq"
     Pq.compactRoot(spark, src, dest)
     assert(contentsOf(Pq.loadRoot(spark, dest).data(spark)) ==
       contentsOf(Pq.loadRoot(spark, src).data(spark)))
@@ -175,14 +167,12 @@ class CdcPqLifecycleSpec extends SparkSpec {
   }
 
   test("binary root: maintained == fresh pack; stored-code search == inline-pack search") {
-    val maintained =
-      Files.createTempDirectory("graft-cdc-bin-m-").toString + "/bin"
+    val maintained = tempDir("graft-cdc-bin-m-").toString + "/bin"
     BinaryHash.writeRoot(spark, maintained, df(snapA), "embedding", 8)
     applyCdc(
       ids => BinaryHash.deleteByIds(spark, maintained, ids, "vec_id"),
       rows => BinaryHash.appendTo(spark, maintained, rows, "embedding"))
-    val fresh =
-      Files.createTempDirectory("graft-cdc-bin-f-").toString + "/bin"
+    val fresh = tempDir("graft-cdc-bin-f-").toString + "/bin"
     BinaryHash.writeRoot(spark, fresh, df(snapB), "embedding", 8)
     def contents(p: String) = spark.read
       .parquet(s"$p/${BinaryHash.DataSubdir}")
@@ -219,7 +209,7 @@ class CdcPqLifecycleSpec extends SparkSpec {
     import scala.jdk.CollectionConverters._
     val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     IvfIndex.onInvalidated(r => { seen.add(r); () })
-    val tmp = Files.createTempDirectory("graft-cdc-rebuild-").toString
+    val tmp = tempDir("graft-cdc-rebuild-").toString
     val (ivf, pq, bin) = (s"$tmp/ivf", s"$tmp/pq", s"$tmp/bin")
     val idx = IvfIndex.build(df(snapA), "vec_id", "embedding", nlist = 4)
     val books = Pq.fit(df(snapA), "vec_id", "embedding", m = 4, ksub = 8)
@@ -243,8 +233,7 @@ class CdcPqLifecycleSpec extends SparkSpec {
     // to a part-file-less directory fails THIS spec, not a production
     // read.
     val books = Pq.fit(df(snapA), "vec_id", "embedding", m = 4, ksub = 8)
-    val root =
-      Files.createTempDirectory("graft-cdc-pqempty-").toString + "/pq"
+    val root = tempDir("graft-cdc-pqempty-").toString + "/pq"
     Pq.writeRoot(spark, root, df(snapA), "embedding", books)
     assert(Pq.deleteEncoded(spark, root,
       df(snapA).select("vec_id"), "vec_id") == 1)
@@ -256,8 +245,7 @@ class CdcPqLifecycleSpec extends SparkSpec {
 
   test("flat compactRoot SHRINKS the file count and refuses aliased paths") {
     val books = Pq.fit(df(snapA), "vec_id", "embedding", m = 4, ksub = 8)
-    val src =
-      Files.createTempDirectory("graft-cdc-pqfcomp-").toString + "/pq"
+    val src = tempDir("graft-cdc-pqfcomp-").toString + "/pq"
     Pq.writeRoot(spark, src, df(snapA), "embedding", books)
     for (b <- 0 until 3)
       Pq.appendEncoded(spark, src,
@@ -268,8 +256,7 @@ class CdcPqLifecycleSpec extends SparkSpec {
         .count(f => f.getName.startsWith("part-") &&
           f.getName.endsWith(".parquet"))
     assert(partFiles(src) > 3, "fragmentation premise broken")
-    val dest =
-      Files.createTempDirectory("graft-cdc-pqfcomp-d-").toString + "/pq"
+    val dest = tempDir("graft-cdc-pqfcomp-d-").toString + "/pq"
     // 135 rows at 50/file → exactly ceil(135/50) = 3 files (r15
     // verdict: maxRecordsPerFile alone left one file per input task)
     Pq.compactRoot(spark, src, dest, targetRowsPerFile = 50L)
@@ -299,7 +286,7 @@ class CdcPqLifecycleSpec extends SparkSpec {
     }
     assert(e2.getMessage.contains("disjoint"))
     // a symlinked alias of the source directory must be refused too
-    val linkParent = Files.createTempDirectory("graft-cdc-pqfcomp-l-")
+    val linkParent = tempDir("graft-cdc-pqfcomp-l-")
     val link = linkParent.resolve("alias")
     Files.createSymbolicLink(link, java.nio.file.Paths.get(srcDir.getParent))
     val e3 = intercept[IllegalArgumentException] {
@@ -311,16 +298,14 @@ class CdcPqLifecycleSpec extends SparkSpec {
 
   test("append of a wrong-dim batch fails loudly on both roots") {
     val books = Pq.fit(df(snapA), "vec_id", "embedding", m = 4, ksub = 8)
-    val pq =
-      Files.createTempDirectory("graft-cdc-dim-pq-").toString + "/pq"
+    val pq = tempDir("graft-cdc-dim-pq-").toString + "/pq"
     Pq.writeRoot(spark, pq, df(snapA), "embedding", books)
     val bad = Seq((900L, (0 until 6).map(_.toFloat)))
       .toDF("vec_id", "embedding")
     val e1 = intercept[Exception] {
       Pq.appendEncoded(spark, pq, bad, "embedding") }
     assert(e1.getMessage != null)
-    val bin =
-      Files.createTempDirectory("graft-cdc-dim-bin-").toString + "/bin"
+    val bin = tempDir("graft-cdc-dim-bin-").toString + "/bin"
     BinaryHash.writeRoot(spark, bin, df(snapA), "embedding", 8)
     val e2 = intercept[Exception] {
       BinaryHash.appendTo(spark, bin, bad, "embedding") }

@@ -113,7 +113,7 @@ class IvfIndexSpec extends SparkSpec {
 
   test("SQ8: round-trips, exact when refine covers the scan, recall holds, code-only first pass, survives append+compact") {
     graft.plans.VectorExpressions.ensureRegistered(spark)
-    val tmp = Files.createTempDirectory("graft-ivf-sq8-").toString
+    val tmp = tempDir("graft-ivf-sq8-").toString
     val path = s"$tmp/ivf"
     index.write(path, quantize = true)
     val loaded = IvfIndex.load(spark, path, "vec_id", "embedding")
@@ -160,7 +160,7 @@ class IvfIndexSpec extends SparkSpec {
     // null-code rows invisible to the first pass)...
     val extraQ = embeddings.filter(col("vec_id") === 1)
       .select("embedding").head().getSeq[Float](0)
-    val half = Files.createTempDirectory("graft-ivf-sq8h-").toString
+    val half = tempDir("graft-ivf-sq8h-").toString
     IvfIndex.build(embeddings.filter(col("vec_id") % 2 === 0),
       "vec_id", "embedding", nlist = 8).write(s"$half/ivf", quantize = true)
     IvfIndex.appendTo(spark, s"$half/ivf",
@@ -201,7 +201,7 @@ class IvfIndexSpec extends SparkSpec {
   test("SQ8 batch: per-query bit-equal to single-query searchQuantized; " +
       "equals unquantized searchBatch at full refine") {
     graft.plans.VectorExpressions.ensureRegistered(spark)
-    val tmp = Files.createTempDirectory("graft-ivf-sq8b-").toString
+    val tmp = tempDir("graft-ivf-sq8b-").toString
     index.write(s"$tmp/ivf", quantize = true)
     val loaded = IvfIndex.load(spark, s"$tmp/ivf", "vec_id", "embedding")
     val queries = embeddings.filter(col("vec_id").isin(0, 1, 2))
@@ -245,7 +245,7 @@ class IvfIndexSpec extends SparkSpec {
       "appends encode normalized") {
     import spark.implicits._
     graft.plans.VectorExpressions.ensureRegistered(spark)
-    val tmp = Files.createTempDirectory("graft-ivf-sq8cos-").toString
+    val tmp = tempDir("graft-ivf-sq8cos-").toString
     index.write(s"$tmp/ivf", quantizeNormalized = true)
     val loaded = IvfIndex.load(spark, s"$tmp/ivf", "vec_id", "embedding")
     assert(loaded.sq8Normalized, "load must recover the normalized flag")
@@ -255,7 +255,7 @@ class IvfIndexSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       loaded.searchQuantized(q, 5, nprobe = 4)
     }
-    val rawTmp = Files.createTempDirectory("graft-ivf-sq8raw-").toString
+    val rawTmp = tempDir("graft-ivf-sq8raw-").toString
     index.write(s"$rawTmp/ivf", quantize = true)
     val rawLoaded = IvfIndex.load(spark, s"$rawTmp/ivf", "vec_id",
       "embedding")
@@ -331,7 +331,7 @@ class IvfIndexSpec extends SparkSpec {
 
   test("SQ8 composes with component scope: both prunes + code-only pass, parity with scoped exact search") {
     graft.plans.VectorExpressions.ensureRegistered(spark)
-    val tmp = Files.createTempDirectory("graft-ivf-sq8-scope-").toString
+    val tmp = tempDir("graft-ivf-sq8-scope-").toString
     IvfIndex.build(embeddings, "vec_id", "embedding", nlist = 8,
       componentCol = Some("label")).write(s"$tmp/ivf", quantize = true)
     val loaded = IvfIndex.load(spark, s"$tmp/ivf", "vec_id", "embedding")
@@ -380,7 +380,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("persisted index round-trips and still searches with high recall") {
-    val tmp = Files.createTempDirectory("graft-ivf-").toString
+    val tmp = tempDir("graft-ivf-").toString
     index.write(s"$tmp/ivf")
     val loaded = IvfIndex.load(spark, s"$tmp/ivf", "vec_id", "embedding")
     assert(loaded.nlist == index.nlist)
@@ -483,7 +483,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("searchBatch over a persisted scoped index prunes BOTH levels and equals per-query scoped search") {
-    val tmp = Files.createTempDirectory("graft-ivf-batch-scope-").toString
+    val tmp = tempDir("graft-ivf-batch-scope-").toString
     IvfIndex.build(embeddings, "vec_id", "embedding", nlist = 8,
       componentCol = Some("label")).write(s"$tmp/ivf")
     val loaded = IvfIndex.load(spark, s"$tmp/ivf", "vec_id", "embedding")
@@ -517,7 +517,7 @@ class IvfIndexSpec extends SparkSpec {
     val base = embeddings.filter(col("vec_id") % 2 === 0)
     val extra = embeddings.filter(col("vec_id") % 2 === 1)
     val idx = IvfIndex.build(base, "vec_id", "embedding", nlist = 8)
-    val path = Files.createTempDirectory("graft-ivf-app-").toString + "/ivf"
+    val path = tempDir("graft-ivf-app-").toString + "/ivf"
     idx.write(path)
     // the append job's plan: assignment is one narrow map, no shuffle
     val aPlan = executedPlans(_.contains("graft_l2sq"))(
@@ -548,7 +548,7 @@ class IvfIndexSpec extends SparkSpec {
   test("append surfaces null / dimension-mismatched vectors instead of mis-assigning") {
     import spark.implicits._
     val bad = Seq((9999L, Seq(1f, 2f), 0)).toDF("vec_id", "embedding", "label")
-    val path = Files.createTempDirectory("graft-ivf-bad-").toString + "/ivf"
+    val path = tempDir("graft-ivf-bad-").toString + "/ivf"
     index.write(path)
     val ex = intercept[Exception] {
       IvfIndex.appendTo(spark, path, bad, "vec_id", "embedding")
@@ -563,7 +563,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("appendTo extends a persisted index without touching the sidecar") {
-    val tmp = Files.createTempDirectory("graft-ivf-append-").toString
+    val tmp = tempDir("graft-ivf-append-").toString
     val path = s"$tmp/ivf"
     val base = embeddings.filter(col("vec_id") % 2 === 0)
     val extra = embeddings.filter(col("vec_id") % 2 === 1)
@@ -595,7 +595,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("component-scoped index: layout round-trips, scoped search exact, BOTH directory levels pruned") {
-    val tmp = Files.createTempDirectory("graft-ivf-comp-").toString
+    val tmp = tempDir("graft-ivf-comp-").toString
     val cIdx = IvfIndex.build(embeddings, "vec_id", "embedding",
       nlist = 8, componentCol = Some("label"))
     cIdx.write(s"$tmp/ivf")
@@ -637,7 +637,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("scoped recall at nprobe=6/8 holds against the exact within-scope top-k") {
-    val tmp = Files.createTempDirectory("graft-ivf-comp-").toString
+    val tmp = tempDir("graft-ivf-comp-").toString
     IvfIndex.build(embeddings, "vec_id", "embedding",
       nlist = 8, componentCol = Some("label")).write(s"$tmp/ivf")
     val loaded = IvfIndex.load(spark, s"$tmp/ivf", "vec_id", "embedding")
@@ -677,7 +677,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("appendTo preserves the two-level layout; appended rows stay scoped-searchable") {
-    val tmp = Files.createTempDirectory("graft-ivf-comp-append-").toString
+    val tmp = tempDir("graft-ivf-comp-append-").toString
     val path = s"$tmp/ivf"
     val base = embeddings.filter(col("vec_id") % 2 === 0)
     val extra = embeddings.filter(col("vec_id") % 2 === 1)
@@ -699,7 +699,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("compact: fewer files, identical layout/centroids/results") {
-    val tmp = Files.createTempDirectory("graft-ivf-compact-").toString
+    val tmp = tempDir("graft-ivf-compact-").toString
     val path = s"$tmp/ivf"
     // fragment the root: base write + three appends = up to 4 files per
     // partition directory (the streaming-ingest accumulation pattern)
@@ -752,7 +752,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("compact(dedupIdCol) collapses the at-least-once duplicate ids") {
-    val tmp = Files.createTempDirectory("graft-ivf-dedup-").toString
+    val tmp = tempDir("graft-ivf-dedup-").toString
     val path = s"$tmp/ivf"
     IvfIndex.build(embeddings, "vec_id", "embedding", nlist = 8)
       .write(path)
@@ -791,7 +791,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("compact aborts when a streaming batch commits mid-compact") {
-    val tmp = Files.createTempDirectory("graft-ivf-guard-").toString
+    val tmp = tempDir("graft-ivf-guard-").toString
     val path = s"$tmp/ivf"
     IvfIndex.build(embeddings, "vec_id", "embedding", nlist = 8)
       .write(path)
@@ -840,7 +840,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("a held compact lock refuses a second compact until released") {
-    val tmp = Files.createTempDirectory("graft-ivf-lock-").toString
+    val tmp = tempDir("graft-ivf-lock-").toString
     val path = s"$tmp/ivf"
     IvfIndex.build(embeddings, "vec_id", "embedding", nlist = 8)
       .write(path)
@@ -865,7 +865,7 @@ class IvfIndexSpec extends SparkSpec {
     // files (r21 verdict #7 / advice): a root mutated at an UNCHANGED
     // path + generation by a writer this JVM's eviction hooks cannot
     // see must still be observed on the next load
-    val tmp = Files.createTempDirectory("graft-ivf-stamp").toString
+    val tmp = tempDir("graft-ivf-stamp").toString
     index.write(s"$tmp/ivf", quantize = true)
     val first = IvfIndex.load(spark, s"$tmp/ivf", "vec_id", "embedding")
     val before = first.centroids.map(_.toSeq).toSeq
@@ -899,7 +899,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("load falls back to per-(cluster,dim) means without a sidecar") {
-    val tmp = Files.createTempDirectory("graft-ivf-").toString
+    val tmp = tempDir("graft-ivf-").toString
     index.write(s"$tmp/ivf")
     // simulate a legacy index: drop the sidecar
     val sidecar = new java.io.File(s"$tmp/ivf/_centroids")
@@ -1307,7 +1307,7 @@ class IvfIndexSpec extends SparkSpec {
     // underscore-prefixed hidden UNLESS the name contains '=') and
     // the purge's file-scoped delta semantics on a constructed tree.
     import java.nio.file.{Files => JFiles, Paths}
-    val tmp = JFiles.createTempDirectory("graft-listfiles-").toString
+    val tmp = tempDir("graft-listfiles-").toString
     def put(rel: String): Unit = {
       val p = Paths.get(tmp, rel)
       JFiles.createDirectories(p.getParent)
@@ -1345,7 +1345,7 @@ class IvfIndexSpec extends SparkSpec {
     // sub-fit k-means, retire their ids, and leave a plain IVF whose
     // search/append/delete contracts hold verbatim.
     val n = embeddings.count()
-    val tmp = Files.createTempDirectory("graft-rebal-").toString
+    val tmp = tempDir("graft-rebal-").toString
     val path = s"$tmp/ivf"
     IvfIndex.build(embeddings, "vec_id", "embedding", nlist = 2)
       .write(path)
@@ -1419,7 +1419,7 @@ class IvfIndexSpec extends SparkSpec {
     // (the clusterDirs walker's depth-1 case) and keep the component
     // prune intact for later scoped searches
     val n = embeddings.count()
-    val tmp = Files.createTempDirectory("graft-rebal-scoped-").toString
+    val tmp = tempDir("graft-rebal-scoped-").toString
     val path = s"$tmp/ivf"
     IvfIndex.build(embeddings, "vec_id", "embedding", nlist = 2,
       componentCol = Some("label")).write(path)
@@ -1468,7 +1468,7 @@ class IvfIndexSpec extends SparkSpec {
     // the r19-advice unpinned claim: the docstring says codes are
     // row-scoped data that a cell change never re-encodes — prove it.
     val n = embeddings.count()
-    val tmp = Files.createTempDirectory("graft-rebal-sq8-").toString
+    val tmp = tempDir("graft-rebal-sq8-").toString
     val path = s"$tmp/ivf"
     IvfIndex.build(embeddings, "vec_id", "embedding", nlist = 2)
       .write(path, quantize = true)
@@ -1506,7 +1506,7 @@ class IvfIndexSpec extends SparkSpec {
     // could load a half-deleted sidecar. The publish is now a fresh
     // generation dir + one pointer rename; pin the layout mechanics.
     val n = embeddings.count()
-    val tmp = Files.createTempDirectory("graft-rebal-atomic-").toString
+    val tmp = tempDir("graft-rebal-atomic-").toString
     val path = s"$tmp/ivf"
     IvfIndex.build(embeddings, "vec_id", "embedding", nlist = 2)
       .write(path)
@@ -1545,7 +1545,7 @@ class IvfIndexSpec extends SparkSpec {
   test("versioned lifecycles: compactVersioned and rebalanceVersioned publish fresh versions by pointer; the old version stays for rollback") {
     import graft.sources.VersionedRoot
     val n = embeddings.count()
-    val tmp = Files.createTempDirectory("graft-vlife-").toString
+    val tmp = tempDir("graft-vlife-").toString
     val base = s"$tmp/ivf"
     // versioned bases start versioned: first root into v-1, publish
     IvfIndex.build(embeddings, "vec_id", "embedding", nlist = 2)
@@ -1587,7 +1587,7 @@ class IvfIndexSpec extends SparkSpec {
 
   test("sidecar publish crash recovery: a half-written generation is invisible (pointer untouched) and purged by the next publish; a corrupt pointer fails loudly") {
     val n = embeddings.count()
-    val tmp = Files.createTempDirectory("graft-sidecar-crash-").toString
+    val tmp = tempDir("graft-sidecar-crash-").toString
     val path = s"$tmp/ivf"
     IvfIndex.build(embeddings, "vec_id", "embedding", nlist = 2)
       .write(path)
@@ -1632,7 +1632,7 @@ class IvfIndexSpec extends SparkSpec {
     // succession could delete the directory an in-flight reader had
     // resolved just before the first swap. Keep-2: a generation
     // survives the publish that supersedes it AND the one after.
-    val tmp = Files.createTempDirectory("graft-sidecar-keep2-").toString
+    val tmp = tempDir("graft-sidecar-keep2-").toString
     val path = s"$tmp/ivf"
     IvfIndex.build(embeddings, "vec_id", "embedding", nlist = 2)
       .write(path)
@@ -1668,7 +1668,7 @@ class IvfIndexSpec extends SparkSpec {
     // not know (the append-before-swap window). It must be invisible
     // to search (probes rank sidecar ids only) and the next rebalance
     // must purge it.
-    val tmp = Files.createTempDirectory("graft-rebal-crash-").toString
+    val tmp = tempDir("graft-rebal-crash-").toString
     val path = s"$tmp/ivf"
     IvfIndex.build(embeddings, "vec_id", "embedding", nlist = 4)
       .write(path)
@@ -1777,7 +1777,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("filtered search on a persisted root keeps the cluster PartitionFilters with the predicate present") {
-    val tmp = Files.createTempDirectory("graft-ivf-filt-").toString
+    val tmp = tempDir("graft-ivf-filt-").toString
     index.write(s"$tmp/ivf")
     val loaded = IvfIndex.load(spark, s"$tmp/ivf", "vec_id", "embedding")
     val q = queryVecs(1).head
@@ -1800,7 +1800,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("filtered searchQuantized: exact filtered truth at full probe; batch face bit-equal per query") {
-    val tmp = Files.createTempDirectory("graft-sq8-filt-").toString
+    val tmp = tempDir("graft-sq8-filt-").toString
     index.write(s"$tmp/ivf", quantize = true)
     val loaded = IvfIndex.load(spark, s"$tmp/ivf", "vec_id", "embedding")
     val m = pmod(col("vec_id"), lit(3L)) === 1L
@@ -1844,7 +1844,7 @@ class IvfIndexSpec extends SparkSpec {
     // scan on the two-level layout
     val scoped = IvfIndex.build(embeddings, "vec_id", "embedding",
       nlist = 8, componentCol = Some("label"))
-    val tmp = Files.createTempDirectory("graft-scope-filt-").toString
+    val tmp = tempDir("graft-scope-filt-").toString
     scoped.write(s"$tmp/ivf")
     val loaded = IvfIndex.load(spark, s"$tmp/ivf", "vec_id", "embedding")
     val m = pmod(col("vec_id"), lit(3L)) === 1L

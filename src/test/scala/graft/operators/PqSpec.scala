@@ -53,7 +53,7 @@ class PqSpec extends SparkSpec {
     // verdict #7 / advice): a rewrite by a writer that fires no in-JVM
     // eviction hook must be observed by the next load
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-pq-stamp")
+    val tmp = tempDir("graft-pq-stamp")
       .toString
     books.write(spark, s"$tmp/books")
     val first = Pq.load(spark, s"$tmp/books")
@@ -98,7 +98,7 @@ class PqSpec extends SparkSpec {
 
   test("PqRoot.data serves a cached schema: writeRoot, appendEncoded and " +
       "a foreign rewrite are each seen; one entry per root") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-pq-schema")
+    val tmp = tempDir("graft-pq-schema")
       .toString
     val root = s"$tmp/root"
     val dataPath = s"$root/${Pq.DataSubdir}"
@@ -147,7 +147,7 @@ class PqSpec extends SparkSpec {
     books.cb.zip(again.cb).foreach { case (a, b) =>
       a.zip(b).foreach { case (x, y) => assert(x.sameElements(y)) }
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft-pq-")
+    val tmp = tempDir("graft-pq-")
       .toString
     books.write(spark, s"$tmp/books")
     val loaded = Pq.load(spark, s"$tmp/books")
@@ -239,7 +239,7 @@ class PqSpec extends SparkSpec {
   test("IVF-PQ: full-probe equals flat ADC; the probe filter prunes " +
       "partitions; missing cluster layout refused") {
     val idx = IvfIndex.build(embeddings, "vec_id", "embedding", nlist = 8)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ivfpq-")
+    val tmp = tempDir("graft-ivfpq-")
       .toString
     Pq.encode(idx.assigned, "embedding", books)
       .write.partitionBy(IvfIndex.ClusterCol).parquet(s"$tmp/data")
@@ -277,7 +277,7 @@ class PqSpec extends SparkSpec {
       "guards hold") {
     import spark.implicits._
     val idx = IvfIndex.build(embeddings, "vec_id", "embedding", nlist = 8)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ivfpqb-")
+    val tmp = tempDir("graft-ivfpqb-")
       .toString
     Pq.encode(idx.assigned, "embedding", books)
       .write.partitionBy(IvfIndex.ClusterCol).parquet(s"$tmp/data")
@@ -485,7 +485,7 @@ class PqSpec extends SparkSpec {
     }
     // the sidecar carries the geometry; a legacy sidecar (no column)
     // loads as raw books
-    val tmp = java.nio.file.Files.createTempDirectory("graft-pqcos-")
+    val tmp = tempDir("graft-pqcos-")
       .toString
     cosBooks.write(spark, s"$tmp/books")
     assert(Pq.load(spark, s"$tmp/books").normalized)
@@ -655,8 +655,7 @@ class PqSpec extends SparkSpec {
       aniso.withColumn("__r", Pq.permuteCol("embedding", perm)),
       "vec_id", "__r", m = 4, ksub = 16)
     val idx = IvfIndex.build(aniso, "vec_id", "embedding", nlist = 4)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-pq-opqivf-").toString
+    val tmp = tempDir("graft-pq-opqivf-").toString
     Pq.writeRoot(spark, tmp, aniso, "embedding", booksO,
       ivf = Some((idx.centroids, idx.clusterIds)), perm = Some(perm))
     val data = spark.read.parquet(s"$tmp/${Pq.DataSubdir}")
@@ -687,7 +686,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("the approximate pass reads only (id, code) — never the floats") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-pq-scan-")
+    val tmp = tempDir("graft-pq-scan-")
       .toString
     encoded.write.mode("overwrite").parquet(s"$tmp/data")
     val onDisk = spark.read.parquet(s"$tmp/data")
@@ -703,7 +702,7 @@ class PqSpec extends SparkSpec {
     val emb = embeddings.select("vec_id", "embedding")
     val base = emb.filter(pmod(col("vec_id"), lit(5L)) =!= 3L)
     val appended = emb.filter(pmod(col("vec_id"), lit(5L)) === 3L)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-refit-")
+    val tmp = tempDir("graft-refit-")
       .toString
     // MAINTAINED root: books fit on 80%, the rest appended against
     // them (q186's drift construction, unshifted is enough here —

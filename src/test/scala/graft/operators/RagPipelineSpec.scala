@@ -196,8 +196,7 @@ class RagPipelineSpec extends SparkSpec {
     val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     val docsT = docs.select(col("doc_id"), col("text").as("document"),
       struct(lit("file:x").as("doc_url")).as("metadata"))
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-rag-ivf-").toString
+    val tmp = tempDir("graft-rag-ivf-").toString
     IvfIndex.build(emb, "vec_id", "embedding", nlist = 8,
       componentCol = Some("label")).write(s"$tmp/ivf")
     val idx = IvfIndex.load(spark, s"$tmp/ivf", "vec_id", "embedding")

@@ -22,7 +22,7 @@ class ServingPathSpec extends SparkSpec {
       .toDF("vec_id", "embedding").cache()
   }
   private lazy val tmp =
-    java.nio.file.Files.createTempDirectory("graft-serving-").toString
+    tempDir("graft-serving-").toString
 
   /** a quantized IVF root, written and loaded back */
   private lazy val ivf = {

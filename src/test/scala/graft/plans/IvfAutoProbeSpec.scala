@@ -1,6 +1,5 @@
 package graft.plans
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.operators.{IvfIndex, KnnSearch}
@@ -15,7 +14,7 @@ class IvfAutoProbeSpec extends SparkSpec {
     spark.read.parquet(s"$sfDir/embeddings.parquet").cache()
 
   private lazy val indexPath: String = {
-    val tmp = Files.createTempDirectory("graft-autoprobe-").toString
+    val tmp = tempDir("graft-autoprobe-").toString
     IvfIndex.build(embeddings, "vec_id", "embedding", nlist = 8)
       .write(s"$tmp/ivf")
     s"$tmp/ivf"
@@ -63,7 +62,7 @@ class IvfAutoProbeSpec extends SparkSpec {
     // a component-scoped index; the rule walks through the component
     // Filter, injects the cluster probe above the relation, and the
     // planner collapses BOTH into one doubly-pruned scan
-    val tmp = Files.createTempDirectory("graft-autoprobe-comp-").toString
+    val tmp = tempDir("graft-autoprobe-comp-").toString
     IvfIndex.build(embeddings, "vec_id", "embedding", nlist = 8,
       componentCol = Some("label")).write(s"$tmp/ivf")
     withRule(6) {
@@ -295,7 +294,7 @@ class IvfAutoProbeSpec extends SparkSpec {
 
   test("in-place index rebuild is picked up (no stale centroid cache)") {
     withRule(6) {
-      val tmp = Files.createTempDirectory("graft-rebuild-").toString
+      val tmp = tempDir("graft-rebuild-").toString
       val path = s"$tmp/ivf"
       // build A: nlist=4. With nprobe=6 >= nlist the rule loads + caches
       // the centroids but declines to rewrite (full scan anyway).
@@ -321,7 +320,7 @@ class IvfAutoProbeSpec extends SparkSpec {
   }
 
   test("listing TTL is a conf: default serves the cached listing, 0 re-lists every pass") {
-    val tmp = Files.createTempDirectory("graft-ttl-").toString
+    val tmp = tempDir("graft-ttl-").toString
     val path = s"$tmp/ivf"
     IvfIndex.build(embeddings, "vec_id", "embedding", nlist = 4)
       .write(path)
@@ -386,7 +385,7 @@ class IvfAutoProbeSpec extends SparkSpec {
     }
     // partition-column scoping is not a thinning predicate: the
     // component-filtered shape keeps its static budget under the conf
-    val tmp = Files.createTempDirectory("graft-autoprobe-sel-").toString
+    val tmp = tempDir("graft-autoprobe-sel-").toString
     IvfIndex.build(embeddings, "vec_id", "embedding", nlist = 8,
       componentCol = Some("label")).write(s"$tmp/ivf")
     withRule(2) {

@@ -17,8 +17,7 @@ class RuntimeFilterSpec extends SparkSpec {
   // parquet-backed (a LocalRelation constant-folds away — the rule
   // sizes actual SCANS), written once per suite
   private lazy val root = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-rtf").toString
+    val dir = tempDir("graft-rtf").toString
     (0L until 50000L).map(i => (i % 997, i)).toDF("k", "v")
       .write.mode("overwrite").parquet(s"$dir/fact")
     (0L until 997L).map(i => (i, s"d$i")).toDF("k", "name")

@@ -37,8 +37,7 @@ class ZOrderSpec extends SparkSpec {
     import spark.implicits._
     val grid = (0 until 64 * 64).map(i => (i % 64, i / 64))
       .toDF("a", "b")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-zorder-").toString
+    val tmp = tempDir("graft-zorder-").toString
 
     // linear layout: range-sorted by a alone (what a naive sorted
     // rewrite gives you)

@@ -3,11 +3,11 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 import java.io.FileOutputStream
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
-class ArchiveGitSpec extends AnyFunSuite {
+class ArchiveGitSpec extends SparkSpec {
 
-  private def tmp() = Files.createTempDirectory("graft-arc-").toString
+  private def tmp() = tempDir("graft-arc-").toString
 
   test("isArchiveFile recognizes the reference's extension list") {
     assert(Archive.isArchiveFile("/a/b/docs.tar.gz"))

@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.functions.HashEmbedder
@@ -9,7 +8,7 @@ import graft.operators.KnnSearch
 class CorpusStoreSpec extends SparkSpec {
 
   private val corpusDir = getClass.getResource("/corpus").getPath
-  private lazy val tmp = Files.createTempDirectory("graft-corpus-").toString
+  private lazy val tmp = tempDir("graft-corpus-").toString
 
   private lazy val embedder = HashEmbedder(dim = 16)
 

@@ -14,7 +14,7 @@ class DeleteByIdsSpec extends SparkSpec {
   import spark.implicits._
 
   private def seed(): String = {
-    val dir = Files.createTempDirectory("graft-del").toString
+    val dir = tempDir("graft-del").toString
     val rows = for (c <- 1 to 3; i <- 1 to 4) yield
       (s"doc-$c-$i", Seq(1.0f), s"text $c $i",
         (null: String, null: String, null: String, null: String,
@@ -67,7 +67,7 @@ class DeleteByIdsSpec extends SparkSpec {
     assert(ids.size == 10)
     // the same scoped rewrite on an IVF root: only the doomed id's
     // cluster directory is listed, rewritten, and loses the row
-    val ivf = Files.createTempDirectory("graft-del-ivf").toString + "/ivf"
+    val ivf = tempDir("graft-del-ivf").toString + "/ivf"
     graft.operators.IvfIndex.build(
         (0L until 40L).map(i => (i, Seq((i % 4).toFloat, (i / 4).toFloat)))
           .toDF("vec_id", "embedding"),

@@ -14,7 +14,7 @@ class IngestRobustnessSpec extends SparkSpec {
   import spark.implicits._
 
   test("mergeSchema unifies drops that gained a column; plain read serves the first footer's view") {
-    val dir = Files.createTempDirectory("graft-merge").toString
+    val dir = tempDir("graft-merge").toString
     Seq((1L, "a"), (2L, "b")).toDF("id", "text")
       .write.parquet(s"$dir/d=1")
     Seq((3L, "c", "en")).toDF("id", "text", "lang")
@@ -33,7 +33,7 @@ class IngestRobustnessSpec extends SparkSpec {
   }
 
   test("a corrupt file fails the scan loudly by default; ignoreCorruptFiles skips exactly it") {
-    val dir = Files.createTempDirectory("graft-corrupt").toString
+    val dir = tempDir("graft-corrupt").toString
     Seq((1L, "ok"), (2L, "fine")).toDF("id", "text")
       .write.mode("overwrite").parquet(dir)
     Files.write(Paths.get(dir, "part-junk.parquet"),

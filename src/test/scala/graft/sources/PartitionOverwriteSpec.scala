@@ -15,8 +15,7 @@ class PartitionOverwriteSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshTable(): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-dynpart").toString
+    val dir = tempDir("graft-dynpart").toString
     Seq((1L, "a", "v1"), (2L, "a", "v1"), (3L, "b", "v1"), (4L, "c", "v1"))
       .toDF("id", "part", "payload")
       .write.mode("overwrite").partitionBy("part").parquet(dir)

@@ -5,8 +5,7 @@ import graft.SparkSpec
 class VersionedRootSpec extends SparkSpec {
 
   test("versioned layout: nextVersion counts unpublished dirs, pointer round-trips, unpointered paths resolve to themselves") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-vroot-").toString + "/root"
+    val base = tempDir("graft-vroot-").toString + "/root"
     // a fresh base starts at 1; resolve falls through to the path
     assert(VersionedRoot.nextVersion(spark, base) == 1)
     assert(VersionedRoot.resolve(spark, base) == base)
@@ -58,8 +57,7 @@ class VersionedRootSpec extends SparkSpec {
 
   test("publishVia: build-then-publish in one idiom; a throwing build " +
       "leaves the pointer untouched and never collides with the next") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-vroot-via-").toString + "/root"
+    val base = tempDir("graft-vroot-via-").toString + "/root"
     def write(dir: String, tag: String): Unit = {
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
       java.nio.file.Files.writeString(

@@ -163,8 +163,7 @@ class EventStreamsSpec extends SparkSpec {
     import graft.operators.IvfIndex
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     val base = emb.filter(col("vec_id") % 2 === 0)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-stream-ivf-").toString
+    val tmp = tempDir("graft-stream-ivf-").toString
     val path = s"$tmp/ivf"
     val built = IvfIndex.build(base, "vec_id", "embedding", nlist = 8)
     built.write(path)
@@ -238,8 +237,7 @@ class EventStreamsSpec extends SparkSpec {
     import graft.operators.IvfIndex
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     val base = emb.filter(col("vec_id") % 2 === 0)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-lifecycle-").toString
+    val tmp = tempDir("graft-lifecycle-").toString
     val path = s"$tmp/ivf"
     IvfIndex.build(base, "vec_id", "embedding", nlist = 4,
       componentCol = Some("label")).write(path)
@@ -326,8 +324,7 @@ class EventStreamsSpec extends SparkSpec {
     import graft.operators.IvfIndex
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     val base = emb.filter(col("vec_id") % 2 === 0)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-chaos-").toString
+    val tmp = tempDir("graft-chaos-").toString
     val path = s"$tmp/ivf"
     val built = IvfIndex.build(base, "vec_id", "embedding", nlist = 8)
     built.write(path)
@@ -426,8 +423,7 @@ class EventStreamsSpec extends SparkSpec {
     import graft.operators.IvfIndex
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     val base = emb.filter(col("vec_id") % 2 === 0)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-chaos-xbatch-").toString
+    val tmp = tempDir("graft-chaos-xbatch-").toString
     val path = s"$tmp/ivf"
     IvfIndex.build(base, "vec_id", "embedding", nlist = 8).write(path)
     val odd = emb.filter(col("vec_id") % 2 === 1).limit(20)
@@ -522,8 +518,7 @@ class EventStreamsSpec extends SparkSpec {
     import graft.operators.IvfIndex
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     val base = emb.filter(col("vec_id") % 2 === 0)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-legacy-started-").toString
+    val tmp = tempDir("graft-legacy-started-").toString
     val path = s"$tmp/ivf"
     IvfIndex.build(base, "vec_id", "embedding", nlist = 8).write(path)
     val baseCount = base.count()
@@ -573,8 +568,7 @@ class EventStreamsSpec extends SparkSpec {
     import graft.operators.IvfIndex
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     val base = emb.filter(col("vec_id") % 2 === 0)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-lock-ingest-").toString
+    val tmp = tempDir("graft-lock-ingest-").toString
     val path = s"$tmp/ivf"
     IvfIndex.build(base, "vec_id", "embedding", nlist = 8).write(path)
     val baseCount = spark.read.parquet(path).count()
@@ -623,8 +617,7 @@ class EventStreamsSpec extends SparkSpec {
     import graft.operators.IvfIndex
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     val base = emb.filter(col("vec_id") % 2 === 0)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-serve-").toString
+    val tmp = tempDir("graft-serve-").toString
     val path = s"$tmp/ivf"
     IvfIndex.build(base, "vec_id", "embedding", nlist = 8).write(path)
     val out = s"$tmp/out"
@@ -735,8 +728,7 @@ class EventStreamsSpec extends SparkSpec {
     import graft.operators.IvfIndex
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     val base = emb.filter(col("vec_id") % 2 === 0)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-serve-filt-").toString
+    val tmp = tempDir("graft-serve-filt-").toString
     val path = s"$tmp/ivf"
     IvfIndex.build(base, "vec_id", "embedding", nlist = 8).write(path)
     val out = s"$tmp/out"
@@ -785,8 +777,7 @@ class EventStreamsSpec extends SparkSpec {
     import org.apache.spark.sql.DataFrame
     import graft.operators.IvfIndex
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-serve-rebal-").toString
+    val tmp = tempDir("graft-serve-rebal-").toString
     val path = s"$tmp/ivf"
     // the q206 sabotage: nlist=2 mega-cells
     IvfIndex.build(emb, "vec_id", "embedding", nlist = 2).write(path)
@@ -854,8 +845,7 @@ class EventStreamsSpec extends SparkSpec {
     import graft.sources.VersionedRoot
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     val base = emb.filter(col("vec_id") % 2 === 0)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-serve-chaos-").toString
+    val tmp = tempDir("graft-serve-chaos-").toString
     val root = s"$tmp/live"
     assert(VersionedRoot.nextVersion(spark, root) == 1)
     IvfIndex.build(base, "vec_id", "embedding", nlist = 8)
@@ -1139,8 +1129,7 @@ class EventStreamsSpec extends SparkSpec {
 
   test("correlate survives a checkpointed restart: every pair lands exactly once") {
     import spark.implicits._
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-corr-").toString
+    val tmp = tempDir("graft-corr-").toString
     val (inC, inB, out, ckpt) =
       (s"$tmp/c", s"$tmp/b", s"$tmp/out", s"$tmp/ckpt")
     val schema = implicitly[org.apache.spark.sql.Encoder[Event]].schema
@@ -1177,8 +1166,7 @@ class EventStreamsSpec extends SparkSpec {
   test("budgetGate survives a checkpointed restart: the seen-prefix carries") {
     import spark.implicits._
     import EventStreams.BudgetDoc
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-budget-").toString
+    val tmp = tempDir("graft-budget-").toString
     val (in, out, ckpt) = (s"$tmp/in", s"$tmp/out", s"$tmp/ckpt")
     val schema =
       implicitly[org.apache.spark.sql.Encoder[BudgetDoc]].schema
