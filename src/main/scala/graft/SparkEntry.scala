@@ -318,8 +318,34 @@ object SparkEntry {
       .digest(entries.mkString("\n").getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
   }
+  /** [[cachedRoot]]'s in-JVM memo: (corpus dir, name, sub) → the
+    * resolved path. A hit lists nothing — the corpus fingerprint and the
+    * slot are read once per root per JVM, so a corpus regenerated under
+    * a running JVM is seen by the next JVM. */
+  private[graft] val rootMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** The path of the derived root `name` (`sub` beneath its slot) for
+    * the corpus `dir`, built by `build` on first use — see
+    * [[rootCacheBase]]. Misses run under one lock (a builder may resolve
+    * the roots it derives from, re-entering here), so one JVM never
+    * builds a root twice. */
   private[graft] def cachedRoot(dir: String, name: String,
       sub: String = "")(build: String => Unit): String = {
+    val memoKey = s"$dir|$name|$sub"
+    val hit = rootMemo.get(memoKey)
+    if (hit != null) hit
+    else rootMemo.synchronized {
+      Option(rootMemo.get(memoKey)).getOrElse {
+        val path = slotFor(dir, name, sub)(build)
+        rootMemo.put(memoKey, path)
+        path
+      }
+    }
+  }
+
+  private def slotFor(dir: String, name: String, sub: String)(
+      build: String => Unit): String = {
     val key = corpusFingerprint(dir)
     val fpDir = new java.io.File(rootCacheBase, key)
     val slot = new java.io.File(fpDir, name)
@@ -332,7 +358,7 @@ object SparkEntry {
       // mtime below, so a live steady-state generation never ages
       // out), AND with no `.live-<pid>` marker whose JVM is still
       // running (a session older than the window — a long soak, a
-      // paused debugger — still holds in-JVM path caches into its
+      // paused debugger — still holds in-JVM memo entries into its
       // generation; reaping it would hand that session
       // FileNotFoundException mid-read). The pid-liveness rule is
       // [[exportIvfOracles]]'s reaper convention.
@@ -380,39 +406,31 @@ object SparkEntry {
     * written on every [[cachedRoot]] access, consulted by the reaper */
   private[graft] val LiveMarkerPrefix = ".live-"
 
-  private val ivfPathCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def ivfIndexFor(s: SparkSession, dir: String): IvfIndex = {
-    // cache the PATH, not the index: a cached IvfIndex would pin
-    // DataFrames to whichever session built it, breaking later sessions
-    // in the same JVM. Re-loading is a sidecar read — cheap.
-    val path = ivfPathCache.computeIfAbsent(dir, _ =>
-      cachedRoot(dir, "ivf_single") { p =>
-        // quantize: the SAME root serves the exact probed path (q36
-        // reads only the float vectors) and the SQ8 path (q62 reads
-        // only the 1-byte/dim codes) — parquet column pruning keeps
-        // each from paying for the other's column
-        IvfIndex.build(t(s, dir, "embeddings"), "vec_id",
-          "embedding", nlist = 8).write(p, quantize = true)
-      })
-    IvfIndex.load(s, path, "vec_id", "embedding")
-  }
+  private def ivfRootFor(s: SparkSession, dir: String): String =
+    cachedRoot(dir, "ivf_single") { p =>
+      // quantize: the SAME root serves the exact probed path (q36
+      // reads only the float vectors) and the SQ8 path (q62 reads
+      // only the 1-byte/dim codes) — parquet column pruning keeps
+      // each from paying for the other's column
+      IvfIndex.build(t(s, dir, "embeddings"), "vec_id",
+        "embedding", nlist = 8).write(p, quantize = true)
+    }
+  // cache the PATH, not the index: a cached IvfIndex would pin
+  // DataFrames to whichever session built it, breaking later sessions
+  // in the same JVM. Re-loading is a stamp-cached sidecar read — cheap.
+  private def ivfIndexFor(s: SparkSession, dir: String): IvfIndex =
+    IvfIndex.load(s, ivfRootFor(s, dir), "vec_id", "embedding")
 
   /** Build-once / walk-many kNN-graph lifecycle (the [[ivfIndexFor]]
     * convention applied to the graph artifact): the q135 graph is an
     * INDEX — q155/q156/q157 walk it per query and must not pay the
     * probe-pair join again per bench rep. Cache the PATH, not the
     * frame (frames pin sessions). */
-  private val knnGraphPathCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def knnGraphFor(s: SparkSession, dir: String): DataFrame = {
-    val path = knnGraphPathCache.computeIfAbsent(dir, _ =>
-      cachedRoot(dir, "knngraph") { p =>
-        ivfIndexFor(s, dir).knnGraph(k = 3, nprobe = 2, rankRoundDp = 4)
-          .write.mode("overwrite").parquet(p)
-      })
-    s.read.parquet(path)
-  }
+  private def knnGraphFor(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(cachedRoot(dir, "knngraph") { p =>
+      ivfIndexFor(s, dir).knnGraph(k = 3, nprobe = 2, rankRoundDp = 4)
+        .write.mode("overwrite").parquet(p)
+    })
 
   /** The PER-LAYER neighbor graphs of the q162 hash hierarchy
     * (base 16, two layers), built once per corpus like
@@ -420,19 +438,13 @@ object SparkEntry {
     * them instead of scanning the layers. Same (k, nprobe, rounding)
     * as the base graph so the whole graph family shares one
     * contract. */
-  private val layerGraphPathCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def layerGraphFor(s: SparkSession, dir: String,
-      layer: Int): DataFrame = {
-    val path = layerGraphPathCache.computeIfAbsent(s"$dir|$layer", _ =>
-      cachedRoot(dir, s"layergraph$layer") { p =>
-        ivfIndexFor(s, dir)
-          .layerGraph(layer, base = 16, k = 3, nprobe = 2,
-            rankRoundDp = 4)
-          .write.mode("overwrite").parquet(p)
-      })
-    s.read.parquet(path)
-  }
+      layer: Int): DataFrame =
+    s.read.parquet(cachedRoot(dir, s"layergraph$layer") { p =>
+      ivfIndexFor(s, dir)
+        .layerGraph(layer, base = 16, k = 3, nprobe = 2, rankRoundDp = 4)
+        .write.mode("overwrite").parquet(p)
+    })
 
   /** Per-corpus entry ids for the walk family (q155-q157/q162/q180/
     * q181): each strategy's entry is a pure function of (corpus,
@@ -440,8 +452,9 @@ object SparkEntry {
     * computed ONCE and shared, exactly like [[layerGraphFor]] shares
     * the layer graphs (r15 verdict: q180 re-derived all four entries
     * that the strategy queries had each already computed, making the
-    * comparison the suite's most expensive query). Dropped by the
-    * same invalidation hook as the graphs on any index mutation. */
+    * comparison the suite's most expensive query). The roots it reads
+    * are built once into staging and never mutated after publish, so an
+    * entry never goes stale. */
   private val entryIdCache =
     new java.util.concurrent.ConcurrentHashMap[String, Long]()
   private def entryFor(s: SparkSession, dir: String,
@@ -466,29 +479,6 @@ object SparkEntry {
       }
     })
 
-  /** Stale-graph tripwire (round-13 advice): an index mutation
-    * ([[IvfIndex.deleteByIds]]/[[IvfIndex.appendTo]]) on a root this
-    * object derived a kNN graph from drops the graph-path cache entry,
-    * so the next walk (q155-q157/q161/q162) rebuilds against the
-    * mutated index instead of silently serving retired rows. Keyed by
-    * raw root string — the same value [[ivfPathCache]] stores. */
-  private val graphInvalidationHook: Unit =
-    IvfIndex.onInvalidated { root =>
-      import scala.jdk.CollectionConverters._
-      ivfPathCache.asScala.collect { case (dir, p) if p == root => dir }
-        .foreach { dir =>
-          knnGraphPathCache.remove(dir)
-          // the per-layer graphs and cached walk entries derive from
-          // the same index root
-          layerGraphPathCache.asScala.keys
-            .filter(_.startsWith(dir + "|"))
-            .foreach(layerGraphPathCache.remove)
-          entryIdCache.asScala.keys
-            .filter(_.startsWith(dir + "|"))
-            .foreach(entryIdCache.remove)
-        }
-    }
-
   /** Build-once / read-many duplicate-cluster lifecycle (the
     * [[ivfIndexFor]]/[[knnGraphFor]] convention applied to the third
     * derived artifact): the MinHash pair graph + connected-component
@@ -498,36 +488,26 @@ object SparkEntry {
     * + propagation again per bench rep. Cache the PATH, not the frame
     * (frames pin sessions); (doc_id, cluster_rep) longs round-trip
     * parquet exactly, so every consumer hashes unchanged. */
-  private val dupClustersPathCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def dupClustersFor(s: SparkSession, dir: String): DataFrame = {
-    val path = dupClustersPathCache.computeIfAbsent(dir, _ =>
-      cachedRoot(dir, "dupclusters") { p =>
+  private def dupClustersFor(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(cachedRoot(dir, "dupclusters") { p =>
       NearDup.duplicateClusters(
         NearDup.minhashPairs(t(s, dir, "documents"), "doc_id", "text",
           shingleN = 3, numHashes = 12, bands = 4, threshold = 0.8))
         .write.mode("overwrite").parquet(p)
-      })
-    s.read.parquet(path)
-  }
+    })
 
   /** q57's cluster frame is over the CURATION-DEDUPED corpus — a
     * different pair graph than [[dupClustersFor]]'s raw-documents one
     * (quality filter + exact dedup run first), so it gets its own
     * cached artifact rather than silently aliasing the raw one. */
-  private val curationClustersPathCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def curationClustersFor(s: SparkSession, dir: String)
-      : DataFrame = {
-    val path = curationClustersPathCache.computeIfAbsent(dir, _ =>
-      cachedRoot(dir, "curclusters") { p =>
+      : DataFrame =
+    s.read.parquet(cachedRoot(dir, "curclusters") { p =>
       NearDup.duplicateClusters(
         NearDup.minhashPairs(curationDeduped(s, dir), "doc_id", "text",
           shingleN = 3, numHashes = 12, bands = 4, threshold = 0.8))
         .write.mode("overwrite").parquet(p)
-      })
-    s.read.parquet(path)
-  }
+    })
 
   /** Fixed location of the DuckDB-readable replica of each persisted IVF
     * root. The index roots themselves are per-corpus temp dirs (aliasing
@@ -559,23 +539,6 @@ object SparkEntry {
     val user = sys.props.getOrElse("user.name", "anon")
     s"$tmp/graft_ivf_oracle_${user}_${ProcessHandle.current().pid()}"
   }
-  private def exportIvfOracle(s: SparkSession, indexRoot: String,
-      dest: String): Unit = {
-    // read BACK the persisted root (not the in-memory frame): the oracle
-    // must replay what a fresh reader sees — partition-column types
-    // included
-    s.read.parquet(indexRoot).coalesce(1)
-      .write.mode("overwrite").parquet(s"$dest/data")
-    s.read.parquet(IvfIndex.resolvedCentroidSidecar(s, indexRoot))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$dest/centroids")
-    // quantized roots also export their SQ8 grid so the q62 oracle can
-    // replay the byte decode (index roots are local temp dirs)
-    if (new java.io.File(s"$indexRoot/${IvfIndex.Sq8Sidecar}").exists())
-      s.read.parquet(s"$indexRoot/${IvfIndex.Sq8Sidecar}").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dest/sq8")
-  }
-
   /** Export DuckDB-readable replicas of BOTH persisted IVF roots for
     * `dir` (building them first if this JVM hasn't yet) — see
     * [[IvfOracleRoot]]. Called by [[Verify]] after the query dump.
@@ -606,75 +569,51 @@ object SparkEntry {
             org.apache.hadoop.fs.FileUtil.fullyDelete(f)
         }
     } catch { case scala.util.control.NonFatal(_) => }
-    ivfIndexFor(s, dir)
-    ivfComponentIndexFor(s, dir)
-    ivfCosIndexFor(s, dir)
-    exportIvfOracle(s, ivfPathCache.get(dir), s"$IvfOracleRoot/single")
-    exportIvfOracle(s, ivfComponentPathCache.get(dir),
-      s"$IvfOracleRoot/scoped")
-    exportIvfOracle(s, ivfCosPathCache.get(dir),
-      s"$IvfOracleRoot/singlen")
-    // q221's REBALANCED root (sidecar + repaired two-generation layout)
-    exportIvfOracle(s, rebalancedRootFor(s, dir), s"$IvfOracleRoot/reb")
-    val pqRoot = pqRootFor(s, dir)
-    s.read.parquet(s"$pqRoot/data").coalesce(1)
-      .write.mode("overwrite").parquet(s"$IvfOracleRoot/pq/data")
-    s.read.parquet(s"$pqRoot/books").coalesce(1)
-      .write.mode("overwrite").parquet(s"$IvfOracleRoot/pq/books")
-    s.read.parquet(s"${pqIvfRootFor(s, dir)}/data").coalesce(1)
-      .write.mode("overwrite").parquet(s"$IvfOracleRoot/pqivf/data")
-    val prRoot = pqResidRootFor(s, dir)
-    s.read.parquet(s"$prRoot/data").coalesce(1)
-      .write.mode("overwrite").parquet(s"$IvfOracleRoot/pqres/data")
-    s.read.parquet(s"$prRoot/books").coalesce(1)
-      .write.mode("overwrite").parquet(s"$IvfOracleRoot/pqres/books")
-    val pcRoot = pqCosRootFor(s, dir)
-    s.read.parquet(s"$pcRoot/data").coalesce(1)
-      .write.mode("overwrite").parquet(s"$IvfOracleRoot/pqcos/data")
-    s.read.parquet(s"$pcRoot/books").coalesce(1)
-      .write.mode("overwrite").parquet(s"$IvfOracleRoot/pqcos/books")
-    s.read.parquet(s"${pqIvfCosRootFor(s, dir)}/data").coalesce(1)
-      .write.mode("overwrite").parquet(s"$IvfOracleRoot/pqivfcos/data")
-    val opqRoot = opqRootFor(s, dir)
-    s.read.parquet(s"$opqRoot/${Pq.DataSubdir}").coalesce(1)
-      .write.mode("overwrite").parquet(s"$IvfOracleRoot/opq/data")
-    s.read.parquet(s"$opqRoot/${Pq.BooksSubdir}").coalesce(1)
-      .write.mode("overwrite").parquet(s"$IvfOracleRoot/opq/books")
-    s.read.parquet(s"$opqRoot/${Pq.PermSubdir}").coalesce(1)
-      .write.mode("overwrite").parquet(s"$IvfOracleRoot/opq/perm")
-    // q182's anisotropic-slice roots (r16 verdict #2)
-    val apRoot = anisoPqRootFor(s, dir)
-    s.read.parquet(s"$apRoot/data").coalesce(1)
-      .write.mode("overwrite").parquet(s"$IvfOracleRoot/p182a/data")
-    s.read.parquet(s"$apRoot/books").coalesce(1)
-      .write.mode("overwrite").parquet(s"$IvfOracleRoot/p182a/books")
-    val aoRoot = anisoOpqRootFor(s, dir)
-    s.read.parquet(s"$aoRoot/${Pq.DataSubdir}").coalesce(1)
-      .write.mode("overwrite").parquet(s"$IvfOracleRoot/o182a/data")
-    s.read.parquet(s"$aoRoot/${Pq.BooksSubdir}").coalesce(1)
-      .write.mode("overwrite").parquet(s"$IvfOracleRoot/o182a/books")
-    s.read.parquet(s"$aoRoot/${Pq.PermSubdir}").coalesce(1)
-      .write.mode("overwrite").parquet(s"$IvfOracleRoot/o182a/perm")
-    // q185's probed-OPQ root (read BACK the persisted root so the
-    // oracle sees partition-column types as a fresh reader would)
-    s.read.parquet(s"${opqIvfRootFor(s, dir)}/${Pq.DataSubdir}")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$IvfOracleRoot/o185/data")
-    // q186's drift roots: the maintained root's data INCLUDES the
-    // appendEncoded batch (the drift under test), its books are the
-    // stale base fit; the refit root is the fresh final-corpus build
-    val (driftM, driftR) = driftRootsFor(s, dir)
-    for ((root, sub) <- Seq((driftM, "m186"), (driftR, "r186"))) {
-      s.read.parquet(s"$root/${Pq.DataSubdir}").coalesce(1)
-        .write.mode("overwrite").parquet(s"$IvfOracleRoot/$sub/data")
-      s.read.parquet(s"$root/${Pq.BooksSubdir}").coalesce(1)
-        .write.mode("overwrite").parquet(s"$IvfOracleRoot/$sub/books")
+    // one coalesced parquet copy per (source, replica dir) pair
+    def replicate(pairs: (String, String)*): Unit =
+      for ((src, dest) <- pairs)
+        s.read.parquet(src).coalesce(1)
+          .write.mode("overwrite").parquet(s"$IvfOracleRoot/$dest")
+    // an IVF root's data and live centroid generation — read BACK from
+    // the persisted root (not the in-memory frame): the oracle must
+    // replay what a fresh reader sees, partition-column types included
+    // — and, for a quantized root, its SQ8 grid, so the q62 oracle can
+    // replay the byte decode
+    def replicateIvf(root: String, dest: String): Unit = {
+      replicate(root -> s"$dest/data",
+        IvfIndex.resolvedCentroidSidecar(s, root) -> s"$dest/centroids")
+      if (new java.io.File(s"$root/${IvfIndex.Sq8Sidecar}").exists())
+        replicate(s"$root/${IvfIndex.Sq8Sidecar}" -> s"$dest/sq8")
     }
+    replicateIvf(ivfRootFor(s, dir), "single")
+    replicateIvf(ivfComponentRootFor(s, dir), "scoped")
+    replicateIvf(ivfCosRootFor(s, dir), "singlen")
+    // q221's REBALANCED root (sidecar + repaired two-generation layout)
+    replicateIvf(rebalancedRootFor(s, dir), "reb")
+    // each PQ root's codes, and the books the oracle replays; an OPQ
+    // root also its permutation. q182's anisotropic slices (r16 verdict
+    // #2); q185's probed OPQ root; q186's drift roots — the maintained
+    // root's data INCLUDES the appendEncoded batch (the drift under
+    // test), its books are the stale base fit, the refit root is the
+    // fresh final-corpus build
+    val sub = Map("data" -> Pq.DataSubdir, "books" -> Pq.BooksSubdir,
+      "perm" -> Pq.PermSubdir)
+    for ((root, dest, parts) <- Seq(
+        (pqRootFor(s, dir), "pq", Seq("data", "books")),
+        (pqIvfRootFor(s, dir), "pqivf", Seq("data")),
+        (pqResidRootFor(s, dir), "pqres", Seq("data", "books")),
+        (pqCosRootFor(s, dir), "pqcos", Seq("data", "books")),
+        (pqIvfCosRootFor(s, dir), "pqivfcos", Seq("data")),
+        (opqRootFor(s, dir), "opq", Seq("data", "books", "perm")),
+        (anisoPqRootFor(s, dir), "p182a", Seq("data", "books")),
+        (anisoOpqRootFor(s, dir), "o182a", Seq("data", "books", "perm")),
+        (opqIvfRootFor(s, dir), "o185", Seq("data")),
+        (driftRootsFor(s, dir)._1, "m186", Seq("data", "books")),
+        (driftRootsFor(s, dir)._2, "r186", Seq("data", "books"))))
+      replicate(parts.map(x => s"$root/${sub(x)}" -> s"$dest/$x"): _*)
     // q198's binary-rung size leg reads the persisted sign-code root
-    s.read.parquet(
-        s"${binCdcRootFor(s, dir)}/${BinaryHash.DataSubdir}")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$IvfOracleRoot/b198/data")
+    replicate(
+      s"${binCdcRootFor(s, dir)}/${BinaryHash.DataSubdir}" -> "b198/data")
     // q183's reference side: a FRESH encode of the FULL corpus with
     // the q73 books and the single root's centroids — the replica the
     // CDC-maintained root's search must hash-equal. Deliberately NOT
@@ -696,16 +635,13 @@ object SparkEntry {
     * doc_embedder.py:196-220). Separate root from [[ivfIndexFor]]: the
     * layouts differ, and a scoped search against the single-level root
     * could not prune the component level. */
-  private val ivfComponentPathCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def ivfComponentIndexFor(s: SparkSession, dir: String): IvfIndex = {
-    val path = ivfComponentPathCache.computeIfAbsent(dir, _ =>
-      cachedRoot(dir, "ivf_comp") { p =>
-        IvfIndex.build(t(s, dir, "embeddings"), "vec_id",
-          "embedding", nlist = 8, componentCol = Some("label")).write(p)
-      })
-    IvfIndex.load(s, path, "vec_id", "embedding")
-  }
+  private def ivfComponentRootFor(s: SparkSession, dir: String): String =
+    cachedRoot(dir, "ivf_comp") { p =>
+      IvfIndex.build(t(s, dir, "embeddings"), "vec_id",
+        "embedding", nlist = 8, componentCol = Some("label")).write(p)
+    }
+  private def ivfComponentIndexFor(s: SparkSession, dir: String): IvfIndex =
+    IvfIndex.load(s, ivfComponentRootFor(s, dir), "vec_id", "embedding")
 
   /** The COSINE-QUANTIZED index for the same corpus: a separate root
     * whose SQ8 grid is derived over, and whose codes encode, the
@@ -714,32 +650,27 @@ object SparkEntry {
     * Separate from [[ivfIndexFor]]'s root because one root carries ONE
     * grid: its raw-grid codes serve L2 (q62/q68) and cannot also serve
     * cosine. */
-  private val ivfCosPathCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def ivfCosIndexFor(s: SparkSession, dir: String): IvfIndex = {
-    val path = ivfCosPathCache.computeIfAbsent(dir, _ =>
-      // ONE k-means serves both quantized roots: reuse the raw root's
-      // fit (building that root first if this JVM hasn't) and derive
-      // only the grid — drop the raw-grid codes + params so write()
-      // re-encodes NORMALIZED from the untouched raw vectors. A second
-      // build() would pay an identical fit for identical centroids.
-      cachedRoot(dir, "ivf_cos") { p =>
-        val raw = ivfIndexFor(s, dir)
-        raw.copy(
-            assigned = raw.assigned.drop(IvfIndex.Sq8CodeCol),
-            sq8Params = None, sq8Normalized = false)
-          .write(p, quantizeNormalized = true)
-      })
-    IvfIndex.load(s, path, "vec_id", "embedding")
-  }
+  private def ivfCosRootFor(s: SparkSession, dir: String): String =
+    // ONE k-means serves both quantized roots: reuse the raw root's
+    // fit (building that root first if this JVM hasn't) and derive
+    // only the grid — drop the raw-grid codes + params so write()
+    // re-encodes NORMALIZED from the untouched raw vectors. A second
+    // build() would pay an identical fit for identical centroids.
+    cachedRoot(dir, "ivf_cos") { p =>
+      val raw = ivfIndexFor(s, dir)
+      raw.copy(
+          assigned = raw.assigned.drop(IvfIndex.Sq8CodeCol),
+          sq8Params = None, sq8Normalized = false)
+        .write(p, quantizeNormalized = true)
+    }
+  private def ivfCosIndexFor(s: SparkSession, dir: String): IvfIndex =
+    IvfIndex.load(s, ivfCosRootFor(s, dir), "vec_id", "embedding")
 
   /** The PQ artifacts for `dir` (q73): codebooks fit on the
     * deterministic lowest-id sample, corpus encoded ONCE, both
     * persisted — so Verify exports the exact bytes and centroids the
     * oracle replays (the q36/q62 trust model: only the fit is trusted,
     * everything downstream is verified). */
-  private val pqPathCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   // q73's PQ layout — ONE set of constants shared by the fit, the
   // entry, and the generated oracle, so a config change cannot leave
   // the replay behind (dim is derived dynamically on both sides)
@@ -753,13 +684,12 @@ object SparkEntry {
   /** q182's recall-panel size (queries vec_id < opqNq) */
   private val opqNq = 10
   private def pqRootFor(s: SparkSession, dir: String): String =
-    pqPathCache.computeIfAbsent(dir, _ =>
-      cachedRoot(dir, "pq_flat") { p =>
-        val emb = t(s, dir, "embeddings")
-        val books = Pq.fit(emb, "vec_id", "embedding", m = pqM,
-          ksub = pqKsub)
-        Pq.writeRoot(s, p, emb, "embedding", books)
-      })
+    cachedRoot(dir, "pq_flat") { p =>
+      val emb = t(s, dir, "embeddings")
+      val books = Pq.fit(emb, "vec_id", "embedding", m = pqM,
+        ksub = pqKsub)
+      Pq.writeRoot(s, p, emb, "embedding", books)
+    }
 
   /** The OPQ root for `dir` (q182): the same corpus at the SAME code
     * budget (m, ksub) as [[pqRootFor]], but the coordinates are
@@ -770,18 +700,20 @@ object SparkEntry {
     * [[Pq.writeRoot]] with the permutation as a sidecar — so the root
     * is BORN maintained: [[Pq.appendEncoded]] re-applies the stored
     * permutation through the shared encode dispatch. */
-  private val opqPathCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def opqRootFor(s: SparkSession, dir: String): String =
-    opqPathCache.computeIfAbsent(dir, _ =>
-      cachedRoot(dir, "opq") { p =>
-        val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
-        val perm = Pq.opqPermutation(emb, "embedding", pqM)
-        val books = Pq.fit(
-          emb.withColumn("__opq_vec", Pq.permuteCol("embedding", perm)),
-          "vec_id", "__opq_vec", m = pqM, ksub = pqKsub)
-        Pq.writeRoot(s, p, emb, "embedding", books, perm = Some(perm))
-      })
+    cachedRoot(dir, "opq") { p =>
+      writeOpq(s, p, t(s, dir, "embeddings").select("vec_id", "embedding"))
+    }
+
+  /** an OPQ root over `emb` at `p`: the variance-balancing permutation,
+    * books fit on the permuted vectors, the permutation as a sidecar */
+  private def writeOpq(s: SparkSession, p: String, emb: DataFrame): Unit = {
+    val perm = Pq.opqPermutation(emb, "embedding", pqM)
+    val books = Pq.fit(
+      emb.withColumn("__opq_vec", Pq.permuteCol("embedding", perm)),
+      "vec_id", "__opq_vec", m = pqM, ksub = pqKsub)
+    Pq.writeRoot(s, p, emb, "embedding", books, perm = Some(perm))
+  }
 
   /** q182's ANISOTROPIC slice (r16 verdict #2): the driver corpus's
     * hash-derived embeddings have near-uniform per-dim variance, so
@@ -801,29 +733,16 @@ object SparkEntry {
         when(i < lit(opqAnisoBand), x * lit(8.0f)).otherwise(x))
         .as("embedding"))
 
-  private val anisoPqPathCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def anisoPqRootFor(s: SparkSession, dir: String): String =
-    anisoPqPathCache.computeIfAbsent(dir, _ =>
-      cachedRoot(dir, "pq_aniso") { p =>
-        val emb = anisoEmb(s, dir)
-        val books = Pq.fit(emb, "vec_id", "embedding", m = pqM,
-          ksub = pqKsub)
-        Pq.writeRoot(s, p, emb, "embedding", books)
-      })
+    cachedRoot(dir, "pq_aniso") { p =>
+      val emb = anisoEmb(s, dir)
+      val books = Pq.fit(emb, "vec_id", "embedding", m = pqM,
+        ksub = pqKsub)
+      Pq.writeRoot(s, p, emb, "embedding", books)
+    }
 
-  private val anisoOpqPathCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def anisoOpqRootFor(s: SparkSession, dir: String): String =
-    anisoOpqPathCache.computeIfAbsent(dir, _ =>
-      cachedRoot(dir, "opq_aniso") { p =>
-        val emb = anisoEmb(s, dir)
-        val perm = Pq.opqPermutation(emb, "embedding", pqM)
-        val books = Pq.fit(
-          emb.withColumn("__opq_vec", Pq.permuteCol("embedding", perm)),
-          "vec_id", "__opq_vec", m = pqM, ksub = pqKsub)
-        Pq.writeRoot(s, p, emb, "embedding", books, perm = Some(perm))
-      })
+    cachedRoot(dir, "opq_aniso")(p => writeOpq(s, p, anisoEmb(s, dir)))
 
   /** The OPQ × IVF root for `dir` (q185 — r16 verdict #8: writeRoot
     * composes perm with the IVF layout but no query exercised the
@@ -834,17 +753,14 @@ object SparkEntry {
     * centroids and partitioned by cluster so probe filters prune
     * directories. Probes rank on the RAW query (assignment is in the
     * original coordinates); only the CODES see the permutation. */
-  private val opqIvfPathCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def opqIvfRootFor(s: SparkSession, dir: String): String =
-    opqIvfPathCache.computeIfAbsent(dir, _ =>
-      cachedRoot(dir, "opq_ivf") { p =>
-        val idx = ivfIndexFor(s, dir)
-        val flat = Pq.loadRoot(s, opqRootFor(s, dir))
-        val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
-        Pq.writeRoot(s, p, emb, "embedding", flat.books,
-          ivf = Some((idx.centroids, idx.clusterIds)), perm = flat.perm)
-      })
+    cachedRoot(dir, "opq_ivf") { p =>
+      val idx = ivfIndexFor(s, dir)
+      val flat = Pq.loadRoot(s, opqRootFor(s, dir))
+      val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
+      Pq.writeRoot(s, p, emb, "embedding", flat.books,
+        ivf = Some((idx.centroids, idx.clusterIds)), perm = flat.perm)
+    }
 
   /** The shared recall-panel machinery of q182/q186: an aggregate
     * panel (single-query recall at these code budgets swings ±2 hits
@@ -902,44 +818,39 @@ object SparkEntry {
   private def driftCorpus(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "embeddings")
       .select(col("vec_id"), driftShiftCol.as("embedding"))
-  private val driftPathCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
   private def driftRootsFor(s: SparkSession,
-      dir: String): (String, String) =
-    driftPathCache.computeIfAbsent(dir, _ => {
+      dir: String): (String, String) = {
+    val pm = cachedRoot(dir, "drift_m") { p =>
       val fin = driftCorpus(s, dir)
       val base = fin.filter(pmod(col("vec_id"), lit(5L)) =!= 3L)
-      val shifted = fin.filter(pmod(col("vec_id"), lit(5L)) === 3L)
-      val pm = cachedRoot(dir, "drift_m") { p =>
-        val booksBase = Pq.fit(base, "vec_id", "embedding", m = pqM,
-          ksub = pqKsub)
-        Pq.writeRoot(s, p, base, "embedding", booksBase)
-        Pq.appendEncoded(s, p, shifted, "embedding")
-      }
-      val pr = cachedRoot(dir, "drift_r") { p =>
-        val booksFresh = Pq.fit(fin, "vec_id", "embedding", m = pqM,
-          ksub = pqKsub)
-        Pq.writeRoot(s, p, fin, "embedding", booksFresh)
-      }
-      (pm, pr)
-    })
+      val booksBase = Pq.fit(base, "vec_id", "embedding", m = pqM,
+        ksub = pqKsub)
+      Pq.writeRoot(s, p, base, "embedding", booksBase)
+      Pq.appendEncoded(s, p,
+        fin.filter(pmod(col("vec_id"), lit(5L)) === 3L), "embedding")
+    }
+    val pr = cachedRoot(dir, "drift_r") { p =>
+      val fin = driftCorpus(s, dir)
+      val booksFresh = Pq.fit(fin, "vec_id", "embedding", m = pqM,
+        ksub = pqKsub)
+      Pq.writeRoot(s, p, fin, "embedding", booksFresh)
+    }
+    (pm, pr)
+  }
 
   /** The IVF-PQ root for `dir` (q74): the single IVF root's rows —
     * cluster assignment and layout intact — PQ-encoded with the SAME
     * codebooks as [[pqRootFor]] (one fit serves both PQ roots) and
     * re-persisted partitionBy(cluster), so probe filters prune
     * directories AND rows carry m-byte codes. */
-  private val pqIvfPathCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def pqIvfRootFor(s: SparkSession, dir: String): String =
-    pqIvfPathCache.computeIfAbsent(dir, _ =>
-      cachedRoot(dir, "pq_ivf") { p =>
-        val idx = ivfIndexFor(s, dir)
-        Pq.writeRoot(s, p,
-          s.read.parquet(ivfPathCache.get(dir)).drop(IvfIndex.Sq8CodeCol),
-          "embedding", Pq.loadRoot(s, pqRootFor(s, dir)).books,
-          ivf = Some((idx.centroids, idx.clusterIds)))
-      })
+    cachedRoot(dir, "pq_ivf") { p =>
+      val idx = ivfIndexFor(s, dir)
+      Pq.writeRoot(s, p,
+        s.read.parquet(ivfRootFor(s, dir)).drop(IvfIndex.Sq8CodeCol),
+        "embedding", Pq.loadRoot(s, pqRootFor(s, dir)).books,
+        ivf = Some((idx.centroids, idx.clusterIds)))
+    }
 
   /** The RESIDUAL IVF-PQ root for `dir` (q76): FAISS IVFPQ's default
     * form — codebooks trained on and codes representing
@@ -947,19 +858,16 @@ object SparkEntry {
     * fit: residual geometry differs from raw), layout preserved so
     * probe filters prune directories; books + data exported for the
     * oracle's per-cluster table replay. */
-  private val pqResidPathCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def pqResidRootFor(s: SparkSession, dir: String): String =
-    pqResidPathCache.computeIfAbsent(dir, _ =>
-      cachedRoot(dir, "pq_resid") { p =>
-        val idx = ivfIndexFor(s, dir)
-        val ivfRoot = ivfPathCache.get(dir)
-        val assigned = s.read.parquet(ivfRoot).drop(IvfIndex.Sq8CodeCol)
-        val books = Pq.fitResidual(assigned, "vec_id", "embedding",
-          idx.centroids, idx.clusterIds, m = pqM, ksub = pqKsub)
-        Pq.writeRoot(s, p, assigned, "embedding", books, residual = true,
-          ivf = Some((idx.centroids, idx.clusterIds)))
-      })
+    cachedRoot(dir, "pq_resid") { p =>
+      val idx = ivfIndexFor(s, dir)
+      val assigned =
+        s.read.parquet(ivfRootFor(s, dir)).drop(IvfIndex.Sq8CodeCol)
+      val books = Pq.fitResidual(assigned, "vec_id", "embedding",
+        idx.centroids, idx.clusterIds, m = pqM, ksub = pqKsub)
+      Pq.writeRoot(s, p, assigned, "embedding", books, residual = true,
+        ivf = Some((idx.centroids, idx.clusterIds)))
+    }
 
   /** The COSINE-PQ roots for `dir` (q77 flat, q78 probed): one fit of
     * NORMALIZED codebooks (fit(normalized = true) — the FAISS
@@ -967,28 +875,22 @@ object SparkEntry {
     * normalized grid) serves both — a flat root over the embeddings
     * table and a cluster-partitioned root over the single IVF root's
     * rows (angular probes prune its directories). */
-  private val pqCosPathCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def pqCosRootFor(s: SparkSession, dir: String): String =
-    pqCosPathCache.computeIfAbsent(dir, _ =>
-      cachedRoot(dir, "pq_cos") { p =>
-        val emb = t(s, dir, "embeddings")
-        val books = Pq.fit(emb, "vec_id", "embedding", m = pqM,
-          ksub = pqKsub, normalized = true)
-        Pq.writeRoot(s, p, emb, "embedding", books)
-      })
+    cachedRoot(dir, "pq_cos") { p =>
+      val emb = t(s, dir, "embeddings")
+      val books = Pq.fit(emb, "vec_id", "embedding", m = pqM,
+        ksub = pqKsub, normalized = true)
+      Pq.writeRoot(s, p, emb, "embedding", books)
+    }
 
-  private val pqIvfCosPathCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def pqIvfCosRootFor(s: SparkSession, dir: String): String =
-    pqIvfCosPathCache.computeIfAbsent(dir, _ =>
-      cachedRoot(dir, "pq_ivf_cos") { p =>
-        val idx = ivfIndexFor(s, dir)
-        Pq.writeRoot(s, p,
-          s.read.parquet(ivfPathCache.get(dir)).drop(IvfIndex.Sq8CodeCol),
-          "embedding", Pq.loadRoot(s, pqCosRootFor(s, dir)).books,
-          ivf = Some((idx.centroids, idx.clusterIds)))
-      })
+    cachedRoot(dir, "pq_ivf_cos") { p =>
+      val idx = ivfIndexFor(s, dir)
+      Pq.writeRoot(s, p,
+        s.read.parquet(ivfRootFor(s, dir)).drop(IvfIndex.Sq8CodeCol),
+        "embedding", Pq.loadRoot(s, pqCosRootFor(s, dir)).books,
+        ivf = Some((idx.centroids, idx.clusterIds)))
+    }
 
   /** The MAINTAINED IVF-PQ root for `dir` (q183): built over a
     * SABOTAGED snapshot — one in five corpus rows held out, 100
@@ -1000,25 +902,33 @@ object SparkEntry {
     * sidecar). q183's oracle replays the search from a FRESH encode
     * of the full corpus, so the gate's hash equality proves the
     * maintained code bytes ≡ a fresh build at every candidate. */
-  private val pqCdcPathCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def pqCdcRootFor(s: SparkSession, dir: String): String =
-    pqCdcPathCache.computeIfAbsent(dir, _ => {
+    cachedRoot(dir, "pq_cdc", sub = "pq") { p =>
       val idx = ivfIndexFor(s, dir)
       val books = Pq.load(s, s"${pqRootFor(s, dir)}/books")
-      val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val kept = emb.filter(pmod(col("vec_id"), lit(5L)) =!= 2L)
-      val fakes = emb.filter(pmod(col("vec_id"), lit(5L)) === 4L)
-        .select((col("vec_id") + lit(1000000L)).as("vec_id"),
-          reverse(col("embedding")).as("embedding"))
-      cachedRoot(dir, "pq_cdc", sub = "pq") { p =>
-        Pq.writeRoot(s, p, kept.unionByName(fakes), "embedding", books,
-          ivf = Some((idx.centroids, idx.clusterIds)))
-        Pq.deleteEncoded(s, p, fakes.select("vec_id"), "vec_id")
-        Pq.appendEncoded(s, p,
-          emb.filter(pmod(col("vec_id"), lit(5L)) === 2L), "embedding")
-      }
-    })
+      val (snapshot, fakeIds, heldOut) = sabotaged(s, dir)
+      Pq.writeRoot(s, p, snapshot, "embedding", books,
+        ivf = Some((idx.centroids, idx.clusterIds)))
+      Pq.deleteEncoded(s, p, fakeIds, "vec_id")
+      Pq.appendEncoded(s, p, heldOut, "embedding")
+    }
+
+  /** The sabotaged snapshot the CDC fixtures ([[pqCdcRootFor]],
+    * [[opqCdcRootFor]], [[binCdcRootFor]]) are built from, as
+    * (snapshot, fake ids, held-out rows): the corpus minus its
+    * vec_id ≡ 2 (mod 5) rows, plus a reversed-vector fake of every
+    * vec_id ≡ 4 row at vec_id + 1,000,000. Deleting the fakes and
+    * appending the held-out rows brings a root to the real corpus. */
+  private def sabotaged(s: SparkSession,
+      dir: String): (DataFrame, DataFrame, DataFrame) = {
+    val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
+    val fakes = emb.filter(pmod(col("vec_id"), lit(5L)) === 4L)
+      .select((col("vec_id") + lit(1000000L)).as("vec_id"),
+        reverse(col("embedding")).as("embedding"))
+    (emb.filter(pmod(col("vec_id"), lit(5L)) =!= 2L).unionByName(fakes),
+      fakes.select("vec_id"),
+      emb.filter(pmod(col("vec_id"), lit(5L)) === 2L))
+  }
 
   /** The REBALANCED root for `dir` (q221): a deliberately UNDER-FIT
     * build (nlist = 2 — every cell ~3× the target size, the mega-cell
@@ -1028,18 +938,14 @@ object SparkEntry {
     * sabotage-then-repair proof that rebalancing lost, duplicated,
     * and corrupted nothing — and its probed leg replays probe
     * selection over the rebalanced sidecar export. */
-  private val rebalPathCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def rebalancedRootFor(s: SparkSession, dir: String): String =
-    rebalPathCache.computeIfAbsent(dir, _ => {
-      cachedRoot(dir, "rebalanced", sub = "ivf") { p =>
-        val emb = t(s, dir, "embeddings")
-        IvfIndex.build(emb, "vec_id", "embedding", nlist = 2).write(p)
-        val n = emb.count()
-        IvfIndex.rebalance(s, p, "vec_id", "embedding",
-          maxCellRows = math.max(1L, n / 6))
-      }
-    })
+    cachedRoot(dir, "rebalanced", sub = "ivf") { p =>
+      val emb = t(s, dir, "embeddings")
+      IvfIndex.build(emb, "vec_id", "embedding", nlist = 2).write(p)
+      val n = emb.count()
+      IvfIndex.rebalance(s, p, "vec_id", "embedding",
+        maxCellRows = math.max(1L, n / 6))
+    }
 
   /** The REFIT root for `dir` (q222): [[Pq.refitRoot]] run on the
     * q186 MAINTAINED drift root — whose books are stale by
@@ -1049,15 +955,10 @@ object SparkEntry {
     * orderBy(id)-deterministic, the result must BIT-EQUAL the fresh
     * final-corpus build (q186's refit leg root), whose export q222's
     * oracle replays. */
-  private val refitPathCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def refitRootFor(s: SparkSession, dir: String): String =
-    refitPathCache.computeIfAbsent(dir, _ => {
-      cachedRoot(dir, "refit", sub = "pq") { p =>
-        val (driftM, _) = driftRootsFor(s, dir)
-        Pq.refitRoot(s, driftM, p, "vec_id", "embedding")
-      }
-    })
+    cachedRoot(dir, "refit", sub = "pq") { p =>
+      Pq.refitRoot(s, driftRootsFor(s, dir)._1, p, "vec_id", "embedding")
+    }
 
   /** The MAINTAINED OPQ root for `dir` (q189): the q183
     * sabotage-then-repair cycle over the PERMUTED-code rung — built
@@ -1068,24 +969,15 @@ object SparkEntry {
     * corpus all match [[opqRootFor]]'s fresh build, the maintained
     * root's search must hash-equal a replay over the fresh opq/data
     * export — the CDC path for the OPQ rung sits inside the hash. */
-  private val opqCdcPathCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def opqCdcRootFor(s: SparkSession, dir: String): String =
-    opqCdcPathCache.computeIfAbsent(dir, _ => {
+    cachedRoot(dir, "opq_cdc", sub = "opq") { p =>
       val flat = Pq.loadRoot(s, opqRootFor(s, dir))
-      val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val kept = emb.filter(pmod(col("vec_id"), lit(5L)) =!= 2L)
-      val fakes = emb.filter(pmod(col("vec_id"), lit(5L)) === 4L)
-        .select((col("vec_id") + lit(1000000L)).as("vec_id"),
-          reverse(col("embedding")).as("embedding"))
-      cachedRoot(dir, "opq_cdc", sub = "opq") { p =>
-        Pq.writeRoot(s, p, kept.unionByName(fakes), "embedding",
-          flat.books, perm = flat.perm)
-        Pq.deleteEncoded(s, p, fakes.select("vec_id"), "vec_id")
-        Pq.appendEncoded(s, p,
-          emb.filter(pmod(col("vec_id"), lit(5L)) === 2L), "embedding")
-      }
-    })
+      val (snapshot, fakeIds, heldOut) = sabotaged(s, dir)
+      Pq.writeRoot(s, p, snapshot, "embedding", flat.books,
+        perm = flat.perm)
+      Pq.deleteEncoded(s, p, fakeIds, "vec_id")
+      Pq.appendEncoded(s, p, heldOut, "embedding")
+    }
 
   /** The MAINTAINED binary sign-code root for `dir` (q184): the same
     * sabotage-then-repair CDC cycle as [[pqCdcRootFor]] over
@@ -1093,24 +985,14 @@ object SparkEntry {
     * inline-pack replay over the LIVE corpus, so hash equality proves
     * the persisted + maintained codes match a fresh pack
     * bit-for-bit. */
-  private val binCdcPathCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def binCdcRootFor(s: SparkSession, dir: String): String =
-    binCdcPathCache.computeIfAbsent(dir, _ => {
-      val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val dim = queryVec(s, dir).length
-      val kept = emb.filter(pmod(col("vec_id"), lit(5L)) =!= 2L)
-      val fakes = emb.filter(pmod(col("vec_id"), lit(5L)) === 4L)
-        .select((col("vec_id") + lit(1000000L)).as("vec_id"),
-          reverse(col("embedding")).as("embedding"))
-      cachedRoot(dir, "bin_cdc", sub = "bin") { p =>
-        BinaryHash.writeRoot(s, p, kept.unionByName(fakes), "embedding",
-          dim)
-        BinaryHash.deleteByIds(s, p, fakes.select("vec_id"), "vec_id")
-        BinaryHash.appendTo(s, p,
-          emb.filter(pmod(col("vec_id"), lit(5L)) === 2L), "embedding")
-      }
-    })
+    cachedRoot(dir, "bin_cdc", sub = "bin") { p =>
+      val (snapshot, fakeIds, heldOut) = sabotaged(s, dir)
+      BinaryHash.writeRoot(s, p, snapshot, "embedding",
+        queryVec(s, dir).length)
+      BinaryHash.deleteByIds(s, p, fakeIds, "vec_id")
+      BinaryHash.appendTo(s, p, heldOut, "embedding")
+    }
 
   /** the per-query ADC lookup-table CTE shared by the q73/q74/q75
     * oracles — QuantizedSearch.adcTable's replay: one row per
@@ -2294,8 +2176,9 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
     * [[RootCacheFormatVersion]] bump lands every one-time rebuild
     * inside whichever query touches the root first, distorting that
     * query's record by seconds (q183 7.76 s vs 0.56 s warm). Warming
-    * is idempotent — each accessor is a path-cache hit when the root
-    * exists — so a warm-cache bench pays only the listing checks. */
+    * is idempotent — each accessor is a [[cachedRoot]] memo hit once
+    * the root is resolved — so a warm-cache bench pays only the
+    * metadata stamps of the loads. */
   private[graft] def warmIvfIndexes(s: SparkSession, dir: String): Unit = {
     ivfIndexFor(s, dir)
     ivfComponentIndexFor(s, dir)
@@ -2350,8 +2233,7 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       label: String, desc: Boolean = false)(
       distOf: (Column, Seq[Float]) => Column): DataFrame = {
     VectorExpressions.ensureRegistered(s)
-    ivfIndexFor(s, dir) // ensure the persisted root exists
-    val root = ivfPathCache.get(dir)
+    val root = ivfRootFor(s, dir)
     val q = queryVec(s, dir)
     val exp = s.experimental
     exp.synchronized {
@@ -7607,7 +7489,7 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       // binary 8.
       val emb = t(s, dir, "embeddings")
         .filter(col("embedding").isNotNull)
-      val singleRoot = { ivfIndexFor(s, dir); ivfPathCache.get(dir) }
+      val singleRoot = ivfRootFor(s, dir)
       def leg(tag: String, df: DataFrame,
           bytes: Column): DataFrame =
         df.agg(lit(tag).as("rung"), count(lit(1)).as("n_rows"),
@@ -7879,7 +7761,7 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       // the largest's corpus share, and the max/mean skew ratio in
       // x100 (integer cross-multiplied — largest·nlist·100 div
       // total).
-      val singleRoot = { ivfIndexFor(s, dir); ivfPathCache.get(dir) }
+      val singleRoot = ivfRootFor(s, dir)
       s.read.parquet(singleRoot)
         .groupBy(col(IvfIndex.ClusterCol).cast("long").as("cl"))
         .agg(count(lit(1)).as("sz"))
@@ -8052,7 +7934,7 @@ ${pqAdcSumSql("tab.qid = pr.qid AND")}
       // 1024-float literal), no join, no shuffle below the 1-row agg.
       VectorExpressions.ensureRegistered(s)
       val idx = ivfIndexFor(s, dir)
-      val singleRoot = ivfPathCache.get(dir)
+      val singleRoot = ivfRootFor(s, dir)
       val (mins, scales) = idx.sq8Params.getOrElse(
         throw new IllegalStateException("single root not quantized"))
       def row(tag: String, perRow: DataFrame): DataFrame =

@@ -44,9 +44,7 @@ import graft.sources.PersistedRoot
   * reference's one HNSW index serving every partition subset): a
   * per-component refit would fragment the index lifecycle and force a
   * rebuild whenever a component is added, while global centroids make
-  * `components` a pure filter over the same layout. (An out-of-JVM
-  * rebuild invalidation hook for the optimizer-rule path is
-  * [[graft.plans.IvfAutoProbe.invalidate]].)
+  * `components` a pure filter over the same layout.
   */
 final case class IvfIndex(
     centroids: Array[Array[Float]],
@@ -1458,8 +1456,8 @@ object IvfIndex {
     * exactly where a fresh assignment against these centroids would put
     * it. Centroid drift after MANY appends is the standard IVF
     * trade-off — [[rebalance]] or rebuild to refresh. The `_centroids`
-    * sidecar is untouched, so concurrent readers and the
-    * [[graft.plans.IvfAutoProbe]] centroid cache stay valid. Many small
+    * sidecar is untouched, so concurrent readers and the cached
+    * centroids ([[sidecarCentroids]]) stay valid. Many small
     * appends accumulate small files per partition — [[compact]] them. */
   def appendTo(spark: SparkSession, path: String, newVecs: DataFrame,
       idCol: String, vecCol: String): Unit = {
@@ -1866,11 +1864,6 @@ object IvfIndex {
     walk(root, 0)
   }
 
-  /** Register a hook fired with every mutated root — see
-    * [[graft.sources.PersistedRoot.onInvalidated]]. */
-  def onInvalidated(hook: String => Unit): Unit =
-    PersistedRoot.onInvalidated(hook)
-
   /** Lock file [[compact]] holds on the SOURCE root while it copies —
     * underscore-prefixed, so hidden from Spark's data listing like the
     * sidecar and the ingest log. [[graft.streaming.EventStreams
@@ -2047,129 +2040,74 @@ object IvfIndex {
     // The generation POINTER resolves on EVERY load (a cheap fs stat —
     // no Spark job), preserving the read-per-trigger contract an
     // in-place rebalance publish relies on, cross-process included.
-    // The PARSED metadata behind a given generation is immutable —
-    // centroids are written once per generation, the SQ8 grid once per
-    // write() — so it caches in-JVM keyed on (root, generation): a
-    // fresh publish changes the key, in-JVM data mutators evict via
-    // [[PersistedRoot.invalidate]], and a cache hit makes load() ZERO Spark
-    // jobs where it paid 2 collect jobs per query invocation before
-    // (r21, guide §1.2 — across ~80 IVF-family queries × reps this was
-    // the suite's single largest fixed overhead). Entries are plain
-    // arrays, safe across sessions.
-    val sidecar = resolvedCentroidSidecar(spark, path)
-    val gen = new org.apache.hadoop.fs.Path(sidecar).getName
-    // the cache key folds a CONTENT STAMP of every file the parsed
-    // metadata derives from (r21 verdict #7 / advice): the pointer
-    // resolve above only distinguishes GENERATIONS, but an in-place
-    // write() rewrites the DEFAULT sidecar under an unchanged (path,
-    // gen) key, and in-JVM eviction hooks cannot see a mutation made
-    // by a DIFFERENT process. name:length:mtime of the sidecar files
-    // (one listStatus each, no Spark job) makes any cross-process
-    // rewrite a new key; a root written without a centroid sidecar
-    // (legacy) caches centroids COMPUTED FROM THE DATA, so its stamp
-    // covers the data listing instead, and idCol/vecCol join the key
-    // (the fallback aggregates vecCol — two loads of one path with
-    // different column bindings must not share an entry).
-    val sideStamp = fsStamp(spark, sidecar)
-    val stamp =
-      (if (sideStamp != "absent") sideStamp
-       else "data:" + fsStamp(spark, path)) +
-        "|" + fsStamp(spark, s"$path/$Sq8Sidecar")
-    val meta = stampCached(loadMetaCache, s"$path|$idCol|$vecCol",
-        s"$gen|$stamp") {
-      val byId: Array[(Int, Array[Float])] = {
-        val loaded =
-          try {
-            spark.read.parquet(sidecar).collect()
-              .map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
-          } catch { case _: org.apache.spark.sql.AnalysisException =>
-            // legacy layout: one pass, keyed on (cluster, dim) — the agg
-            // state is a scalar per key, uniform by construction
-            assigned
-              .select(col(ClusterCol),
-                posexplode(col(vecCol)).as(Seq("d", "x")))
-              .groupBy(col(ClusterCol), col("d"))
-              .agg(avg(col("x")).as("m"))
-              .collect()
-              .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
-              .groupBy(_._1)
-              .map { case (cid, xs) =>
-                cid -> xs.sortBy(_._2).map(_._3.toFloat).toArray
-              }
-              .toArray
+    // The parsed centroids and SQ8 grid come from the one root-metadata
+    // cache ([[PersistedRoot.cached]]), stamped by the generation and a
+    // listing of the files they derive from, so a hit makes load() ZERO
+    // Spark jobs where it paid 2 collect jobs per query invocation
+    // before (r21, guide §1.2 — across ~80 IVF-family queries × reps
+    // this was the suite's single largest fixed overhead), and a
+    // rewrite by any process is a new stamp.
+    val (fs, root) = PersistedRoot.fileSystem(spark, path)
+    val byId = sidecarCentroids(spark, fs, root).getOrElse {
+      // legacy layout (no sidecar): centroids COMPUTED FROM THE DATA,
+      // stamped by the data listing and keyed on vecCol (two loads of
+      // one path with different column bindings must not share an
+      // entry). One pass, keyed on (cluster, dim) — the agg state is a
+      // scalar per key, uniform by construction
+      PersistedRoot.cached(fs, root, s"ivf.centroids.data|$vecCol",
+          PersistedRoot.fsStamp(fs, root)) {
+        assigned
+          .select(col(ClusterCol), posexplode(col(vecCol)).as(Seq("d", "x")))
+          .groupBy(col(ClusterCol), col("d"))
+          .agg(avg(col("x")).as("m"))
+          .collect()
+          .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
+          .groupBy(_._1)
+          .map { case (cid, xs) =>
+            cid -> xs.sortBy(_._2).map(_._3.toFloat).toArray
           }
-        loaded.sortBy(_._1)
+          .toArray.sortBy(_._1)
       }
-      // quantized roots carry their SQ8 grid in a sidecar; its absence —
-      // or a present-but-empty directory left by an interrupted write —
-      // just means the index loads unquantized (exact search unaffected)
+    }
+    // quantized roots carry their SQ8 grid in a sidecar; its absence —
+    // or a present-but-empty directory left by an interrupted write —
+    // just means the index loads unquantized (exact search unaffected)
+    val sq8Dir = new org.apache.hadoop.fs.Path(root, Sq8Sidecar)
+    val (sq8, normalized) = PersistedRoot.cached(fs, sq8Dir, "ivf.sq8",
+        PersistedRoot.fsStamp(fs, sq8Dir)) {
       val sq8Row =
-        try {
-          spark.read.parquet(s"$path/$Sq8Sidecar").take(1).headOption
-        } catch { case _: org.apache.spark.sql.AnalysisException => None }
-      val sq8 = sq8Row.map(r => (r.getSeq[Double](r.fieldIndex("mins")),
-        r.getSeq[Double](r.fieldIndex("scales"))))
+        try spark.read.parquet(sq8Dir.toString).take(1).headOption
+        catch { case _: org.apache.spark.sql.AnalysisException => None }
       // legacy sidecars predate the flag: absent column = raw (L2) grid
-      val normalized = sq8Row.exists(r =>
-        r.schema.fieldNames.contains("normalized") &&
-          r.getBoolean(r.fieldIndex("normalized")))
-      LoadedMeta(byId.map(_._2), byId.map(_._1), sq8, normalized)
+      (sq8Row.map(r => (r.getSeq[Double](r.fieldIndex("mins")),
+        r.getSeq[Double](r.fieldIndex("scales")))),
+        sq8Row.exists(r => r.schema.fieldNames.contains("normalized") &&
+          r.getBoolean(r.fieldIndex("normalized"))))
     }
-    IvfIndex(meta.centroids, assigned, idCol, vecCol, meta.clusterIds,
-      component, meta.sq8, meta.normalized)
+    IvfIndex(byId.map(_._2), assigned, idCol, vecCol, byId.map(_._1),
+      component, sq8, normalized)
   }
 
-  /** parsed per-generation sidecar metadata — see [[load]] */
-  private[operators] final case class LoadedMeta(centroids: Array[Array[Float]],
-      clusterIds: Array[Int], sq8: Option[(Seq[Double], Seq[Double])],
-      normalized: Boolean)
-  private[operators] val loadMetaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, LoadedMeta]()
-
-  /** `cache(owner|stamp)`, loaded on a miss. Inserting a new stamp drops
-    * every entry the same owner holds under another stamp: a stamp
-    * change means the files were rewritten, so the old parse can never
-    * be served again — a path rewritten N times holds one entry, not
-    * N. */
-  private[operators] def stampCached[V](
-      cache: java.util.concurrent.ConcurrentHashMap[String, V],
-      owner: String, stamp: String)(load: => V): V = {
-    val key = s"$owner|$stamp"
-    val hit = cache.get(key)
-    if (hit != null) hit
-    else {
-      val v = cache.computeIfAbsent(key, _ => load)
-      cache.keySet.removeIf(k => k != key && k.startsWith(s"$owner|"))
-      v
-    }
+  /** The live `_centroids` generation of `root` as (cluster id,
+    * centroid) pairs in id order, or None when the root has no readable
+    * sidecar. Cached in [[PersistedRoot.cached]] under the generation
+    * name plus the sidecar listing — one pointer stat and one listing
+    * per call, no Spark job on a hit. [[load]] and the
+    * [[graft.plans.IvfAutoProbe]] rule both read it here, so a root's
+    * centroids are parsed once per stamp, whichever reads first. */
+  private[graft] def sidecarCentroids(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path)
+      : Option[Array[(Int, Array[Float])]] = {
+    val sidecar = centroidSidecarDir(fs, root)
+    val stamp = PersistedRoot.fsStamp(fs, sidecar)
+    if (stamp == "absent") None
+    else
+      try Some(PersistedRoot.cached(fs, root, "ivf.centroids",
+          s"${sidecar.getName}|$stamp") {
+        spark.read.parquet(sidecar.toString).collect()
+          .map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
+          .sortBy(_._1)
+      })
+      catch { case _: org.apache.spark.sql.AnalysisException => None }
   }
-
-  /** Cheap content fingerprint of ONE directory level: name:length:mtime
-    * of every entry from a single non-recursive `listStatus` — no Spark
-    * job, no file reads. Used to stamp metadata-cache keys so a sidecar
-    * rewritten IN PLACE by another process (which no in-JVM eviction
-    * hook can observe) resolves to a fresh key instead of serving stale
-    * parsed geometry. A missing path stamps as "absent" (the legacy
-    * no-sidecar layouts are a real, supported state).
-    *
-    * Granularity: only the listed level is stamped (nested directories
-    * contribute their own name:length:mtime, not their contents), and a
-    * rewrite that keeps every file's name and length and lands within
-    * the file system's mtime tick of the previous write yields the SAME
-    * stamp — such a rewrite goes undetected until an in-JVM eviction
-    * hook fires. */
-  private[operators] def fsStamp(spark: SparkSession, path: String)
-      : String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    try {
-      p.getFileSystem(spark.sessionState.newHadoopConf())
-        .listStatus(p).sortBy(_.getPath.getName)
-        .map(st =>
-          s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-        .mkString(";")
-    } catch { case _: java.io.FileNotFoundException => "absent" }
-  }
-  private[graft] def evictLoadMeta(root: String): Unit =
-    loadMetaCache.keySet.removeIf(k =>
-      k == root || k.startsWith(root + "|") || k.startsWith(root + "/"))
 }

@@ -69,14 +69,15 @@ object Pq {
     }
   }
 
-  def load(spark: SparkSession, path: String): Codebooks =
-    // keyed on path + content stamp (r21 verdict #7): sidecars are
-    // immutable per WRITE, not per path — a root rebuilt in place by
-    // another process must resolve to a fresh key, not be served the
-    // old parsed books (in-JVM eviction hooks cannot see foreign
-    // writers). The stamp is one listStatus — no Spark job.
-    IvfIndex.stampCached(booksCache, path, IvfIndex.fsStamp(spark, path))(
+  /** the books persisted at `path`, parsed once per content stamp of
+    * the sidecar ([[PersistedRoot.cached]]): a root rebuilt in place by
+    * another process is a new stamp, never a stale serve. The stamp is
+    * one listStatus — no Spark job. */
+  def load(spark: SparkSession, path: String): Codebooks = {
+    val (fs, p) = PersistedRoot.fileSystem(spark, path)
+    PersistedRoot.cached(fs, p, "pq.books", PersistedRoot.fsStamp(fs, p))(
       loadUncached(spark, path))
+  }
 
   private def loadUncached(spark: SparkSession, path: String): Codebooks = {
     val df = spark.read.parquet(path)
@@ -92,40 +93,6 @@ object Pq {
     Codebooks(cb.head.head.length * m, m, cb,
       normalized = rows.head._4)
   }
-
-  /** In-JVM cache of DESERIALIZED index metadata — codebooks and
-    * [[PqRoot]] sidecars — keyed on the exact path string (r21, guide
-    * §1.2 "per-task work"): every PQ query paid 2-4 tiny
-    * read-parquet-and-collect JOBS per invocation just to re-parse
-    * immutable sidecar bytes it had already parsed (q182 re-loaded
-    * four sidecar sets per rep — ~1.5 s of pure metadata job
-    * overhead). Sidecars are index ARTIFACTS, not query results: a
-    * serving system holds them resident (FAISS keeps the whole index
-    * in memory; [[graft.plans.IvfAutoProbe]] already caches the
-    * centroid sidecar the same way), and the data scan + ADC + re-rank
-    * still compute from parquet on every invocation. Entries are
-    * plain arrays (no session references), so they are safe across
-    * sessions in one JVM. Eviction rides the SAME invalidation bus
-    * every derived artifact uses ([[PersistedRoot.invalidate]], which
-    * ends every root mutation); a mutated root's whole subtree
-    * (books/centroids/perm sidecars live under it) is removed. */
-  private[operators] val booksCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Codebooks]()
-  private[operators] val rootMetaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, PqRoot]()
-  /** the inferred schema of each root's `data/` ([[PqRoot.data]]),
-    * keyed on the directory's [[IvfIndex.fsStamp]]: an append or a
-    * rewrite by any process changes the listing, so a new schema is
-    * never served stale */
-  private[operators] val dataSchemaCache = new java.util.concurrent
-    .ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-  private[operators] def evictMeta(root: String): Unit =
-    // keys are "path|stamp" since the stamp-keying (r21 verdict #7):
-    // match the bare path, any subpath, and any stamped variant
-    Seq(rootMetaCache, booksCache, dataSchemaCache).foreach(
-      _.keySet.removeIf(k =>
-        k == root || k.startsWith(root + "/") || k.startsWith(root + "|")))
-  PersistedRoot.onInvalidated(evictMeta)
 
   /** Train per-subspace codebooks on the `sampleN` LOWEST-ID vectors —
     * a deterministic sample (content-independent of partitioning and
@@ -537,14 +504,15 @@ object Pq {
     def dataPath: String = s"$path/$DataSubdir"
 
     /** the encoded rows, read with the schema cached for the data
-      * directory's current stamp ([[dataSchemaCache]]) — parquet schema
-      * inference is a Spark job per read, and a serving loop reads the
-      * root once per query */
-    def data(spark: SparkSession): DataFrame =
-      spark.read.schema(IvfIndex.stampCached(dataSchemaCache, dataPath,
-          IvfIndex.fsStamp(spark, dataPath))(
-          spark.read.parquet(dataPath).schema))
+      * directory's current stamp ([[PersistedRoot.cached]]) — parquet
+      * schema inference is a Spark job per read, and a serving loop
+      * reads the root once per query */
+    def data(spark: SparkSession): DataFrame = {
+      val (fs, p) = PersistedRoot.fileSystem(spark, dataPath)
+      spark.read.schema(PersistedRoot.cached(fs, p, "pq.schema",
+          PersistedRoot.fsStamp(fs, p))(spark.read.parquet(dataPath).schema))
         .parquet(dataPath)
+    }
 
     /** the root as the lifecycle core sees it: `data/` partitioned by
       * cluster for the IVF layout, flat otherwise */
@@ -695,15 +663,18 @@ object Pq {
       residual = src.residual, ivf = src.ivf, perm = perm)
   }
 
-  def loadRoot(spark: SparkSession, path: String): PqRoot =
+  def loadRoot(spark: SparkSession, path: String): PqRoot = {
     // stamp every sidecar the parsed root derives from (books, meta,
     // centroids, perm — same rationale as [[load]]): a cross-process
-    // rewrite of any of them is a new key, never a stale serve. Four
+    // rewrite of any of them is a new stamp, never a stale serve. Four
     // listStatus calls, no Spark job.
-    IvfIndex.stampCached(rootMetaCache, path,
+    val (fs, p) = PersistedRoot.fileSystem(spark, path)
+    PersistedRoot.cached(fs, p, "pq.root",
       Seq(BooksSubdir, MetaSubdir, CentroidsSubdir, PermSubdir)
-        .map(sub => IvfIndex.fsStamp(spark, s"$path/$sub"))
+        .map(sub => PersistedRoot.fsStamp(fs,
+          new org.apache.hadoop.fs.Path(p, sub)))
         .mkString("|"))(loadRootUncached(spark, path))
+  }
 
   private def loadRootUncached(spark: SparkSession,
       path: String): PqRoot = {

@@ -31,7 +31,7 @@ import graft.operators.{IvfIndex, KnnSearch, QuantizedSearch}
   * `graft_l2sq`, `1.0 - graft_cos`, or `-graft_dot` ascending, or the
   * natural similarity spellings `graft_cos` / `graft_dot` descending.
   * The rule reads
-  * the (tiny, cached) centroid sidecar on the driver, picks the
+  * the (tiny, stamp-cached) centroid sidecar on the driver, picks the
   * `nprobe` best clusters for the constant query vector under the
   * matching centroid ranking (L2 / cosine / dot), and injects
   * `Filter(__ivf_cluster IN probes)` directly above the relation, where
@@ -196,9 +196,15 @@ case class IvfAutoProbe(spark: SparkSession) extends Rule[LogicalPlan] {
       }
     val (qVec, metric) = matched.getOrElse(return None)
 
-    // 3. centroids from the sidecar (driver-side, fingerprint-cached)
+    // 3. the live centroids, through the root-metadata cache
+    //    [[IvfIndex.load]] fills: one pointer stat and one sidecar
+    //    listing per attempted rewrite, so an in-place rebuild by any
+    //    process is seen on the very next plan (a stale-centroid prune
+    //    would be a silent recall collapse); no sidecar = not an index
     val root = fs.location.rootPaths.headOption.getOrElse(return None)
-    val cents = centroidsFor(spark, root.toString).getOrElse(return None)
+    val cents = Try(IvfIndex.sidecarCentroids(spark,
+        root.getFileSystem(spark.sessionState.newHadoopConf()), root))
+      .toOption.flatten.getOrElse(return None)
     // a residual data predicate thins every probed cluster — widen
     // the budget by the session's declared selectivity (the API
     // face's widenedNprobe contract); a budget reaching nlist means
@@ -322,144 +328,4 @@ object IvfAutoProbe {
     * number for every query), so a mixed workload with per-query
     * selectivities belongs on the API. */
   val FilterSelectivityConf = "spark.graft.ivf.filterSelectivity"
-
-  /** How long (ms) a root's sidecar LISTING stays fresh —
-    * see [[sidecarFingerprint]]. The default keeps steady-state queries
-    * from paying a list RPC per optimizer pass while out-of-JVM
-    * in-place rebuilds surface within a few seconds; set 0 to re-list
-    * on EVERY pass, making such rebuilds visible immediately at the
-    * cost of one driver-side list RPC per optimization — the knob that
-    * retires the "≤TTL stale probe" trade-off when a workload can't
-    * tolerate it. (Same-JVM rebuilds never wait on the TTL:
-    * [[invalidate]] drops the caches directly.) */
-  val ListingTtlConf = "spark.graft.ivf.listingTtlMs"
-  private val DefaultListingTtlMs = 3000L
-
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (String, Array[(Int, Array[Float])])]()
-
-  /** (nanoTime, fingerprint) per root — see [[sidecarFingerprint]]. */
-  private val fingerprintCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (Long, Option[String])]()
-
-  // The former fixed 3 s fingerprint TTL is now the [[ListingTtlConf]]
-  // session conf (default unchanged): a query racing an OUT-of-JVM
-  // in-place rebuild can prune with centroids up to TTL ms stale — on
-  // the opt-in approximate path, within the staleness any reader of an
-  // in-place-overwritten table already tolerates — and workloads that
-  // can't tolerate even that set the conf to 0 (or rebuild to a fresh
-  // root). Same-JVM rebuilds bypass the TTL entirely: [[invalidate]]
-  // is called from [[graft.operators.IvfIndex.write]].
-
-  /** Cap on distinct roots the two driver caches remember. A long-lived
-    * driver building a fresh temp-dir index per job would otherwise
-    * accumulate entries for the JVM lifetime; past the cap ONE arbitrary
-    * entry is evicted per insert (not a wholesale clear, which would
-    * evict every hot root at once and make sustained temp-root churn
-    * re-list and re-read every live index each time the cap refills) —
-    * worst case one extra listing or sidecar re-read for the one
-    * evicted root. */
-  private val MaxCachedRoots = 256
-
-  /** evict one arbitrary entry to make room — see [[MaxCachedRoots]] */
-  private def evictOne(
-      m: java.util.concurrent.ConcurrentHashMap[String, _]): Unit = {
-    val it = m.keySet().iterator()
-    if (it.hasNext) { it.next(); it.remove() }
-  }
-
-  /** Drop cached listing + centroids for `root` — called by
-    * [[graft.operators.IvfIndex.write]] so a same-JVM in-place rebuild
-    * is visible to the very next query, TTL notwithstanding. PUBLIC so
-    * alternative rebuild paths (a job that writes the sidecar directly,
-    * an external compactor signalling through the driver) can make their
-    * rebuild visible immediately instead of waiting out the listing TTL.
-    * The rule keys caches on the relation's QUALIFIED root
-    * (`file:/...`, `s3a://bucket/...`); writers pass whatever path they
-    * were given, so both the raw and the fs-qualified form are dropped. */
-  def invalidate(spark: SparkSession, root: String): Unit = {
-    fingerprintCache.remove(root)
-    centroidCache.remove(root)
-    Try {
-      val p = new org.apache.hadoop.fs.Path(root)
-      val q = p.getFileSystem(spark.sessionState.newHadoopConf())
-        .makeQualified(p).toString
-      fingerprintCache.remove(q)
-      centroidCache.remove(q)
-    }
-  }
-
-  /** Stable fingerprint of a root's `_centroids` sidecar directory: file
-    * names + lengths + mtimes. Parquet part-file names embed a fresh
-    * UUID per write, so ANY rebuild — including an in-place
-    * SaveMode.Overwrite to the same root within one mtime tick — changes
-    * the fingerprint. None when the sidecar is absent or empty (not an
-    * IVF index). Driver-side metadata listing memoized per root for
-    * [[ListingTtlConf]] ms (negative results too — a non-index table
-    * should not cost a list RPC per optimizer pass either).
-    * Package-visible so the spec can pin the TTL-vs-conf behavior
-    * directly. */
-  private[plans] def sidecarFingerprint(spark: SparkSession,
-      root: String): Option[String] = {
-    // clamp before the ms→ns multiply: an effectively-infinite TTL
-    // (Long.MaxValue ms) would otherwise overflow negative and behave
-    // like TTL 0 — the exact opposite of what was asked for
-    val ttlNanos = Try(spark.conf.get(ListingTtlConf,
-      DefaultListingTtlMs.toString).toLong).getOrElse(DefaultListingTtlMs)
-      .max(0L).min(Long.MaxValue / 1_000_000L) * 1_000_000L
-    val now = System.nanoTime()
-    val cached = fingerprintCache.get(root)
-    if (cached != null && now - cached._1 < ttlNanos) cached._2
-    else {
-      val fp = Try {
-        // resolve the generation pointer first (an out-of-JVM rebalance
-        // publishes by pointer swap — the new generation's dir name is
-        // in the fingerprint, so the swap invalidates cached centroids
-        // within one TTL like any other rebuild)
-        val p = new org.apache.hadoop.fs.Path(
-          IvfIndex.resolvedCentroidSidecar(spark, root))
-        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-        fs.listStatus(p).filter(_.isFile)
-          .map(st => s"${p.getName}/${st.getPath.getName}:" +
-            s"${st.getLen}:${st.getModificationTime}")
-          .sorted.mkString(",")
-      }.toOption.filter(_.nonEmpty)
-      // evict only when INSERTING a new root: a TTL refresh of an
-      // already-cached root replaces in place and must not push out an
-      // unrelated live entry on every refresh at cap
-      if (!fingerprintCache.containsKey(root) &&
-        fingerprintCache.size >= MaxCachedRoots) evictOne(fingerprintCache)
-      fingerprintCache.put(root, (now, fp))
-      fp
-    }
-  }
-
-  /** (clusterId, centroid) pairs from the `_centroids` sidecar, or None
-    * when the table has no sidecar (then it is not an IVF index and the
-    * rule must not fire). Positive results are cached keyed on the
-    * sidecar fingerprint, so an in-place rebuild of the same root is
-    * picked up on the next query — a stale-centroid prune would be a
-    * silent recall collapse. Centroid-read misses are NOT cached;
-    * fingerprint misses are, but only for the short listing TTL, so a
-    * table that gains a sidecar later is picked up too. */
-  private def centroidsFor(spark: SparkSession,
-      root: String): Option[Array[(Int, Array[Float])]] = {
-    val fp = sidecarFingerprint(spark, root).getOrElse(return None)
-    val cached = centroidCache.get(root)
-    if (cached != null && cached._1 == fp) Some(cached._2)
-    else Try {
-      spark.read
-        .parquet(IvfIndex.resolvedCentroidSidecar(spark, root)).collect()
-        .map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
-        .sortBy(_._1)
-    }.toOption match {
-      case Some(cents) =>
-        if (!centroidCache.containsKey(root) &&
-          centroidCache.size >= MaxCachedRoots) evictOne(centroidCache)
-        centroidCache.put(root, (fp, cents)); Some(cents)
-      case None => None
-    }
-  }
 }

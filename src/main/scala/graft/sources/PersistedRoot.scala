@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -107,12 +108,12 @@ private[graft] object PersistedRoot {
       if (r.parts.nonEmpty) {
         val surviving = survivors.select(r.parts.map(col): _*).distinct()
           .collect().toSet
-        val root = new org.apache.hadoop.fs.Path(r.dataPath)
+        val root = new Path(r.dataPath)
         val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
         affected.filterNot(surviving).foreach { row =>
           val rel = r.parts.zipWithIndex
             .map { case (p, i) => s"$p=${row.get(i)}" }.mkString("/")
-          fs.delete(new org.apache.hadoop.fs.Path(root, rel), true)
+          fs.delete(new Path(root, rel), true)
         }
       }
       invalidate(spark, r.path)
@@ -145,10 +146,10 @@ private[graft] object PersistedRoot {
       .parquet(r.copy(path = destPath).dataPath)
     val conf = spark.sessionState.newHadoopConf()
     for (sc <- r.sidecars) {
-      val src = new org.apache.hadoop.fs.Path(s"${r.path}/${sc.from}")
+      val src = new Path(s"${r.path}/${sc.from}")
       val srcFs = src.getFileSystem(conf)
       if (sc.required || srcFs.exists(src)) {
-        val dst = new org.apache.hadoop.fs.Path(s"$destPath/${sc.name}")
+        val dst = new Path(s"$destPath/${sc.name}")
         val dstFs = dst.getFileSystem(conf)
         val copied =
           try org.apache.hadoop.fs.FileUtil.copy(srcFs, src, dstFs, dst,
@@ -178,36 +179,31 @@ private[graft] object PersistedRoot {
       srcPath: String, destPath: String): Unit = {
     val conf = spark.sessionState.newHadoopConf()
     def qualified(p: String) = {
-      val hp = new org.apache.hadoop.fs.Path(p)
+      val hp = new Path(p)
       val fs = hp.getFileSystem(conf)
       // qualify first (now absolute), then URI-normalize the '..'/'.'
       // segments Hadoop Path preserves
-      val norm = new org.apache.hadoop.fs.Path(
-        fs.makeQualified(hp).toUri.normalize())
+      val norm = new Path(fs.makeQualified(hp).toUri.normalize())
       if (norm.toUri.getScheme == "file")
-        fs.makeQualified(new org.apache.hadoop.fs.Path(
-          new java.io.File(norm.toUri.getPath).getCanonicalPath))
+        fs.makeQualified(
+          new Path(new java.io.File(norm.toUri.getPath).getCanonicalPath))
       else
         try fs.resolvePath(norm)
         catch { case _: java.io.IOException => norm }
     }
     val (s, d) = (qualified(srcPath), qualified(destPath))
-    def covers(a: org.apache.hadoop.fs.Path,
-        b: org.apache.hadoop.fs.Path) =
+    def covers(a: Path, b: Path) =
       (b.toString + "/").startsWith(a.toString + "/")
     require(!covers(s, d) && !covers(d, s),
       s"compact is copy-based: destPath must be disjoint from srcPath " +
         s"(got $s vs $d)")
   }
 
-  /** Invalidation hooks for DERIVED artifacts keyed on a root —
-    * materialized kNN graphs, parsed sidecars, downstream caches.
-    * [[invalidate]] fires every registered hook with the mutated root,
-    * so a cache owner that cannot be reached from here (e.g.
-    * [[graft.SparkEntry]]'s per-corpus graph-path cache) can drop its
-    * entry instead of silently serving a stale artifact. Hooks must be
-    * idempotent and cheap; exceptions propagate (a failed invalidation
-    * is corruption-in-waiting, not a warning). */
+  /** Invalidation hooks for DERIVED artifacts keyed on a root that
+    * live outside [[cached]] — materialized graphs, downstream caches.
+    * [[invalidate]] fires every registered hook with the mutated root.
+    * Hooks must be idempotent and cheap; exceptions propagate (a failed
+    * invalidation is corruption-in-waiting, not a warning). */
   private val hooks =
     new java.util.concurrent.CopyOnWriteArrayList[String => Unit]()
   def onInvalidated(hook: String => Unit): Unit = hooks.add(hook)
@@ -215,13 +211,102 @@ private[graft] object PersistedRoot {
   /** The one call that ends every mutation of `root`: drop the
     * session's cached file listings under it (a reader whose listing
     * predates the mutation would miss new rows or plan against replaced
-    * files), the auto-probe rule's driver caches, the IVF load-metadata
-    * cache, then every registered hook. */
+    * files), every [[cached]] entry at or under it, then every
+    * registered hook. */
   def invalidate(spark: SparkSession, root: String): Unit = {
     spark.catalog.refreshByPath(root)
-    graft.plans.IvfAutoProbe.invalidate(spark, root)
-    graft.operators.IvfIndex.evictLoadMeta(root)
+    val q = qualified(spark, root)
+    metaCache.keySet.removeIf(k => atOrUnder(q, k._1))
     val it = hooks.iterator()
     while (it.hasNext) it.next().apply(root)
+  }
+
+  /** One cached value: the stamp it was parsed under, and its insertion
+    * number for the oldest-first eviction. */
+  private final case class Entry(stamp: String, value: Any, seq: Long)
+
+  /** The driver's one cache of metadata parsed from persisted roots —
+    * IVF centroids and SQ8 grids, PQ books, root metadata and data
+    * schemas — keyed on (fs-qualified path, kind), one (stamp, value)
+    * per key. Entries are plain values (no session references), so
+    * they are safe across sessions in one JVM. */
+  private val metaCache =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), Entry]()
+  private val inserts = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Bound on [[metaCache]]: a long-lived driver that builds a fresh
+    * temp root per job would otherwise grow it for the JVM's lifetime.
+    * Past it the OLDEST-inserted entry goes, so a root just written and
+    * read back keeps its entry. */
+  private val MaxCachedEntries = 256
+
+  private def atOrUnder(root: String, path: String): Boolean =
+    path == root || path.startsWith(root + "/")
+
+  private def qualified(spark: SparkSession, path: String): String = {
+    val (fs, p) = fileSystem(spark, path)
+    fs.makeQualified(p).toString
+  }
+
+  /** The value parsed from `path` for `kind`, served while the files it
+    * derives from still carry `stamp` (typically [[fsStamp]] of them):
+    * a changed stamp means they were rewritten — in this JVM or by
+    * another process, which no hook can see — so `load` runs again and
+    * its value replaces the entry. `fs` is the handle the stamp was
+    * taken with; it qualifies the path, so every spelling of a root
+    * shares one entry. `load` runs outside any map operation (it may
+    * itself read other entries); two threads that miss at once may both
+    * load, which is harmless. */
+  def cached[V](fs: FileSystem, path: Path, kind: String, stamp: String)(
+      load: => V): V = {
+    val key = (fs.makeQualified(path).toString, kind)
+    val hit = metaCache.get(key)
+    if (hit != null && hit.stamp == stamp) hit.value.asInstanceOf[V]
+    else {
+      val v = load
+      if (hit == null && metaCache.size >= MaxCachedEntries) {
+        var oldest: java.util.Map.Entry[(String, String), Entry] = null
+        metaCache.entrySet.forEach(e =>
+          if (oldest == null || e.getValue.seq < oldest.getValue.seq)
+            oldest = e)
+        if (oldest != null) metaCache.remove(oldest.getKey, oldest.getValue)
+      }
+      metaCache.put(key, Entry(stamp, v, inserts.incrementAndGet()))
+      v
+    }
+  }
+
+  /** the (qualified path, kind) keys [[cached]] holds at or under
+    * `root` */
+  private[graft] def cachedKeys(spark: SparkSession,
+      root: String): Seq[(String, String)] = {
+    val q = qualified(spark, root)
+    import scala.jdk.CollectionConverters._
+    metaCache.keySet.asScala.filter(k => atOrUnder(q, k._1)).toSeq
+  }
+
+  /** Cheap content stamp of ONE directory level: name:length:mtime of
+    * every entry from a single non-recursive `listStatus` — no Spark
+    * job, no file reads. A missing path stamps as "absent" (the legacy
+    * no-sidecar layouts are a real, supported state).
+    *
+    * Granularity: only the listed level is stamped (nested directories
+    * contribute their own name:length:mtime, not their contents), and a
+    * rewrite that keeps every file's name and length and lands within
+    * the file system's mtime tick of the previous write yields the SAME
+    * stamp — such a rewrite goes undetected until [[invalidate]]. */
+  def fsStamp(fs: FileSystem, path: Path): String =
+    try {
+      fs.listStatus(path).sortBy(_.getPath.getName)
+        .map(st =>
+          s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
+        .mkString(";")
+    } catch { case _: java.io.FileNotFoundException => "absent" }
+
+  /** the file system of `path` under the session's Hadoop conf, with
+    * the path — the handle [[cached]] and [[fsStamp]] take */
+  def fileSystem(spark: SparkSession, path: String): (FileSystem, Path) = {
+    val p = new Path(path)
+    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
   }
 }

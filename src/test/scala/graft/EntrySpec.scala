@@ -35,6 +35,21 @@ class EntrySpec extends SparkSpec {
     assert(mains == Set("graft.Bench", "graft.Verify"))
   }
 
+  test("the root-metadata cache is the only ConcurrentHashMap in operators, plans and sources") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val holders = Seq("operators", "plans", "sources").flatMap { d =>
+      val walk = Files.walk(Paths.get(s"src/main/scala/graft/$d"))
+      try walk.iterator.asScala.filter(f =>
+          f.toString.endsWith(".scala") &&
+            Files.readString(f).contains("ConcurrentHashMap"))
+        .map(_.getFileName.toString).toList
+      finally walk.close()
+    }
+    assert(holders == Seq("PersistedRoot.scala"),
+      s"driver caches outside PersistedRoot.cached: $holders")
+  }
+
   test("tempDir directories are deleted, symlinks unfollowed, by the suite's afterAll") {
     import java.nio.file.Files
     val outside = Files.createTempDirectory("graft-tempdir-target-")
@@ -248,11 +263,13 @@ class EntrySpec extends SparkSpec {
   test("cachedRoot: a second session rebuilds ZERO roots; a regenerated corpus rebuilds; sub-paths resolve into the slot") {
     // the temp-root lifecycle fix (r17 #5): derived roots live in a
     // deterministic slot keyed on the corpus fingerprint. The in-JVM
-    // ConcurrentHashMaps are what dedupe WITHIN a session, so calling
-    // cachedRoot directly again IS exactly what a fresh session does —
-    // the build fn must not run a second time.
+    // memo is what dedupes WITHIN a JVM, so dropping this corpus's memo
+    // entries and calling cachedRoot again IS exactly what a fresh
+    // session does — the build fn must not run a second time.
     import java.nio.file.{Files => JF, Paths}
     val corpus = tempDir("graft-cache-corpus-").toString
+    def freshJvm(): Unit =
+      SparkEntry.rootMemo.keySet.removeIf(_.startsWith(s"$corpus|"))
     JF.write(Paths.get(corpus, "embeddings.parquet"),
       "fake-bytes".getBytes)
     var builds = 0
@@ -263,6 +280,7 @@ class EntrySpec extends SparkSpec {
     }
     val p1 = SparkEntry.cachedRoot(corpus, "spec_root")(build)
     assert(builds == 1 && JF.exists(Paths.get(p1, "root.txt")))
+    freshJvm()
     val p2 = SparkEntry.cachedRoot(corpus, "spec_root")(build)
     assert(builds == 1, "a second session must rebuild zero roots")
     assert(p2 == p1, "the slot is deterministic")
@@ -272,12 +290,19 @@ class EntrySpec extends SparkSpec {
       sub = "pq")(build)
     assert(builds == 2 && ps.endsWith("/spec_subbed/pq") &&
       JF.exists(Paths.get(ps, "root.txt")))
+    freshJvm()
     assert(SparkEntry.cachedRoot(corpus, "spec_subbed",
       sub = "pq")(build) == ps && builds == 2)
     // a REGENERATED corpus (same path, different bytes) changes the
-    // fingerprint — stale roots can never serve the new data
+    // fingerprint — stale roots can never serve the new data. Within
+    // one JVM the memo answers without listing the corpus, so the
+    // regeneration is seen by the next session
+    assert(SparkEntry.cachedRoot(corpus, "spec_root")(build) == p1)
     JF.write(Paths.get(corpus, "embeddings.parquet"),
       "fake-bytes-regenerated".getBytes)
+    assert(SparkEntry.cachedRoot(corpus, "spec_root")(build) == p1 &&
+      builds == 2, "a memo hit must not re-fingerprint the corpus")
+    freshJvm()
     val p3 = SparkEntry.cachedRoot(corpus, "spec_root")(build)
     assert(builds == 3 && p3 != p1,
       "a regenerated corpus must land in a fresh slot")
@@ -330,7 +355,9 @@ class EntrySpec extends SparkSpec {
       val gen = new java.io.File(p).getParentFile
       assert(gen.lastModified() > stale, "access must refresh mtime")
       gen.setLastModified(stale)
-      SparkEntry.cachedRoot(corpus, "spec_reap")(build) // pure HIT
+      // a later session's pure HIT (this JVM's memo forgotten first)
+      SparkEntry.rootMemo.keySet.removeIf(_.startsWith(s"$corpus|"))
+      SparkEntry.cachedRoot(corpus, "spec_reap")(build)
       assert(gen.lastModified() > stale, "a HIT must refresh mtime too")
       assert(Option(gen.listFiles()).get.exists(_.getName ==
         s"${SparkEntry.LiveMarkerPrefix}${ProcessHandle.current().pid()}"),

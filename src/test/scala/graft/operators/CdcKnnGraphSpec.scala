@@ -64,7 +64,7 @@ class CdcKnnGraphSpec extends SparkSpec {
 
   test("index mutations fire the derived-artifact invalidation hooks") {
     val fired = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    IvfIndex.onInvalidated(r => { fired.add(r); () })
+    graft.sources.PersistedRoot.onInvalidated(r => { fired.add(r); () })
     val path = tempDir("graft-cdc-hook-")
       .toString + "/ivf"
     val snap = (0L until 60L).map(i => (i, vec(i, 0)))

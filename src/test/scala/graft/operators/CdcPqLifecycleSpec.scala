@@ -203,12 +203,12 @@ class CdcPqLifecycleSpec extends SparkSpec {
   }
 
   test("in-place rebuilds of IVF, PQ and binary roots fire the invalidation hooks") {
-    // derived-artifact caches (SparkEntry's graph paths, Pq's parsed
-    // sidecars) evict only through the hooks, so a rebuild must fire them
-    // like every other mutation
+    // derived-artifact caches outside the root-metadata cache evict only
+    // through the hooks, so a rebuild must fire them like every other
+    // mutation
     import scala.jdk.CollectionConverters._
     val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    IvfIndex.onInvalidated(r => { seen.add(r); () })
+    graft.sources.PersistedRoot.onInvalidated(r => { seen.add(r); () })
     val tmp = tempDir("graft-cdc-rebuild-").toString
     val (ivf, pq, bin) = (s"$tmp/ivf", s"$tmp/pq", s"$tmp/bin")
     val idx = IvfIndex.build(df(snapA), "vec_id", "embedding", nlist = 4)

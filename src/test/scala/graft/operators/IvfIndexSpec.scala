@@ -892,9 +892,8 @@ class IvfIndexSpec extends SparkSpec {
       assert(IvfIndex.load(spark, s"$tmp/ivf", "vec_id", "embedding")
         .centroids.map(_.toSeq).toSeq == before.map(_.map(_ + i.toFloat)))
     }
-    var entries = 0
-    IvfIndex.loadMetaCache.keySet.forEach(k =>
-      if (k.startsWith(s"$tmp/ivf|")) entries += 1)
+    val entries = graft.sources.PersistedRoot.cachedKeys(spark, s"$tmp/ivf")
+      .count(_._2 == "ivf.centroids")
     assert(entries == 1, s"$entries cached entries for one root")
   }
 

@@ -49,7 +49,7 @@ class PqSpec extends SparkSpec {
     }.toMap
 
   test("a books sidecar rewritten by another process is re-read, not served stale") {
-    // booksCache keys on a content stamp of the sidecar files (r21
+    // the books entry keys on a content stamp of the sidecar files (r21
     // verdict #7 / advice): a rewrite by a writer that fires no in-JVM
     // eviction hook must be observed by the next load
     import spark.implicits._
@@ -76,13 +76,9 @@ class PqSpec extends SparkSpec {
       assert(Pq.load(spark, s"$tmp/books").cb(0)(0).toSeq ==
         first.cb(0)(0).map(_ + i.toFloat).toSeq)
     }
-    def entries(cache: java.util.concurrent.ConcurrentHashMap[String, _],
-        path: String): Int = {
-      var n = 0
-      cache.keySet.forEach(k => if (k.startsWith(s"$path|")) n += 1)
-      n
-    }
-    assert(entries(Pq.booksCache, s"$tmp/books") == 1)
+    def entries(kind: String, path: String): Int =
+      graft.sources.PersistedRoot.cachedKeys(spark, path).count(_._2 == kind)
+    assert(entries("pq.books", s"$tmp/books") == 1)
     // the root-metadata cache evicts the same way: a flat root whose
     // meta sidecar is rewritten in place N times
     val root = s"$tmp/root"
@@ -93,7 +89,7 @@ class PqSpec extends SparkSpec {
         .parquet(s"$root/${Pq.MetaSubdir}")
       Pq.loadRoot(spark, root)
     }
-    assert(entries(Pq.rootMetaCache, root) == 1)
+    assert(entries("pq.root", root) == 1)
   }
 
   test("PqRoot.data serves a cached schema: writeRoot, appendEncoded and " +
@@ -104,12 +100,8 @@ class PqSpec extends SparkSpec {
     val dataPath = s"$root/${Pq.DataSubdir}"
     val raw = embeddings.select("vec_id", "embedding")
     def data() = Pq.loadRoot(spark, root).data(spark)
-    def entries(): Int = {
-      var n = 0
-      Pq.dataSchemaCache.keySet.forEach(k =>
-        if (k.startsWith(s"$dataPath|")) n += 1)
-      n
-    }
+    def entries(): Int = graft.sources.PersistedRoot
+      .cachedKeys(spark, dataPath).count(_._2 == "pq.schema")
     Pq.writeRoot(spark, root, raw.filter(col("vec_id") < 64L), "embedding",
       books)
     assert(data().count() == 64)

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.operators.{IvfIndex, KnnSearch}
+import graft.operators.{IvfIndex, KnnSearch, Pq}
 
 /** The opt-in ANN rewrite: a plain exact top-k over an IVF-partitioned
   * table becomes a probe-pruned scan when spark.graft.ivf.nprobe is set,
@@ -319,31 +319,104 @@ class IvfAutoProbeSpec extends SparkSpec {
     }
   }
 
-  test("listing TTL is a conf: default serves the cached listing, 0 re-lists every pass") {
-    val tmp = tempDir("graft-ttl-").toString
-    val path = s"$tmp/ivf"
-    IvfIndex.build(embeddings, "vec_id", "embedding", nlist = 4)
+  /** whether an optimized plan carries the injected cluster probe */
+  private def probes(plan: String): Boolean =
+    s"${IvfIndex.ClusterCol}#\\d+L? IN \\(".r.findFirstIn(plan).isDefined
+
+  test("an out-of-JVM sidecar rewrite, with no invalidate, is picked up on the very next plan") {
+    val path = tempDir("graft-foreign-").toString + "/ivf"
+    IvfIndex.build(embeddings, "vec_id", "embedding", nlist = 8)
       .write(path)
-    IvfAutoProbe.invalidate(spark, path) // start cold
-    val fp1 = IvfAutoProbe.sidecarFingerprint(spark, path)
-    assert(fp1.nonEmpty)
-    // out-of-JVM in-place rebuild, reduced to its observable: the
-    // sidecar's (name, length, mtime) listing changes underneath the
-    // cache (append a byte — mtime granularity alone can be coarse)
-    val f = new java.io.File(s"$path/_centroids").listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    val out = new java.io.FileOutputStream(f, true)
-    out.write(0); out.close()
-    // within the default TTL the STALE listing is served — the
-    // documented ≤TTL trade-off this conf exists to tune away
-    assert(IvfAutoProbe.sidecarFingerprint(spark, path) == fp1,
-      "within the default TTL the cached listing must be served")
-    spark.conf.set(IvfAutoProbe.ListingTtlConf, "0")
-    try {
-      val fp2 = IvfAutoProbe.sidecarFingerprint(spark, path)
-      assert(fp2.nonEmpty && fp2 != fp1,
-        "TTL 0 must pick up the rebuild on the very next pass")
-    } finally spark.conf.unset(IvfAutoProbe.ListingTtlConf)
+    val q = queryVec
+    def probed(): Boolean = probes(withRule(6) {
+      KnnSearch.topK(spark.read.parquet(path), "embedding", q, 10,
+          KnnSearch.NativeL2, tieBreak = Some("vec_id"))
+        .queryExecution.optimizedPlan.toString
+    })
+    assert(probed(), "6 of 8 clusters must be probed")
+    // another process rewrites the sidecar in place with 4 centroids: no
+    // in-JVM invalidation fires, and 6 >= 4 must now decline the rewrite
+    import spark.implicits._
+    val old = IvfIndex.load(spark, path, "vec_id", "embedding")
+    old.clusterIds.zip(old.centroids).take(4).toSeq
+      .map { case (c, v) => (c, v.toSeq) }
+      .toDF("cluster_id", "centroid")
+      .coalesce(1).write.mode("overwrite")
+      .parquet(s"$path/${IvfIndex.CentroidSidecar}")
+    assert(!probed(), "the rule planned with stale centroids")
+  }
+
+  test("IvfIndex.load and the rule share one centroid entry, parsed once; " +
+      "appendTo, deleteByIds, compact and Pq.appendEncoded leave no entry") {
+    import graft.sources.PersistedRoot
+    import spark.implicits._
+    val tmp = tempDir("graft-one-cache-").toString
+    def centroidEntries(root: String): Int =
+      PersistedRoot.cachedKeys(spark, root).count(_._2 == "ivf.centroids")
+    val q = queryVec
+    def topK(root: String) = KnnSearch.topK(spark.read.parquet(root),
+      "embedding", q, 10, KnnSearch.NativeL2, tieBreak = Some("vec_id"))
+    def optimized(df: org.apache.spark.sql.DataFrame): String =
+      withRule(6)(df.queryExecution.optimizedPlan.toString)
+    def rulePlan(root: String): String = optimized(topK(root))
+    def parsed(root: String) = {
+      val (fs, p) = PersistedRoot.fileSystem(spark, root)
+      IvfIndex.sidecarCentroids(spark, fs, p).get
+    }
+    val idx = IvfIndex.build(embeddings, "vec_id", "embedding", nlist = 8)
+    // load first: the rule plans from load's entry without a job
+    val a = s"$tmp/a"
+    idx.write(a)
+    val loaded = IvfIndex.load(spark, a, "vec_id", "embedding")
+    val df = topK(a)
+    var plan = ""
+    assert(jobsRun { plan = optimized(df) } == 0,
+      "the rule re-read centroids that load had parsed")
+    assert(probes(plan), plan)
+    assert(loaded.centroids.head eq parsed(a).head._2,
+      "load and the rule hold different parses")
+    assert(centroidEntries(a) == 1)
+    // the rule first: load then parses nothing beyond a warm load's data
+    // read, on the raw and the qualified spelling of the root alike
+    val b = s"$tmp/b"
+    idx.write(b)
+    rulePlan(b)
+    val afterRule = jobsRun(IvfIndex.load(spark, s"file:$b", "vec_id",
+      "embedding"))
+    assert(afterRule == jobsRun(IvfIndex.load(spark, b, "vec_id",
+      "embedding")), "load re-parsed centroids the rule had parsed")
+    assert(centroidEntries(b) == 1)
+    // every mutation drops every entry at or under its root
+    def warm(root: String): Unit = {
+      IvfIndex.load(spark, root, "vec_id", "embedding"); rulePlan(root)
+      assert(PersistedRoot.cachedKeys(spark, root).nonEmpty)
+    }
+    def leavesNone(what: String, root: String)(mutate: => Unit): Unit = {
+      mutate
+      assert(PersistedRoot.cachedKeys(spark, root).isEmpty,
+        s"$what left ${PersistedRoot.cachedKeys(spark, root)}")
+    }
+    warm(a)
+    leavesNone("appendTo", a)(IvfIndex.appendTo(spark, a,
+      embeddings.filter(col("vec_id") < 4L).select(
+        (col("vec_id") + 1000000L).as("vec_id"), col("embedding")),
+      "vec_id", "embedding"))
+    warm(a)
+    leavesNone("deleteByIds", a)(IvfIndex.deleteByIds(spark, a,
+      Seq(1000000L).toDF("vec_id"), "vec_id", "embedding"))
+    val dest = s"$tmp/dest"
+    IvfIndex.compact(spark, a, dest)
+    warm(dest)
+    leavesNone("compact", dest)(IvfIndex.compact(spark, b, dest))
+    val pq = s"$tmp/pq"
+    val raw = embeddings.select("vec_id", "embedding")
+    Pq.writeRoot(spark, pq, raw.filter(col("vec_id") < 64L), "embedding",
+      Pq.fit(raw, "vec_id", "embedding", m = 8, ksub = 16))
+    Pq.loadRoot(spark, pq).data(spark)
+    assert(PersistedRoot.cachedKeys(spark, pq).map(_._2).toSet ==
+      Set("pq.root", "pq.books", "pq.schema"))
+    leavesNone("Pq.appendEncoded", pq)(Pq.appendEncoded(spark, pq,
+      raw.filter(col("vec_id") === 64L), "embedding"))
   }
 
   test("filterSelectivity conf widens the probe budget for data-column-" +
