@@ -2,6 +2,9 @@
 # Run one of graft's two mains, graft.Verify or graft.Bench, directly with
 # java (fast iteration; skips sbt JVM startup).
 # Usage: scripts/run_main.sh graft.Verify|graft.Bench <args...>
+# Extra JVM options come from $GRAFT_JAVA_OPTS, e.g.
+#   GRAFT_JAVA_OPTS=-Dspark.graft.ivf.residentMaxBytes=0
+# runs every IVF search on its parquet scan instead of the resident tier.
 set -e
 cd "$(dirname "$0")/.."
 CP="target/scala-2.13/classes:/opt/spark/jars/*"
@@ -17,4 +20,5 @@ exec java $ADD_OPENS \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
+  $GRAFT_JAVA_OPTS \
   -cp "$CP" "$@"

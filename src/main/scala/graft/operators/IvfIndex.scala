@@ -391,7 +391,7 @@ final case class IvfIndex(
     require(sampleMod >= 1, s"sampleMod must be >= 1, got $sampleMod")
     graft.plans.VectorExpressions.ensureRegistered(assigned.sparkSession)
     import graft.functions.VectorFunctions.l2DistanceNative
-    assigned
+    served
       .filter(conv(substring(md5(col(idCol).cast("string")), 1, 2),
         16, 10).cast("long") % sampleMod === 0L)
       .select(col(idCol), KnnSearch.roundHalfUpCol(
@@ -430,9 +430,10 @@ final case class IvfIndex(
     val distC = KnnSearch.roundHalfUpCol(
       l2DistanceNative(col(vecCol), KnnSearch.litVec(query)), rankRoundDp)
     var best: Option[(Double, Long)] = None
+    val rows = served
     for (l <- layers to 1 by -1) {
       val mod = Seq.fill(l)(base.toLong).product
-      val members = assigned.filter(h % mod === 0L)
+      val members = rows.filter(h % mod === 0L)
       val scan =
         if (l == layers) members
         else members.filter(col(IvfIndex.ClusterCol).isin(probes: _*))
@@ -952,13 +953,20 @@ final case class IvfIndex(
       queryVecCol, k, nprobe, refine, metric, filter, filterSelectivity,
       tieBreak, rankRoundDp)
 
+  /** `assigned` as the search paths read it: the root's rows held on
+    * the driver when the root is small enough
+    * ([[IvfIndex.residentRows]]), resolved through the cache on every
+    * call, else the parquet scan itself */
+  private def served: DataFrame =
+    IvfIndex.residentRows(assigned).getOrElse(assigned)
+
   /** the corpus restricted to `components` (the reference's
     * `partition_names`) — a partition-column filter on the two-level
     * layout, the whole corpus when unscoped. */
   private def componentScope(components: Seq[Int]): DataFrame =
-    if (components.isEmpty) assigned
+    if (components.isEmpty) served
     else componentCol match {
-      case Some(c) => assigned.filter(col(c).isin(components: _*))
+      case Some(c) => served.filter(col(c).isin(components: _*))
       case None => throw new IllegalArgumentException(
         "components passed but this index was built without a " +
           "componentCol — build(..., componentCol = Some(...)) for the " +
@@ -1076,6 +1084,84 @@ object IvfIndex {
       s"base^layers ($base^$layers) exceeds the 32-bit hash-prefix " +
         "space — lower layers or base")
   val ClusterCol = "__ivf_cluster"
+
+  /** Session conf: the driver-heap budget, in bytes, of the resident
+    * serving tier — the IVF roots whose rows the search paths read from
+    * the driver instead of a parquet scan. It is a memory budget, like
+    * `spark.sql.autoBroadcastJoinThreshold`: the total over every
+    * resident root in the JVM. A root whose files exceed it is never
+    * resident; admitting a root evicts the oldest-admitted roots until
+    * the total fits; `0` turns the tier off (every search scans
+    * parquet). Default [[DefaultResidentMaxBytes]]. */
+  val ResidentMaxBytesConf = "spark.graft.ivf.residentMaxBytes"
+  val DefaultResidentMaxBytes: Long = 64L << 20
+
+  private def residentBudget(spark: SparkSession): Long = {
+    val raw = spark.conf.get(ResidentMaxBytesConf,
+      DefaultResidentMaxBytes.toString).trim
+    raw.toLongOption.filter(_ >= 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"$ResidentMaxBytesConf must be a byte count >= 0, got '$raw'"))
+  }
+
+  /** The rows of `assigned` — a persisted root's parquet scan, exactly
+    * as [[load]] reads it — as a driver-resident frame
+    * ([[graft.plans.ResidentRelation]]), or None when the tier is off,
+    * the root is over budget, or `assigned` is not a bare parquet scan.
+    * The rows are decoded once (one Spark job) into copied `UnsafeRow`s
+    * and kept in [[PersistedRoot.cachedSized]] under kind `ivf.rows`,
+    * stamped by the file listing the scan's relation already holds
+    * (path, length, mtime of every file — no extra I/O) and its schema,
+    * so the resident rows are always the files the scan would read; a
+    * rewrite the listing has not seen is caught by
+    * [[PersistedRoot.invalidate]] and the next [[load]]. A root that
+    * decodes larger than the budget is remembered as not resident for
+    * its stamp. */
+  private[graft] def residentRows(assigned: DataFrame): Option[DataFrame] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+    val spark = assigned.sparkSession
+    val budget = residentBudget(spark)
+    if (budget <= 0L) None
+    else assigned.queryExecution.analyzed match {
+      case lr: LogicalRelation if !lr.isStreaming => lr.relation match {
+        case h: HadoopFsRelation if h.location.rootPaths.size == 1 &&
+            h.location.isInstanceOf[PartitioningAwareFileIndex] &&
+            h.fileFormat.isInstanceOf[
+              org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat] =>
+          val files = h.location.asInstanceOf[PartitioningAwareFileIndex]
+            .allFiles().sortBy(_.getPath.toString)
+          if (files.iterator.map(_.getLen).sum > budget) None
+          else {
+            val root = h.location.rootPaths.head
+            val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+            val stamp = assigned.schema.catalogString + "|" + files.map(f =>
+              s"${f.getPath}:${f.getLen}:${f.getModificationTime}")
+              .mkString(";")
+            PersistedRoot.cachedSized(fs, root, "ivf.rows", stamp, budget) {
+              val schema = assigned.schema
+              val rows = assigned.queryExecution.toRdd.mapPartitions { it =>
+                val proj = org.apache.spark.sql.catalyst.expressions
+                  .UnsafeProjection.create(schema)
+                it.map(r => proj(r).copy())
+              }.collect()
+              // the row bytes plus a per-row object header
+              val bytes = rows.iterator.map(_.getSizeInBytes + 48L).sum
+              if (bytes > budget) (None, 0L)
+              else (Some(new graft.plans.ResidentRows(
+                rows.asInstanceOf[Array[org.apache.spark.sql.catalyst.InternalRow]],
+                bytes)), bytes)
+            }.map { data =>
+              graft.plans.LocalTopK.register(spark)
+              graft.plans.LocalTopK.dataFrame(spark,
+                graft.plans.ResidentRelation(lr.output.map(_.newInstance()),
+                  data))
+            }
+          }
+        case _ => None
+      }
+      case _ => None
+    }
+  }
 
   /** nearest-centroid cluster ids, closest first — shared by
     * [[IvfIndex#probeOrder]] and the [[graft.plans.IvfAutoProbe]]
@@ -2032,7 +2118,12 @@ object IvfIndex {
     * hazard at cluster scale). */
   def load(spark: SparkSession, path: String, idCol: String,
       vecCol: String): IvfIndex = {
-    val assigned = spark.read.parquet(path)
+    // the schema is cached per root stamp: parquet schema inference is a
+    // Spark job per read, and a serving loop may load once per query
+    val (fs, root) = PersistedRoot.fileSystem(spark, path)
+    val rootStamp = PersistedRoot.fsStamp(fs, root)
+    val assigned = spark.read.schema(PersistedRoot.cached(fs, root,
+      "ivf.schema", rootStamp)(spark.read.parquet(path).schema)).parquet(path)
     // the layout IS the manifest: a partition level other than the
     // cluster column means this index was written component-scoped
     val component = partitionColsOf(assigned)
@@ -2047,7 +2138,6 @@ object IvfIndex {
     // before (r21, guide §1.2 — across ~80 IVF-family queries × reps
     // this was the suite's single largest fixed overhead), and a
     // rewrite by any process is a new stamp.
-    val (fs, root) = PersistedRoot.fileSystem(spark, path)
     val byId = sidecarCentroids(spark, fs, root).getOrElse {
       // legacy layout (no sidecar): centroids COMPUTED FROM THE DATA,
       // stamped by the data listing and keyed on vecCol (two loads of
@@ -2055,7 +2145,7 @@ object IvfIndex {
       // entry). One pass, keyed on (cluster, dim) — the agg state is a
       // scalar per key, uniform by construction
       PersistedRoot.cached(fs, root, s"ivf.centroids.data|$vecCol",
-          PersistedRoot.fsStamp(fs, root)) {
+          rootStamp) {
         assigned
           .select(col(ClusterCol), posexplode(col(vecCol)).as(Seq("d", "x")))
           .groupBy(col(ClusterCol), col("d"))

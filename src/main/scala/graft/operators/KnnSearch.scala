@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
@@ -56,7 +58,10 @@ object KnnSearch {
       -dotProductNative(v, litVec(q))
   }
 
-  def litVec(q: Seq[Float]): Column = array(q.map(x => lit(x)): _*)
+  /** the query vector as ONE array literal (`array<float>`, no null
+    * elements) — one expression to build and analyse, however long the
+    * vector, where a per-element `array(lit, …)` was one per dimension */
+  def litVec(q: Seq[Float]): Column = typedLit(q.toArray)
 
   /** Cross-engine-replayable half-up rounding: `floor(x·10^dp + 0.5) /
     * 10^dp` — every step a single IEEE double op, so ANY engine
@@ -287,78 +292,157 @@ object KnnSearch {
         w
       }
     }.orNull
-    val bc = spark.sparkContext.broadcast((qSet, gateWords))
-    val local = corpus.mapPartitions { rows =>
-      val (qs, gw) = bc.value
-      // bounded max-heaps: head = current worst of the best k, evicted
-      // on a strictly better (dist, tie) candidate
-      final class Entry(val dist: Double, val tie: Any, val row: Row)
-      // null ties sort first, matching Spark's ascending null ordering
-      def cmp(a: Entry, b: Entry): Int = {
-        val c = java.lang.Double.compare(a.dist, b.dist)
-        if (c != 0) c
-        else if (a.tie == null && b.tie == null) 0
-        else if (a.tie == null) -1
-        else if (b.tie == null) 1
-        else a.tie.asInstanceOf[Comparable[Any]].compareTo(b.tie)
-      }
-      val ord = Ordering.fromLessThan[Entry]((a, b) => cmp(a, b) < 0)
-      val heaps = Array.fill(qs.length)(
-        new scala.collection.mutable.PriorityQueue[Entry]()(ord))
-      rows.foreach { row =>
-        if (!row.isNullAt(vecIdx)) {
-          // the default path extracts the float vector once per row; a
-          // raw scorer reads its own representation inside fn
-          val v = if (raw == null) row.getSeq[Float](vecIdx).toArray else null
-          val tie = tieKey(row.get(tieIdx))
-          // one gate read per row; a null gate value (can't occur for a
-          // partition column) scores against no query
-          val gv =
-            if (gw == null) -1
-            else if (row.isNullAt(gateIdx)) -1
-            else row.getAs[Number](gateIdx).intValue()
-          var qi = 0
-          while (qi < qs.length) {
-            if (gw == null ||
-              (gv >= 0 && (gv >> 6) < gw(qi).length &&
-                (gw(qi)(gv >> 6) & (1L << (gv & 63))) != 0L)) {
-              val qv = qs(qi)._2
-              // a silent skip here would quietly drop corpus rows from
-              // every result — mixed dimensions are a data bug, surface it
-              if (raw == null && qv.length != v.length)
-                throw new IllegalArgumentException(
-                  s"dimension mismatch in topKBatch: corpus vector has " +
-                    s"${v.length} dims, query '${qs(qi)._1}' has ${qv.length}")
-              var dist =
-                if (raw != null) raw(row, vecIdx, qi, qv) else distFn(v, qv)
-              // the same primitive half-up rounding as topK's ranked
-              // dist — batch results stay bit-equal to single-query
-              // search AND to the oracle's floor-form replay
-              roundScale.foreach(sc => dist = roundHalfUp(dist, sc))
-              val h = heaps(qi)
-              if (h.size < k) h.enqueue(new Entry(dist, tie, row))
-              else if (cmp(new Entry(dist, tie, row), h.head) < 0) {
-                h.dequeue(); h.enqueue(new Entry(dist, tie, row))
-              }
-            }
-            qi += 1
+    val gateOf: (Any => Int) = v =>
+      if (v == null) -1 else v.asInstanceOf[Number].intValue()
+    local(corpus) match {
+      case Some(rows) =>
+        // a local input (a resident root, a driver-built frame): the same
+        // heap pass over its rows on the driver, so the result is local
+        // too and collecting it runs no job
+        val dt = corpus.schema(tieBreak).dataType
+        val gateDt = if (gateIdx < 0) null else corpus.schema(gateIdx).dataType
+        val external =
+          if (raw == null) null
+          else CatalystTypeConverters.createToScalaConverter(corpus.schema)
+        val heaps = new QueryHeaps[InternalRow](qSet, gateWords, k, roundScale)
+        rows.foreach { r =>
+          if (!r.isNullAt(vecIdx)) {
+            val v = if (raw == null) r.getArray(vecIdx).toFloatArray() else null
+            val ext = if (raw == null) null else external(r).asInstanceOf[Row]
+            heaps.offer(r, if (r.isNullAt(tieIdx)) null else r.get(tieIdx, dt),
+              if (gateIdx < 0 || r.isNullAt(gateIdx)) -1
+              else gateOf(r.get(gateIdx, gateDt)),
+              (qi, qv) =>
+                if (raw != null) raw(ext, vecIdx, qi, qv)
+                else distFn(checkedDim(v, qv, qSet(qi)._1), qv))
           }
         }
+        val qidToCatalyst =
+          CatalystTypeConverters.createToCatalystConverter(queryIdType)
+        val fields = corpus.schema.fields.map(_.dataType).toSeq
+        val out = heaps.results.map { case (qi, dist, r) =>
+          InternalRow.fromSeq(
+            r.toSeq(fields) :+ dist :+ qidToCatalyst(qSet(qi)._1))
+        }.toSeq
+        graft.plans.LocalTopK.dataFrame(spark, LocalRelation(
+          org.apache.spark.sql.catalyst.types.DataTypeUtils
+            .toAttributes(outSchema), out))
+      case None =>
+        val bc = spark.sparkContext.broadcast((qSet, gateWords))
+        val scored = corpus.mapPartitions { rows =>
+          val (qs, gw) = bc.value
+          val heaps = new QueryHeaps[Row](qs, gw, k, roundScale)
+          rows.foreach { row =>
+            if (!row.isNullAt(vecIdx)) {
+              // the default path extracts the float vector once per row;
+              // a raw scorer reads its own representation inside fn
+              val v =
+                if (raw == null) row.getSeq[Float](vecIdx).toArray else null
+              heaps.offer(row, tieKey(row.get(tieIdx)),
+                if (gw == null || row.isNullAt(gateIdx)) -1
+                else gateOf(row.get(gateIdx)),
+                (qi, qv) =>
+                  if (raw != null) raw(row, vecIdx, qi, qv)
+                  else distFn(checkedDim(v, qv, qs(qi)._1), qv))
+            }
+          }
+          heaps.results.map { case (qi, dist, r) =>
+            Row.fromSeq(r.toSeq :+ dist :+ qs(qi)._1)
+          }
+        }(org.apache.spark.sql.Encoders.row(outSchema))
+        // final rank over ≤ partitions × |queries| × k rows — tiny by
+        // construction, so this exchange moves k-scale data, not the
+        // corpus
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("query_id"))
+          .orderBy(col(distCol), col(tieBreak))
+        scored
+          .withColumn("__rn", row_number().over(w))
+          .filter(col("__rn") <= k)
+          .drop("__rn")
+    }
+  }
+
+  /** `v` after checking it against the query's dimension — a silent
+    * skip would quietly drop corpus rows from every result, so mixed
+    * dimensions are a data bug surfaced here */
+  private def checkedDim(v: Array[Float], qv: Array[Float],
+      qid: Any): Array[Float] = {
+    if (qv.length != v.length)
+      throw new IllegalArgumentException(
+        s"dimension mismatch in topKBatch: corpus vector has " +
+          s"${v.length} dims, query '$qid' has ${qv.length}")
+    v
+  }
+
+  /** The rows of `df` when its optimized plan is a local relation —
+    * every leaf local and the whole plan folded on the driver — else
+    * None. */
+  private def local(df: DataFrame): Option[Seq[InternalRow]] = {
+    val leaves = df.queryExecution.analyzed.collectLeaves()
+    if (!leaves.forall {
+      case _: graft.plans.ResidentRelation => true
+      case l: LocalRelation => !l.isStreaming
+      case _ => false
+    }) None
+    else df.queryExecution.optimizedPlan match {
+      case l: LocalRelation if !l.isStreaming => Some(l.data)
+      case _ => None
+    }
+  }
+
+  /** The batch heap pass's per-query bounded heaps over rows of type
+    * `R`: a row is offered with its tie key and gate value, scored for
+    * every query its gate admits, and kept while it is among the best
+    * `k` by (distance, tie key); the distance is rounded half-up at
+    * `roundScale` first when given — the same primitive rounding as
+    * [[topK]]'s ranked dist, so batch results stay bit-equal to
+    * single-query search and to the oracle's floor-form replay. */
+  private final class QueryHeaps[R](qs: Array[(Any, Array[Float])],
+      gw: Array[Array[Long]], k: Int, roundScale: Option[Double]) {
+    // bounded max-heaps: head = current worst of the best k, evicted on
+    // a strictly better (dist, tie) candidate
+    private final class Entry(val dist: Double, val tie: Any, val row: R)
+    // null ties sort first, matching Spark's ascending null ordering
+    private def cmp(a: Entry, b: Entry): Int = {
+      val c = java.lang.Double.compare(a.dist, b.dist)
+      if (c != 0) c
+      else if (a.tie == null && b.tie == null) 0
+      else if (a.tie == null) -1
+      else if (b.tie == null) 1
+      else a.tie.asInstanceOf[Comparable[Any]].compareTo(b.tie)
+    }
+    private val heaps = Array.fill(qs.length)(
+      new scala.collection.mutable.PriorityQueue[Entry]()(
+        Ordering.fromLessThan[Entry]((a, b) => cmp(a, b) < 0)))
+
+    /** `gv` is the row's gate value (-1 scores it for no query when a
+      * gate is set); `dist(qi, qv)` scores it for query `qi` */
+    def offer(row: R, tie: Any, gv: Int,
+        dist: (Int, Array[Float]) => Double): Unit = {
+      var qi = 0
+      while (qi < qs.length) {
+        if (gw == null ||
+          (gv >= 0 && (gv >> 6) < gw(qi).length &&
+            (gw(qi)(gv >> 6) & (1L << (gv & 63))) != 0L)) {
+          var d = dist(qi, qs(qi)._2)
+          roundScale.foreach(sc => d = roundHalfUp(d, sc))
+          val h = heaps(qi)
+          if (h.size < k) h.enqueue(new Entry(d, tie, row))
+          else if (cmp(new Entry(d, tie, row), h.head) < 0) {
+            h.dequeue(); h.enqueue(new Entry(d, tie, row))
+          }
+        }
+        qi += 1
       }
+    }
+
+    /** (query index, dist, row) of every kept row, each query's rows
+      * best first */
+    def results: Iterator[(Int, Double, R)] =
       heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-        val qid = qs(qi)._1
-        h.iterator.map(e => Row.fromSeq(e.row.toSeq :+ e.dist :+ qid))
+        h.dequeueAll[Entry].reverseIterator.map(e => (qi, e.dist, e.row))
       }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
-    // final rank over ≤ partitions × |queries| × k rows — tiny by
-    // construction, so this exchange moves k-scale data, not the corpus
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col(distCol), col(tieBreak))
-    local
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k)
-      .drop("__rn")
   }
 
   /** The batch EXACT re-rank pass shared by the quantized batch

@@ -24,5 +24,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // opt-in approximate-distinct rewrite: count(DISTINCT x) → the HLL
     // register pipeline (spark.graft.approxDistinct.m)
     ext.injectOptimizerRule(session => ApproxDistinctRewrite(session))
+    // top-k, sort and Project/Filter chains over driver-resident rows
+    // fold on the driver (the IVF resident tier)
+    ext.injectOptimizerRule(_ => LocalTopK)
   }
 }

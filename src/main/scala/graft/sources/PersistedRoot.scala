@@ -221,9 +221,12 @@ private[graft] object PersistedRoot {
     while (it.hasNext) it.next().apply(root)
   }
 
-  /** One cached value: the stamp it was parsed under, and its insertion
-    * number for the oldest-first eviction. */
-  private final case class Entry(stamp: String, value: Any, seq: Long)
+  /** One cached value: the stamp it was parsed under, its insertion
+    * number for the oldest-first eviction, and the heap bytes it holds
+    * against a byte budget (0 for metadata, which only the entry count
+    * bounds). */
+  private final case class Entry(stamp: String, value: Any, seq: Long,
+      bytes: Long = 0L)
 
   /** The driver's one cache of metadata parsed from persisted roots —
     * IVF centroids and SQ8 grids, PQ books, root metadata and data
@@ -264,16 +267,51 @@ private[graft] object PersistedRoot {
     if (hit != null && hit.stamp == stamp) hit.value.asInstanceOf[V]
     else {
       val v = load
-      if (hit == null && metaCache.size >= MaxCachedEntries) {
-        var oldest: java.util.Map.Entry[(String, String), Entry] = null
-        metaCache.entrySet.forEach(e =>
-          if (oldest == null || e.getValue.seq < oldest.getValue.seq)
-            oldest = e)
-        if (oldest != null) metaCache.remove(oldest.getKey, oldest.getValue)
-      }
+      if (hit == null && metaCache.size >= MaxCachedEntries)
+        evictOldest(_ => true)
       metaCache.put(key, Entry(stamp, v, inserts.incrementAndGet()))
       v
     }
+  }
+
+  /** [[cached]] for values that hold data rather than metadata: `load`
+    * returns the value with the heap bytes it holds, and every sized
+    * entry, of any root and kind, shares one byte `budget`. A hit is
+    * served only while its bytes fit the caller's budget; admitting a
+    * value evicts the OLDEST-inserted sized entries until the total
+    * fits, and a value larger than the whole budget is returned
+    * without being kept. */
+  def cachedSized[V](fs: FileSystem, path: Path, kind: String, stamp: String,
+      budget: Long)(load: => (V, Long)): V = {
+    val key = (fs.makeQualified(path).toString, kind)
+    val hit = metaCache.get(key)
+    if (hit != null && hit.stamp == stamp && hit.bytes <= budget)
+      hit.value.asInstanceOf[V]
+    else {
+      val (v, bytes) = load
+      if (bytes <= budget) metaCache.synchronized {
+        metaCache.remove(key)
+        def sized = {
+          var total = 0L
+          metaCache.values.forEach(e => total += e.bytes)
+          total
+        }
+        while (sized + bytes > budget && evictOldest(_.bytes > 0L)) ()
+        if (metaCache.size >= MaxCachedEntries) evictOldest(_ => true)
+        metaCache.put(key, Entry(stamp, v, inserts.incrementAndGet(), bytes))
+      }
+      v
+    }
+  }
+
+  /** drop the oldest-inserted entry among those `eligible`; false when
+    * there is none */
+  private def evictOldest(eligible: Entry => Boolean): Boolean = {
+    var oldest: java.util.Map.Entry[(String, String), Entry] = null
+    metaCache.entrySet.forEach(e =>
+      if (eligible(e.getValue) &&
+        (oldest == null || e.getValue.seq < oldest.getValue.seq)) oldest = e)
+    oldest != null && metaCache.remove(oldest.getKey, oldest.getValue)
   }
 
   /** the (qualified path, kind) keys [[cached]] holds at or under
@@ -283,6 +321,15 @@ private[graft] object PersistedRoot {
     val q = qualified(spark, root)
     import scala.jdk.CollectionConverters._
     metaCache.keySet.asScala.filter(k => atOrUnder(q, k._1)).toSeq
+  }
+
+  /** the bytes the sized entries ([[cachedSized]]) at or under `root`
+    * hold */
+  private[graft] def cachedBytes(spark: SparkSession, root: String): Long = {
+    val q = qualified(spark, root)
+    var total = 0L
+    metaCache.forEach((k, e) => if (atOrUnder(q, k._1)) total += e.bytes)
+    total
   }
 
   /** Cheap content stamp of ONE directory level: name:length:mtime of

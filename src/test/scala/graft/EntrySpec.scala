@@ -250,10 +250,11 @@ class EntrySpec extends SparkSpec {
     // the prefilter strategy's whole value is that the metadata
     // predicate rides INSIDE a probe-pruned scan: the plan must show
     // a non-empty PartitionFilters on __ivf_cluster (2 of 8 probed
-    // directories read, not a full scan + post-hoc filter)
-    val plan = SparkEntry.queries("q209_filtered_ann")(
+    // directories read, not a full scan + post-hoc filter) — on the
+    // parquet scan; the resident tier reads no files
+    val plan = onSparkPath(SparkEntry.queries("q209_filtered_ann")(
         spark, "/root/testdata/sf0.001")
-      .queryExecution.executedPlan.toString
+      ).queryExecution.executedPlan.toString
     val pf = "PartitionFilters: \\[[^\\]]*__ivf_cluster[^\\]]*\\]".r
       .findFirstIn(plan)
     assert(pf.exists(f => !f.contains("[]")),

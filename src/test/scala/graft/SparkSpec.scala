@@ -81,6 +81,23 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     compiles.getCount - before
   }
 
+  /** `body` with the session confs `kvs` set, each restored after */
+  def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** `body` on the Spark path: IVF searches built inside it read their
+    * root's parquet scan, not the driver-resident rows (a plan built
+    * here keeps that scan when it runs later) */
+  def onSparkPath[T](body: => T): T =
+    withConf(graft.operators.IvfIndex.ResidentMaxBytesConf -> "0")(body)
+
   private val tempDirs =
     new java.util.concurrent.ConcurrentLinkedQueue[Path]()
 

@@ -490,8 +490,10 @@ class IvfIndexSpec extends SparkSpec {
     val comps = Seq(1, 3, 5)
     val qs = embeddings.filter(col("vec_id").isin(0, 1, 2))
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val batchDf = loaded.searchBatch(qs, "qid", "qv", k = 5, nprobe = 3,
-      tieBreak = "vec_id", rankRoundDp = Some(4), components = comps)
+    // the parquet scan's shape: the resident tier reads no files
+    val batchDf = onSparkPath(loaded.searchBatch(qs, "qid", "qv", k = 5,
+      nprobe = 3, tieBreak = "vec_id", rankRoundDp = Some(4),
+      components = comps))
     // ONE scan, with the component restriction AND the probe union both
     // as parquet PartitionFilters — the batch form keeps the flagship
     // doubly-pruned shape
@@ -621,9 +623,10 @@ class IvfIndexSpec extends SparkSpec {
     // whole cluster directories inside them are skipped at listing time.
     // rankRoundDp = Some(4) is the driver-entry (q56) form: the rounding
     // is a projection and must not disturb the listing-time prune.
-    val plan = loaded.search(q, 10, nprobe = 2,
+    // (the parquet scan's shape: the resident tier reads no files)
+    val plan = onSparkPath(loaded.search(q, 10, nprobe = 2,
         tieBreak = Some("vec_id"), components = comps,
-        rankRoundDp = Some(4))
+        rankRoundDp = Some(4)))
       .queryExecution.executedPlan.toString
     val pf = "PartitionFilters: \\[[^\\]]*\\]".r.findFirstIn(plan)
     assert(pf.exists(f => f.contains("label") &&
@@ -1781,7 +1784,9 @@ class IvfIndexSpec extends SparkSpec {
     val loaded = IvfIndex.load(spark, s"$tmp/ivf", "vec_id", "embedding")
     val q = queryVecs(1).head
     val m = pmod(col("vec_id"), lit(3L)) === 1L
-    val scan = loaded.probedScan(q, nprobe = 2, filter = Some(m))
+    // the parquet scan's shape: the resident tier reads no files
+    val scan = onSparkPath(loaded.probedScan(q, nprobe = 2,
+      filter = Some(m)))
     val plan = scan.queryExecution.executedPlan.toString
     val pf = "PartitionFilters: \\[[^\\]]*__ivf_cluster[^\\]]*\\]".r
       .findFirstIn(plan)
@@ -1861,9 +1866,10 @@ class IvfIndexSpec extends SparkSpec {
     assert(res == truth,
       "scoped + filtered full-probe search must be the exact " +
         "filtered within-scope top-k")
-    // both directory levels still prune with the predicate present
-    val plan = loaded.probedScan(q, nprobe = 2,
-        components = Seq(comp), filter = Some(m))
+    // both directory levels still prune with the predicate present (on
+    // the parquet scan: the resident tier reads no files)
+    val plan = onSparkPath(loaded.probedScan(q, nprobe = 2,
+        components = Seq(comp), filter = Some(m)))
       .queryExecution.executedPlan.toString
     val pf = "PartitionFilters: \\[[^\\]]*\\]".r.findFirstIn(plan)
     assert(pf.exists(f => f.contains(IvfIndex.ClusterCol) &&

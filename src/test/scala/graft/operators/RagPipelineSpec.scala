@@ -203,8 +203,9 @@ class RagPipelineSpec extends SparkSpec {
     val q = emb.filter(col("vec_id") === 0)
       .select("embedding").head().getSeq[Float](0)
 
-    val pruned = RagPipeline.retrieveThinIvf(idx, docsT, "doc_id", q,
-      "spark table", Seq(1, 3), nprobe = 2)
+    // the parquet scan's shape: the resident tier reads no files
+    val pruned = onSparkPath(RagPipeline.retrieveThinIvf(idx, docsT,
+      "doc_id", q, "spark table", Seq(1, 3), nprobe = 2))
     val plan = pruned.queryExecution.executedPlan.toString
     // every index-scan leg must carry PartitionFilters on BOTH the
     // component and the cluster directory level — the flagship

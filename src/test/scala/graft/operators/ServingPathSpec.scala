@@ -73,12 +73,23 @@ class ServingPathSpec extends SparkSpec {
     Pq.topK(data, "vec_id", "embedding", q, 10, root,
       nprobe = 3, tieBreak = Some("vec_id"), rankRoundDp = Some(4))
 
+  /** a quantized IVF root laid out by component and cluster */
+  private lazy val scopedIvf = {
+    IvfIndex.build(embeddings.withColumn("component",
+        (col("vec_id") % 4).cast("int")), "vec_id", "embedding", nlist = 8,
+        componentCol = Some("component"))
+      .write(s"$tmp/ivf_scoped", quantize = true)
+    IvfIndex.load(spark, s"$tmp/ivf_scoped", "vec_id", "embedding")
+  }
+
   test("a single quantized top-k is ONE Spark job: IVF-SQ8 and PQ on " +
       "flat, IVF, residual and OPQ roots") {
     val q = queryVec(3L)
+    // the IVF root read through its parquet scan; the resident tier's
+    // zero-job rows are below
     val searches: Seq[(String, () => DataFrame)] =
-      ("IvfIndex.searchQuantized", () => ivf.searchQuantized(q, 10,
-        nprobe = 3, tieBreak = Some("vec_id"), rankRoundDp = Some(4))) +:
+      ("IvfIndex.searchQuantized", () => onSparkPath(ivf.searchQuantized(q,
+        10, nprobe = 3, tieBreak = Some("vec_id"), rankRoundDp = Some(4)))) +:
         pqRoots.map { case (name, root) =>
           val data = root.data(spark)
           (s"Pq.topK $name", () => pqSearch(root, data)(q))
@@ -90,6 +101,41 @@ class ServingPathSpec extends SparkSpec {
       val jobs = jobsRun { again = search().collect() }
       assert(jobs == 1, s"$name ran $jobs Spark jobs, expected one")
       assert(again.toSeq == first.toSeq, s"$name is not deterministic")
+    }
+  }
+
+  test("a resident IVF root answers search (scoped and unscoped), " +
+      "searchQuantized and searchBatch with ZERO Spark jobs, and a second " +
+      "query vector compiles no class") {
+    import spark.implicits._
+    VectorExpressions.ensureRegistered(spark)
+    def batch(ids: Seq[Long]) = ids.map(i => (i, queryVec(i))).toDF("qid", "qvec")
+    val (qa, qb) = (queryVec(3L), queryVec(11L))
+    val batches = Map(qa -> batch(Seq(3L, 5L, 8L)),
+      qb -> batch(Seq(11L, 13L, 21L)))
+    val searches: Seq[(String, Seq[Float] => DataFrame)] = Seq(
+      ("IvfIndex.search", q => scopedIvf.search(q, 10, nprobe = 3,
+        metric = KnnSearch.NativeL2, tieBreak = Some("vec_id"),
+        rankRoundDp = Some(4))),
+      ("IvfIndex.search scoped", q => scopedIvf.search(q, 10, nprobe = 3,
+        metric = KnnSearch.NativeL2, tieBreak = Some("vec_id"),
+        components = Seq(1), rankRoundDp = Some(4))),
+      ("IvfIndex.searchQuantized", q => scopedIvf.searchQuantized(q, 10,
+        nprobe = 3, tieBreak = Some("vec_id"), rankRoundDp = Some(4))),
+      ("IvfIndex.searchBatch", q => scopedIvf.searchBatch(
+        batches(q), "qid", "qvec", 10, nprobe = 3,
+        tieBreak = "vec_id", rankRoundDp = Some(4),
+        metric = KnnSearch.NativeL2)))
+    for ((name, search) <- searches) {
+      val first = search(qa).collect()
+      assert(first.nonEmpty, s"$name returned no rows")
+      var again: Array[org.apache.spark.sql.Row] = null
+      val jobs = jobsRun { again = search(qa).collect() }
+      assert(jobs == 0, s"$name ran $jobs Spark jobs on a resident root")
+      assert(again.toSeq == first.toSeq, s"$name is not deterministic")
+      val compiled = classesCompiled { search(qb).collect() }
+      assert(compiled == 0,
+        s"$name compiled $compiled new classes for a second query vector")
     }
   }
 

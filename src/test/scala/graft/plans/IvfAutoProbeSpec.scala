@@ -376,15 +376,17 @@ class IvfAutoProbeSpec extends SparkSpec {
     assert(loaded.centroids.head eq parsed(a).head._2,
       "load and the rule hold different parses")
     assert(centroidEntries(a) == 1)
-    // the rule first: load then parses nothing beyond a warm load's data
-    // read, on the raw and the qualified spelling of the root alike
+    // the rule first: load then holds the rule's parse, on the raw and
+    // the qualified spelling of the root alike, and a warm load runs no
+    // job at all
     val b = s"$tmp/b"
     idx.write(b)
     rulePlan(b)
-    val afterRule = jobsRun(IvfIndex.load(spark, s"file:$b", "vec_id",
-      "embedding"))
-    assert(afterRule == jobsRun(IvfIndex.load(spark, b, "vec_id",
-      "embedding")), "load re-parsed centroids the rule had parsed")
+    val ruleParse = parsed(b).head._2
+    assert(IvfIndex.load(spark, s"file:$b", "vec_id", "embedding")
+      .centroids.head eq ruleParse, "load re-parsed centroids the rule had parsed")
+    assert(jobsRun(IvfIndex.load(spark, b, "vec_id", "embedding")) == 0,
+      "a warm load ran a Spark job")
     assert(centroidEntries(b) == 1)
     // every mutation drops every entry at or under its root
     def warm(root: String): Unit = {
