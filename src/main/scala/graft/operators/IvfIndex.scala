@@ -61,6 +61,9 @@ final case class IvfIndex(
 
   val nlist: Int = centroids.length
 
+  /** the IVF layout the search drivers probe */
+  private def layout = Some((centroids, clusterIds))
+
   /** nearest-centroid CLUSTER ids for a query, driver-side (nlist is
     * tiny). Cluster ids need not be contiguous — k-means can leave a
     * cluster empty, so a persisted index may hold a sparse id set. */
@@ -74,7 +77,8 @@ final case class IvfIndex(
     QuantizedSearch.widenedNprobe(nprobe, selectivity, nlist)
 
   /** The probe-pruned (optionally component- and predicate-scoped)
-    * scan under [[search]] — exposed so diagnostics (candidate
+    * scan under [[search]] ([[QuantizedSearch.setup]]'s, with no
+    * codec) — exposed so diagnostics (candidate
     * counts, operating-curve queries like q209) read the same frame
     * the operator ranks, instead of hand-rolling the root read. The
     * predicate sits directly on the scan: a partition-valued or
@@ -87,16 +91,13 @@ final case class IvfIndex(
       metric: KnnSearch.Metric = KnnSearch.L2,
       components: Seq[Int] = Nil,
       filter: Option[Column] = None,
-      filterSelectivity: Option[Double] = None): DataFrame = {
-    val probes = QuantizedSearch.probePlan(Some((centroids, clusterIds)),
-      metric, nprobe, filter, filterSelectivity, Seq(query)).get.head
-    val scan = componentScope(components)
-      .filter(col(IvfIndex.ClusterCol).isin(probes: _*))
-    filter.foldLeft(scan)(_.filter(_))
-  }
+      filterSelectivity: Option[Double] = None): DataFrame =
+    QuantizedSearch.setup(componentScope(components), None, layout, nprobe,
+      metric, filter, filterSelectivity, Seq(query)).scan
 
   /** V5 approximate search: probe the `nprobe` nearest clusters, exact
-    * top-k inside them. A non-empty `components` additionally restricts
+    * top-k inside them — [[QuantizedSearch.searchOne]] with no codec.
+    * A non-empty `components` additionally restricts
     * the scan to those component partitions — on a two-level
     * [[write]] layout both filters become parquet PartitionFilters, so
     * the reference's `partition_names` + ANN flagship query is ONE
@@ -129,10 +130,9 @@ final case class IvfIndex(
       rankRoundDp: Option[Int] = None,
       filter: Option[Column] = None,
       filterSelectivity: Option[Double] = None): DataFrame =
-    KnnSearch.topK(
-      probedScan(query, nprobe, metric, components, filter,
-        filterSelectivity),
-      vecCol, query, k, metric, tieBreak, rankRoundDp = rankRoundDp)
+    QuantizedSearch.searchOne(componentScope(components), idCol, vecCol,
+      None, layout, query, k, nprobe, 1, metric, filter, filterSelectivity,
+      tieBreak, rankRoundDp)
 
   /** Batch V5: ONE pruned scan serves a whole query set, and every
     * query gets EXACTLY its single-query [[search]] result. The scan
@@ -141,7 +141,9 @@ final case class IvfIndex(
     * `metric`, like [[search]]); inside it, per-query bounded k-heaps
     * ([[KnnSearch.topKBatchCollected]], same metric arithmetic) are
     * GATED on the row's cluster: a row is scored against query `i` only
-    * when its `__ivf_cluster` is in query i's own probe set.
+    * when its `__ivf_cluster` is in query i's own probe set. This is
+    * [[QuantizedSearch.searchBatch]] with no codec: one heap pass, no
+    * cut.
     *
     * The gate is what makes this shape hold at scale. Ungated, a
     * diverse batch is quadratic-ish: the union approaches nlist (the
@@ -169,29 +171,10 @@ final case class IvfIndex(
       components: Seq[Int] = Nil,
       metric: KnnSearch.Metric = KnnSearch.L2,
       filter: Option[Column] = None,
-      filterSelectivity: Option[Double] = None): DataFrame = {
-    // ONE driver-side collect serves both probe planning and the
-    // broadcast heap pass (the query table is small by contract, but
-    // re-collecting it would still re-run its plan — e.g. a model
-    // embedder seam — twice)
-    val qSet = KnnSearch.collectQueries(queries, queryIdCol, queryVecCol)
-    val perQueryProbes = QuantizedSearch.probePlan(
-      Some((centroids, clusterIds)), metric, nprobe, filter,
-      filterSelectivity, qSet.map(_._2.toSeq).toSeq).get
-    val union = perQueryProbes.flatten.distinct.toSeq
-    // the FILTER sits on the shared scan, before the per-query gated
-    // heaps: one predicate evaluation per scanned row, all queries —
-    // so each query's result is bit-equal to its single [[search]] at
-    // the same (filter, effective nprobe): the filtered-batch parity
-    // contract, spec-asserted like the unfiltered one
-    val scan = componentScope(components)
-      .filter(col(IvfIndex.ClusterCol).isin(union: _*))
-    KnnSearch.topKBatchCollected(
-      filter.foldLeft(scan)(_.filter(_)),
-      vecCol, qSet, queries.schema(queryIdCol).dataType, k, tieBreak,
-      rankRoundDp = rankRoundDp, metric = metric,
-      gate = Some(KnnSearch.BatchGate(IvfIndex.ClusterCol, perQueryProbes)))
-  }
+      filterSelectivity: Option[Double] = None): DataFrame =
+    QuantizedSearch.searchBatch(componentScope(components), idCol, vecCol,
+      None, layout, queries, queryIdCol, queryVecCol, k, nprobe, 1, metric,
+      filter, filterSelectivity, tieBreak, rankRoundDp)
 
   /** kNN-GRAPH construction over the whole index: every corpus row is
     * a query, probing its own `nprobe` nearest clusters (L2) and
@@ -237,12 +220,7 @@ final case class IvfIndex(
     require(k >= 1, s"k must be >= 1, got $k")
     val np = math.max(1, math.min(nprobe, nlist))
     graft.plans.VectorExpressions.ensureRegistered(assigned.sparkSession)
-    import graft.functions.VectorFunctions.{l2DistanceNative, l2SquaredNative}
-    val probeStructs = centroids.zip(clusterIds).map { case (c, cid) =>
-      struct(
-        l2SquaredNative(col(vecCol), KnnSearch.litVec(c.toSeq)).as("d"),
-        lit(cid).as("cid"))
-    }
+    import graft.functions.VectorFunctions.l2DistanceNative
     // null vectors produce null probe/edge distances, which sort
     // NULLS FIRST into every ranking — exclude them on both sides
     // (r13 advice, the BinaryHash.topK consideration)
@@ -254,11 +232,7 @@ final case class IvfIndex(
     }
     val pairsLeft = srcSide
       .select(col(idCol).as("__src"), col(vecCol).as("__sv"),
-        slice(array_sort(array(probeStructs: _*)), 1, np).as("__ps"))
-      .select(col("__src"), col("__sv"),
-        explode(col("__ps.cid")).as("__pcRaw"))
-      .select(col("__src"), col("__sv"),
-        col("__pcRaw").cast("long").as("__pc"))
+        explode(probedClusters(np)).as("__pc"))
     val right = nonNull.select(
       col(IvfIndex.ClusterCol).cast("long").as("__nc"),
       col(idCol).as("__nbr"), col(vecCol).as("__nv"))
@@ -275,6 +249,17 @@ final case class IvfIndex(
       .filter(col("rank") <= k)
       .select(col("__src").as("src"), col("rank"), col("__nbr").as("nbr"),
         col("dist"))
+  }
+
+  /** each row's `np` nearest cluster ids (long), ranked in the plan by
+    * sorting (exact-double L2², cluster id) structs — [[probeOrder]]'s
+    * fold and tie rule, so a SQL replay ranks identically */
+  private def probedClusters(np: Int): Column = {
+    import graft.functions.VectorFunctions.l2SquaredNative
+    slice(array_sort(array(centroids.zip(clusterIds).map { case (c, cid) =>
+      struct(l2SquaredNative(col(vecCol), KnnSearch.litVec(c.toSeq)).as("d"),
+        lit(cid.toLong).as("cid"))
+    }: _*)), 1, np)("cid")
   }
 
   /** Incremental kNN-graph repair after CDC ([[IvfIndex.deleteByIds]]/
@@ -305,7 +290,7 @@ final case class IvfIndex(
       "an id cannot be both deleted and appended in one maintenance " +
         "step — apply the CDC batches in order")
     graft.plans.VectorExpressions.ensureRegistered(assigned.sparkSession)
-    import graft.functions.VectorFunctions.{l2DistanceNative, l2SquaredNative}
+    import graft.functions.VectorFunctions.l2DistanceNative
     val np = math.max(1, math.min(nprobe, nlist))
     val affectedByDelete: Array[Long] =
       if (deletedIds.isEmpty) Array.empty
@@ -321,17 +306,10 @@ final case class IvfIndex(
         val kth = oldGraph.filter(col("rank") === lit(k.toLong))
           .select(col("src").as("__s"), col("dist").as("__kd"),
             col("nbr").as("__kn"))
-        val probeStructs = centroids.zip(clusterIds).map { case (c, cid) =>
-          struct(
-            l2SquaredNative(col(vecCol), KnnSearch.litVec(c.toSeq))
-              .as("d"),
-            lit(cid.toLong).as("cid"))
-        }
         val existing = assigned
           .filter(!col(idCol).isin(appendedIds: _*))
           .select(col(idCol).as("__src"), col(vecCol).as("__sv"),
-            slice(array_sort(array(probeStructs: _*)), 1, np)("cid")
-              .as("__pc"))
+            probedClusters(np).as("__pc"))
         existing
           .join(broadcast(app),
             array_contains(col("__pc"), col("__ac")) &&
@@ -901,7 +879,7 @@ final case class IvfIndex(
       filter: Option[Column] = None,
       filterSelectivity: Option[Double] = None): DataFrame =
     QuantizedSearch.searchOne(componentScope(components), idCol, vecCol,
-      sq8Codec, Some((centroids, clusterIds)), query, k, nprobe, refine,
+      Some(sq8Codec), layout, query, k, nprobe, refine,
       metric, filter, filterSelectivity, tieBreak, rankRoundDp)
 
   /** the SQ8 codec this index was written with */
@@ -915,21 +893,21 @@ final case class IvfIndex(
   }
 
   /** Batch IVF-SQ8: [[searchQuantized]]'s two-pass shape composed with
-    * [[searchBatch]]'s probe gate — many queries, ONE narrow code scan.
+    * [[searchBatch]]'s probe gate — many queries, ONE scan
+    * ([[QuantizedSearch.searchBatch]]).
     *
-    * Approximate pass: one scan over the probe UNION reading only
-    * `(id, __sq8_code, cluster)` — the float vectors are never read —
-    * with per-task bounded heaps of `k·refine` candidates PER QUERY,
-    * each row scored only for queries whose own probe set holds its
-    * cluster (the bit-packed gate), by the identical decode-and-distance
-    * double math as [[graft.plans.Sq8L2SquaredExpr]]. Exact pass: the
-    * union of all candidate ids (k·refine·|queries| — answer-contract
-    * sized) is re-read from the doubly-pruned scan, joined
-    * broadcast-style to the per-query
-    * candidate pairs and the query vectors, scored exactly
-    * (`sqrt(graft_l2sq)` / `1 − graft_cos`, the single-query exact
-    * formulas, rounded by the cross-engine floor form), and ranked per
-    * query — the final exchange moves k-scale rows, never the corpus.
+    * Code pass: one scan over the probe UNION with per-task bounded
+    * heaps of `k·refine` whole rows PER QUERY, each row scored only for
+    * queries whose own probe set holds its cluster (the bit-packed
+    * gate), by the identical decode-and-distance double math as
+    * [[graft.plans.Sq8L2SquaredExpr]]. Exact pass: the same heap pass
+    * over only those ≤ k·refine·|queries| rows, each scored only for
+    * the query that nominated it, by the single-query exact formulas
+    * (`sqrt(graft_l2sq)` / `1 − graft_cos`, rounded by the
+    * cross-engine floor form). Nothing but the query set is collected
+    * at call time; a resident root answers the whole batch on the
+    * driver with no Spark job, and over parquet the final exchanges
+    * move k-scale rows, never the corpus.
     * Metric follows the grid exactly as in [[searchQuantized]] (L2 on a
     * raw grid, cosine on a normalized grid — enforced). Per-query
     * results are bit-equal to [[searchQuantized]] at the same
@@ -949,7 +927,7 @@ final case class IvfIndex(
       filter: Option[Column] = None,
       filterSelectivity: Option[Double] = None): DataFrame =
     QuantizedSearch.searchBatch(componentScope(components), idCol, vecCol,
-      sq8Codec, Some((centroids, clusterIds)), queries, queryIdCol,
+      Some(sq8Codec), layout, queries, queryIdCol,
       queryVecCol, k, nprobe, refine, metric, filter, filterSelectivity,
       tieBreak, rankRoundDp)
 
@@ -1167,7 +1145,8 @@ object IvfIndex {
     * [[IvfIndex#probeOrder]] and the [[graft.plans.IvfAutoProbe]]
     * optimizer rule. */
   def probeOrder(centroids: Array[Array[Float]], clusterIds: Array[Int],
-      query: Seq[Float]): Seq[Int] =
+      query: Seq[Float]): Seq[Int] = {
+    val q = query.toArray
     centroids.zipWithIndex
       .map { case (c, i) =>
         // double math per term (not float-subtract-then-widen): the probe
@@ -1179,11 +1158,12 @@ object IvfIndex {
         var s = 0.0
         var j = 0
         while (j < c.length) {
-          val d = c(j).toDouble - query(j).toDouble; s += d * d; j += 1
+          val d = c(j).toDouble - q(j).toDouble; s += d * d; j += 1
         }
         (s, clusterIds(i))
       }
       .sortBy(_._1).map(_._2).toSeq
+  }
 
   /** cluster ids ranked most-cosine-similar to the query first: both
     * sides are unit-normalized in the scoring (on the unit sphere

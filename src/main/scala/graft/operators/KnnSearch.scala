@@ -149,8 +149,8 @@ object KnnSearch {
       k, tieBreak, distCol, rankRoundDp, metric)
 
   /** Driver-side query-set collection shared by [[topKBatch]] and
-    * [[IvfIndex#searchBatch]] — the query table is collected ONCE and
-    * reused for probe planning and the broadcast heap pass. Null query
+    * [[QuantizedSearch.searchBatch]] — the query table is collected
+    * ONCE and reused for probe planning and the heap passes. Null query
     * vectors fail loudly here instead of NPE-ing inside an executor. */
   private[operators] def collectQueries(queries: DataFrame,
       queryIdCol: String, queryVecCol: String)
@@ -216,12 +216,15 @@ object KnnSearch {
 
   /** Optional per-query scoring gate for [[topKBatchCollected]]: a row
     * is scored against query `i` only when the row's `col` value is in
-    * `allowed(i)` (aligned with the query set). [[IvfIndex.searchBatch]]
-    * passes each query's own probed clusters here, which makes the
+    * `allowed(i)` (aligned with the query set).
+    * [[QuantizedSearch.searchBatch]] passes each query's own probed
+    * clusters here, which makes the
     * shared scan's per-row work Σ_q nprobe/nlist instead of |queries| —
     * the whole row loop for rows no query probed is skipped — and the
     * per-query result EXACTLY the single-query search's (not a
-    * scan-dependent superset). */
+    * scan-dependent superset) — and, for its exact pass, each cut
+    * row's query index, so a row is scored only for the query that
+    * nominated it. */
   private[operators] final case class BatchGate(
       col: String, allowed: Array[Array[Int]])
 
@@ -236,7 +239,9 @@ object KnnSearch {
     * `(row, that column's row index, query index into the collected
     * query set, query vector)` and is responsible for its own dimension
     * validation — the query INDEX is what lets a scorer key per-query
-    * precomputed state (an ADC table) without re-deriving it per row. */
+    * precomputed state (an ADC table) without re-deriving it per row.
+    * Over a local input the row converts a field only when the scorer
+    * reads it. */
   private[operators] final case class RawScorer(
       fn: (org.apache.spark.sql.Row, Int, Int, Array[Float]) => Double)
 
@@ -301,14 +306,13 @@ object KnnSearch {
         // too and collecting it runs no job
         val dt = corpus.schema(tieBreak).dataType
         val gateDt = if (gateIdx < 0) null else corpus.schema(gateIdx).dataType
-        val external =
-          if (raw == null) null
-          else CatalystTypeConverters.createToScalaConverter(corpus.schema)
+        val types = corpus.schema.fields.map(_.dataType)
+        val toScala = types.map(CatalystTypeConverters.createToScalaConverter)
         val heaps = new QueryHeaps[InternalRow](qSet, gateWords, k, roundScale)
         rows.foreach { r =>
           if (!r.isNullAt(vecIdx)) {
             val v = if (raw == null) r.getArray(vecIdx).toFloatArray() else null
-            val ext = if (raw == null) null else external(r).asInstanceOf[Row]
+            val ext = if (raw == null) null else new LazyRow(r, types, toScala)
             heaps.offer(r, if (r.isNullAt(tieIdx)) null else r.get(tieIdx, dt),
               if (gateIdx < 0 || r.isNullAt(gateIdx)) -1
               else gateOf(r.get(gateIdx, gateDt)),
@@ -363,6 +367,17 @@ object KnnSearch {
     }
   }
 
+  /** `r` as an external row whose fields convert when read, so a raw
+    * scorer pays only for the columns it reads — never for a row's
+    * whole vector */
+  private final class LazyRow(r: InternalRow,
+      types: Array[org.apache.spark.sql.types.DataType],
+      toScala: Array[Any => Any]) extends Row {
+    def length: Int = types.length
+    def get(i: Int): Any = toScala(i)(r.get(i, types(i)))
+    def copy(): Row = Row.fromSeq((0 until length).map(get))
+  }
+
   /** `v` after checking it against the query's dimension — a silent
     * skip would quietly drop corpus rows from every result, so mixed
     * dimensions are a data bug surfaced here */
@@ -378,18 +393,13 @@ object KnnSearch {
   /** The rows of `df` when its optimized plan is a local relation —
     * every leaf local and the whole plan folded on the driver — else
     * None. */
-  private def local(df: DataFrame): Option[Seq[InternalRow]] = {
-    val leaves = df.queryExecution.analyzed.collectLeaves()
-    if (!leaves.forall {
-      case _: graft.plans.ResidentRelation => true
-      case l: LocalRelation => !l.isStreaming
-      case _ => false
-    }) None
+  private def local(df: DataFrame): Option[Seq[InternalRow]] =
+    if (!df.queryExecution.analyzed.collectLeaves()
+        .forall(graft.plans.LocalTopK.isLocalLeaf)) None
     else df.queryExecution.optimizedPlan match {
       case l: LocalRelation if !l.isStreaming => Some(l.data)
       case _ => None
     }
-  }
 
   /** The batch heap pass's per-query bounded heaps over rows of type
     * `R`: a row is offered with its tie key and gate value, scored for
@@ -443,59 +453,6 @@ object KnnSearch {
       heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
         h.dequeueAll[Entry].reverseIterator.map(e => (qi, e.dist, e.row))
       }
-  }
-
-  /** The batch EXACT re-rank pass shared by the quantized batch
-    * searches ([[QuantizedSearch.searchBatch]]):
-    * materialize the per-query candidate pairs ONCE (re-planning `cand`
-    * would re-run the whole approximate scan), re-read only the
-    * candidate rows from the already-pruned `scan` (its code column
-    * dropped by the caller), broadcast-join the pairs and the query
-    * vectors, score the true metric over the raw vectors with the
-    * cross-engine floor rounding, and rank per query — the final
-    * exchange moves k-scale rows, never the corpus. */
-  private[operators] def batchExactRerank(
-      scan: DataFrame,
-      idCol: String,
-      vecCol: String,
-      cand: DataFrame,
-      qSet: Array[(Any, Array[Float])],
-      qidType: org.apache.spark.sql.types.DataType,
-      k: Int,
-      tieBreak: String,
-      rankRoundDp: Option[Int],
-      cosine: Boolean): DataFrame = {
-    val spark = scan.sparkSession
-    val candRows = cand.collect()
-    val candIds = candRows.map(_.get(1)).distinct.toSeq
-    val candDf = spark.createDataFrame(
-      java.util.Arrays.asList(candRows: _*), cand.schema)
-    val qDf = spark.createDataFrame(
-      java.util.Arrays.asList(qSet.map { case (qid, qv) =>
-        org.apache.spark.sql.Row(qid, qv.toSeq) }: _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("query_id", qidType),
-        org.apache.spark.sql.types.StructField("__qv",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType)))))
-    val exact = scan
-      .filter(col(idCol).isin(candIds: _*))
-      .join(broadcast(candDf), Seq(idCol))
-      .join(broadcast(qDf), Seq("query_id"))
-    val rawDist =
-      if (cosine)
-        lit(1.0) - call_function("graft_cos", col(vecCol), col("__qv"))
-      else sqrt(call_function("graft_l2sq", col(vecCol), col("__qv")))
-    val distExpr =
-      rankRoundDp.fold(rawDist)(dp => roundHalfUpCol(rawDist, dp))
-    val tb = if (tieBreak.nonEmpty) tieBreak else idCol
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("dist"), col(tb))
-    exact.withColumn("dist", distExpr)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k)
-      .drop("__rn", "__qv")
   }
 
   /** The reference's adaptive per-component k:

@@ -297,7 +297,7 @@ object Pq {
       metric: KnnSearch.Metric = KnnSearch.NativeL2,
       filter: Option[Column] = None,
       filterSelectivity: Option[Double] = None): DataFrame =
-    QuantizedSearch.searchOne(encoded, idCol, vecCol, index.codec,
+    QuantizedSearch.searchOne(encoded, idCol, vecCol, Some(index.codec),
       index.ivf, query, k, nprobe, refine, metric, filter,
       filterSelectivity, tieBreak, rankRoundDp)
 
@@ -313,12 +313,14 @@ object Pq {
       nprobe, tieBreak = tieBreak, rankRoundDp = rankRoundDp)
 
   /** The batch face of [[topK]], on [[QuantizedSearch.searchBatch]]:
-    * many queries, ONE narrow code scan (of the probe union when
-    * `index` has an IVF layout), per-query ADC tables built once
-    * driver-side, each row scored for query `i` only when its cluster
-    * is in query i's own probe set (the bit-packed gate), per-query
-    * `k·refine` candidate heaps, then the shared exact re-rank
-    * ([[KnnSearch.batchExactRerank]]). Every codec [[topK]] serves,
+    * many queries, ONE scan (of the probe union when `index` has an
+    * IVF layout), per-query ADC tables built once driver-side, each row
+    * scored for query `i` only when its cluster is in query i's own
+    * probe set (the bit-packed gate), per-query heaps of `k·refine`
+    * whole rows, then the same heap pass as the exact re-rank over
+    * only those rows, each scored for the query that nominated it —
+    * one lazy plan, nothing but the query set collected at call time.
+    * Every codec [[topK]] serves,
     * with the same filter contract; per query the rows are bit-equal to
     * [[topK]] at the same arguments (spec-asserted per codec). At
     * scale: Σ_q nprobe/nlist row-scores over one union scan instead of
@@ -339,7 +341,7 @@ object Pq {
       metric: KnnSearch.Metric = KnnSearch.NativeL2,
       filter: Option[Column] = None,
       filterSelectivity: Option[Double] = None): DataFrame =
-    QuantizedSearch.searchBatch(encoded, idCol, vecCol, index.codec,
+    QuantizedSearch.searchBatch(encoded, idCol, vecCol, Some(index.codec),
       index.ivf, queries, queryIdCol, queryVecCol, k, nprobe, refine,
       metric, filter, filterSelectivity, tieBreak, rankRoundDp)
 

@@ -2,8 +2,11 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
-/** The one quantized-search core under IVF-SQ8
+/** The one IVF / quantized search pipeline, under float IVF
+  * ([[IvfIndex.search]] / [[IvfIndex.searchBatch]] /
+  * [[IvfIndex.probedScan]] — the no-codec case), IVF-SQ8
   * ([[IvfIndex.searchQuantized]] / [[IvfIndex.searchQuantizedBatch]])
   * and every PQ form ([[Pq.topK]] / [[Pq.topKBatch]] — flat, IVF,
   * OPQ, residual, L2 or cosine). Every search is the same pipeline:
@@ -14,21 +17,26 @@ import org.apache.spark.sql.functions._
   *      caller's predicate (a flat corpus has no plan and no prune);
   *   2. the QUANTIZER CONTRACT ([[requireMetricMatches]]) admits only
   *      the metric the codes' geometry preserves;
-  *   3. the CODEC ([[Codec]]) scores each narrow `(id, code, cluster)`
-  *      row for a query: SQ8 decode, PQ ADC (OPQ permutation
-  *      included), residual ADC keyed by the row's own cluster;
-  *   4. a DRIVER keeps the best `k·refine` candidates per query
+  *   3. the CODEC ([[Codec]]) scores a row's `(code, cluster)` for a
+  *      query: SQ8 decode, PQ ADC (OPQ permutation included), residual
+  *      ADC keyed by the row's own cluster;
+  *   4. a DRIVER keeps the best `k·refine` whole rows per query
   *      (unrounded distance, id ties) and re-ranks only their full
   *      vectors exactly with the cross-engine floor rounding —
-  *      [[searchOne]] for one query, [[searchBatch]] for a query set
-  *      (one gated scan through [[KnnSearch.topKBatchCollected]], then
-  *      [[KnnSearch.batchExactRerank]]). The single driver is ONE lazy
-  *      plan and one Spark job: the codec's distance Column over the
-  *      probed, filtered scan, `orderBy(d, id).limit(k·refine)` (a
-  *      TakeOrderedAndProject cut carrying each candidate's whole row),
-  *      then the [[KnnSearch.topK]] exact cut — no driver action at call
-  *      time. Per query the batch rows are bit-equal to the single
-  *      driver's (spec-asserted per codec).
+  *      [[searchOne]] for one query, [[searchBatch]] for a query set.
+  *      The single driver is ONE lazy plan and one Spark job: the
+  *      codec's distance Column over the probed, filtered scan,
+  *      `orderBy(d, id).limit(k·refine)` (a TakeOrderedAndProject cut),
+  *      then the [[KnnSearch.topK]] exact cut. The batch driver is the
+  *      gated heap pass ([[KnnSearch.topKBatchCollected]]) twice: over
+  *      the scan's codes, then over the cut rows' vectors, each row
+  *      scored only for the query that nominated it. Neither runs a
+  *      driver action at call time beyond collecting the query set,
+  *      and over a resident root neither runs a Spark job. With no
+  *      codec, step 3 and the cut drop out: the exact pass runs over
+  *      the probed scan in the caller's metric. Per query the batch
+  *      rows are bit-equal to the single driver's (spec-asserted per
+  *      codec).
   *
   * The codec variant is never a caller option: it is derived from what
   * the encoding itself recorded — [[IvfIndex]]'s `sq8Params` /
@@ -71,7 +79,8 @@ private[graft] object QuantizedSearch {
   /** Each query's probe set over the IVF layout `ivf` (centroids,
     * cluster ids) — the `nprobe` best clusters for `metric`, widened by
     * `filterSelectivity` — or None for a flat corpus: the no-probe case
-    * of the same search. */
+    * of the same search. A query whose length is not the centroids'
+    * fails here, before any plan is built. */
   def probePlan(ivf: Option[(Array[Array[Float]], Array[Int])],
       metric: KnnSearch.Metric, nprobe: Int, filter: Option[Column],
       filterSelectivity: Option[Double],
@@ -79,6 +88,9 @@ private[graft] object QuantizedSearch {
     require(filterSelectivity.isEmpty || filter.isDefined,
       "filterSelectivity without a filter has nothing to compensate")
     ivf.map { case (centroids, clusterIds) =>
+      for (q <- queries; d <- centroids.headOption)
+        require(q.length == d.length, s"dimension mismatch: query has " +
+          s"${q.length} dims, the index's centroids ${d.length}")
       val np = filterSelectivity.fold(math.max(1, nprobe))(
         widenedNprobe(nprobe, _, centroids.length))
       queries.map(q =>
@@ -93,21 +105,22 @@ private[graft] object QuantizedSearch {
     * cosine (on the unit sphere L2² = 2 − 2·cos, so the code ranking
     * against the normalized query is a cosine candidate ranking).
     * Anything else silently ranks candidates in the wrong geometry.
-    * Returns whether the search is cosine. */
-  def requireMetricMatches(metric: KnnSearch.Metric, codec: Codec): Boolean =
+    * Returns the exact re-rank's metric. */
+  def requireMetricMatches(metric: KnnSearch.Metric,
+      codec: Codec): KnnSearch.Metric =
     metric match {
       case KnnSearch.L2 | KnnSearch.NativeL2 =>
         require(!codec.normalized,
           s"the quantizer (${codec.quantizer}) was built over " +
             "UNIT-NORMALIZED vectors — it serves cosine searches; L2 " +
             "needs a raw one")
-        false
+        KnnSearch.NativeL2
       case KnnSearch.Cosine | KnnSearch.NativeCosine =>
         require(codec.normalized,
           "cosine needs a quantizer built over UNIT-NORMALIZED vectors; " +
             s"this one (${codec.quantizer}) is raw (L2) — raw codes " +
             "preserve L2 geometry, not angles")
-        true
+        KnnSearch.NativeCosine
       case other => throw new IllegalArgumentException(
         s"quantized search supports L2 and Cosine, got $other")
     }
@@ -244,11 +257,10 @@ private[graft] object QuantizedSearch {
     * (~dim/m× less row arithmetic); the row total is the left-assoc
     * sum of partials in subspace order, which an oracle replays as a
     * literal `p0 + p1 + … + p_{m-1}` chain. O(m·ksub·dsub) = one
-    * decoded-corpus-row's work to build, KBs to hold. */
+    * decoded-corpus-row's work to build, KBs to hold. `q` has the
+    * books' dimension (each codec's `prepare` checks it). */
   private def adcTable(b: Pq.Codebooks,
-      q: Array[Float]): Array[Array[Double]] = {
-    require(q.length == b.dim,
-      s"query has dim ${q.length}, codebooks ${b.dim}")
+      q: Array[Float]): Array[Array[Double]] =
     Array.tabulate(b.m) { sub =>
       Array.tabulate(b.ksub) { c =>
         val cent = b.cb(sub)(c)
@@ -262,7 +274,6 @@ private[graft] object QuantizedSearch {
         acc
       }
     }
-  }
 
   /** ADC row score against a prebuilt table, with loud per-row code
     * validation: a null, mis-sized or out-of-range code means the
@@ -296,107 +307,137 @@ private[graft] object QuantizedSearch {
   // ---- 4. the drivers ------------------------------------------------
 
   /** what both drivers share: the probe-pruned, filtered scan, the
-    * probe plan, and the contract's metric verdict */
-  private final case class Setup(scan: DataFrame,
-      probes: Option[Array[Array[Int]]], cosine: Boolean)
+    * probe plan, and the exact re-rank metric — the caller's with no
+    * codec, else the one the quantizer contract admits */
+  private[operators] final case class Setup(scan: DataFrame,
+      probes: Option[Array[Array[Int]]], exact: KnnSearch.Metric)
 
-  private def setup(corpus: DataFrame, idCol: String, codec: Codec,
-      ivf: Option[(Array[Array[Float]], Array[Int])], k: Int, nprobe: Int,
-      refine: Int, metric: KnnSearch.Metric, filter: Option[Column],
+  private[operators] def setup(corpus: DataFrame, codec: Option[Codec],
+      ivf: Option[(Array[Array[Float]], Array[Int])], nprobe: Int,
+      metric: KnnSearch.Metric, filter: Option[Column],
       filterSelectivity: Option[Double],
       queries: Seq[Seq[Float]]): Setup = {
-    require(k > 0, s"k must be > 0, got $k")
-    require(refine >= 1, s"refine must be >= 1, got $refine")
-    require(corpus.columns.contains(codec.codeCol),
-      s"corpus has no '${codec.codeCol}' column — encode it with " +
-        "this quantizer first")
-    require(ivf.isEmpty || corpus.columns.contains(IvfIndex.ClusterCol),
-      s"corpus has no '${IvfIndex.ClusterCol}' column — a probed " +
-        "search needs the IVF cluster layout (assign + partition " +
-        "first, then encode)")
-    val cosine = requireMetricMatches(metric, codec)
-    graft.plans.VectorExpressions.ensureRegistered(corpus.sparkSession)
+    val exact = codec.fold(metric) { c =>
+      require(corpus.columns.contains(c.codeCol),
+        s"corpus has no '${c.codeCol}' column — encode it with " +
+          "this quantizer first")
+      require(ivf.isEmpty || corpus.columns.contains(IvfIndex.ClusterCol),
+        s"corpus has no '${IvfIndex.ClusterCol}' column — a probed " +
+          "search needs the IVF cluster layout (assign + partition " +
+          "first, then encode)")
+      graft.plans.VectorExpressions.ensureRegistered(corpus.sparkSession)
+      requireMetricMatches(metric, c)
+    }
     val probes =
       probePlan(ivf, metric, nprobe, filter, filterSelectivity, queries)
     // the probe union prunes partition DIRECTORIES; the FILTER sits on
-    // the same scan, so the k·refine candidate budget is spent only on
-    // eligible rows (prefilter semantics — the q209/q220 argument) and
-    // the exact pass inherits it
+    // the same scan, so the candidate budget is spent only on eligible
+    // rows (prefilter semantics — the q209/q220 argument) and the exact
+    // pass inherits it
     val probed = probes.fold(corpus)(ps =>
       corpus.filter(col(IvfIndex.ClusterCol).isin(ps.flatten.distinct: _*)))
-    Setup(filter.foldLeft(probed)(_.filter(_)), probes, cosine)
+    Setup(filter.foldLeft(probed)(_.filter(_)), probes, exact)
   }
 
-  /** One query as ONE lazy plan: the codec's distance over the probed,
-    * filtered scan, cut to the best `k·refine` rows (`orderBy(d,
-    * id).limit` — TakeOrderedAndProject, k·refine whole rows per task
-    * reach the final merge), then the exact top-k over only those rows'
-    * raw vectors. Parquet has no index on id, so re-reading the
-    * candidates by id would scan the same probed row groups again: one
-    * scan reading (id, code, vector) reads exactly what the two passes
-    * read together. Output: corpus columns + rounded-rank `dist`, the
-    * [[KnnSearch.topK]] contract. */
+  /** the codec cut's size, `k·refine` */
+  private def cutSize(k: Int, refine: Int): Int = {
+    require(k > 0, s"k must be > 0, got $k")
+    require(refine >= 1, s"refine must be >= 1, got $refine")
+    k * refine
+  }
+
+  /** One query as ONE lazy plan: with a codec, its distance over the
+    * probed, filtered scan, cut to the best `k·refine` rows
+    * (`orderBy(d, id).limit` — TakeOrderedAndProject, k·refine whole
+    * rows per task reach the final merge); then the exact top-k over
+    * the cut rows' raw vectors — or, with no codec, over the scan
+    * itself in the caller's metric. Parquet has no index on id, so
+    * re-reading the candidates by id would scan the same probed row
+    * groups again: one scan reading (id, code, vector) reads exactly
+    * what the two passes read together. Output: corpus columns (minus
+    * the code) + rounded-rank `dist`, the [[KnnSearch.topK]] contract. */
   def searchOne(corpus: DataFrame, idCol: String, vecCol: String,
-      codec: Codec, ivf: Option[(Array[Array[Float]], Array[Int])],
+      codec: Option[Codec], ivf: Option[(Array[Array[Float]], Array[Int])],
       query: Seq[Float], k: Int, nprobe: Int, refine: Int,
       metric: KnnSearch.Metric, filter: Option[Column],
       filterSelectivity: Option[Double], tieBreak: Option[String],
       rankRoundDp: Option[Int]): DataFrame = {
-    val s = setup(corpus, idCol, codec, ivf, k, nprobe, refine, metric,
-      filter, filterSelectivity, Seq(query))
-    val cand = s.scan
+    val s = setup(corpus, codec, ivf, nprobe, metric, filter,
+      filterSelectivity, Seq(query))
+    val cand = codec.fold(s.scan)(c => s.scan
       .withColumn(DistCol,
-        codec.distance(query.toArray, s.probes.map(_.head).orNull))
+        c.distance(query.toArray, s.probes.map(_.head).orNull))
       .orderBy(col(DistCol), col(idCol))
-      .limit(k * refine)
-      .drop(DistCol, codec.codeCol)
-    KnnSearch.topK(cand, vecCol, query, k,
-      if (s.cosine) KnnSearch.NativeCosine else KnnSearch.NativeL2,
-      tieBreak, rankRoundDp = rankRoundDp)
+      .limit(cutSize(k, refine))
+      .drop(DistCol, c.codeCol))
+    KnnSearch.topK(cand, vecCol, query, k, s.exact, tieBreak,
+      rankRoundDp = rankRoundDp)
   }
 
-  /** A query set over ONE narrow scan of the probe union: per-task
-    * bounded heaps of `k·refine` candidates per query, a row scored for
-    * query `i` only when its cluster is in query i's own probe set (the
-    * bit-packed gate — Σ_q nprobe/nlist row-scores, not |union|·|q|),
-    * then the shared exact re-rank of the candidate pairs. Output:
-    * corpus columns + `dist` + `query_id`, k rows per query. */
+  /** column carrying a cut row's query INDEX into the exact pass */
+  private val QiCol = "__qi"
+
+  /** A query set over ONE scan of the probe union, as per-task bounded
+    * heaps per query ([[KnnSearch.topKBatchCollected]]), a row scored
+    * for query `i` only when its cluster is in query i's own probe set
+    * (the bit-packed gate — Σ_q nprobe/nlist row-scores, not
+    * |union|·|q|). With no codec that one pass is the search, in the
+    * caller's metric. With a codec it scores codes and keeps each
+    * query's best `k·refine` WHOLE rows (unrounded distance, id ties —
+    * [[searchOne]]'s cut); the exact re-rank is then the same heap pass
+    * over only those ≤ k·refine·|q| rows, each scored only for the
+    * query that nominated it (the gate keyed by query index). Both
+    * passes run on the driver over a local input (a resident root), so
+    * the whole batch runs no Spark job there; over parquet it is one
+    * lazy plan. Output: corpus columns (minus the code) + `dist` +
+    * `query_id`, k rows per query, each query's rows bit-equal to
+    * [[searchOne]]'s. */
   def searchBatch(corpus: DataFrame, idCol: String, vecCol: String,
-      codec: Codec, ivf: Option[(Array[Array[Float]], Array[Int])],
+      codec: Option[Codec], ivf: Option[(Array[Array[Float]], Array[Int])],
       queries: DataFrame, queryIdCol: String, queryVecCol: String,
       k: Int, nprobe: Int, refine: Int, metric: KnnSearch.Metric,
       filter: Option[Column], filterSelectivity: Option[Double],
       tieBreak: String, rankRoundDp: Option[Int]): DataFrame = {
-    // the exact pass adds these columns to the corpus rows; a silent
-    // overwrite (or an ambiguous-join AnalysisException mid-plan) would
-    // corrupt downstream plans
-    for (c <- Seq("dist", "query_id", "__qv"))
-      require(!corpus.columns.contains(c),
-        s"corpus already has a '$c' column — the batch search adds it")
     // ONE driver-side collect serves probe planning, the per-query
-    // codec state and the exact pass
+    // codec state and the heap passes (re-collecting would re-run the
+    // query table's plan — e.g. a model embedder seam)
     val qSet = KnnSearch.collectQueries(queries, queryIdCol, queryVecCol)
-    val s = setup(corpus, idCol, codec, ivf, k, nprobe, refine, metric,
-      filter, filterSelectivity, qSet.map(_._2.toSeq).toSeq)
-    // per-query scorers built once driver-side (KBs each) and shipped
-    // in the closure; the heap pass's query INDEX selects one
-    val scorers = qSet.indices.map(i =>
-      codec.prepare(qSet(i)._2, s.probes.map(_(i)).orNull)).toArray
+    val s = setup(corpus, codec, ivf, nprobe, metric, filter,
+      filterSelectivity, qSet.map(_._2.toSeq).toSeq)
     val qidType = queries.schema(queryIdCol).dataType
-    // the approximate pass reads (id, code) + partition columns — the
-    // float vectors never (a filter on other data columns widens the
-    // read by exactly those)
-    val narrow = s.scan.select(Seq(col(idCol), col(codec.codeCol)) ++
-      s.probes.map(_ => col(IvfIndex.ClusterCol)): _*)
-    val probed = s.probes.isDefined
-    val cand = KnnSearch.topKBatchCollected(narrow, codec.codeCol, qSet,
-        qidType, k * refine, tieBreak = idCol, distCol = DistCol,
-        gate = s.probes.map(KnnSearch.BatchGate(IvfIndex.ClusterCol, _)),
-        rawScorer = Some(KnnSearch.RawScorer((row, _, qi, _) =>
-          scorers(qi)(row.getAs[Array[Byte]](1),
-            if (probed) row.getAs[Number](2).intValue() else -1))))
-      .select(col("query_id"), col(idCol))
-    KnnSearch.batchExactRerank(s.scan.drop(codec.codeCol), idCol, vecCol,
-      cand, qSet, qidType, k, tieBreak, rankRoundDp, s.cosine)
+    val gate = s.probes.map(KnnSearch.BatchGate(IvfIndex.ClusterCol, _))
+    codec match {
+      case None =>
+        KnnSearch.topKBatchCollected(s.scan, vecCol, qSet, qidType, k,
+          tieBreak, rankRoundDp = rankRoundDp, metric = metric, gate = gate)
+      case Some(c) =>
+        // the passes add these columns to the corpus rows; a silent
+        // overwrite would corrupt downstream plans
+        for (n <- Seq("dist", "query_id", QiCol))
+          require(!corpus.columns.contains(n),
+            s"corpus already has a '$n' column — the batch search adds it")
+        // per-query scorers built once driver-side (KBs each) and
+        // shipped in the closure; the heap pass's query INDEX selects one
+        val scorers = qSet.indices.map(i =>
+          c.prepare(qSet(i)._2, s.probes.map(_(i)).orNull)).toArray
+        val clusterIdx =
+          s.probes.fold(-1)(_ => s.scan.schema.fieldIndex(IvfIndex.ClusterCol))
+        val cut = KnnSearch.topKBatchCollected(s.scan, c.codeCol,
+            qSet.indices.map(i => (i: Any, qSet(i)._2)).toArray, IntegerType,
+            cutSize(k, refine), tieBreak = idCol, distCol = DistCol,
+            gate = gate,
+            rawScorer = Some(KnnSearch.RawScorer((row, codeIdx, qi, _) =>
+              scorers(qi)(row.getAs[Array[Byte]](codeIdx),
+                if (clusterIdx < 0) -1
+                else row.getAs[Number](clusterIdx).intValue()))))
+          .withColumnRenamed("query_id", QiCol)
+          .drop(DistCol, c.codeCol)
+        KnnSearch.topKBatchCollected(cut, vecCol, qSet, qidType, k,
+            if (tieBreak.nonEmpty) tieBreak else idCol,
+            rankRoundDp = rankRoundDp, metric = s.exact,
+            gate = Some(KnnSearch.BatchGate(QiCol,
+              Array.tabulate(qSet.length)(Array(_)))))
+          .drop(QiCol)
+    }
   }
 }

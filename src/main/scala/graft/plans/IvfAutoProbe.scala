@@ -205,6 +205,9 @@ case class IvfAutoProbe(spark: SparkSession) extends Rule[LogicalPlan] {
     val cents = Try(IvfIndex.sidecarCentroids(spark,
         root.getFileSystem(spark.sessionState.newHadoopConf()), root))
       .toOption.flatten.getOrElse(return None)
+    // a query of another dimension than the index matches no cluster
+    // geometry: leave the sort to the exact scan
+    if (cents.exists(_._2.length != qVec.length)) return None
     // a residual data predicate thins every probed cluster — widen
     // the budget by the session's declared selectivity (the API
     // face's widenedNprobe contract); a budget reaching nlist means

@@ -81,7 +81,9 @@ object LocalTopK extends Rule[LogicalPlan] {
       cur
     }
 
-  private def isLocalLeaf(p: LogicalPlan): Boolean = p match {
+  /** a leaf this rule folds: resident rows or a non-streaming local
+    * relation */
+  private[graft] def isLocalLeaf(p: LogicalPlan): Boolean = p match {
     case _: ResidentRelation => true
     case l: LocalRelation => !l.isStreaming
     case _ => false

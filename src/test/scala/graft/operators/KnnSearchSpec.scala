@@ -104,17 +104,20 @@ class KnnSearchSpec extends SparkSpec {
 
   test("dimension mismatches surface an error instead of dropping rows") {
     import spark.implicits._
-    val corpus = Seq((1L, Seq(1f, 2f))).toDF("vec_id", "embedding")
+    val local = Seq((1L, Seq(1f, 2f))).toDF("vec_id", "embedding")
     val queries = Seq(("q1", Seq(1f, 2f, 3f))).toDF("qid", "qv")
-    val ex = intercept[Exception] {
-      KnnSearch.topKBatch(corpus, "embedding", queries,
-        "qid", "qv", k = 1, tieBreak = "vec_id").collect()
-    }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(e =>
         Option(e.getMessage).toSeq ++ messages(e.getCause))
-    assert(messages(ex).exists(_.contains("dimension mismatch")),
-      ex.toString)
+    // the driver's heap pass over a local frame, and the executors'
+    for (corpus <- Seq(local, local.repartition(2))) {
+      val ex = intercept[Exception] {
+        KnnSearch.topKBatch(corpus, "embedding", queries,
+          "qid", "qv", k = 1, tieBreak = "vec_id").collect()
+      }
+      assert(messages(ex).exists(_.contains("dimension mismatch")),
+        ex.toString)
+    }
   }
 
   test("searchBatch collects the query table exactly once") {

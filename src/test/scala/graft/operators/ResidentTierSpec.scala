@@ -124,6 +124,10 @@ class ResidentTierSpec extends SparkSpec {
     parity("batch sq8", l2Root, batch = true)(_.searchQuantizedBatch(qdf,
       "qid", "qvec", 10, nprobe = 2, tieBreak = "vec_id",
       rankRoundDp = Some(4)))
+    parity("batch sq8 cosine, scoped, filtered", cosRoot, batch = true)(
+      _.searchQuantizedBatch(qdf, "qid", "qvec", 5, nprobe = 3, refine = 2,
+        tieBreak = "vec_id", rankRoundDp = Some(4), components = Seq(0, 1),
+        metric = KnnSearch.Cosine, filter = Some(col("vec_id") < 200)))
   }
 
   test("a NULL vector ranks the same on both paths") {

@@ -125,7 +125,10 @@ class ServingPathSpec extends SparkSpec {
       ("IvfIndex.searchBatch", q => scopedIvf.searchBatch(
         batches(q), "qid", "qvec", 10, nprobe = 3,
         tieBreak = "vec_id", rankRoundDp = Some(4),
-        metric = KnnSearch.NativeL2)))
+        metric = KnnSearch.NativeL2)),
+      ("IvfIndex.searchQuantizedBatch", q => scopedIvf.searchQuantizedBatch(
+        batches(q), "qid", "qvec", 10, nprobe = 3, tieBreak = "vec_id",
+        rankRoundDp = Some(4))))
     for ((name, search) <- searches) {
       val first = search(qa).collect()
       assert(first.nonEmpty, s"$name returned no rows")
@@ -136,6 +139,61 @@ class ServingPathSpec extends SparkSpec {
       val compiled = classesCompiled { search(qb).collect() }
       assert(compiled == 0,
         s"$name compiled $compiled new classes for a second query vector")
+    }
+  }
+
+  test("over parquet a quantized batch is one lazy plan: 3 Spark jobs, " +
+      "call plus collect, where the join re-rank ran 6 (IVF-SQ8 and " +
+      "IVF-PQ)") {
+    import spark.implicits._
+    val qs = Seq(3L, 5L, 8L, 13L).map(i => (i, queryVec(i))).toDF("qid", "qvec")
+    val pqIvf = pqRoots.toMap.apply("ivf")
+    val pqData = pqIvf.data(spark)
+    // (name, batch, jobs of the join re-rank, which collected the
+    // candidate pairs at call time)
+    val batches: Seq[(String, () => DataFrame, Int)] = Seq(
+      ("IvfIndex.searchQuantizedBatch", () => onSparkPath(
+        ivf.searchQuantizedBatch(qs, "qid", "qvec", 10, nprobe = 3,
+          tieBreak = "vec_id", rankRoundDp = Some(4))), 6),
+      ("Pq.topKBatch ivf", () => Pq.topKBatch(pqData, "vec_id", "embedding",
+        qs, "qid", "qvec", 10, pqIvf, nprobe = 3, tieBreak = "vec_id",
+        rankRoundDp = Some(4)), 6))
+    for ((name, batch, before) <- batches) {
+      val first = batch().collect()
+      assert(first.length == 40, s"$name returned ${first.length} rows")
+      var again: Array[org.apache.spark.sql.Row] = null
+      val jobs = jobsRun { again = batch().collect() }
+      assert(jobs <= 3 && jobs < before,
+        s"$name ran $jobs Spark jobs, call plus collect")
+      assert(again.toSet == first.toSet, s"$name is not deterministic")
+    }
+  }
+
+  test("a query of the wrong dimension fails with one defined error on " +
+      "every IVF search form, resident and over parquet") {
+    import spark.implicits._
+    val q = queryVec(3L)
+    val pqIvf = pqRoots.toMap.apply("ivf")
+    val pqData = pqIvf.data(spark)
+    for (bad <- Seq(q :+ 0.5f, q.dropRight(1)); resident <- Seq(true, false)) {
+      val qs = Seq((1L, bad)).toDF("qid", "qvec")
+      val forms: Seq[(String, () => DataFrame)] = Seq(
+        ("search", () => ivf.search(bad, 5, nprobe = 3)),
+        ("searchQuantized", () => ivf.searchQuantized(bad, 5, nprobe = 3)),
+        ("searchBatch", () => ivf.searchBatch(qs, "qid", "qvec", 5,
+          nprobe = 3, tieBreak = "vec_id")),
+        ("searchQuantizedBatch", () => ivf.searchQuantizedBatch(qs, "qid",
+          "qvec", 5, nprobe = 3, tieBreak = "vec_id")),
+        ("Pq.topK ivf", () => Pq.topK(
+          if (resident) IvfIndex.residentRows(pqData).get else pqData,
+          "vec_id", "embedding", bad, 5, pqIvf, nprobe = 3)))
+      for ((name, run) <- forms) {
+        val ex = intercept[IllegalArgumentException] {
+          if (resident) run().collect() else onSparkPath(run()).collect()
+        }
+        assert(ex.getMessage.contains("dimension mismatch"),
+          s"$name, ${bad.length}-dim query, resident=$resident: $ex")
+      }
     }
   }
 
